@@ -29,11 +29,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # samples the FIRST 50 names in dict order, so never-checked queries are
 # listed first, then previously-green ones as regression coverage.
 #
-# Round-5 budget math: the 50 round-4-green names moved here and the 50
-# queries staged during round 4 (plans/staged_r5.py) activated in the
-# same change — so the fresh set is EXACTLY the activated slate, one
-# full driver sample. Round 6 repeats the cycle: move the round-5-green
-# names here, then activate plans/staged_r6.py (also exactly 50).
+# Rounds 5-14 each registered one slate (plans/staged_r5..r13.py) of at
+# most 50 fresh names — one full driver sample — and moved the previous
+# round's green names here in the same change. The per-round blocks
+# below record which names joined when.
 _CHECKED = frozenset(
     {
         # round 1
@@ -175,9 +174,9 @@ _CHECKED = frozenset(
         "except_intersect_all", "funnel_conversion_rates", "grouping_id_flags",
         # NB: gsw_dynamic_enthalpy and gsw_enthalpy are deliberately NOT
         # listed: their staged-Horner REPLACEMENT bodies went live in
-        # round 8 (staged_r9.activate_replacements()), so per the
-        # REPLACEMENTS contract they re-sample as FRESH at the round-9
-        # activation until the new expression trees earn driver rows.
+        # round 8 (the plans/staged_r9.py twins), so they re-sampled as
+        # FRESH in round 9 until the new expression trees earned driver
+        # rows (they rejoin in the round-9 block below).
         "gsw_adiabatic_lapse_rate", "gsw_kappa",
         "gsw_potential_density_theta", "gsw_rho_at_pressure", "gsw_sigma1_sigma2", "gsw_sound_speed_ct_native",
         "interval_sweepline_backlog", "ios_profile_sound_speed", "langid_confusion_matrix", "late_data_accounting",
@@ -385,9 +384,9 @@ _CHECKED = frozenset(
         "supplier_type_concentration_cr4", "text_langid_calibration_curve",
         "text_ngram_entropy_rate_curve", "text_oov_vocab_curve",
         "text_sttr_by_source", "tpch_fd_violation_audit",
-        # round 13 (all 50 green in CORRECTNESS_r13.json: the 40
-        # activated staged_r13 names + 5 staged_r12.DEFER_TO_R13
-        # carry-overs + the 5 round-13 rotation re-earns —
+        # round 13 (all 50 green in CORRECTNESS_r13.json: 40 staged_r13
+        # names + the 5 staged_r12 names held over from round 12 + the
+        # 5 round-13 rotation re-earns —
         # graph_pagerank_iterations, geo_containment_join,
         # ranking_window_bodc, tz_fixed_offset, dedup_exact — which
         # hereby rejoin)
@@ -448,15 +447,14 @@ _CHECKED = frozenset(
 #     in round 12, plans/staged_r5.py — see SCALE.md round 12),
 #   geo_containment_join, ranking_window_bodc, tz_fixed_offset,
 #   dedup_exact (oldest load-bearing round-1 names).
-# Budget: 5 staged_r12.DEFER_TO_R13 carry-overs + 40 activated
-# staged_r13 names + these 5 = exactly the driver's 50-fresh-name
-# sample; staged_r13.DEFER_TO_R14 carries the remaining 10 staged
-# names (the GSW freezing-poly + Saunders + wave-M family) to the
-# round-14 activation.
+# Budget: 5 staged_r12 names held over from round 12 + 40 staged_r13
+# names + these 5 = exactly the driver's 50-fresh-name sample; the
+# remaining 10 staged_r13 names (the GSW freezing-poly + Saunders +
+# wave-M family) were held over to round 14.
 #
 # Round-14 rotation (EXECUTED in this change, per the queue committed
 # in round 13): the 50 round-13 greens joined _CHECKED above; the 10
-# staged_r13.DEFER_TO_R14 names activated (registry 630 -> 640); and
+# held-over staged_r13 names joined the registry (630 -> 640); and
 # these 11 names rotated OUT so the driver re-earns rows on moved code —
 #   dedup_semantic_clusters, similarity_lsh_topk, dedup_embedding_cosine,
 #   knn_graph_degree_stats, dedup_fingerprint_winnowing,

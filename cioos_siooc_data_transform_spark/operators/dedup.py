@@ -837,8 +837,8 @@ def _mean_hub_pairs(
         id_col,
         F.coalesce(
             F.round(
-                dot_expr(F.col(vec_col), F.col("_mv"))
-                / F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))),
+                dot_expr(vec_col, "_mv")
+                / F.sqrt(dot_expr(vec_col, vec_col)),
                 4,
             ),
             F.lit(0.0),
@@ -1096,9 +1096,9 @@ def semantic_dedup(
 
     def _build_pricing() -> tuple:
         return (
-            F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))),
+            F.sqrt(dot_expr(vec_col, vec_col)),
             F.round(
-                dot_expr(F.col("va"), F.col("vb"))
+                dot_expr("va", "vb")
                 / (F.col("na") * F.col("nb")),
                 4,
             ),

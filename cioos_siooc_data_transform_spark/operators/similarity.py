@@ -21,22 +21,26 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dot_expr(a: Column, b: Column) -> Column:
+def dot_expr(a: str | Column, b: str | Column) -> Column:
     """Σ a_i·b_i as a JVM-side array expression (double accumulation).
 
-    Memoized on the operands' expression TEXT (round 14, §7.3): the
-    zip_with + aggregate + two lambdas cost ~15 py4j round trips to
-    assemble vs 1 for the key's toString; unresolved Column trees that
-    print identically are interchangeable (resolution happens per-plan
-    later), and the memo stores only the composed expression — never
-    data or results."""
-    return _memo_expr(
-        ("dot", str(a), str(b)),
-        lambda: F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
+    Column NAMES are memoized (§7.3): the zip_with + aggregate + two
+    lambdas cost ~15 py4j round trips to assemble, and ``F.col(name)``
+    trees built from equal names are interchangeable (resolution
+    happens per plan). Column operands are built fresh on every call:
+    their text is not a safe key — ``a["v"]``, ``b["v"]`` and
+    ``F.col("v")`` all print ``Column<'v'>`` but resolve to different
+    relations in a join."""
+    if isinstance(a, str) and isinstance(b, str):
+        return _memo_expr(("dot", a, b), lambda: _dot(a, b))
+    return _dot(a, b)
+
+
+def _dot(a: str | Column, b: str | Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
 
 
@@ -61,19 +65,22 @@ def _memo_expr(key: tuple, build):
     return val
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
+def cosine_expr(a: str | Column, b: str | Column) -> Column:
     """PRECONDITION: non-zero-norm vectors. A zero vector divides by
     zero, and the engines then disagree (Spark NULL vs DuckDB NaN, with
     different ordering AND comparison semantics) — callers on possibly-
     degenerate data must filter zero norms first (see
     embedding_normalize's nrm > 0 guard); tests pin that the synthetic
-    embeddings contain none at any SF. Memoized like dot_expr (~45
-    round trips per build)."""
-    return _memo_expr(
-        ("cosine", str(a), str(b)),
-        lambda: dot_expr(a, b)
-        / (F.sqrt(dot_expr(a, a)) * F.sqrt(dot_expr(b, b))),
-    )
+    embeddings contain none at any SF. Memoized on column names like
+    dot_expr (~45 round trips per build); Column operands are built
+    fresh."""
+
+    def build() -> Column:
+        return dot_expr(a, b) / (F.sqrt(dot_expr(a, a)) * F.sqrt(dot_expr(b, b)))
+
+    if isinstance(a, str) and isinstance(b, str):
+        return _memo_expr(("cosine", a, b), build)
+    return build()
 
 
 def brute_force_topk(
@@ -95,9 +102,9 @@ def brute_force_topk(
     # as cosine_expr, so the rounded ranking is bit-identical.
     def _build_cols() -> tuple:
         return (
-            F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))),
+            F.sqrt(dot_expr(vec_col, vec_col)),
             F.round(
-                dot_expr(F.col("q_vec"), F.col("c_vec"))
+                dot_expr("q_vec", "c_vec")
                 / (F.col("q_nrm") * F.col("c_nrm")),
                 round_dp,
             ),
@@ -203,9 +210,9 @@ def ivf_assign(
     # constructions (each dot_expr chain is ~40 py4j round trips)
     # re-use the same immutable expression objects.
     def _build_cols() -> tuple:
-        nrm = F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col)))
+        nrm = F.sqrt(dot_expr(vec_col, vec_col))
         sim = F.round(
-            dot_expr(F.col(vec_col), F.col("cent_vec"))
+            dot_expr(vec_col, "cent_vec")
             / (F.col("vec_nrm") * F.col("cent_nrm")),
             round_dp,
         )
@@ -308,21 +315,21 @@ def ivf_assign_multi(
     c = centroids.select(
         F.col(id_col).alias("centroid_id"),
         F.col(vec_col).alias("cent_vec"),
-        F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))).alias("cent_nrm"),
+        F.sqrt(dot_expr(vec_col, vec_col)).alias("cent_nrm"),
     )
     # same once-per-side norm projection as ivf_assign (bit-identical
     # rounded sims, K-times less higher-order-aggregate work per vector)
     v = vectors.select(
         F.col(id_col),
         F.col(vec_col),
-        F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))).alias("vec_nrm"),
+        F.sqrt(dot_expr(vec_col, vec_col)).alias("vec_nrm"),
     )
     scored = v.crossJoin(F.broadcast(c)).select(
         F.col(id_col),
         F.col(vec_col),
         F.col("centroid_id"),
         F.round(
-            dot_expr(F.col(vec_col), F.col("cent_vec"))
+            dot_expr(vec_col, "cent_vec")
             / (F.col("vec_nrm") * F.col("cent_nrm")),
             round_dp,
         ).alias("cent_sim"),
@@ -358,13 +365,13 @@ def ivf_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         F.col("centroid_id"),
-        F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))).alias("q_nrm"),
+        F.sqrt(dot_expr(vec_col, vec_col)).alias("q_nrm"),
     )
     c = corpus_cells.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         F.col("centroid_id"),
-        F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))).alias("c_nrm"),
+        F.sqrt(dot_expr(vec_col, vec_col)).alias("c_nrm"),
     )
     scored = (
         c.join(F.broadcast(q), "centroid_id")
@@ -374,7 +381,7 @@ def ivf_topk(
             "centroid_id",
             "neighbor_id",
             F.round(
-                dot_expr(F.col("q_vec"), F.col("c_vec"))
+                dot_expr("q_vec", "c_vec")
                 / (F.col("q_nrm") * F.col("c_nrm")),
                 round_dp,
             ).alias("cos_sim"),

@@ -430,7 +430,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cand.join(ea, "doc_a").join(eb, "doc_b").select(
         "doc_a",
         "doc_b",
-        F.round(cosine_expr(F.col("va"), F.col("vb")), 4).alias("cos_sim"),
+        F.round(cosine_expr("va", "vb"), 4).alias("cos_sim"),
     )
     return pairs.filter(F.col("cos_sim") >= 0.45)
 

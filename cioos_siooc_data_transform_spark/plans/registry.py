@@ -19,9 +19,19 @@ ORACLES: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None):
-    """Decorator: register a query builder and (optionally) its oracle SQL."""
+    """Decorator: register a query builder and (optionally) its oracle SQL.
+
+    A name has one owner: registering it for a different function raises
+    instead of silently replacing (or skipping) the first builder.
+    Registering the same function again is a no-op."""
 
     def deco(fn):
+        owner = QUERIES.get(name)
+        if owner is not None and owner is not fn:
+            raise ValueError(
+                f"query {name!r} is already registered by "
+                f"{owner.__module__}.{owner.__qualname__}"
+            )
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

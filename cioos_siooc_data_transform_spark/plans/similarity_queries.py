@@ -420,7 +420,7 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_expr(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
+            F.round(cosine_expr("qv", "cv"), 4).alias("cos_sim"),
         )
     )
     rw = Window.partitionBy("query_id").orderBy(

@@ -1,12 +1,7 @@
-"""STAGED round-10 queries — NOT registered (round-10 runway seed).
+"""Round-10 query slate: 50 live queries, each registered at import
+with ``register``; strict-harness coverage in tests/test_staged_r10.py.
 
-Same contract as staged_r5..r9: LOCAL registry, strict-harness pytest
-coverage in tests/test_staged_r10.py, idempotent ``activate()``.
-Activation order: staged_r8 (round 8) -> staged_r9 (round 9) -> this
-module (round 10). Budget: len(STAGED_QUERIES) +
-len(STAGED_REPLACEMENTS) <= 50 fresh names at activation.
-
-Content so far:
+Content:
 - Wave A — GSW ufunc tail with closed forms: adiabatic lapse rate of
   ice Ih (−g_Tp/g_TT), specific volume of ice (g_p), the
   salinity-scale conversion battery (Reference/Knudsen/Absolute
@@ -55,9 +50,6 @@ Content so far:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -68,41 +60,8 @@ from cioos_siooc_data_transform_spark.plans.staged_r5 import (
     _inputs,
 )
 from cioos_siooc_data_transform_spark.plans.staged_r6 import _stage_sql
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-#: name -> (fn, oracle) for queries REPLACING a live registry entry.
-STAGED_REPLACEMENTS: dict[str, tuple[Callable[..., Any], str]] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def activate() -> int:
-    """Round-10 activation (idempotent): new names register once;
-    replacements overwrite unconditionally (freshness enforced by the
-    _CHECKED edit in the activation commit + the budget test)."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    for name, (fn, oracle) in STAGED_REPLACEMENTS.items():
-        if QUERIES.get(name) is not fn:
-            QUERIES[name] = fn
-            ORACLES[name] = oracle
-            n += 1
-    return n
 
 
 # ===========================================================================
@@ -165,8 +124,7 @@ _fn.__doc__ = (
     "gsw_adiabatic_lapse_rate_ice; FD-pinned in "
     "tests/test_oceanography_checkvalues.py)."
 )
-STAGED_QUERIES["gsw_adiabatic_lapse_rate_ice"] = _fn
-STAGED_ORACLES["gsw_adiabatic_lapse_rate_ice"] = _ice10_oracle(_LAPSE_EXPRS)
+register("gsw_adiabatic_lapse_rate_ice", oracle=_ice10_oracle(_LAPSE_EXPRS))(_fn)
 
 # Specific volume of ice v = g_p [m3/kg] (~1.09e-3: 1e12 floor) with
 # its product against rho_ice as an internal-consistency column
@@ -180,11 +138,10 @@ _fn.__doc__ = (
     "Specific volume of ice Ih = g_p [m3/kg] (GSW twin: "
     "gsw_specvol_ice; Table-6 rho reciprocal pinned in tests)."
 )
-STAGED_QUERIES["gsw_specvol_ice"] = _fn
-STAGED_ORACLES["gsw_specvol_ice"] = _ice10_oracle(_SPECVOL_ICE_EXPRS)
+register("gsw_specvol_ice", oracle=_ice10_oracle(_SPECVOL_ICE_EXPRS))(_fn)
 
 
-@_register(
+@register(
     "gsw_salinity_scale_conversions",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
@@ -264,7 +221,7 @@ def _o2sol_oracle() -> str:
     """
 
 
-@_register("gsw_o2sol_sp_pt", oracle="__WAVE_A__")
+@register("gsw_o2sol_sp_pt", oracle=_o2sol_oracle())
 def gsw_o2sol_sp_pt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oxygen solubility at saturation [umol/kg] from the Garcia &
     Gordon (1992) Benson–Krause combined fit (GSW twin:
@@ -291,9 +248,6 @@ def gsw_o2sol_sp_pt(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o2sol"
         ),
     )
-
-
-STAGED_ORACLES["gsw_o2sol_sp_pt"] = _o2sol_oracle()
 
 
 # ===========================================================================
@@ -339,7 +293,18 @@ def _pt0_ice_stages() -> list[tuple[str, str]]:
     return stages
 
 
-@_register("gsw_pt0_from_t_ice", oracle="__WAVE_B__")
+def _pt0_ice_oracle() -> str:
+    from cioos_siooc_data_transform_spark.plans.staged_r8 import _ICE_IN_SQL
+
+    staged = _stage_sql(_ICE_IN_SQL, _pt0_ice_stages())
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           floor(pt0_ice * 1.0e9 + 0.5) / 1.0e9 AS pt0_ice
+    FROM {staged}
+    """
+
+
+@register("gsw_pt0_from_t_ice", oracle=_pt0_ice_oracle())
 def gsw_pt0_from_t_ice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential temperature of ice Ih with reference pressure 0 dbar
     (GSW twin: gsw_pt0_from_t_ice): the pt0 whose entropy at p=0
@@ -359,20 +324,6 @@ def gsw_pt0_from_t_ice(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         (F.floor(F.col("pt0_ice") * 1.0e9 + 0.5) / 1.0e9).alias("pt0_ice"),
     )
-
-
-def _pt0_ice_oracle() -> str:
-    from cioos_siooc_data_transform_spark.plans.staged_r8 import _ICE_IN_SQL
-
-    staged = _stage_sql(_ICE_IN_SQL, _pt0_ice_stages())
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           floor(pt0_ice * 1.0e9 + 0.5) / 1.0e9 AS pt0_ice
-    FROM {staged}
-    """
-
-
-STAGED_ORACLES["gsw_pt0_from_t_ice"] = _pt0_ice_oracle()
 
 
 #: Fixed slopes for the freezing-point inversions (measured central
@@ -421,7 +372,16 @@ def _pfreeze_in_sql() -> str:
     """
 
 
-@_register("gsw_pressure_freezing_ct", oracle="__WAVE_B__")
+def _pfreeze_oracle() -> str:
+    staged = _stage_sql(_pfreeze_in_sql(), _p_freezing_stages())
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           floor(p_freezing * 1.0e6 + 0.5) / 1.0e6 AS p_freezing
+    FROM {staged}
+    """
+
+
+@register("gsw_pressure_freezing_ct", oracle=_pfreeze_oracle())
 def gsw_pressure_freezing_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Freezing pressure from (SP, CT) (GSW twin:
     gsw_pressure_freezing_CT): the sea pressure at which seawater of
@@ -453,18 +413,6 @@ def gsw_pressure_freezing_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pfreeze_oracle() -> str:
-    staged = _stage_sql(_pfreeze_in_sql(), _p_freezing_stages())
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           floor(p_freezing * 1.0e6 + 0.5) / 1.0e6 AS p_freezing
-    FROM {staged}
-    """
-
-
-STAGED_ORACLES["gsw_pressure_freezing_ct"] = _pfreeze_oracle()
-
-
 def _sa_freezing_stages() -> list[tuple[str, str]]:
     """Recover the freezing salinity from (ct, p): fixed init at the
     envelope midpoint, four fixed-slope steps (factor ~1.5%/step =>
@@ -492,7 +440,26 @@ def _sa_freezing_stages() -> list[tuple[str, str]]:
     return stages
 
 
-@_register("gsw_sa_freezing_from_ct", oracle="__WAVE_B__")
+def _sa_freezing_oracle() -> str:
+    from cioos_siooc_data_transform_spark.functions.teos10 import (
+        ct_freezing_sql,
+    )
+
+    inner = f"""
+    SELECT l_orderkey, l_linenumber,
+           {ct_freezing_sql("s", "p")} AS ct, p
+    FROM ({_IN_SQL})
+    """
+    staged = _stage_sql(inner, _sa_freezing_stages())
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           floor(sp_freezing * 1.0e6 + 0.5) / 1.0e6 AS sp_freezing,
+           floor(sa_freezing * 1.0e6 + 0.5) / 1.0e6 AS sa_freezing
+    FROM {staged}
+    """
+
+
+@register("gsw_sa_freezing_from_ct", oracle=_sa_freezing_oracle())
 def gsw_sa_freezing_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Freezing salinity from (CT, p) (GSW twin:
     gsw_SA_freezing_from_CT): the salinity at which seawater at sea
@@ -525,28 +492,6 @@ def gsw_sa_freezing_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sa_freezing_oracle() -> str:
-    from cioos_siooc_data_transform_spark.functions.teos10 import (
-        ct_freezing_sql,
-    )
-
-    inner = f"""
-    SELECT l_orderkey, l_linenumber,
-           {ct_freezing_sql("s", "p")} AS ct, p
-    FROM ({_IN_SQL})
-    """
-    staged = _stage_sql(inner, _sa_freezing_stages())
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           floor(sp_freezing * 1.0e6 + 0.5) / 1.0e6 AS sp_freezing,
-           floor(sa_freezing * 1.0e6 + 0.5) / 1.0e6 AS sa_freezing
-    FROM {staged}
-    """
-
-
-STAGED_ORACLES["gsw_sa_freezing_from_ct"] = _sa_freezing_oracle()
-
-
 # ===========================================================================
 # Wave C — classical statistical tests from integer-exact sums
 # (beyond-reference LLM-pipeline scope: the A/B and data-drift test
@@ -554,7 +499,7 @@ STAGED_ORACLES["gsw_sa_freezing_from_ct"] = _sa_freezing_oracle()
 # ([[oracle-parity-gotchas]]): quantize per-row to integer units, sum
 # as decimal(38,0)/HUGEINT, finish in double on the exact sums.
 # ===========================================================================
-@_register(
+@register(
     "lineitem_welch_ttest",
     oracle="""
     WITH g AS (
@@ -673,7 +618,7 @@ def lineitem_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_cramers_v",
     oracle="""
     WITH cells AS (
@@ -755,7 +700,7 @@ def lineitem_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_spearman_discount_qty",
     oracle="""
     WITH v AS (
@@ -869,7 +814,7 @@ def lineitem_spearman_discount_qty(
     )
 
 
-@_register(
+@register(
     "events_runs_test",
     oracle="""
     WITH d AS (
@@ -964,7 +909,7 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_ljung_box",
     oracle="""
     WITH d AS (
@@ -1087,7 +1032,7 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_dispersion_index",
     oracle="""
     WITH bounds AS (
@@ -1173,7 +1118,7 @@ def events_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bollinger monitoring, Benford first-digit audit, and a one-pass
 # referential-integrity profile.
 # ===========================================================================
-@_register(
+@register(
     "orders_association_lift",
     oracle="""
     WITH op AS (
@@ -1259,7 +1204,7 @@ def orders_association_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(25)
 
 
-@_register(
+@register(
     "customer_rfm_segments",
     oracle="""
     WITH mx AS (
@@ -1337,7 +1282,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_kaplan_meier",
     oracle="""
     WITH mx AS (SELECT max(o_orderdate) AS dmax FROM orders),
@@ -1465,7 +1410,7 @@ def orders_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_ewma_daily",
     oracle="""
     WITH d AS (
@@ -1541,7 +1486,7 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_bollinger_bands",
     oracle="""
     WITH d AS (
@@ -1612,7 +1557,7 @@ def orders_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "tpch_referential_integrity_profile",
     oracle="""
     SELECT 'lineitem->orders' AS fk_edge,
@@ -1712,7 +1657,7 @@ _BM25_K1 = 1.2
 _BM25_B = 0.75
 
 
-@_register(
+@register(
     "text_bm25_topk",
     oracle=f"""
     WITH tok AS (
@@ -1816,7 +1761,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "text_readability_flesch",
     oracle="""
     WITH m AS (
@@ -1876,7 +1821,7 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "source_vocab_jaccard",
     oracle="""
     WITH sv AS (
@@ -1986,7 +1931,20 @@ def _kcore_cte_chain(rounds: int) -> str:
     return "WITH " + ",\n    ".join(parts)
 
 
-@_register("graph_kcore3_peeling", oracle="__WAVE_F__")
+def _kcore_oracle() -> str:
+    chain = _kcore_cte_chain(6)
+    rows = []
+    for r in range(7):
+        rows.append(
+            f"""SELECT CAST({r} AS BIGINT) AS round,
+           (SELECT CAST(count(*) AS BIGINT) FROM (
+              SELECT a AS u FROM e{r} UNION SELECT b FROM e{r})) AS n_nodes,
+           (SELECT CAST(count(*) AS BIGINT) FROM e{r}) AS n_edges"""
+        )
+    return chain + "\n" + "\nUNION ALL\n".join(rows)
+
+
+@register("graph_kcore3_peeling", oracle=_kcore_oracle())
 def graph_kcore3_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core decomposition by iterative peeling, unrolled to 6 fixed
     rounds (each removes nodes of degree < 3 and their edges): emits
@@ -2035,23 +1993,36 @@ def graph_kcore3_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _kcore_oracle() -> str:
-    chain = _kcore_cte_chain(6)
-    rows = []
-    for r in range(7):
-        rows.append(
-            f"""SELECT CAST({r} AS BIGINT) AS round,
-           (SELECT CAST(count(*) AS BIGINT) FROM (
-              SELECT a AS u FROM e{r} UNION SELECT b FROM e{r})) AS n_nodes,
-           (SELECT CAST(count(*) AS BIGINT) FROM e{r}) AS n_edges"""
-        )
-    return chain + "\n" + "\nUNION ALL\n".join(rows)
+def _adamic_adar_oracle() -> str:
+    from cioos_siooc_data_transform_spark.plans.staged_r8 import _EDGES_SQL
+
+    return f"""
+    WITH e AS ({_EDGES_SQL}),
+    adj AS (
+      SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e
+    ), deg AS (
+      SELECT u AS z, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY 1
+    ), wedge AS (
+      SELECT x.v AS a, y.v AS c,
+             CAST(floor(1.0e0 / ln(CAST(d.deg AS DOUBLE)) * 1.0e9 + 0.5)
+                  AS BIGINT) AS w_nano
+      FROM adj x
+      JOIN adj y ON x.u = y.u AND x.v < y.v
+      JOIN deg d ON d.z = x.u
+    ), scored AS (
+      SELECT a, c, CAST(sum(w_nano) AS BIGINT) AS aa_nano
+      FROM wedge GROUP BY 1, 2
+    ), cand AS (
+      SELECT s.a, s.c, s.aa_nano
+      FROM scored s
+      ANTI JOIN e ON s.a = e.a AND s.c = e.b
+    )
+    SELECT a, c, CAST(aa_nano AS DOUBLE) / 1.0e9 AS adamic_adar
+    FROM cand ORDER BY aa_nano DESC, a, c LIMIT 20
+    """
 
 
-STAGED_ORACLES["graph_kcore3_peeling"] = _kcore_oracle()
-
-
-@_register("graph_adamic_adar_linkpred", oracle="__WAVE_F__")
+@register("graph_adamic_adar_linkpred", oracle=_adamic_adar_oracle())
 def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic–Adar link prediction: for unlinked pairs, score =
     sum over common neighbors z of 1/ln(deg(z)) — down-weighting hub
@@ -2105,39 +2076,34 @@ def graph_adamic_adar_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _adamic_adar_oracle() -> str:
+def _degree_gini_oracle() -> str:
     from cioos_siooc_data_transform_spark.plans.staged_r8 import _EDGES_SQL
 
     return f"""
     WITH e AS ({_EDGES_SQL}),
-    adj AS (
-      SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e
-    ), deg AS (
-      SELECT u AS z, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY 1
-    ), wedge AS (
-      SELECT x.v AS a, y.v AS c,
-             CAST(floor(1.0e0 / ln(CAST(d.deg AS DOUBLE)) * 1.0e9 + 0.5)
-                  AS BIGINT) AS w_nano
-      FROM adj x
-      JOIN adj y ON x.u = y.u AND x.v < y.v
-      JOIN deg d ON d.z = x.u
-    ), scored AS (
-      SELECT a, c, CAST(sum(w_nano) AS BIGINT) AS aa_nano
-      FROM wedge GROUP BY 1, 2
-    ), cand AS (
-      SELECT s.a, s.c, s.aa_nano
-      FROM scored s
-      ANTI JOIN e ON s.a = e.a AND s.c = e.b
+    deg AS (
+      SELECT u, CAST(count(*) AS BIGINT) AS deg FROM (
+        SELECT a AS u FROM e UNION ALL SELECT b FROM e
+      ) GROUP BY 1
+    ), ranked AS (
+      SELECT deg, CAST(row_number() OVER (ORDER BY deg, u) AS BIGINT) AS i
+      FROM deg
+    ), s AS (
+      SELECT CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(deg) AS HUGEINT) AS sd,
+             sum(CAST(i AS HUGEINT) * CAST(deg AS HUGEINT)) AS sid
+      FROM ranked
     )
-    SELECT a, c, CAST(aa_nano AS DOUBLE) / 1.0e9 AS adamic_adar
-    FROM cand ORDER BY aa_nano DESC, a, c LIMIT 20
+    SELECT n, CAST(sd AS BIGINT) AS total_degree,
+           floor((2.0e0 * CAST(sid AS DOUBLE)
+                  / (CAST(n AS DOUBLE) * CAST(sd AS DOUBLE))
+                  - (CAST(n AS DOUBLE) + 1.0e0) / CAST(n AS DOUBLE))
+                 * 1.0e9 + 0.5) / 1.0e9 AS degree_gini
+    FROM s
     """
 
 
-STAGED_ORACLES["graph_adamic_adar_linkpred"] = _adamic_adar_oracle()
-
-
-@_register("graph_degree_gini", oracle="__WAVE_F__")
+@register("graph_degree_gini", oracle=_degree_gini_oracle())
 def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of the co-purchase degree distribution (hub
     concentration): with degrees sorted ascending, G = 2*sum(i*d_i) /
@@ -2191,36 +2157,6 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _degree_gini_oracle() -> str:
-    from cioos_siooc_data_transform_spark.plans.staged_r8 import _EDGES_SQL
-
-    return f"""
-    WITH e AS ({_EDGES_SQL}),
-    deg AS (
-      SELECT u, CAST(count(*) AS BIGINT) AS deg FROM (
-        SELECT a AS u FROM e UNION ALL SELECT b FROM e
-      ) GROUP BY 1
-    ), ranked AS (
-      SELECT deg, CAST(row_number() OVER (ORDER BY deg, u) AS BIGINT) AS i
-      FROM deg
-    ), s AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(deg) AS HUGEINT) AS sd,
-             sum(CAST(i AS HUGEINT) * CAST(deg AS HUGEINT)) AS sid
-      FROM ranked
-    )
-    SELECT n, CAST(sd AS BIGINT) AS total_degree,
-           floor((2.0e0 * CAST(sid AS DOUBLE)
-                  / (CAST(n AS DOUBLE) * CAST(sd AS DOUBLE))
-                  - (CAST(n AS DOUBLE) + 1.0e0) / CAST(n AS DOUBLE))
-                 * 1.0e9 + 0.5) / 1.0e9 AS degree_gini
-    FROM s
-    """
-
-
-STAGED_ORACLES["graph_degree_gini"] = _degree_gini_oracle()
-
-
 # ===========================================================================
 # Wave G — embedding-corpus health audits for the LLM-data pipeline:
 # anisotropy (Ethayarajh 2019's observation that contextual embedding
@@ -2254,7 +2190,7 @@ _EMB_Q_SQL = """
 """
 
 
-@_register(
+@register(
     "embedding_anisotropy_audit",
     oracle=f"""
     WITH lng AS MATERIALIZED ({_EMB_Q_SQL.format(scale="1.0e9")}),
@@ -2348,7 +2284,7 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_label_margin",
     oracle=f"""
     WITH lng AS MATERIALIZED ({_EMB_Q_SQL.format(scale="1.0e9")}),
@@ -2471,7 +2407,87 @@ def embedding_label_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("embedding_pca_power_iteration", oracle="__WAVE_G__")
+def _pca_oracle() -> str:
+    lng = _EMB_Q_SQL.format(scale="1.0e6")
+    parts = [
+        f"lng AS MATERIALIZED ({lng})",
+        """mom AS MATERIALIZED (
+      SELECT a.pos AS i, b.pos AS j,
+             CAST(sum(CAST(a.q AS HUGEINT) * CAST(b.q AS HUGEINT))
+                  AS HUGEINT) AS m
+      FROM lng a JOIN lng b USING (vec_id) GROUP BY 1, 2
+    )""",
+        """s AS (
+      SELECT pos AS i, CAST(sum(q) AS HUGEINT) AS s,
+             CAST(count(*) AS BIGINT) AS n
+      FROM lng GROUP BY 1
+    )""",
+        """cov AS MATERIALIZED (
+      SELECT mom.i, mom.j,
+             CAST(floor(
+               (CAST(m AS DOUBLE) / 1.0e12
+                - (CAST(si.s AS DOUBLE) / 1.0e6)
+                  * (CAST(sj.s AS DOUBLE) / 1.0e6) / CAST(si.n AS DOUBLE))
+               / CAST(si.n AS DOUBLE) * 1.0e12 + 0.5) AS BIGINT) AS cq
+      FROM mom JOIN s si ON si.i = mom.i JOIN s sj ON sj.i = mom.j
+    )""",
+        """v0 AS (
+      SELECT DISTINCT j, CAST(125000000 AS BIGINT) AS vq
+      FROM (SELECT j FROM cov)
+    )""",
+    ]
+    for k in range(1, 9):
+        p = k - 1
+        parts += [
+            f"""u{k} AS MATERIALIZED (
+      SELECT cov.i, CAST(sum(CAST(cq AS HUGEINT) * CAST(vq AS HUGEINT))
+                         AS HUGEINT) AS u
+      FROM cov JOIN v{p} ON v{p}.j = cov.j GROUP BY 1
+    )""",
+            f"""n{k} AS (
+      SELECT CAST(sum(CAST(floor(
+               (CAST(u AS DOUBLE) / 1.0e21) * (CAST(u AS DOUBLE) / 1.0e21)
+               * 1.0e18 + 0.5) AS HUGEINT)) AS DOUBLE) AS n2
+      FROM u{k}
+    )""",
+            f"""v{k} AS MATERIALIZED (
+      SELECT i AS j,
+             CAST(floor(CAST(u AS DOUBLE) / 1.0e21
+                        / sqrt(n2 / 1.0e18) * 1.0e9 + 0.5) AS BIGINT) AS vq
+      FROM u{k}, n{k}
+    )""",
+        ]
+    parts += [
+        """u9 AS MATERIALIZED (
+      SELECT cov.i, CAST(sum(CAST(cq AS HUGEINT) * CAST(vq AS HUGEINT))
+                         AS HUGEINT) AS u
+      FROM cov JOIN v8 ON v8.j = cov.j GROUP BY 1
+    )""",
+        """ray AS (
+      SELECT CAST(sum(CAST(floor(
+               (CAST(vq AS DOUBLE) / 1.0e9) * (CAST(u AS DOUBLE) / 1.0e21)
+               * 1.0e12 + 0.5) AS HUGEINT)) AS DOUBLE) / 1.0e12 AS num,
+             CAST(sum(CAST(vq AS HUGEINT) * CAST(vq AS HUGEINT)) AS DOUBLE)
+               / 1.0e18 AS den
+      FROM u9 JOIN v8 ON v8.j = u9.i
+    )""",
+        """ranked AS (
+      SELECT CAST(row_number() OVER (ORDER BY abs(vq) DESC, j) AS BIGINT)
+               AS rank,
+             j AS dim, CAST(vq AS DOUBLE) / 1.0e9 AS loading,
+             floor(num / den * 1.0e9 + 0.5) / 1.0e9 AS eigenvalue
+      FROM v8, ray
+    )""",
+    ]
+    return (
+        "WITH "
+        + ",\n    ".join(parts)
+        + "\nSELECT rank, dim, loading, eigenvalue FROM ranked"
+        + "\nWHERE rank <= 8 ORDER BY rank"
+    )
+
+
+@register("embedding_pca_power_iteration", oracle=_pca_oracle())
 def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top principal component of the embedding corpus by eight fixed
     power-iteration rounds over the exact 64×64 covariance (the
@@ -2583,89 +2599,6 @@ def embedding_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _pca_oracle() -> str:
-    lng = _EMB_Q_SQL.format(scale="1.0e6")
-    parts = [
-        f"lng AS MATERIALIZED ({lng})",
-        """mom AS MATERIALIZED (
-      SELECT a.pos AS i, b.pos AS j,
-             CAST(sum(CAST(a.q AS HUGEINT) * CAST(b.q AS HUGEINT))
-                  AS HUGEINT) AS m
-      FROM lng a JOIN lng b USING (vec_id) GROUP BY 1, 2
-    )""",
-        """s AS (
-      SELECT pos AS i, CAST(sum(q) AS HUGEINT) AS s,
-             CAST(count(*) AS BIGINT) AS n
-      FROM lng GROUP BY 1
-    )""",
-        """cov AS MATERIALIZED (
-      SELECT mom.i, mom.j,
-             CAST(floor(
-               (CAST(m AS DOUBLE) / 1.0e12
-                - (CAST(si.s AS DOUBLE) / 1.0e6)
-                  * (CAST(sj.s AS DOUBLE) / 1.0e6) / CAST(si.n AS DOUBLE))
-               / CAST(si.n AS DOUBLE) * 1.0e12 + 0.5) AS BIGINT) AS cq
-      FROM mom JOIN s si ON si.i = mom.i JOIN s sj ON sj.i = mom.j
-    )""",
-        """v0 AS (
-      SELECT DISTINCT j, CAST(125000000 AS BIGINT) AS vq
-      FROM (SELECT j FROM cov)
-    )""",
-    ]
-    for k in range(1, 9):
-        p = k - 1
-        parts += [
-            f"""u{k} AS MATERIALIZED (
-      SELECT cov.i, CAST(sum(CAST(cq AS HUGEINT) * CAST(vq AS HUGEINT))
-                         AS HUGEINT) AS u
-      FROM cov JOIN v{p} ON v{p}.j = cov.j GROUP BY 1
-    )""",
-            f"""n{k} AS (
-      SELECT CAST(sum(CAST(floor(
-               (CAST(u AS DOUBLE) / 1.0e21) * (CAST(u AS DOUBLE) / 1.0e21)
-               * 1.0e18 + 0.5) AS HUGEINT)) AS DOUBLE) AS n2
-      FROM u{k}
-    )""",
-            f"""v{k} AS MATERIALIZED (
-      SELECT i AS j,
-             CAST(floor(CAST(u AS DOUBLE) / 1.0e21
-                        / sqrt(n2 / 1.0e18) * 1.0e9 + 0.5) AS BIGINT) AS vq
-      FROM u{k}, n{k}
-    )""",
-        ]
-    parts += [
-        """u9 AS MATERIALIZED (
-      SELECT cov.i, CAST(sum(CAST(cq AS HUGEINT) * CAST(vq AS HUGEINT))
-                         AS HUGEINT) AS u
-      FROM cov JOIN v8 ON v8.j = cov.j GROUP BY 1
-    )""",
-        """ray AS (
-      SELECT CAST(sum(CAST(floor(
-               (CAST(vq AS DOUBLE) / 1.0e9) * (CAST(u AS DOUBLE) / 1.0e21)
-               * 1.0e12 + 0.5) AS HUGEINT)) AS DOUBLE) / 1.0e12 AS num,
-             CAST(sum(CAST(vq AS HUGEINT) * CAST(vq AS HUGEINT)) AS DOUBLE)
-               / 1.0e18 AS den
-      FROM u9 JOIN v8 ON v8.j = u9.i
-    )""",
-        """ranked AS (
-      SELECT CAST(row_number() OVER (ORDER BY abs(vq) DESC, j) AS BIGINT)
-               AS rank,
-             j AS dim, CAST(vq AS DOUBLE) / 1.0e9 AS loading,
-             floor(num / den * 1.0e9 + 0.5) / 1.0e9 AS eigenvalue
-      FROM v8, ray
-    )""",
-    ]
-    return (
-        "WITH "
-        + ",\n    ".join(parts)
-        + "\nSELECT rank, dim, loading, eigenvalue FROM ranked"
-        + "\nWHERE rank <= 8 ORDER BY rank"
-    )
-
-
-STAGED_ORACLES["embedding_pca_power_iteration"] = _pca_oracle()
-
-
 # ===========================================================================
 # Wave H — dedup-adjacent pipeline machinery: blocked
 # sorted-neighborhood candidate generation (Hernandez & Stolfo 1995),
@@ -2675,7 +2608,7 @@ STAGED_ORACLES["embedding_pca_power_iteration"] = _pca_oracle()
 # threshold sweep over the LSH-free exact candidate set (the knob-
 # tuning curve a dedup rollout reads before picking its cutoff).
 # ===========================================================================
-@_register(
+@register(
     "dedup_sorted_neighborhood",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -2791,7 +2724,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "dedup_blocking_quality_audit",
     oracle="""
     WITH b AS (
@@ -2873,7 +2806,7 @@ def dedup_blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "sample_hash_uniformity_chisq",
     oracle="""
     WITH h AS (
@@ -2953,7 +2886,7 @@ def sample_hash_uniformity_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "dedup_jaccard_threshold_sweep",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -3051,7 +2984,7 @@ def dedup_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
 # decimal(38,0)/HUGEINT sums, doubles only in the final scalar algebra
 # ([[oracle-parity-gotchas]]).
 # ===========================================================================
-@_register(
+@register(
     "events_pot_gpd_fit",
     oracle="""
     WITH v AS (
@@ -3181,7 +3114,7 @@ def events_pot_gpd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_interarrival_burstiness",
     oracle="""
     WITH o AS (
@@ -3314,7 +3247,7 @@ def _specvol_first_oracle() -> str:
     """
 
 
-@_register("gsw_specvol_first_derivatives", oracle="__WAVE_J10A__")
+@register("gsw_specvol_first_derivatives", oracle=_specvol_first_oracle())
 def gsw_specvol_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """∂v/∂SA, ∂v/∂CT, ∂v/∂p of the Roquet et al. (2015) 75-term
     specific volume, evaluated as ANALYTIC Horner polynomials of the
@@ -3349,9 +3282,6 @@ def gsw_specvol_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-STAGED_ORACLES["gsw_specvol_first_derivatives"] = _specvol_first_oracle()
-
-
 def _rho_second_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         cabbeling_thermobaric_stages,
@@ -3384,7 +3314,7 @@ def _rho_second_oracle() -> str:
     """
 
 
-@_register("gsw_rho_second_derivatives", oracle="__WAVE_J10B__")
+@register("gsw_rho_second_derivatives", oracle=_rho_second_oracle())
 def gsw_rho_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Density second derivatives (rho_SA_SA, rho_SA_CT, rho_CT_CT,
     rho_SA_p, rho_CT_p; GSW twin: gsw_rho_second_derivatives) from the
@@ -3437,10 +3367,7 @@ def gsw_rho_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_rho_second_derivatives"] = _rho_second_oracle()
-
-
-@_register(
+@register(
     "gsw_temperature_scale_conversions",
     oracle=f"""
     WITH i AS (
@@ -3500,7 +3427,7 @@ def gsw_temperature_scale_conversions(
 # .0-valued double on both engines); everything else is exact integer
 # sums finished in double ([[oracle-parity-gotchas]]).
 # ===========================================================================
-@_register(
+@register(
     "customer_acctbal_levene_test",
     oracle="""
     WITH c AS (
@@ -3617,7 +3544,7 @@ def customer_acctbal_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_daily_mad_anomalies",
     oracle="""
     WITH d AS (
@@ -3684,7 +3611,7 @@ def events_daily_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_seasonal_naive_backtest",
     oracle="""
     WITH m AS (
@@ -3768,7 +3695,7 @@ def orders_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@register(
     "orders_diff_in_diff_holiday",
     oracle="""
     WITH c AS (
@@ -3890,7 +3817,7 @@ def _bloom_bits_sql(key: str) -> str:
     )
 
 
-@_register(
+@register(
     "sketch_bloom_fpr_audit",
     oracle=f"""
     WITH members AS (SELECT DISTINCT o_custkey AS key FROM orders),
@@ -4007,7 +3934,7 @@ def sketch_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "sample_stratified_split_audit",
     oracle="""
     WITH d AS (
@@ -4092,7 +4019,7 @@ def sample_stratified_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 # to 1e-12 units before the sum, so the aggregate is an exact integer
 # sum in any order ([[oracle-parity-gotchas]]).
 # ===========================================================================
-@_register(
+@register(
     "text_source_unigram_jsd",
     oracle="""
     WITH tok AS (
@@ -4196,7 +4123,7 @@ def text_source_unigram_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "text_sentence_length_profile",
     oracle="""
     WITH s AS (
@@ -4278,7 +4205,7 @@ def text_sentence_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cosine space). Neighbor sets use the established rounded-cosine +
 # id tiebreak so both engines agree on the exact graph.
 # ===========================================================================
-@_register(
+@register(
     "embedding_knn_hubness",
     oracle="""
     WITH sub AS (
@@ -4383,7 +4310,7 @@ def embedding_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_triplet_margin_violations",
     oracle="""
     WITH e AS (
@@ -4470,10 +4397,10 @@ def embedding_triplet_margin_violations(
         .filter(F.col("neg_label") != F.col("label"))
     )
     s = trip.select(
-        (F.round(cosine_expr(F.col("v"), F.col("pv")), 6) * 1000000)
+        (F.round(cosine_expr("v", "pv"), 6) * 1000000)
         .cast("long")
         .alias("cap"),
-        (F.round(cosine_expr(F.col("v"), F.col("gv")), 6) * 1000000)
+        (F.round(cosine_expr("v", "gv"), 6) * 1000000)
         .cast("long")
         .alias("can"),
     )
@@ -4509,7 +4436,7 @@ def embedding_triplet_margin_violations(
 # come from the operator's NEW weighted-cumsum mode over the
 # distinct-value table.
 # ===========================================================================
-@_register(
+@register(
     "customer_segment_migration",
     oracle="""
     WITH s AS (
@@ -4611,7 +4538,7 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_kruskal_wallis_value",
     oracle="""
     WITH v AS (
@@ -4748,7 +4675,7 @@ def events_kruskal_wallis_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # splits — both change the training mix). Exact integers until the two
 # final rate divisions (floor-quantized, order-independent).
 # ===========================================================================
-@_register(
+@register(
     "doc_context_overflow_rate",
     oracle="""
     WITH tok AS (

@@ -1,13 +1,7 @@
-"""STAGED round-11 queries — NOT registered (round-11 runway seed).
+"""Round-11 query slate: 50 live queries, each registered at import
+with ``register``; strict-harness coverage in tests/test_staged_r11.py.
 
-Same contract as staged_r5..r10: LOCAL registry, strict-harness pytest
-coverage in tests/test_staged_r11.py, idempotent ``activate()``.
-Activation order: staged_r8 (round 8) -> staged_r9 (round 9) ->
-staged_r10 (round 10) -> this module (round 11). Budget:
-len(STAGED_QUERIES) + len(STAGED_REPLACEMENTS) <= 50 fresh names at
-activation.
-
-COMPLETE at the 50-name budget (50 new, 0 replacements):
+Content:
 - Wave A — dedup/cluster-quality audits: transitivity, Burrows'
   Delta, TwoNN intrinsic dimension, rich-club coefficient.
 - Wave B — time-series/econometrics: weighted price quantiles
@@ -24,27 +18,16 @@ COMPLETE at the 50-name budget (50 new, 0 replacements):
   spiciness1/2, Baltic SA special case.
 - Wave G — Grubbs test, Allan variance, Breusch-Pagan LM.
 
-ACTIVATION NOTE (round 11, pre-audited in round 10 via
-plan_guards.find_unpartitioned_windows at sf0.001): exactly THREE
-queries carry a bounded unpartitioned window — add them to
-tests/test_plans.py::_ALLOWED_UNPARTITIONED_WINDOWS in the activation
-commit with these justifications; everything else in the slate is
-detector-clean:
+Plan audit (plan_guards.find_unpartitioned_windows at sf0.001): exactly
+THREE queries carry a bounded unpartitioned window, allowlisted in
+tests/test_plans.py::_ALLOWED_UNPARTITIONED_WINDOWS; everything else in
+the slate is detector-clean:
 - events_changepoint_binseg2: "runs over the per-DAY rollup +
   TakeOrdered(limit=1) split picks (calendar-bounded axis)"
 - orders_max_drawdown: "runs over the per-MONTH revenue rollup
   (calendar-bounded axis)"
 - orders_rolling_corr_12m: "runs over the per-MONTH rollup
   (calendar-bounded axis)"
-Activation checklist (the staged_r10/round-10 precedent, commit
-56e1d83): (1) move the 50 round-10-green names from
-CORRECTNESS_r10.json into __spark_entry__._CHECKED; (2) import +
-activate() in plans/__init__.py; (3) flip tests/test_staged_r11.py
-from the parked to the activated form (test_staged_now_registered /
-test_activate_idempotent_after_import /
-test_registered_callables_are_the_staged_ones); (4) add the three
-allowlist entries above; (5) re-run tools/driver_sim.py full sweep +
-tools/plan_audit.py; (6) regenerate tri-scale artifacts.
 
 - Wave H — SimHash bit balance, brand modularity, partsupp
   price-spread audit.
@@ -65,53 +48,17 @@ tools/plan_audit.py; (6) regenerate tri-scale artifacts.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-#: name -> (fn, oracle) for queries REPLACING a live registry entry.
-STAGED_REPLACEMENTS: dict[str, tuple[Callable[..., Any], str]] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def activate() -> int:
-    """Round-11 activation (idempotent): new names register once;
-    replacements overwrite unconditionally (freshness enforced by the
-    _CHECKED edit in the activation commit + the budget test)."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    for name, (fn, oracle) in STAGED_REPLACEMENTS.items():
-        if QUERIES.get(name) is not fn:
-            QUERIES[name] = fn
-            ORACLES[name] = oracle
-            n += 1
-    return n
 
 
 # ===========================================================================
 # Wave A — dedup/cluster-quality and corpus-health audits.
 # ===========================================================================
-@_register(
+@register(
     "dedup_transitivity_audit",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -224,7 +171,7 @@ def dedup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "text_burrows_delta",
     oracle="""
     WITH tok AS (
@@ -361,7 +308,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_intrinsic_dim_two_nn",
     oracle="""
     WITH sub AS (
@@ -467,7 +414,7 @@ def embedding_intrinsic_dim_two_nn(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@register(
     "graph_rich_club_coefficient",
     oracle="""
     WITH e AS (
@@ -579,7 +526,7 @@ def graph_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # estimator of the extremal index (does risk cluster in time?). Exact
 # integer units everywhere; doubles only in final scalar algebra.
 # ===========================================================================
-@_register(
+@register(
     "lineitem_weighted_price_quantiles",
     oracle="""
     WITH v AS (
@@ -659,7 +606,7 @@ def lineitem_weighted_price_quantiles(
     )
 
 
-@_register(
+@register(
     "orders_max_drawdown",
     oracle="""
     WITH m AS (
@@ -739,7 +686,7 @@ def orders_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_extremal_index_intervals",
     oracle="""
     WITH v AS (
@@ -867,7 +814,7 @@ def events_extremal_index_intervals(
     ).orderBy("event_type")
 
 
-@_register(
+@register(
     "orders_fixed_effects_trend",
     oracle="""
     WITH o AS (
@@ -963,7 +910,7 @@ def orders_fixed_effects_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_conversion_lag",
     oracle="""
     WITH clicks AS (
@@ -1039,7 +986,7 @@ def events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_median_polish",
     oracle="""
     WITH cell AS (
@@ -1154,7 +1101,7 @@ def _cp_oracle() -> str:
     """
 
 
-@_register("gsw_cp_t_exact", oracle="__WAVE_C11A__")
+@register("gsw_cp_t_exact", oracle=_cp_oracle())
 def gsw_cp_t_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isobaric specific heat capacity cp(SA, t, p) = −(T0+t)·g_TT =
     (T0+t)·η_t (IOC et al. 2010 eqn 2.20.3; GSW twin gsw_cp_t_exact).
@@ -1186,9 +1133,6 @@ def gsw_cp_t_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 1.0e6
         ).alias("cp_j_kg_k"),
     )
-
-
-STAGED_ORACLES["gsw_cp_t_exact"] = _cp_oracle()
 
 
 #: Final-surface columns each prefixed Gibbs chain emits; the potential-
@@ -1254,7 +1198,7 @@ def _poth_ice_oracle() -> str:
     """
 
 
-@_register("gsw_pot_enthalpy_from_t_ice", oracle="__WAVE_C11B__")
+@register("gsw_pot_enthalpy_from_t_ice", oracle=_poth_ice_oracle())
 def gsw_pot_enthalpy_from_t_ice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential enthalpy of ice Ih, h_ice(pt0_ice, 0) (GSW twin:
     gsw_pot_enthalpy_from_t_ice) — the conservative heat-content
@@ -1279,9 +1223,6 @@ def gsw_pot_enthalpy_from_t_ice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_pot_enthalpy_from_t_ice"] = _poth_ice_oracle()
-
-
 def _gibbs_deriv_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         adiabatic_lapse_rate_t_exact_sql,
@@ -1302,7 +1243,7 @@ def _gibbs_deriv_oracle() -> str:
     """
 
 
-@_register("gsw_chem_potential_t_derivative", oracle="__WAVE_D11A__")
+@register("gsw_chem_potential_t_derivative", oracle=_gibbs_deriv_oracle())
 def gsw_chem_potential_t_derivative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature derivative of the chemical potential of water in
     seawater, ∂μ_W/∂T = g_T − SA·g_SAT = −η + SA·η_SA (GSW twin:
@@ -1346,10 +1287,7 @@ def gsw_chem_potential_t_derivative(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-STAGED_ORACLES["gsw_chem_potential_t_derivative"] = _gibbs_deriv_oracle()
-
-
-@_register(
+@register(
     "dedup_component_source_purity",
     oracle="""
     WITH RECURSIVE w AS (
@@ -1480,7 +1418,7 @@ def dedup_component_source_purity(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
+@register(
     "orders_littles_law_audit",
     oracle="""
     WITH o AS (
@@ -1622,7 +1560,7 @@ def _mrl_oracle() -> str:
     """
 
 
-@_register("embedding_prefix_dim_recall", oracle="__WAVE_E11A__")
+@register("embedding_prefix_dim_recall", oracle=_mrl_oracle())
 def embedding_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style prefix-dimension recall curve (Kusupati et al.
     2022): re-rank the exact top-10 (full 64-dim rounded cosine, the
@@ -1653,7 +1591,7 @@ def embedding_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             qv = F.slice(F.col("qv"), 1, d)
             cv = F.slice(F.col("cv"), 1, d)
         else:
-            qv, cv = F.col("qv"), F.col("cv")
+            qv, cv = "qv", "cv"
         w = Window.partitionBy("query_id").orderBy(
             F.round(cosine_expr(qv, cv), 6).desc(), F.col("neighbor_id").asc()
         )
@@ -1693,13 +1631,10 @@ def embedding_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("dim")
 
 
-STAGED_ORACLES["embedding_prefix_dim_recall"] = _mrl_oracle()
-
-
 _PACK_SWEEP_CAPS = (256, 512, 1024, 2048)
 
 
-@_register(
+@register(
     "pack_chunk_size_sweep",
     oracle=f"""
     WITH RECURSIVE d AS (
@@ -1808,7 +1743,7 @@ def _ice_coef_oracle() -> str:
     """
 
 
-@_register("gsw_ice_expansion_coefficients", oracle="__WAVE_F11A__")
+@register("gsw_ice_expansion_coefficients", oracle=_ice_coef_oracle())
 def gsw_ice_expansion_coefficients(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thermal expansion of ice wrt in-situ temperature alpha =
     g_TP/g_P [1/K] and the isochoric pressure coefficient (dP/dT)_v =
@@ -1839,9 +1774,6 @@ def gsw_ice_expansion_coefficients(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-STAGED_ORACLES["gsw_ice_expansion_coefficients"] = _ice_coef_oracle()
-
-
 def _spice12_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_from_t_sql,
@@ -1868,7 +1800,7 @@ def _spice12_oracle() -> str:
     """
 
 
-@_register("gsw_spiciness1_2", oracle="__WAVE_F11B__")
+@register("gsw_spiciness1_2", oracle=_spice12_oracle())
 def gsw_spiciness1_2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spiciness referenced to 1000 and 2000 dbar (GSW twins:
     gsw_spiciness1, gsw_spiciness2; McDougall & Krzysik 2015
@@ -1905,9 +1837,6 @@ def gsw_spiciness1_2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_spiciness1_2"] = _spice12_oracle()
-
-
 _BALTIC_SQL = """
     CASE WHEN lat > 50.0e0 AND lat < 69.0e0 AND lon > 7.0e0 AND lon < 45.0e0
          AND lon >= (CASE WHEN lat < 59.0e0
@@ -1921,7 +1850,29 @@ _BALTIC_SQL = """
 """
 
 
-@_register("gsw_sa_from_sp_baltic", oracle="__WAVE_F11C__")
+def _baltic_oracle() -> str:
+    return f"""
+    WITH pts AS (
+      SELECT l_orderkey, l_linenumber,
+             5.0e0 + CAST(l_orderkey % 50 AS DOUBLE) AS lon,
+             48.0e0 + CAST(l_suppkey % 24 AS DOUBLE) AS lat,
+             CAST(30.0 + l_discount * 50 AS DOUBLE) AS sp
+      FROM lineitem
+    )
+    SELECT l_orderkey, l_linenumber,
+           floor(({_BALTIC_SQL}) * 1.0e9 + 0.5) / 1.0e9 AS sa_baltic,
+           (lat > 50.0e0 AND lat < 69.0e0 AND lon > 7.0e0 AND lon < 45.0e0
+            AND lon >= (CASE WHEN lat < 59.0e0
+                        THEN 12.6e0 + (7.0e0 - 12.6e0)*(lat - 50.0e0)/9.0e0
+                        ELSE 7.0e0 + (26.0e0 - 7.0e0)*(lat - 59.0e0)/10.0e0
+                   END)
+            AND lon <= (45.0e0 + (26.0e0 - 45.0e0)*(lat - 50.0e0)/19.0e0))
+             AS in_baltic
+    FROM pts
+    """
+
+
+@register("gsw_sa_from_sp_baltic", oracle=_baltic_oracle())
 def gsw_sa_from_sp_baltic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Absolute Salinity from Practical Salinity with the Baltic Sea
     special case (GSW twin: gsw_SA_from_SP_Baltic; IOC, SCOR & IAPSO
@@ -1964,38 +1915,13 @@ def gsw_sa_from_sp_baltic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _baltic_oracle() -> str:
-    return f"""
-    WITH pts AS (
-      SELECT l_orderkey, l_linenumber,
-             5.0e0 + CAST(l_orderkey % 50 AS DOUBLE) AS lon,
-             48.0e0 + CAST(l_suppkey % 24 AS DOUBLE) AS lat,
-             CAST(30.0 + l_discount * 50 AS DOUBLE) AS sp
-      FROM lineitem
-    )
-    SELECT l_orderkey, l_linenumber,
-           floor(({_BALTIC_SQL}) * 1.0e9 + 0.5) / 1.0e9 AS sa_baltic,
-           (lat > 50.0e0 AND lat < 69.0e0 AND lon > 7.0e0 AND lon < 45.0e0
-            AND lon >= (CASE WHEN lat < 59.0e0
-                        THEN 12.6e0 + (7.0e0 - 12.6e0)*(lat - 50.0e0)/9.0e0
-                        ELSE 7.0e0 + (26.0e0 - 7.0e0)*(lat - 59.0e0)/10.0e0
-                   END)
-            AND lon <= (45.0e0 + (26.0e0 - 45.0e0)*(lat - 50.0e0)/19.0e0))
-             AS in_baltic
-    FROM pts
-    """
-
-
-STAGED_ORACLES["gsw_sa_from_sp_baltic"] = _baltic_oracle()
-
-
 # ===========================================================================
 # Wave G — diagnostics battery growth: Grubbs' extreme-outlier test,
 # Allan variance of the event rate across averaging scales, and the
 # Breusch–Pagan heteroskedasticity test on the price~quantity OLS.
 # Integer-exact sums, doubles in the final scalar algebra only.
 # ===========================================================================
-@_register(
+@register(
     "lineitem_grubbs_outlier_test",
     oracle="""
     WITH v AS (
@@ -2067,7 +1993,7 @@ def lineitem_grubbs_outlier_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_allan_variance",
     oracle="""
     WITH scales AS (SELECT unnest([60, 300, 900]) AS tau_s),
@@ -2161,7 +2087,7 @@ def events_allan_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_breusch_pagan_test",
     oracle="""
     WITH v AS (
@@ -2292,7 +2218,7 @@ def lineitem_breusch_pagan_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 # co-purchase graph (brand homophily), and the partsupp multi-sourcing
 # price-spread audit over the derived deterministic partsupp table.
 # ===========================================================================
-@_register(
+@register(
     "dedup_simhash_bit_balance",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -2372,7 +2298,7 @@ def dedup_simhash_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bit")
 
 
-@_register(
+@register(
     "graph_brand_modularity",
     oracle="""
     WITH e AS (
@@ -2486,7 +2412,32 @@ def graph_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("partsupp_price_spread_audit", oracle="__WAVE_H11C__")
+def _partsupp_spread_oracle() -> str:
+    from cioos_siooc_data_transform_spark.sources.partsupp import PARTSUPP_CTE
+
+    return f"""
+    WITH {PARTSUPP_CTE},
+    per AS (
+      SELECT ps_partkey, CAST(count(*) AS BIGINT) AS n_suppliers,
+             CAST(min(ps_supplycost_cents) AS BIGINT) AS mn,
+             CAST(max(ps_supplycost_cents) AS BIGINT) AS mx
+      FROM partsupp GROUP BY 1
+    ),
+    b AS (
+      SELECT least(n_suppliers, 5) AS supplier_bucket,
+             CAST(floor(CAST(mx - mn AS DOUBLE) / CAST(mn AS DOUBLE)
+                        * 1.0e6 + 0.5) AS BIGINT) AS spread_u
+      FROM per
+    )
+    SELECT supplier_bucket, CAST(count(*) AS BIGINT) AS n_parts,
+           floor(CAST(sum(spread_u) AS DOUBLE) / count(*) + 0.5) / 1.0e6
+             AS mean_rel_spread,
+           max(spread_u) / 1.0e6 AS max_rel_spread
+    FROM b GROUP BY 1 ORDER BY 1
+    """
+
+
+@register("partsupp_price_spread_audit", oracle=_partsupp_spread_oracle())
 def partsupp_price_spread_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-sourcing audit over the derived deterministic partsupp
     relation (sources/partsupp.py): per supplier-count bucket, how many
@@ -2530,34 +2481,6 @@ def partsupp_price_spread_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("supplier_bucket")
     )
-
-
-def _partsupp_spread_oracle() -> str:
-    from cioos_siooc_data_transform_spark.sources.partsupp import PARTSUPP_CTE
-
-    return f"""
-    WITH {PARTSUPP_CTE},
-    per AS (
-      SELECT ps_partkey, CAST(count(*) AS BIGINT) AS n_suppliers,
-             CAST(min(ps_supplycost_cents) AS BIGINT) AS mn,
-             CAST(max(ps_supplycost_cents) AS BIGINT) AS mx
-      FROM partsupp GROUP BY 1
-    ),
-    b AS (
-      SELECT least(n_suppliers, 5) AS supplier_bucket,
-             CAST(floor(CAST(mx - mn AS DOUBLE) / CAST(mn AS DOUBLE)
-                        * 1.0e6 + 0.5) AS BIGINT) AS spread_u
-      FROM per
-    )
-    SELECT supplier_bucket, CAST(count(*) AS BIGINT) AS n_parts,
-           floor(CAST(sum(spread_u) AS DOUBLE) / count(*) + 0.5) / 1.0e6
-             AS mean_rel_spread,
-           max(spread_u) / 1.0e6 AS max_rel_spread
-    FROM b GROUP BY 1 ORDER BY 1
-    """
-
-
-STAGED_ORACLES["partsupp_price_spread_audit"] = _partsupp_spread_oracle()
 
 
 # ===========================================================================
@@ -2614,7 +2537,7 @@ def _pt_from_entropy_oracle() -> str:
     """
 
 
-@_register("gsw_pt_from_entropy", oracle="__WAVE_I11A__")
+@register("gsw_pt_from_entropy", oracle=_pt_from_entropy_oracle())
 def gsw_pt_from_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential temperature from entropy (GSW twins:
     gsw_pt_from_entropy, gsw_CT_from_entropy): the target eta comes
@@ -2646,10 +2569,7 @@ def gsw_pt_from_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_pt_from_entropy"] = _pt_from_entropy_oracle()
-
-
-@_register(
+@register(
     "events_ks_two_sample",
     oracle="""
     WITH v AS (
@@ -2750,7 +2670,7 @@ def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("n1", "n2", "ks_d", "ks_scaled")
 
 
-@_register(
+@register(
     "embedding_davies_bouldin",
     oracle="""
     WITH x AS (
@@ -2882,7 +2802,7 @@ def embedding_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave J — temporal join/window growth: forward as-of (time-to-next-
 # event) and a rolling 12-month revenue/volume correlation.
 # ===========================================================================
-@_register(
+@register(
     "events_time_to_conversion",
     oracle="""
     WITH clicks AS (
@@ -2959,7 +2879,7 @@ def events_time_to_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_rolling_corr_12m",
     oracle="""
     WITH m AS (
@@ -3032,7 +2952,7 @@ def orders_rolling_corr_12m(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rank pass needed: S = F(mu) + L(mu)), GPD return levels composed on
 # the events POT fit, and lang x source mutual information.
 # ===========================================================================
-@_register(
+@register(
     "lineitem_jarque_bera",
     oracle="""
     WITH v AS (
@@ -3118,7 +3038,7 @@ def lineitem_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_lorenz_asymmetry",
     oracle="""
     WITH v AS (
@@ -3181,7 +3101,7 @@ def lineitem_lorenz_asymmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_gpd_return_levels",
     oracle="""
     WITH v AS (
@@ -3310,7 +3230,7 @@ def events_gpd_return_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "docs_lang_source_mutual_info",
     oracle="""
     WITH c AS (
@@ -3433,7 +3353,7 @@ def _entropy_ct_oracle() -> str:
     """
 
 
-@_register("gsw_entropy_from_ct", oracle="__WAVE_L11A__")
+@register("gsw_entropy_from_ct", oracle=_entropy_ct_oracle())
 def gsw_entropy_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Specific entropy from (SA, CT) (GSW twin: gsw_entropy_from_CT):
     invert CT -> pt with the registered two-step Newton chain
@@ -3467,10 +3387,7 @@ def gsw_entropy_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_entropy_from_ct"] = _entropy_ct_oracle()
-
-
-@_register(
+@register(
     "customer_segment_dissimilarity_index",
     oracle="""
     WITH c AS (
@@ -3564,7 +3481,7 @@ def customer_segment_dissimilarity_index(
     )
 
 
-@_register(
+@register(
     "events_user_count_nbd_fit",
     oracle="""
     WITH c AS (
@@ -3628,7 +3545,7 @@ def events_user_count_nbd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_tail_model_comparison",
     oracle="""
     WITH v AS (
@@ -3772,7 +3689,7 @@ def orders_tail_model_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
 # skewness, the attribute p-chart for monthly return rates, and the
 # chars-per-token tokenizer-cost profile by language.
 # ===========================================================================
-@_register(
+@register(
     "similarity_pq_codebook_utilization",
     oracle="""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -3884,7 +3801,7 @@ def similarity_pq_codebook_utilization(
     )
 
 
-@_register(
+@register(
     "customer_acctbal_bowley_skew",
     oracle="""
     WITH c AS (
@@ -3951,7 +3868,7 @@ def customer_acctbal_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_return_rate_p_chart",
     oracle="""
     WITH m AS (
@@ -4020,7 +3937,7 @@ def lineitem_return_rate_p_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("ym")
 
 
-@_register(
+@register(
     "text_chars_per_token_by_lang",
     oracle="""
     WITH d AS (
@@ -4102,7 +4019,7 @@ def text_chars_per_token_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # binary-segmentation changepoints, MinHash hash-count sweep, HLL
 # precision sweep, and the langid confusion matrix.
 # ===========================================================================
-@_register(
+@register(
     "events_attribution_window_join",
     oracle="""
     WITH clicks AS (
@@ -4171,7 +4088,7 @@ def events_attribution_window_join(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@register(
     "lineitem_chow_test",
     oracle="""
     WITH v AS (
@@ -4303,7 +4220,7 @@ def lineitem_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_annual_harmonic_fit",
     oracle="""
     WITH m AS (
@@ -4404,7 +4321,7 @@ def orders_annual_harmonic_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_changepoint_binseg2",
     oracle="""
     WITH d AS (
@@ -4560,7 +4477,7 @@ def _mh_hash_sql(k: int) -> str:
     return f"substr(md5(s || '#{digest}'), {offset}, 8)"
 
 
-@_register(
+@register(
     "dedup_minhash_hashes_sweep",
     oracle=f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -4690,7 +4607,7 @@ def dedup_minhash_hashes_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HLL_SWEEP_LGK = (8, 12, 14)
 
 
-@_register(
+@register(
     "sketch_hll_precision_sweep",
     oracle="""
     WITH ex AS (
@@ -4760,7 +4677,7 @@ def _langid_confusion_oracle() -> str:
     """
 
 
-@_register("text_langid_confusion_matrix", oracle="__WAVE_N11G__")
+@register("text_langid_confusion_matrix", oracle=_langid_confusion_oracle())
 def text_langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the n-gram-heuristic language identifier
     against the labeled lang column: per (true, predicted) cell, count
@@ -4804,4 +4721,3 @@ def text_langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["text_langid_confusion_matrix"] = _langid_confusion_oracle()

@@ -1,12 +1,7 @@
-"""STAGED round-12 queries — NOT registered (round-12 runway seed).
+"""Round-12 query slate: 50 live queries, each registered at import
+with ``register``; strict-harness coverage in tests/test_staged_r12.py.
 
-Same contract as staged_r5..r11: LOCAL registry, strict-harness pytest
-coverage in tests/test_staged_r12.py, idempotent ``activate()``.
-Activation order: staged_r8 (round 8) -> ... -> staged_r11 (round 11)
--> this module (round 12). Budget: len(STAGED_QUERIES) +
-len(STAGED_REPLACEMENTS) <= 50 fresh names at activation.
-
-COMPLETE at the 50-name budget (50 new, 0 replacements):
+Content:
 - Waves A/E — GSW via symdiff: CT first/second derivatives, pt first
   derivatives, entropy first AND second derivatives wrt (SA, CT)
   (full chain rule, Newton-FD pinned), specvol/enthalpy second
@@ -28,81 +23,19 @@ COMPLETE at the 50-name budget (50 new, 0 replacements):
   assortativity, CR4, IOS channel-unit profile (second self-authored
   sample), chars-per-token (r11), STTR, block-entropy curve.
 
-ACTIVATION NOTE (round 12, pre-audited in round 10 via
-plan_guards.find_unpartitioned_windows at sf0.001): the slate is
-DETECTOR-CLEAN — zero non-operator-internal unpartitioned windows; no
-allowlist entries needed at activation. Follow the staged_r11
-checklist otherwise.
-
-ACTIVATED in round 12 at 45 of 50: the other 5 fresh-sample slots went
-to the executed _CHECKED rotation (see __spark_entry__.py ROTATION);
-DEFER_TO_R13 below carries the remaining five names to round 13.
+Plan audit (plan_guards.find_unpartitioned_windows at sf0.001): the
+slate is DETECTOR-CLEAN — zero non-operator-internal unpartitioned
+windows, so it needs no allowlist entries.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cioos_siooc_data_transform_spark.plans.staged_r11 import _stage_sql_cte
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-#: name -> (fn, oracle) for queries REPLACING a live registry entry.
-STAGED_REPLACEMENTS: dict[str, tuple[Callable[..., Any], str]] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-#: Round-12 rotation budget: the driver samples 50 fresh names, and the
-#: round-12 activation spends 5 of them on names ROTATED OUT of
-#: __spark_entry__._CHECKED (cosine-touched + oldest load-bearing; see
-#: the ROTATION note there). So only 45 of this slate's 50 activate in
-#: round 12 — these five stay staged (pytest-covered in
-#: tests/test_staged_r12.py) and activate in round 13 via
-#: ``activate(include_deferred=True)``.
-DEFER_TO_R13 = frozenset(
-    {
-        "sketch_cm_width_sweep",
-        "part_unit_price_dispersion",
-        "partsupp_stock_cover_audit",
-        "customer_discounted_ltv",
-        "similarity_srp_bit_independence",
-    }
-)
-
-
-def activate(include_deferred: bool = False) -> int:
-    """Round-12 activation (idempotent): new names register once;
-    replacements overwrite unconditionally. DEFER_TO_R13 names are
-    skipped until round 13 passes ``include_deferred=True``."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name in DEFER_TO_R13 and not include_deferred:
-            continue
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    for name, (fn, oracle) in STAGED_REPLACEMENTS.items():
-        if QUERIES.get(name) is not fn:
-            QUERIES[name] = fn
-            ORACLES[name] = oracle
-            n += 1
-    return n
 
 
 # ===========================================================================
@@ -152,7 +85,7 @@ def _ct_first_oracle() -> str:
     """
 
 
-@_register("gsw_ct_first_derivatives", oracle="__WAVE_A12A__")
+@register("gsw_ct_first_derivatives", oracle=_ct_first_oracle())
 def gsw_ct_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """∂CT/∂SA and ∂CT/∂pt of the conservative-temperature polynomial
     (GSW twin: gsw_CT_first_derivatives) — the Jacobian every
@@ -179,9 +112,6 @@ def gsw_ct_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_ct_first_derivatives"] = _ct_first_oracle()
-
-
 def _ct_second_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_derivative_sql,
@@ -199,7 +129,7 @@ def _ct_second_oracle() -> str:
     """
 
 
-@_register("gsw_ct_second_derivatives", oracle="__WAVE_A12B__")
+@register("gsw_ct_second_derivatives", oracle=_ct_second_oracle())
 def gsw_ct_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second derivatives CT_SA_SA, CT_SA_pt, CT_pt_pt (GSW twin:
     gsw_CT_second_derivatives) — the curvature of the CT(SA, pt)
@@ -229,9 +159,6 @@ def gsw_ct_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_ct_second_derivatives"] = _ct_second_oracle()
-
-
 def _pt_first_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_derivative_sql,
@@ -247,7 +174,7 @@ def _pt_first_oracle() -> str:
     """
 
 
-@_register("gsw_pt_first_derivatives", oracle="__WAVE_A12C__")
+@register("gsw_pt_first_derivatives", oracle=_pt_first_oracle())
 def gsw_pt_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """∂pt/∂SA at constant CT and ∂pt/∂CT (GSW twin:
     gsw_pt_first_derivatives) via the implicit inverse of the CT
@@ -271,9 +198,6 @@ def gsw_pt_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_pt_first_derivatives"] = _pt_first_oracle()
-
-
 def _eta_first_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_derivative_sql,
@@ -294,7 +218,7 @@ def _eta_first_oracle() -> str:
     """
 
 
-@_register("gsw_entropy_first_derivatives", oracle="__WAVE_A12D__")
+@register("gsw_entropy_first_derivatives", oracle=_eta_first_oracle())
 def gsw_entropy_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """∂η/∂SA at constant CT and ∂η/∂CT (GSW twin:
     gsw_entropy_first_derivatives) by the chain rule through the CT
@@ -324,13 +248,10 @@ def gsw_entropy_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-STAGED_ORACLES["gsw_entropy_first_derivatives"] = _eta_first_oracle()
-
-
 # ===========================================================================
 # Wave B — robust trend / spectrum / variance-components statistics.
 # ===========================================================================
-@_register(
+@register(
     "orders_theil_sen_trend",
     oracle="""
     WITH m AS (
@@ -401,7 +322,7 @@ def orders_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_spectral_flatness",
     oracle="""
     WITH d AS (
@@ -516,7 +437,7 @@ def events_spectral_flatness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "customer_spend_intraclass_corr",
     oracle="""
     WITH o AS (
@@ -611,7 +532,7 @@ def customer_spend_intraclass_corr(spark: SparkSession, sf_dir: str) -> DataFram
 # the multimodal frame sampler, and the LSH (bands x rows) trade-off
 # curve over a shared 16-function MinHash signature.
 # ===========================================================================
-@_register(
+@register(
     "sample_pps_horvitz_thompson",
     oracle="""
     WITH o AS (
@@ -710,7 +631,7 @@ def sample_pps_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "multimodal_frame_hash_dedup",
     oracle="""
     WITH f AS (
@@ -867,7 +788,7 @@ def _lsh_tradeoff_oracle() -> str:
     """
 
 
-@_register("dedup_lsh_band_tradeoff", oracle="__WAVE_C12C__")
+@register("dedup_lsh_band_tradeoff", oracle=_lsh_tradeoff_oracle())
 def dedup_lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSH S-curve made concrete: over ONE shared 16-function
     MinHash signature, compare band layouts 2x8 / 4x4 / 8x2 by realized
@@ -936,9 +857,6 @@ def dedup_lsh_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("bands")
 
 
-STAGED_ORACLES["dedup_lsh_band_tradeoff"] = _lsh_tradeoff_oracle()
-
-
 # ===========================================================================
 # Wave D — GSW completions + paired rank test + acquisition mix.
 # ===========================================================================
@@ -977,7 +895,7 @@ def _specvol2_oracle() -> str:
     """
 
 
-@_register("gsw_specvol_second_derivatives", oracle="__WAVE_D12A__")
+@register("gsw_specvol_second_derivatives", oracle=_specvol2_oracle())
 def gsw_specvol_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second derivatives of the 75-term specific volume (v_SA_SA,
     v_SA_CT, v_CT_CT, v_SA_p, v_CT_p; GSW twin:
@@ -1029,9 +947,6 @@ def gsw_specvol_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-STAGED_ORACLES["gsw_specvol_second_derivatives"] = _specvol2_oracle()
-
-
 def _t_from_pt0_ice_stages() -> list[tuple[str, str]]:
     from cioos_siooc_data_transform_spark.functions.ice import (
         gibbs_ice_stages,
@@ -1072,7 +987,7 @@ def _t_from_pt0_ice_oracle() -> str:
     """
 
 
-@_register("gsw_t_from_pt0_ice", oracle="__WAVE_D12B__")
+@register("gsw_t_from_pt0_ice", oracle=_t_from_pt0_ice_oracle())
 def gsw_t_from_pt0_ice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-situ temperature of ice from its potential temperature (GSW
     twin: gsw_t_from_pt0_ice) — the inverse of the registered
@@ -1101,10 +1016,7 @@ def gsw_t_from_pt0_ice(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_t_from_pt0_ice"] = _t_from_pt0_ice_oracle()
-
-
-@_register(
+@register(
     "orders_wilcoxon_signed_rank",
     oracle="""
     WITH m AS (
@@ -1199,7 +1111,7 @@ def orders_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_new_customer_share_trend",
     oracle="""
     WITH f AS (
@@ -1334,7 +1246,7 @@ def _eta2_oracle() -> str:
     """
 
 
-@_register("gsw_entropy_second_derivatives", oracle="__WAVE_E12A__")
+@register("gsw_entropy_second_derivatives", oracle=_eta2_oracle())
 def gsw_entropy_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second derivatives of entropy with respect to (SA, CT) (GSW
     twin: gsw_entropy_second_derivatives) — the full chain-rule closure
@@ -1354,9 +1266,6 @@ def gsw_entropy_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFram
         (F.floor(F.col("eta_sa_ct") * 1.0e9 + 0.5) / 1.0e9).alias("eta_sa_ct"),
         (F.floor(F.col("eta_ct_ct") * 1.0e9 + 0.5) / 1.0e9).alias("eta_ct_ct"),
     )
-
-
-STAGED_ORACLES["gsw_entropy_second_derivatives"] = _eta2_oracle()
 
 
 _DECON_NS = (2, 3, 5)
@@ -1407,7 +1316,7 @@ def _decon_sweep_oracle() -> str:
     """
 
 
-@_register("decontam_ngram_size_sweep", oracle="__WAVE_E12B__")
+@register("decontam_ngram_size_sweep", oracle=_decon_sweep_oracle())
 def decontam_ngram_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination n-gram size sweep: the training-vs-benchmark
     overlap rate (docs sharing >= 2 distinct n-grams with the synthetic
@@ -1464,10 +1373,7 @@ def decontam_ngram_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("ngram_n")
 
 
-STAGED_ORACLES["decontam_ngram_size_sweep"] = _decon_sweep_oracle()
-
-
-@_register(
+@register(
     "graph_triangle_config_null",
     oracle="""
     WITH e AS (
@@ -1544,7 +1450,7 @@ def graph_triangle_config_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_centroid_classifier_confusion",
     oracle="""
     WITH x AS (
@@ -1732,7 +1638,7 @@ def _h2_oracle() -> str:
     """
 
 
-@_register("gsw_enthalpy_second_derivatives", oracle="__WAVE_F12A__")
+@register("gsw_enthalpy_second_derivatives", oracle=_h2_oracle())
 def gsw_enthalpy_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second derivatives of specific enthalpy h = cp0·CT + h_dyn wrt
     (SA, CT) at fixed p (GSW twin: gsw_enthalpy_second_derivatives):
@@ -1769,10 +1675,7 @@ def gsw_enthalpy_second_derivatives(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-STAGED_ORACLES["gsw_enthalpy_second_derivatives"] = _h2_oracle()
-
-
-@_register(
+@register(
     "tpch_fd_violation_audit",
     oracle="""
     WITH checks AS (
@@ -1879,7 +1782,7 @@ def tpch_fd_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("fd")
 
 
-@_register(
+@register(
     "nation_revenue_shift_share",
     oracle="""
     WITH r AS (
@@ -2033,7 +1936,7 @@ SAMPLE_IOS_MOORING = """*2024/02/01 09:00:00.00
 """
 
 
-@_register(
+@register(
     "ios_channel_unit_profile",
     oracle="""
     SELECT * FROM (VALUES
@@ -2096,7 +1999,7 @@ def ios_channel_unit_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave H — corpus information structure, tokenizer windows, multimodal
 # budget sweep, demand-pattern classification.
 # ===========================================================================
-@_register(
+@register(
     "text_ngram_entropy_rate_curve",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -2204,7 +2107,7 @@ def text_ngram_entropy_rate_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     return out.orderBy("ngram_n")
 
 
-@_register(
+@register(
     "text_sttr_by_source",
     oracle="""
     WITH w AS (
@@ -2354,7 +2257,7 @@ def _fps_sweep_oracle() -> str:
     """
 
 
-@_register("multimodal_fps_sweep", oracle="__WAVE_H12C__")
+@register("multimodal_fps_sweep", oracle=_fps_sweep_oracle())
 def multimodal_fps_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-budget sweep of the variable-rate sampler: total frames
     and frames-per-clip at target 2/4/8 fps over the mixed-native-rate
@@ -2394,10 +2297,7 @@ def multimodal_fps_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("target_fps")
 
 
-STAGED_ORACLES["multimodal_fps_sweep"] = _fps_sweep_oracle()
-
-
-@_register(
+@register(
     "part_demand_sbc_classification",
     oracle="""
     WITH pm AS (
@@ -2559,7 +2459,7 @@ def _rho_h_oracle() -> str:
     """
 
 
-@_register("gsw_rho_first_derivatives_wrt_enthalpy", oracle="__WAVE_I12A__")
+@register("gsw_rho_first_derivatives_wrt_enthalpy", oracle=_rho_h_oracle())
 def gsw_rho_first_derivatives_wrt_enthalpy(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2614,9 +2514,6 @@ def gsw_rho_first_derivatives_wrt_enthalpy(
     )
 
 
-STAGED_ORACLES["gsw_rho_first_derivatives_wrt_enthalpy"] = _rho_h_oracle()
-
-
 _WINNOW_WS = (4, 8, 16)
 
 
@@ -2657,7 +2554,7 @@ def _winnow_sweep_oracle() -> str:
     """
 
 
-@_register("dedup_winnowing_window_sweep", oracle="__WAVE_I12B__")
+@register("dedup_winnowing_window_sweep", oracle=_winnow_sweep_oracle())
 def dedup_winnowing_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing window sweep (Schleimer, Wilkerson & Aiken 2003): the
     realized fingerprint density at w = 4/8/16 against the paper's
@@ -2733,10 +2630,7 @@ def dedup_winnowing_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("window_w")
 
 
-STAGED_ORACLES["dedup_winnowing_window_sweep"] = _winnow_sweep_oracle()
-
-
-@_register(
+@register(
     "graph_price_assortativity",
     oracle="""
     WITH e AS (
@@ -2919,7 +2813,7 @@ def _adc_rank_oracle() -> str:
     """
 
 
-@_register("similarity_adc_rank_correlation", oracle="__WAVE_J12A__")
+@register("similarity_adc_rank_correlation", oracle=_adc_rank_oracle())
 def similarity_adc_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank fidelity of PQ asymmetric-distance scoring: per probe
     (vec_id<20), Spearman correlation between the ADC distance ranking
@@ -3014,10 +2908,7 @@ def similarity_adc_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-STAGED_ORACLES["similarity_adc_rank_correlation"] = _adc_rank_oracle()
-
-
-@_register(
+@register(
     "customer_order_count_ztp_fit",
     oracle="""
     WITH c AS (
@@ -3113,7 +3004,7 @@ def _langid_calibration_oracle() -> str:
     """
 
 
-@_register("text_langid_calibration_curve", oracle="__WAVE_J12C__")
+@register("text_langid_calibration_curve", oracle=_langid_calibration_oracle())
 def text_langid_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration curve of the n-gram language identifier: bucket docs
     by the hit-count MARGIN between the top and runner-up language and
@@ -3163,13 +3054,10 @@ def text_langid_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-STAGED_ORACLES["text_langid_calibration_curve"] = _langid_calibration_oracle()
-
-
 _QTE_QS = (0.1, 0.25, 0.5, 0.75, 0.9)
 
 
-@_register(
+@register(
     "orders_quantile_treatment_effect",
     oracle=f"""
     WITH g AS (
@@ -3256,7 +3144,7 @@ def orders_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFr
 # Wave K — distribution distance, index balance, retail-price and
 # contingency-cell audits.
 # ===========================================================================
-@_register(
+@register(
     "customer_energy_distance_segments",
     oracle="""
     WITH g AS (
@@ -3401,7 +3289,7 @@ def customer_energy_distance_segments(
     )
 
 
-@_register(
+@register(
     "similarity_ivf_cell_balance",
     oracle="""
     WITH cent AS (
@@ -3487,7 +3375,7 @@ def similarity_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "part_price_ending_digits",
     oracle="""
     WITH p AS (
@@ -3535,7 +3423,7 @@ def part_price_ending_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_type_hour_stdres_outliers",
     oracle="""
     WITH c AS (
@@ -3605,7 +3493,7 @@ def events_type_hour_stdres_outliers(spark: SparkSession, sf_dir: str) -> DataFr
 # ===========================================================================
 # Wave L — process tests and coverage/threshold curves.
 # ===========================================================================
-@_register(
+@register(
     "orders_gap_exponentiality_ks",
     oracle="""
     WITH g AS (
@@ -3709,7 +3597,7 @@ def orders_gap_exponentiality_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OOV_KS = (1000, 5000, 20000)
 
 
-@_register(
+@register(
     "text_oov_vocab_curve",
     oracle=f"""
     WITH tok AS (
@@ -3841,7 +3729,7 @@ def _support_sweep_oracle() -> str:
     """
 
 
-@_register("graph_support_threshold_sweep", oracle="__WAVE_L12C__")
+@register("graph_support_threshold_sweep", oracle=_support_sweep_oracle())
 def graph_support_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-purchase graph vs the support threshold (edges need >= 1/2/3
     co-occurring orders): edge/node/triangle counts and density per
@@ -3906,10 +3794,7 @@ def graph_support_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     return out.orderBy("support_min")
 
 
-STAGED_ORACLES["graph_support_threshold_sweep"] = _support_sweep_oracle()
-
-
-@_register(
+@register(
     "supplier_type_concentration_cr4",
     oracle="""
     WITH r AS (
@@ -4034,7 +3919,7 @@ def _sa_freezing_t_oracle() -> str:
     """
 
 
-@_register("gsw_sa_freezing_from_t", oracle="__WAVE_M12A__")
+@register("gsw_sa_freezing_from_t", oracle=_sa_freezing_t_oracle())
 def gsw_sa_freezing_from_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Freezing salinity from in-situ temperature (GSW twin:
     gsw_SA_freezing_from_t, here on the practical-salinity scale like
@@ -4057,9 +3942,6 @@ def gsw_sa_freezing_from_t(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sp_freezing_t"
         ),
     )
-
-
-STAGED_ORACLES["gsw_sa_freezing_from_t"] = _sa_freezing_t_oracle()
 
 
 _CAP_SWEEP = (10, 50, 200)
@@ -4140,7 +4022,7 @@ def _bucket_cap_oracle() -> str:
     """
 
 
-@_register("dedup_bucket_cap_sweep", oracle="__WAVE_M12B__")
+@register("dedup_bucket_cap_sweep", oracle=_bucket_cap_oracle())
 def dedup_bucket_cap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mega-bucket guard's cost curve: LSH candidates and recall of
     the exact Jaccard>=0.5 pairs at bucket caps 10/50/200 over the
@@ -4203,10 +4085,7 @@ def dedup_bucket_cap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("bucket_cap")
 
 
-STAGED_ORACLES["dedup_bucket_cap_sweep"] = _bucket_cap_oracle()
-
-
-@_register(
+@register(
     "events_dayk_retention_curve",
     oracle="""
     WITH u AS (
@@ -4286,7 +4165,7 @@ def events_dayk_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("day_k")
 
 
-@_register(
+@register(
     "orders_priority_stochastic_dominance",
     oracle="""
     WITH lag_days AS (
@@ -4464,7 +4343,7 @@ def _cm_width_oracle() -> str:
     """
 
 
-@_register("sketch_cm_width_sweep", oracle="__WAVE_N12A__")
+@register("sketch_cm_width_sweep", oracle=_cm_width_oracle())
 def sketch_cm_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min width sweep: mean relative OVERestimate of per-user
     counts at 16/256/4096 buckets (2 hash rows) — the memory/accuracy
@@ -4538,10 +4417,7 @@ def sketch_cm_width_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("n_buckets")
 
 
-STAGED_ORACLES["sketch_cm_width_sweep"] = _cm_width_oracle()
-
-
-@_register(
+@register(
     "part_unit_price_dispersion",
     oracle="""
     WITH u AS (
@@ -4619,7 +4495,39 @@ def part_unit_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("partsupp_stock_cover_audit", oracle="__WAVE_N12C__")
+def _stock_cover_oracle() -> str:
+    from cioos_siooc_data_transform_spark.sources.partsupp import PARTSUPP_CTE
+
+    return f"""
+    WITH {PARTSUPP_CTE},
+    avail AS (
+      SELECT ps_partkey, CAST(sum(ps_availqty) AS BIGINT) AS avail
+      FROM partsupp GROUP BY 1
+    ),
+    demand AS (
+      SELECT l_partkey, CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT))
+                             AS BIGINT) AS demand
+      FROM lineitem GROUP BY 1
+    ),
+    j AS (
+      SELECT avail, demand FROM avail JOIN demand ON ps_partkey = l_partkey
+    ),
+    b AS (
+      SELECT CASE WHEN avail < demand THEN 'a_under_1x'
+                  WHEN avail < 10 * demand THEN 'b_1x_10x'
+                  WHEN avail < 100 * demand THEN 'c_10x_100x'
+                  ELSE 'd_over_100x' END AS cover_bucket
+      FROM j
+    ),
+    t AS (SELECT CAST(count(*) AS DOUBLE) AS np FROM b)
+    SELECT cover_bucket, CAST(count(*) AS BIGINT) AS n_parts,
+           floor(CAST(count(*) AS DOUBLE) / np * 1.0e6 + 0.5) / 1.0e6
+             AS share
+    FROM b, t GROUP BY cover_bucket, np ORDER BY cover_bucket
+    """
+
+
+@register("partsupp_stock_cover_audit", oracle=_stock_cover_oracle())
 def partsupp_stock_cover_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stock-cover audit over the derived partsupp: available quantity
     (summed across a part's suppliers) against the part's observed
@@ -4672,42 +4580,7 @@ def partsupp_stock_cover_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stock_cover_oracle() -> str:
-    from cioos_siooc_data_transform_spark.sources.partsupp import PARTSUPP_CTE
-
-    return f"""
-    WITH {PARTSUPP_CTE},
-    avail AS (
-      SELECT ps_partkey, CAST(sum(ps_availqty) AS BIGINT) AS avail
-      FROM partsupp GROUP BY 1
-    ),
-    demand AS (
-      SELECT l_partkey, CAST(sum(CAST(floor(l_quantity + 0.5) AS BIGINT))
-                             AS BIGINT) AS demand
-      FROM lineitem GROUP BY 1
-    ),
-    j AS (
-      SELECT avail, demand FROM avail JOIN demand ON ps_partkey = l_partkey
-    ),
-    b AS (
-      SELECT CASE WHEN avail < demand THEN 'a_under_1x'
-                  WHEN avail < 10 * demand THEN 'b_1x_10x'
-                  WHEN avail < 100 * demand THEN 'c_10x_100x'
-                  ELSE 'd_over_100x' END AS cover_bucket
-      FROM j
-    ),
-    t AS (SELECT CAST(count(*) AS DOUBLE) AS np FROM b)
-    SELECT cover_bucket, CAST(count(*) AS BIGINT) AS n_parts,
-           floor(CAST(count(*) AS DOUBLE) / np * 1.0e6 + 0.5) / 1.0e6
-             AS share
-    FROM b, t GROUP BY cover_bucket, np ORDER BY cover_bucket
-    """
-
-
-STAGED_ORACLES["partsupp_stock_cover_audit"] = _stock_cover_oracle()
-
-
-@_register(
+@register(
     "customer_discounted_ltv",
     oracle="""
     WITH f AS (
@@ -4847,7 +4720,7 @@ def _srp_independence_oracle() -> str:
     """
 
 
-@_register("similarity_srp_bit_independence", oracle="__WAVE_N12E__")
+@register("similarity_srp_bit_independence", oracle=_srp_independence_oracle())
 def similarity_srp_bit_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise phi correlation of the 32 sign-random-projection bits
     (the seed-42 hyperplane family behind dedup_embedding_cosine's LSH
@@ -4927,4 +4800,3 @@ def similarity_srp_bit_independence(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-STAGED_ORACLES["similarity_srp_bit_independence"] = _srp_independence_oracle()

@@ -1,12 +1,7 @@
-"""STAGED round-13 queries — NOT registered (round-13 runway seed).
+"""Round-13 query slate: 50 live queries, each registered at import
+with ``register``; strict-harness coverage in tests/test_staged_r13.py.
 
-Same contract as staged_r5..r11: LOCAL registry, strict-harness pytest
-coverage in tests/test_staged_r13.py, idempotent ``activate()``.
-Activation order: staged_r8 (round 8) -> ... -> staged_r12 (round 12)
--> this module (round 13). Budget: len(STAGED_QUERIES) +
-len(STAGED_REPLACEMENTS) <= 50 fresh names at activation.
-
-COMPLETE at the 50-name budget:
+Content:
 - Wave A — CT-from-rho Newton inversion, Atkinson index, seasonal
   Mann-Kendall, kNN mutuality.
 - Wave B — malformed-file error-isolation audit (third self-authored
@@ -43,84 +38,20 @@ COMPLETE at the 50-name budget:
   (75-term enthalpy + IAPWS-06 ice composition), adiabatic lapse rate
   from CT.
 
-ACTIVATION NOTE (round 13, pre-audited in round 10 via
-plan_guards.find_unpartitioned_windows at sf0.001): ONE bounded hit —
-events_page_hinkley_drift ("runs over the per-DAY rollup crossed with
-1-row broadcast scalars (calendar-bounded axis)") — add that allowlist
-entry at activation; everything else is detector-clean.
+Plan audit (plan_guards.find_unpartitioned_windows at sf0.001): ONE
+bounded hit — events_page_hinkley_drift ("runs over the per-DAY rollup
+crossed with 1-row broadcast scalars (calendar-bounded axis)"),
+allowlisted in tests/test_plans.py; everything else is detector-clean.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cioos_siooc_data_transform_spark.plans.staged_r11 import _stage_sql_cte
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-#: name -> (fn, oracle) for queries REPLACING a live registry entry.
-STAGED_REPLACEMENTS: dict[str, tuple[Callable[..., Any], str]] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-#: Round-13 rotation budget: the driver samples 50 fresh names, spent as
-#: 5 staged_r12.DEFER_TO_R13 carry-overs + 40 of this slate + 5 names
-#: ROTATED OUT of __spark_entry__._CHECKED (led by
-#: graph_pagerank_iterations, whose eager und-checkpoint change in round
-#: 12 postdates its green row; see the ROTATION note there). So only 40
-#: of this slate's 50 activate in round 13 — the GSW freezing-polynomial
-#: + Saunders-1981 + wave-M family below stays staged (pytest-covered in
-#: tests/test_staged_r13.py) and activates in round 14 via
-#: ``activate(include_deferred=True)``.
-DEFER_TO_R14 = frozenset(
-    {
-        "gsw_salinity_scale_roundtrips",
-        "gsw_ct_freezing_poly",
-        "gsw_t_freezing_poly",
-        "gsw_sa_freezing_from_ct_poly",
-        "gsw_ct_freezing_derivs_poly",
-        "gsw_z_from_p",
-        "gsw_p_from_z",
-        "gsw_ct_entropy_from_pt",
-        "gsw_melting_ice_equilibrium_ratio",
-        "gsw_adiabatic_lapse_rate_from_ct",
-    }
-)
-
-
-def activate(include_deferred: bool = False) -> int:
-    """Round-13 activation (idempotent): new names register once;
-    replacements overwrite unconditionally. DEFER_TO_R14 names are
-    skipped until round 14 passes ``include_deferred=True``."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name in DEFER_TO_R14 and not include_deferred:
-            continue
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    for name, (fn, oracle) in STAGED_REPLACEMENTS.items():
-        if QUERIES.get(name) is not fn:
-            QUERIES[name] = fn
-            ORACLES[name] = oracle
-            n += 1
-    return n
 
 
 # ===========================================================================
@@ -174,7 +105,7 @@ def _ct_from_rho_oracle() -> str:
     """
 
 
-@_register("gsw_ct_from_rho", oracle="__WAVE_A13A__")
+@register("gsw_ct_from_rho", oracle=_ct_from_rho_oracle())
 def gsw_ct_from_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conservative Temperature from in-situ density (GSW twin:
     gsw_CT_from_rho): Newton on the 75-term rho(SA, CT, p) with a
@@ -213,10 +144,7 @@ def gsw_ct_from_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_ct_from_rho"] = _ct_from_rho_oracle()
-
-
-@_register(
+@register(
     "customer_spend_atkinson_index",
     oracle="""
     WITH s AS (
@@ -286,7 +214,7 @@ def customer_spend_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
+@register(
     "orders_seasonal_mann_kendall",
     oracle="""
     WITH m AS (
@@ -388,7 +316,7 @@ def orders_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_knn_mutuality",
     oracle="""
     WITH sub AS (
@@ -495,7 +423,7 @@ SAMPLE_IOS_BAD = """*2024/03/01 08:00:00.00
 """
 
 
-@_register(
+@register(
     "ios_malformed_file_audit",
     oracle="""
     SELECT * FROM (VALUES
@@ -554,7 +482,7 @@ def ios_malformed_file_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("file_id")
 
 
-@_register(
+@register(
     "sample_neyman_allocation",
     oracle="""
     WITH d AS (
@@ -635,7 +563,34 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register("part_margin_audit", oracle="__WAVE_B13C__")
+def _part_margin_oracle() -> str:
+    from cioos_siooc_data_transform_spark.sources.partsupp import PARTSUPP_CTE
+
+    return f"""
+    WITH {PARTSUPP_CTE},
+    best AS (
+      SELECT ps_partkey, CAST(min(ps_supplycost_cents) AS BIGINT)
+               AS cost_cents
+      FROM partsupp GROUP BY 1
+    ),
+    j AS (
+      SELECT p_brand,
+             CAST(floor((CAST(floor(p_retailprice * 100.0 + 0.5) AS BIGINT)
+                         - cost_cents) * 1.0e6
+                        / CAST(floor(p_retailprice * 100.0 + 0.5) AS BIGINT)
+                        + 0.5) AS BIGINT) AS margin_u
+      FROM part JOIN best ON p_partkey = ps_partkey
+    )
+    SELECT p_brand, CAST(count(*) AS BIGINT) AS n_parts,
+           floor(CAST(sum(margin_u) AS DOUBLE) / count(*) + 0.5) / 1.0e6
+             AS mean_margin,
+           min(margin_u) / 1.0e6 AS min_margin,
+           CAST(count(*) FILTER (margin_u < 0) AS BIGINT) AS n_below_cost
+    FROM j GROUP BY p_brand ORDER BY p_brand
+    """
+
+
+@register("part_margin_audit", oracle=_part_margin_oracle())
 def part_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gross-margin audit over the derived partsupp: per brand, the
     mean and minimum relative margin (retail − min supply cost)/retail
@@ -689,37 +644,7 @@ def part_margin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _part_margin_oracle() -> str:
-    from cioos_siooc_data_transform_spark.sources.partsupp import PARTSUPP_CTE
-
-    return f"""
-    WITH {PARTSUPP_CTE},
-    best AS (
-      SELECT ps_partkey, CAST(min(ps_supplycost_cents) AS BIGINT)
-               AS cost_cents
-      FROM partsupp GROUP BY 1
-    ),
-    j AS (
-      SELECT p_brand,
-             CAST(floor((CAST(floor(p_retailprice * 100.0 + 0.5) AS BIGINT)
-                         - cost_cents) * 1.0e6
-                        / CAST(floor(p_retailprice * 100.0 + 0.5) AS BIGINT)
-                        + 0.5) AS BIGINT) AS margin_u
-      FROM part JOIN best ON p_partkey = ps_partkey
-    )
-    SELECT p_brand, CAST(count(*) AS BIGINT) AS n_parts,
-           floor(CAST(sum(margin_u) AS DOUBLE) / count(*) + 0.5) / 1.0e6
-             AS mean_margin,
-           min(margin_u) / 1.0e6 AS min_margin,
-           CAST(count(*) FILTER (margin_u < 0) AS BIGINT) AS n_below_cost
-    FROM j GROUP BY p_brand ORDER BY p_brand
-    """
-
-
-STAGED_ORACLES["part_margin_audit"] = _part_margin_oracle()
-
-
-@_register(
+@register(
     "supplier_leadtime_consistency",
     oracle="""
     WITH lags AS (
@@ -801,7 +726,7 @@ def supplier_leadtime_consistency(spark: SparkSession, sf_dir: str) -> DataFrame
 # Wave C — sequential drift, blocked ranks, candidate precision,
 # language-mix audit.
 # ===========================================================================
-@_register(
+@register(
     "events_page_hinkley_drift",
     oracle="""
     WITH d AS (
@@ -870,7 +795,7 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_friedman_dow_test",
     oracle="""
     WITH d AS (
@@ -1022,7 +947,7 @@ def _lsh_precision_oracle() -> str:
     """
 
 
-@_register("dedup_lsh_precision_audit", oracle="__WAVE_C13C__")
+@register("dedup_lsh_precision_audit", oracle=_lsh_precision_oracle())
 def dedup_lsh_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision side of the LSH candidate pipeline: among the 4x4-band
     cap-50 candidates (the registered production config), the share
@@ -1113,9 +1038,6 @@ def dedup_lsh_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["dedup_lsh_precision_audit"] = _lsh_precision_oracle()
-
-
 def _multilingual_oracle() -> str:
     from cioos_siooc_data_transform_spark.plans.registry import ORACLES
 
@@ -1140,7 +1062,7 @@ def _multilingual_oracle() -> str:
     """
 
 
-@_register("text_multilingual_doc_audit", oracle="__WAVE_C13D__")
+@register("text_multilingual_doc_audit", oracle=_multilingual_oracle())
 def text_multilingual_doc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-mix audit: docs whose runner-up language scores at
     least HALF the top language's stopword hits are flagged
@@ -1186,13 +1108,10 @@ def text_multilingual_doc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["text_multilingual_doc_audit"] = _multilingual_oracle()
-
-
 # ===========================================================================
 # Wave D — model-adequacy diagnostics and definition sweeps.
 # ===========================================================================
-@_register(
+@register(
     "orders_backtest_residual_ljungbox",
     oracle="""
     WITH m AS (
@@ -1333,7 +1252,7 @@ def _langid_budget_oracle() -> str:
     """
 
 
-@_register("text_langid_stopword_budget", oracle="__WAVE_D13B__")
+@register("text_langid_stopword_budget", oracle=_langid_budget_oracle())
 def text_langid_stopword_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-budget sweep of the language identifier: accuracy
     against the labeled lang column with only the FIRST 4 stopwords per
@@ -1396,13 +1315,10 @@ def text_langid_stopword_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("stopword_budget")
 
 
-STAGED_ORACLES["text_langid_stopword_budget"] = _langid_budget_oracle()
-
-
 _CHURN_WS = (6, 12, 18)
 
 
-@_register(
+@register(
     "customer_churn_window_sweep",
     oracle=f"""
     WITH last_o AS (
@@ -1510,7 +1426,7 @@ def _shingle_size_oracle() -> str:
     """
 
 
-@_register("dedup_shingle_size_sweep", oracle="__WAVE_D13D__")
+@register("dedup_shingle_size_sweep", oracle=_shingle_size_oracle())
 def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-size sweep — the FIFTH dedup knob (after threshold,
     hash width, band layout, bucket cap): near-dup pairs at exact
@@ -1549,14 +1465,11 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("shingle_n")
 
 
-STAGED_ORACLES["dedup_shingle_size_sweep"] = _shingle_size_oracle()
-
-
 # ===========================================================================
 # Wave E — behavioral clumpiness, label-separation AUC, semantic tau
 # sweep, truncation-loss audit.
 # ===========================================================================
-@_register(
+@register(
     "customer_purchase_clumpiness",
     oracle="""
     WITH o AS (
@@ -1660,7 +1573,7 @@ def customer_purchase_clumpiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_cosine_label_auc",
     oracle="""
     WITH sub AS (
@@ -1722,7 +1635,7 @@ def embedding_cosine_label_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = a.join(b, F.col("ia") < F.col("ib")).select(
         F.floor(
-            F.round(cosine_expr(F.col("va"), F.col("vb")), 4) * 10000 + 0.5
+            F.round(cosine_expr("va", "vb"), 4) * 10000 + 0.5
         )
         .cast("long")
         .alias("cu"),
@@ -1815,7 +1728,7 @@ def _sem_tau_oracle() -> str:
     """
 
 
-@_register("dedup_semantic_tau_sweep", oracle="__WAVE_E13C__")
+@register("dedup_semantic_tau_sweep", oracle=_sem_tau_oracle())
 def dedup_semantic_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine-threshold sweep of the embedding near-dup pipeline: pair
     counts at tau = 0.35/0.45/0.55 over the SAME hyperplane-LSH
@@ -1848,7 +1761,7 @@ def dedup_semantic_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     eb = emb.select(F.col("vec_id").alias("doc_b"), F.col("embedding").alias("vb"))
     scored = cand.join(ea, "doc_a").join(eb, "doc_b").select(
         F.floor(
-            F.round(cosine_expr(F.col("va"), F.col("vb")), 4) * 10000 + 0.5
+            F.round(cosine_expr("va", "vb"), 4) * 10000 + 0.5
         )
         .cast("long")
         .alias("cu")
@@ -1876,10 +1789,7 @@ def dedup_semantic_tau_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["dedup_semantic_tau_sweep"] = _sem_tau_oracle()
-
-
-@_register(
+@register(
     "pack_truncation_loss_audit",
     oracle="""
     WITH d AS (
@@ -1957,7 +1867,7 @@ def pack_truncation_loss_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave F — Weibull shape, dup-quality association, header
 # completeness, ice enthalpy at freezing.
 # ===========================================================================
-@_register(
+@register(
     "orders_gap_weibull_shape",
     oracle="""
     WITH g AS (
@@ -2131,7 +2041,7 @@ def _dup_quality_oracle() -> str:
     """
 
 
-@_register("text_dup_quality_association", oracle="__WAVE_F13B__")
+@register("text_dup_quality_association", oracle=_dup_quality_oracle())
 def text_dup_quality_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Are near-duplicates lower quality? Phi correlation of the 2x2
     (participates-in-a-Jaccard>=0.5-pair x below-median-quality) table,
@@ -2217,10 +2127,7 @@ def text_dup_quality_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["text_dup_quality_association"] = _dup_quality_oracle()
-
-
-@_register(
+@register(
     "ios_header_completeness_profile",
     oracle="""
     SELECT * FROM (VALUES
@@ -2318,7 +2225,7 @@ def _poth_ice_freezing_oracle() -> str:
     """
 
 
-@_register("gsw_pot_enthalpy_ice_freezing", oracle="__WAVE_F13D__")
+@register("gsw_pot_enthalpy_ice_freezing", oracle=_poth_ice_freezing_oracle())
 def gsw_pot_enthalpy_ice_freezing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential enthalpy of ice AT the seawater freezing temperature
     (GSW twin: gsw_pot_enthalpy_ice_freezing) — the quantity ice-ocean
@@ -2341,13 +2248,10 @@ def gsw_pot_enthalpy_ice_freezing(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-STAGED_ORACLES["gsw_pot_enthalpy_ice_freezing"] = _poth_ice_freezing_oracle()
-
-
 # ===========================================================================
 # Wave G — rank stability, seasonality growth, char-profile affinity.
 # ===========================================================================
-@_register(
+@register(
     "nation_rank_stability_tau",
     oracle="""
     WITH r AS (
@@ -2444,7 +2348,7 @@ def nation_rank_stability_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_seasonal_amplitude_trend",
     oracle="""
     WITH m AS (
@@ -2543,7 +2447,7 @@ def orders_seasonal_amplitude_trend(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@_register(
+@register(
     "text_char_trigram_lang_affinity",
     oracle="""
     WITH tri AS (
@@ -2627,7 +2531,7 @@ def text_char_trigram_lang_affinity(spark: SparkSession, sf_dir: str) -> DataFra
 # ===========================================================================
 # Wave H — drift index, percolation robustness, sampling pair bias.
 # ===========================================================================
-@_register(
+@register(
     "orders_value_psi_drift",
     oracle="""
     WITH y1 AS (
@@ -2731,7 +2635,7 @@ def orders_value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "graph_hub_removal_robustness",
     oracle="""
     WITH e AS (
@@ -2836,7 +2740,7 @@ def graph_hub_removal_robustness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "dedup_sample_pair_bias",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -2998,9 +2902,7 @@ def _gibbs_exact_query(name: str, stages_fn, outs: list[tuple[str, str]]):
         FROM ({staged})
         """
 
-    STAGED_QUERIES[name] = fn
-    STAGED_ORACLES[name] = oracle()
-    return fn
+    return register(name, oracle=oracle())(fn)
 
 
 def _q6(expr: str) -> str:
@@ -3158,6 +3060,16 @@ def _pot_rho_in_sql() -> str:
     """
 
 
+def _pot_rho_oracle() -> str:
+    staged = _stage_sql_cte(_pot_rho_in_sql(), _pot_rho_stages())
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           {_q6("(1.0e0 / (1.0e-4 * __gx_gp0))")} AS pot_rho
+    FROM ({staged})
+    """
+
+
+@register("gsw_pot_rho_t_exact", oracle=_pot_rho_oracle())
 def gsw_pot_rho_t_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential density (exact Gibbs): rho_t_exact(SA, pt0, 0) with
     the existing McDougall–Wotherspoon pt0_from_t inversion (GSW twin:
@@ -3179,19 +3091,6 @@ def gsw_pot_rho_t_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         F.expr(_q6("(1.0e0 / (1.0e-4 * __gx_gp0))")).alias("pot_rho"),
     )
-
-
-def _pot_rho_oracle() -> str:
-    staged = _stage_sql_cte(_pot_rho_in_sql(), _pot_rho_stages())
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           {_q6("(1.0e0 / (1.0e-4 * __gx_gp0))")} AS pot_rho
-    FROM ({staged})
-    """
-
-
-STAGED_QUERIES["gsw_pot_rho_t_exact"] = gsw_pot_rho_t_exact
-STAGED_ORACLES["gsw_pot_rho_t_exact"] = _pot_rho_oracle()
 
 
 # ===========================================================================
@@ -3237,13 +3136,12 @@ def _pss_query(name: str, in_sql: str, inputs_fn, stages_fn, outs):
 
     staged = _stage_sql_cte(in_sql, stages_fn())
     sel = ",\n           ".join(f"{e} AS {c}" for c, e in outs)
-    STAGED_QUERIES[name] = fn
-    STAGED_ORACLES[name] = f"""
+    oracle = f"""
     SELECT l_orderkey, l_linenumber,
            {sel}
     FROM ({staged})
     """
-    return fn
+    return register(name, oracle=oracle)(fn)
 
 
 def _sp_from_c_stages():
@@ -3397,13 +3295,12 @@ def _freeze_query(name: str, stages_fn, outs):
 
     staged = _stage_sql_cte(_freeze_in_sql(), stages_fn())
     sel = ",\n           ".join(f"{e} AS {c}" for c, e in outs)
-    STAGED_QUERIES[name] = fn
-    STAGED_ORACLES[name] = f"""
+    oracle = f"""
     SELECT l_orderkey, l_linenumber,
            {sel}
     FROM ({staged})
     """
-    return fn
+    return register(name, oracle=oracle)(fn)
 
 
 def _ctf_poly_stages():
@@ -3576,13 +3473,12 @@ def _zp_query(name: str, stages_fn, outs):
 
     staged = _stage_sql_cte(_ZP_IN_SQL, stages_fn())
     sel = ",\n           ".join(f"{e} AS {c}" for c, e in outs)
-    STAGED_QUERIES[name] = fn
-    STAGED_ORACLES[name] = f"""
+    oracle = f"""
     SELECT l_orderkey, l_linenumber,
            {sel}
     FROM ({staged})
     """
-    return fn
+    return register(name, oracle=oracle)(fn)
 
 
 def _zfp_stages():
@@ -3695,6 +3591,17 @@ def _lapse_ct_stages():
     ]
 
 
+def _lapse_ct_oracle() -> str:
+    staged = _stage_sql_cte(_freeze_in_sql(), _lapse_ct_stages())
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           {_q9("__lc_ct")} AS ct,
+           {_q9("(-1.0e4 * __lc_gtp / __lc_gtt)")} AS lapse_e8
+    FROM ({staged})
+    """
+
+
+@register("gsw_adiabatic_lapse_rate_from_ct", oracle=_lapse_ct_oracle())
 def gsw_adiabatic_lapse_rate_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adiabatic lapse rate from Conservative Temperature (GSW twin:
     gsw_adiabatic_lapse_rate_from_CT = −g_tp/g_tt at the in-situ
@@ -3721,17 +3628,3 @@ def gsw_adiabatic_lapse_rate_from_ct(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-def _lapse_ct_oracle() -> str:
-    staged = _stage_sql_cte(_freeze_in_sql(), _lapse_ct_stages())
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           {_q9("__lc_ct")} AS ct,
-           {_q9("(-1.0e4 * __lc_gtp / __lc_gtt)")} AS lapse_e8
-    FROM ({staged})
-    """
-
-
-STAGED_QUERIES["gsw_adiabatic_lapse_rate_from_ct"] = (
-    gsw_adiabatic_lapse_rate_from_ct
-)
-STAGED_ORACLES["gsw_adiabatic_lapse_rate_from_ct"] = _lapse_ct_oracle()

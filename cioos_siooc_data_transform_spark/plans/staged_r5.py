@@ -1,13 +1,10 @@
-"""Round-5 query slate — staged through round 4, LIVE since round 5.
+"""Round-5 query slate: 48 live queries, each registered at import with
+``register``.
 
-These 50 queries were built and tri-scale-verified during round 4 but
-parked in a local registry so round 4's fresh-name count stayed at the
-driver's 50-query sample budget (the round-3 defect class; see
-tests/test_entry_contract.py::test_fresh_budget_within_driver_sample).
-Round 5 activated them: plans/__init__.py imports this module and calls
-``activate()``, which pushes every entry into the live registry, and the
-50 round-4-green names moved to ``_CHECKED`` in __spark_entry__.py in
-the same change — so the driver's round-5 sample is exactly this slate.
+The flat-form ``gsw_dynamic_enthalpy`` and ``gsw_enthalpy`` builders
+(waves 7 and 10) stay here UNREGISTERED, as reference code: the live
+names are served by the staged-Horner twins in plans/staged_r9.py, and
+tests/test_staged_r9.py pins the twins value-identical to these forms.
 
 Content:
 - EOS-80 high-pressure density (UNESCO 1983 secant bulk modulus; check
@@ -67,16 +64,9 @@ was equivalent but not byte-identical, so aligning it changed bucket
 strings without changing any candidate pair), and the funnel/histogram
 oracles share CONFIRMED_COMPONENT_CTES instead of duplicating the
 components walk.
-
-The slate holds EXACTLY 50 queries — one full driver sample: round 5
-can promote the 50 round-4-green names to _CHECKED, activate() this
-module, and the driver's next sample covers the entire new surface.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -88,25 +78,14 @@ from cioos_siooc_data_transform_spark.plans.dedup_queries import (
     _SHINGLES_CTE,
     distinct_shingles,
 )
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
 # Shared synthetic oceanographic inputs (same derivation as
-# plans/oceanography_queries.py so staged queries join that family
-# unchanged on activation).
+# plans/oceanography_queries.py, so these queries join that family
+# unchanged).
 # ---------------------------------------------------------------------------
 _IN_SQL = """
     SELECT l_orderkey, l_linenumber,
@@ -178,7 +157,7 @@ def rho_eos80_sql(s: str, t: str, p_dbar: str) -> str:
     )
 
 
-@_register(
+@register(
     "gsw_rho_at_pressure",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
@@ -209,7 +188,7 @@ from cioos_siooc_data_transform_spark.functions.oceanography import (  # noqa: E
 )
 
 
-@_register(
+@register(
     "gsw_adiabatic_lapse_rate",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
@@ -254,7 +233,7 @@ def _sigma_oracle() -> str:
     """
 
 
-@_register("gsw_sigma1_sigma2", oracle="__LAZY__")
+@register("gsw_sigma1_sigma2", oracle=_sigma_oracle())
 def gsw_sigma1_sigma2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential density anomalies referenced to 1000 and 2000 dbar from
     the 75-term TEOS-10 polynomial (the density surfaces intermediate-
@@ -281,15 +260,12 @@ def gsw_sigma1_sigma2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_sigma1_sigma2"] = _sigma_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Window value functions: first/last/nth over explicit frames — the one
 # window family (rank/lag-lead/range-frame/percent already ship) without
 # a registered query.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "window_value_functions",
     oracle="""
     SELECT o_orderkey, o_custkey,
@@ -344,7 +320,7 @@ def window_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pairs (the full-width LSH stage is unchanged; the b-bit signatures are
 # the storage/transfer optimization).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_bbit_minhash",
     oracle=f"""
     WITH {_SHINGLES_CTE},
@@ -423,7 +399,7 @@ def dedup_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the standard multilingual-tokenizer-quality metric (fertility >> 1
 # means the vocabulary underserves that language).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "tokenizer_fertility",
     oracle=r"""
     SELECT lang,
@@ -470,7 +446,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STOPWORDS = ["a", "the", "and", "of", "to", "in"]
 
 
-@_register(
+@register(
     "text_stopword_density",
     oracle=f"""
     WITH w AS (
@@ -516,7 +492,7 @@ def text_stopword_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Session duration / size stats: the session-level rollup over the
 # sessionize_gap assignment (30-minute idle timeout).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "session_duration_stats",
     oracle="""
     WITH e AS (
@@ -574,7 +550,7 @@ def session_duration_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FUNNEL = ["view", "click", "purchase"]
 
 
-@_register(
+@register(
     "funnel_conversion_rates",
     oracle="""
     WITH reached AS (
@@ -675,7 +651,7 @@ def _sigma_theta_oracle() -> str:
     """
 
 
-@_register("gsw_potential_density_theta", oracle="__LAZY__")
+@register("gsw_potential_density_theta", oracle=_sigma_theta_oracle())
 def gsw_potential_density_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sigma_theta = rho_EOS80(S, theta, 0) - 1000: surface-referenced
     potential density through the Bryden theta polynomial. theta is
@@ -697,9 +673,6 @@ def gsw_potential_density_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_potential_density_theta"] = _sigma_theta_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Model-based quality filtering (the FineWeb-Edu / quality-classifier
 # shape): a literal logistic-regression over cheap per-doc features.
@@ -710,7 +683,7 @@ STAGED_ORACLES["gsw_potential_density_theta"] = _sigma_theta_oracle()
 _LR_W = {"bias": -1.5, "chars": 0.004, "stop": 3.0, "fert": -0.8}
 
 
-@_register(
+@register(
     "quality_classifier_logreg",
     oracle=f"""
     WITH feats AS (
@@ -781,7 +754,7 @@ def quality_classifier_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # standard embedding-space sanity eval (a collapsed or shuffled
 # embedding fails it immediately).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "embedding_knn_label_accuracy",
     oracle="""
     WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv, label AS true_label
@@ -864,7 +837,7 @@ def embedding_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the FIRST time in the corpus (by doc_id order) — the curation metric
 # behind "how much new content does this source add".
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "ngram_novelty_score",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -923,7 +896,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deleted / changed / unchanged / added and report exact integer-cent
 # price deltas — the maintenance op behind incremental republishing.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "snapshot_diff_cdc",
     oracle="""
     WITH base AS (
@@ -1010,7 +983,7 @@ def snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window surface the numeric range-frame query doesn't cover (frame
 # bounds in INTERVAL units over a timestamp ordering).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "window_time_interval_frame",
     oracle="""
     SELECT event_id, user_id,
@@ -1054,7 +1027,7 @@ def window_time_interval_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 # grouping-sets family (which aggregation level produced this row) —
 # what BI layers pivot on.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "grouping_id_flags",
     oracle="""
     SELECT o_orderstatus, o_orderpriority,
@@ -1096,7 +1069,7 @@ def grouping_id_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tables are vocabulary-bounded and broadcast; the corpus never
 # shuffles on a token key.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "lm_bigram_logprob",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -1159,7 +1132,7 @@ def lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-source dedup survivorship report: the ops dashboard behind every
 # dedup pipeline (which sources are mostly copies?).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_source_survivorship",
     oracle="""
     SELECT source,
@@ -1191,7 +1164,7 @@ def dedup_source_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by the same user within +/-900 s, backward preferred on exact
 # distance ties. Union + two windows — no range-pair explosion.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "asof_nearest_tolerance",
     oracle="""
     WITH u AS (
@@ -1305,7 +1278,52 @@ _PR_ITERS = 3
 _PR_UNIT = 1_000_000_000_000  # 1e12 score units
 
 
-@_register("graph_pagerank_iterations", oracle="__LAZY__")
+def _pagerank_oracle() -> str:
+    base = f"""
+    items AS (
+      SELECT DISTINCT l_orderkey AS k, l_partkey AS pk FROM lineitem
+    ), pairs AS (
+      SELECT a.pk AS pa, b.pk AS pb
+      FROM items a JOIN items b ON a.k = b.k AND a.pk < b.pk
+    ), und AS (
+      SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2
+    ), edges AS (
+      SELECT pa AS src, pb AS dst FROM und
+      UNION ALL
+      SELECT pb, pa FROM und
+    ), deg AS (
+      SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM edges GROUP BY src
+    ), n AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg
+    ), it0 AS (
+      SELECT src AS node, {_PR_UNIT} // n.n_nodes AS score FROM deg, n
+    )"""
+    its = []
+    for i in range(1, _PR_ITERS + 1):
+        its.append(f""", it{i} AS (
+      SELECT d.src AS node,
+             (15 * ({_PR_UNIT} // n.n_nodes)) // 100
+             + (85 * COALESCE(x.inc, 0)) // 100 AS score
+      FROM deg d
+      CROSS JOIN n
+      LEFT JOIN (
+        SELECT e.dst, sum(s.score // dg.outdeg) AS inc
+        FROM it{i-1} s
+        JOIN deg dg ON dg.src = s.node
+        JOIN edges e ON e.src = s.node
+        GROUP BY e.dst
+      ) x ON x.dst = d.src
+    )""")
+    return (
+        "WITH " + base + "".join(its)
+        + f"""
+    SELECT node AS part_key, CAST(score AS BIGINT) AS pagerank_picos
+    FROM it{_PR_ITERS}
+    """
+    )
+
+
+@register("graph_pagerank_iterations", oracle=_pagerank_oracle())
 def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{iters}-iteration PageRank (d=0.85) on the support->=2
     co-purchase graph. Integer 1e-12-unit scores make the iteration
@@ -1397,54 +1415,6 @@ def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle() -> str:
-    base = f"""
-    items AS (
-      SELECT DISTINCT l_orderkey AS k, l_partkey AS pk FROM lineitem
-    ), pairs AS (
-      SELECT a.pk AS pa, b.pk AS pb
-      FROM items a JOIN items b ON a.k = b.k AND a.pk < b.pk
-    ), und AS (
-      SELECT pa, pb FROM pairs GROUP BY pa, pb HAVING count(*) >= 2
-    ), edges AS (
-      SELECT pa AS src, pb AS dst FROM und
-      UNION ALL
-      SELECT pb, pa FROM und
-    ), deg AS (
-      SELECT src, CAST(count(*) AS BIGINT) AS outdeg FROM edges GROUP BY src
-    ), n AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg
-    ), it0 AS (
-      SELECT src AS node, {_PR_UNIT} // n.n_nodes AS score FROM deg, n
-    )"""
-    its = []
-    for i in range(1, _PR_ITERS + 1):
-        its.append(f""", it{i} AS (
-      SELECT d.src AS node,
-             (15 * ({_PR_UNIT} // n.n_nodes)) // 100
-             + (85 * COALESCE(x.inc, 0)) // 100 AS score
-      FROM deg d
-      CROSS JOIN n
-      LEFT JOIN (
-        SELECT e.dst, sum(s.score // dg.outdeg) AS inc
-        FROM it{i-1} s
-        JOIN deg dg ON dg.src = s.node
-        JOIN edges e ON e.src = s.node
-        GROUP BY e.dst
-      ) x ON x.dst = d.src
-    )""")
-    return (
-        "WITH " + base + "".join(its)
-        + f"""
-    SELECT node AS part_key, CAST(score AS BIGINT) AS pagerank_picos
-    FROM it{_PR_ITERS}
-    """
-    )
-
-
-STAGED_ORACLES["graph_pagerank_iterations"] = _pagerank_oracle()
-
-
 # ===========================================================================
 # Staged wave 4
 # ===========================================================================
@@ -1460,7 +1430,7 @@ STAGED_ORACLES["graph_pagerank_iterations"] = _pagerank_oracle()
 _PIT_PROBES = ["1994-06-01", "1997-01-01", "2005-06-01"]
 
 
-@_register(
+@register(
     "scd2_point_in_time_lookup",
     oracle=f"""
     WITH hist AS (
@@ -1602,7 +1572,7 @@ def scd2_point_in_time_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH chain; only Σmin needs the pairwise join (Σmax derives from the
 # per-doc totals: |A| + |B| − Σmin).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_bag_jaccard_pairs",
     oracle=f"""
     WITH {_SHINGLES_CTE},
@@ -1692,7 +1662,7 @@ def dedup_bag_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # squares), then a row-local standardized distance — the scale-aware
 # upgrade of embedding_centroid_distance for embedding-space QC.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "embedding_mahalanobis_diag",
     oracle="""
     WITH v AS (
@@ -1807,7 +1777,7 @@ def embedding_mahalanobis_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ARES_K = 200
 
 
-@_register(
+@register(
     "weighted_sample_ares",
     oracle=f"""
     WITH keyed AS (
@@ -1863,7 +1833,7 @@ def weighted_sample_ares(spark: SparkSession, sf_dir: str) -> DataFrame:
 # match) with (b) the real join over the non-NULL remainder — same
 # answer, no NULL hot partition. The oracle is the plain LEFT JOIN.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "left_join_null_skew_isolated",
     oracle="""
     WITH f AS (
@@ -1910,7 +1880,7 @@ def left_join_null_skew_isolated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # multiplicities (the distinct variants already ship). Results grouped
 # to (part_key, n) rows and tagged so one query exercises both.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "except_intersect_all",
     oracle="""
     WITH a AS (SELECT l_partkey FROM lineitem WHERE l_quantity < 25),
@@ -1973,7 +1943,7 @@ def _component_histogram_oracle() -> str:
     """
 
 
-@_register("dedup_component_size_histogram", oracle="__LAZY__")
+@register("dedup_component_size_histogram", oracle=_component_histogram_oracle())
 def dedup_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of near-dup cluster sizes from the confirmed-pair
     component labeling (>= 0.5 exact Jaccard over LSH candidates).
@@ -2007,9 +1977,6 @@ def dedup_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-STAGED_ORACLES["dedup_component_size_histogram"] = _component_histogram_oracle()
-
-
 # ===========================================================================
 # Staged wave 6
 # ===========================================================================
@@ -2025,7 +1992,7 @@ STAGED_ORACLES["dedup_component_size_histogram"] = _component_histogram_oracle()
 _FREQ_SUPPORT = 0.05
 
 
-@_register(
+@register(
     "sketch_frequent_items",
     oracle=f"""
     WITH counts AS (
@@ -2085,7 +2052,7 @@ def sketch_frequent_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whitespace, strip non-alphanumerics — catches trivially-reformatted
 # copies that byte-exact digests miss.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_exact_normalized",
     oracle="""
     WITH norm AS (
@@ -2135,7 +2102,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WM_DELAY_S = 600
 
 
-@_register(
+@register(
     "late_data_accounting",
     oracle=f"""
     WITH seq AS (
@@ -2194,24 +2161,6 @@ def late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def activate() -> int:
-    """Round-5 activation: push every staged query into the LIVE
-    registry. Call from plans/__init__.py AFTER the module imports
-    (``from ... import staged_r5; staged_r5.activate()``) — and add the
-    50 round-4-green names to ``_CHECKED`` in __spark_entry__.py in the
-    SAME change, or the fresh-budget contract test fails the build.
-    Returns the number of queries registered (idempotent)."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    return n
-
-
 # ===========================================================================
 # Staged wave 7
 # ===========================================================================
@@ -2226,7 +2175,8 @@ from cioos_siooc_data_transform_spark.functions.teos10 import (  # noqa: E402
 )
 
 
-@_register("gsw_dynamic_enthalpy", oracle="__LAZY__")
+# Unregistered reference form: the live gsw_dynamic_enthalpy is the
+# staged-Horner twin in plans/staged_r9.py.
 def gsw_dynamic_enthalpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic enthalpy (the pressure-dependent part of specific
     enthalpy; enthalpy = cp0*CT + h_dyn). Plain 75-term sum — identical
@@ -2264,9 +2214,6 @@ def _dyn_enthalpy_oracle() -> str:
     """
 
 
-STAGED_ORACLES["gsw_dynamic_enthalpy"] = _dyn_enthalpy_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Token-bucket rate limiting: a clamped recurrence
 # (tokens' = min(cap, tokens + refill*dt) - cost if allowed) — the one
@@ -2282,7 +2229,7 @@ _TB_REFILL = 1       # millitokens per second (full token after 1000 s)
 _TB_COST = 1000      # millitokens per event
 
 
-@_register(
+@register(
     "rate_limit_token_bucket",
     oracle=f"""
     WITH RECURSIVE e AS (
@@ -2407,7 +2354,7 @@ def _langid_confusion_oracle() -> str:
     """
 
 
-@_register("langid_confusion_matrix", oracle="__LAZY__")
+@register("langid_confusion_matrix", oracle=_langid_confusion_oracle())
 def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(true lang x predicted lang) counts plus the per-true-lang row
     fraction (recall on the diagonal) — the eval artifact behind every
@@ -2442,9 +2389,6 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["langid_confusion_matrix"] = _langid_confusion_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Reference-vertical integration: Mackenzie sound speed computed over
 # the PARSED IOS profile — the full chain (mapInPandas parse → pad
@@ -2453,7 +2397,7 @@ STAGED_ORACLES["langid_confusion_matrix"] = _langid_confusion_oracle()
 # fixture's literal values, so the parse, the masking, AND the formula
 # are all on the hook.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "ios_profile_sound_speed",
     oracle="""
     WITH rec AS (
@@ -2520,7 +2464,7 @@ def ios_profile_sound_speed(spark: SparkSession, sf_dir: str) -> DataFrame:
 _WIN_W = 4  # window of consecutive 3-gram hashes
 
 
-@_register(
+@register(
     "dedup_fingerprint_winnowing",
     oracle=f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -2602,7 +2546,7 @@ def dedup_fingerprint_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A/B test lift: deterministic hash split, exact per-arm conversion
 # counts, and the relative lift — the experiment-analysis primitive.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "ab_test_lift",
     oracle="""
     WITH arms AS (
@@ -2696,9 +2640,10 @@ def ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Full specific enthalpy h = cp0*CT + h_dyn — the quantity TEOS-10
-# conserves under adiabatic mixing (the whole point of CT).
+# conserves under adiabatic mixing (the whole point of CT). Unregistered
+# reference form: the live gsw_enthalpy is the staged-Horner twin in
+# plans/staged_r9.py.
 # ---------------------------------------------------------------------------
-@_register("gsw_enthalpy", oracle="__LAZY__")
 def gsw_enthalpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """h(SA, CT, p) = cp0*CT + dynamic enthalpy; completes the enthalpy
     pair (both terms already derivative- or check-value-pinned)."""
@@ -2741,9 +2686,6 @@ def _enthalpy_oracle() -> str:
     """
 
 
-STAGED_ORACLES["gsw_enthalpy"] = _enthalpy_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Winnowing candidate pairs: inverted index over the wave-9
 # fingerprints — docs sharing >= 2 selected prints, with the shared
@@ -2755,7 +2697,7 @@ _WIN_MAX_DF = 10
 _WIN_MIN_SHARED = 2
 
 
-@_register(
+@register(
     "dedup_winnowing_pairs",
     oracle=f"""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -2841,7 +2783,7 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # repeat join on the key into a local merge. Plan pinned Exchange-free
 # below the join in tests/test_staged_r5.py.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "bucketed_colocated_join",
     oracle="""
     SELECT c.c_mktsegment,
@@ -2883,7 +2825,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Day-of-week seasonality profile: the additive-decomposition base
 # table (weekly seasonal means + residual spread) for event values.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_dow_seasonality",
     oracle="""
     WITH q AS (
@@ -2935,7 +2877,7 @@ def events_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # where the naive days x orders stabbing join is quadratic; THE scale
 # pattern for concurrency/backlog/occupancy questions.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "interval_sweepline_backlog",
     oracle="""
     WITH iv AS (
@@ -3031,7 +2973,21 @@ def _sound_speed_ct_sql(sa: str, ct: str, p: str) -> str:
     return f"(1.0e4*{v}*sqrt(-1.0e0/{dz}))"
 
 
-@_register("gsw_sound_speed_ct_native", oracle="__LAZY__")
+def _sound_speed_ct_oracle() -> str:
+    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
+
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           round({_sound_speed_ct_sql("sa", "ct", "p")}, 6) AS sound_speed_ct
+    FROM (
+      SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
+             {ct_from_t_sql("s", "t", "p")} AS ct
+      FROM ({_IN_SQL})
+    )
+    """
+
+
+@register("gsw_sound_speed_ct_native", oracle=_sound_speed_ct_oracle())
 def gsw_sound_speed_ct_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sound speed from c^2 = dp/drho = -v^2/(dv/dP): both factors are
     plain sums over the check-valued coefficient table, so correctness
@@ -3058,23 +3014,6 @@ def gsw_sound_speed_ct_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sound_speed_ct_oracle() -> str:
-    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
-
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           round({_sound_speed_ct_sql("sa", "ct", "p")}, 6) AS sound_speed_ct
-    FROM (
-      SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
-             {ct_from_t_sql("s", "t", "p")} AS ct
-      FROM ({_IN_SQL})
-    )
-    """
-
-
-STAGED_ORACLES["gsw_sound_speed_ct_native"] = _sound_speed_ct_oracle()
-
-
 # ===========================================================================
 # Staged wave 14
 # ===========================================================================
@@ -3087,7 +3026,7 @@ STAGED_ORACLES["gsw_sound_speed_ct_native"] = _sound_speed_ct_oracle()
 # random-walk envelope). All integer micro-units; the prefix sum is one
 # ordered window per type.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "cusum_range_drift",
     oracle="""
     WITH q AS (
@@ -3202,7 +3141,7 @@ def _dedup_funnel_oracle() -> str:
     """
 
 
-@_register("dedup_layer_funnel", oracle="__LAZY__")
+@register("dedup_layer_funnel", oracle=_dedup_funnel_oracle())
 def dedup_layer_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pipeline-level dedup report: how many documents survive each
     layer, and the end-to-end retention fraction. Composes the existing
@@ -3262,9 +3201,6 @@ def dedup_layer_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["dedup_layer_funnel"] = _dedup_funnel_oracle()
-
-
 # ===========================================================================
 # Staged wave 15
 # ===========================================================================
@@ -3287,7 +3223,7 @@ _BIN_POWS = [1 << i for i in range(63)] + [-(1 << 63)]
 _BIN_POWS_SQL = "[" + ", ".join(str(v) for v in _BIN_POWS) + "]"
 
 
-@_register(
+@register(
     "embedding_binary_signature",
     oracle="""
     WITH bits AS (
@@ -3433,8 +3369,7 @@ def _ols_slope_quantized(pts: DataFrame, *, n_name: str, slope_name: str) -> Dat
     )
 
 
-
-@_register(
+@register(
     "vocab_zipf_slope",
     oracle="""
     WITH freq AS (
@@ -3518,7 +3453,21 @@ def _kappa_sql(sa: str, ct: str, p: str) -> str:
     return f"(-({dz})*1.0e-8/{v})"
 
 
-@_register("gsw_kappa", oracle="__LAZY__")
+def _kappa_oracle() -> str:
+    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
+
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           round({_kappa_sql("sa", "ct", "p")} * 1.0e12, 6) AS kappa_per_tpa
+    FROM (
+      SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
+             {ct_from_t_sql("s", "t", "p")} AS ct
+      FROM ({_IN_SQL})
+    )
+    """
+
+
+@register("gsw_kappa", oracle=_kappa_oracle())
 def gsw_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isentropic compressibility (1/Pa, ~4.1e-10 in the ocean) —
     emitted in 1e-12/Pa units so 6-dp rounding keeps ~6 significant
@@ -3542,29 +3491,12 @@ def gsw_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kappa_oracle() -> str:
-    from cioos_siooc_data_transform_spark.functions.teos10 import ct_from_t_sql
-
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           round({_kappa_sql("sa", "ct", "p")} * 1.0e12, 6) AS kappa_per_tpa
-    FROM (
-      SELECT l_orderkey, l_linenumber, p, {_SA_SQL} AS sa,
-             {ct_from_t_sql("s", "t", "p")} AS ct
-      FROM ({_IN_SQL})
-    )
-    """
-
-
-STAGED_ORACLES["gsw_kappa"] = _kappa_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Heaps' law fit: vocabulary growth V(n) ~ K * n^beta over the corpus in
 # doc_id order — beta well below 1 is the expected sublinear growth;
 # beta near 1 means unbounded novel-token production (noisy OCR, ids).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "text_heaps_law_fit",
     oracle="""
     WITH tok AS (
@@ -3664,7 +3596,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the Pareto share curve — exact integer arithmetic until one final
 # division (cents, deterministic ordering by (revenue, custkey)).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "orders_gini_concentration",
     oracle="""
     WITH rev AS (
@@ -3744,7 +3676,7 @@ def orders_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact integer rationals; the inverse (1/D) is the "effective
 # vocabulary size" quality signal.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "text_simpson_diversity",
     oracle="""
     WITH tok AS (

@@ -1,15 +1,7 @@
-"""STAGED round-6 queries — NOT registered with the driver registry.
+"""Round-6 query slate: 50 live queries, each registered at import
+with ``register``; strict-harness coverage in tests/test_staged_r6.py.
 
-Round 5 activated exactly 50 fresh names (the full driver sample), so
-anything new built this round must park here or it would push part of
-the live fresh slate past the sample cutoff (the round-3 defect class;
-see tests/test_entry_contract.py::test_fresh_budget_within_driver_sample).
-Same contract as plans/staged_r5.py last round: a LOCAL registry,
-every entry run through the strict driver-faithful harness by
-tests/test_staged_r6.py, and an ``activate()`` that round 6 calls from
-plans/__init__.py after moving the round-5-green names to ``_CHECKED``.
-
-Content (waves grow through round 5):
+Content:
 - Wave A — TPC-H completion: the five remaining query shapes (Q2 min-cost
   supplier, Q9 product profit, Q11 important stock, Q16 supplier-count
   by descriptor, Q20 potential promotion), adapted partsupp-free like
@@ -33,41 +25,11 @@ Content (waves grow through round 5):
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def activate() -> int:
-    """Round-6 activation: push every staged query into the LIVE
-    registry (idempotent). Call from plans/__init__.py after adding the
-    round-5-green names to _CHECKED in __spark_entry__.py — same
-    two-part change as the round-5 activation of staged_r5."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    return n
 
 
 # Shared integer-cents idiom (identical on both engines; see
@@ -123,7 +85,7 @@ def ols_slope_from_sums(dp: int = 6, scale_div: float = 1.0) -> Column:
 # for the part; the correlated-min subquery keeps Q2's signature plan
 # (per-part min + join-back, dims broadcast).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q2_min_cost_supplier",
     oracle="""
     WITH cost AS (
@@ -215,7 +177,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Q9 shape: product-type profit by nation and year. Supply cost adapts
 # to 60% of the part's retail price per unit.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q9_product_type_profit",
     oracle="""
     SELECT n.n_name AS nation_name,
@@ -274,7 +236,7 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the region's suppliers; threshold = 0.1% of the region total (scalar
 # subquery → 1-row broadcast).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q11_important_stock",
     oracle="""
     WITH val AS (
@@ -325,7 +287,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The "customer complaints" exclusion adapts to negative-balance
 # suppliers; the relationship comes from lineitem instead of partsupp.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q16_parts_supplier_count",
     oracle="""
     SELECT p.p_brand AS brand, p.p_type AS type,
@@ -382,7 +344,7 @@ def q16_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the supplier shipped more than half of their total quantity of the
 # part during 1995 (1995 qty × 2 > all-time qty, exact integers).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "q20_potential_promotion",
     oracle="""
     WITH pq AS (
@@ -493,7 +455,7 @@ def _theta_rk4_oracle() -> str:
     """
 
 
-@_register("gsw_theta_rk4", oracle="__LAZY__")
+@register("gsw_theta_rk4", oracle=_theta_rk4_oracle())
 def gsw_theta_rk4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNESCO RK4 potential temperature (reference 0 dbar) — the
     high-accuracy twin of the one-shot Bryden polynomial already live
@@ -514,9 +476,6 @@ def gsw_theta_rk4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_theta_rk4"] = _theta_rk4_oracle()
-
-
 def _ct_rk4_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.oceanography import (
         theta_rk4_stages,
@@ -532,7 +491,7 @@ def _ct_rk4_oracle() -> str:
     """
 
 
-@_register("gsw_ct_from_t_rk4", oracle="__LAZY__")
+@register("gsw_ct_from_t_rk4", oracle=_ct_rk4_oracle())
 def gsw_ct_from_t_rk4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conservative Temperature via the RK4-integrated pt0 instead of
     the Bryden composition the live gsw_ct_from_t uses — within 3e-6 K
@@ -554,9 +513,6 @@ def gsw_ct_from_t_rk4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_ct_from_t_rk4"] = _ct_rk4_oracle()
-
-
 def _sigma34_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_from_t_sql,
@@ -575,7 +531,7 @@ def _sigma34_oracle() -> str:
     """
 
 
-@_register("gsw_sigma3_sigma4", oracle="__LAZY__")
+@register("gsw_sigma3_sigma4", oracle=_sigma34_oracle())
 def gsw_sigma3_sigma4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential density anomalies referenced to 3000/4000 dbar —
     completes the sigma0..sigma4 family (abyssal watermass analysis)
@@ -599,9 +555,6 @@ def gsw_sigma3_sigma4(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.expr(rho_sql("sa", "ct", "3000.0e0")) - 1000.0, 6).alias("sigma3"),
         F.round(F.expr(rho_sql("sa", "ct", "4000.0e0")) - 1000.0, 6).alias("sigma4"),
     )
-
-
-STAGED_ORACLES["gsw_sigma3_sigma4"] = _sigma34_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -650,7 +603,7 @@ def _pt_from_ct_oracle() -> str:
     """
 
 
-@_register("gsw_pt_from_ct", oracle="__LAZY__")
+@register("gsw_pt_from_ct", oracle=_pt_from_ct_oracle())
 def gsw_pt_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential temperature from Conservative Temperature — the
     inverse conversion GSW provides as gsw_pt_from_CT, here two Newton
@@ -676,9 +629,6 @@ def gsw_pt_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_pt_from_ct"] = _pt_from_ct_oracle()
-
-
 # ===========================================================================
 # Wave C — analytics: gaps-and-islands, lag-1 autocorrelation, YoY
 # growth, per-type value entropy, customer first/last deltas, top-2
@@ -692,7 +642,7 @@ STAGED_ORACLES["gsw_pt_from_ct"] = _pt_from_ct_oracle()
 # classic streak detection (month_index - dense_rank is constant within
 # a run). Output: per customer, longest streak and number of islands.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "orders_gap_islands",
     oracle="""
     WITH months AS (
@@ -750,7 +700,7 @@ def orders_gap_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact decimal, and the Pearson formula runs in double on identical
 # inputs in both engines.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_autocorr_lag1",
     oracle="""
     WITH q AS (
@@ -820,7 +770,7 @@ def events_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Year-over-year revenue growth per market segment.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "orders_yoy_growth",
     oracle="""
     WITH rev AS (
@@ -877,7 +827,7 @@ def orders_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact; the final (ln(n)*1e6*n - sum) / (n*1e6) division runs on
 # identical integers in both engines.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_value_entropy",
     oracle="""
     WITH bins AS (
@@ -929,7 +879,7 @@ def events_value_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Customer lifetime summary: first/last order, tenure days, lifetime
 # revenue — the base table for churn features.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "customer_first_last_delta",
     oracle="""
     SELECT o_custkey AS cust_key,
@@ -962,7 +912,7 @@ def customer_first_last_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two most frequent integer-binned values (deterministic tiebreak:
 # count desc, bin asc).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_top2_share",
     oracle="""
     WITH bins AS (
@@ -1011,7 +961,7 @@ def events_top2_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Region -> nation revenue rollup share: each nation's share of its
 # region's customer revenue (two-level hierarchy share).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "nation_revenue_share",
     oracle="""
     WITH rev AS (
@@ -1065,7 +1015,7 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Recency bands: customers bucketed by days since their last order,
 # relative to the corpus max date (deterministic anchor, no now()).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "customer_recency_bands",
     oracle="""
     WITH anchor AS (SELECT max(o_orderdate) AS maxd FROM orders),
@@ -1135,7 +1085,7 @@ from cioos_siooc_data_transform_spark.plans.sampling_queries import (  # noqa: E
 # restated over 3-gram occurrences): what share of a document's 3-gram
 # OCCURRENCES belong to a gram that repeats within the document.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "text_duplicate_ngram_fraction",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -1188,7 +1138,7 @@ def text_duplicate_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame
 # sum (the order-independence invariant); both engines evaluate the
 # identical per-term double expression.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "vocab_js_divergence",
     oracle="""
     WITH tok AS (
@@ -1274,7 +1224,7 @@ def vocab_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines) exceeds |2.5| are flagged — the cheap corrupted-embedding /
 # collapsed-encoder screen before ANN indexing.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "embedding_energy_outliers",
     oracle="""
     WITH q AS (
@@ -1346,7 +1296,7 @@ def embedding_energy_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the connectivity diagnostic for ANN index tuning (a spike at 0 means
 # bands too selective; a fat tail means mega-buckets).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "knn_graph_degree_stats",
     oracle=f"""
     WITH bits AS (
@@ -1376,7 +1326,7 @@ def embedding_energy_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT degree, CAST(count(*) AS BIGINT) AS n_vectors
     FROM deg GROUP BY 1
-    """,
+    """.format(cap=_EMB_BUCKET_CAP),
 )
 def knn_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the guarded LSH candidate graph (shared
@@ -1409,18 +1359,13 @@ def knn_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["knn_graph_degree_stats"] = STAGED_ORACLES[
-    "knn_graph_degree_stats"
-].format(cap=_EMB_BUCKET_CAP)
-
-
 # ---------------------------------------------------------------------------
 # Window-level dedup (C4's line-dedup restated for the unpunctuated
 # corpus): split each document into consecutive NON-OVERLAPPING 8-word
 # windows; a window is boilerplate when its exact text appears in >= 2
 # DISTINCT documents; report each document's boilerplate coverage.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_window_lines",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -1494,7 +1439,7 @@ def dedup_window_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # test documents sharing >= 5 distinct 3-gram shingles with any train
 # doc (near-dup leakage) via the capped inverted index.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "contamination_split_audit",
     oracle="""
     WITH split AS (
@@ -1605,7 +1550,7 @@ def contamination_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Character-class profile per language: alpha/digit/space/other ratios —
 # the first-pass OCR/encoding quality screen, all integer arithmetic.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "text_char_class_profile",
     oracle="""
     WITH per_doc AS (
@@ -1660,7 +1605,7 @@ def text_char_class_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # confirm rates side by side. This is the measured S-curve trade-off a
 # 100 TB dedup deployment tunes on, as a query instead of a notebook.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "minhash_band_tuning_audit",
     oracle=f"""
     WITH {_SHINGLES_CTE},
@@ -1760,7 +1705,7 @@ def minhash_band_tuning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB — per-partition sketches persist (bytes, mergeable), and any
 # date-range cardinality is a UNION of sketches instead of a re-scan.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "sketch_hll_merge_daily",
     oracle="""
     SELECT event_type,
@@ -1809,7 +1754,7 @@ def sketch_hll_merge_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a join. Tolerance is 10% of the UNION size (inclusion-exclusion
 # compounds the per-sketch error).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "sketch_hll_intersection",
     oracle="""
     WITH a AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'),
@@ -1887,7 +1832,7 @@ def _ios_sigma_theta_oracle() -> str:
     """
 
 
-@_register("ios_profile_sigma_theta", oracle="__LAZY__")
+@register("ios_profile_sigma_theta", oracle=_ios_sigma_theta_oracle())
 def ios_profile_sigma_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Depth/temperature/salinity pivot of the masked long-format IOS
     measurements, then sigma-theta = rho0(S, theta(S, T, p)) - 1000
@@ -1922,9 +1867,6 @@ def ios_profile_sigma_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["ios_profile_sigma_theta"] = _ios_sigma_theta_oracle()
-
-
 # ===========================================================================
 # Wave G — forward-looking as-of join + conversion-time distribution.
 # ===========================================================================
@@ -1936,7 +1878,7 @@ STAGED_ORACLES["ios_profile_sigma_theta"] = _ios_sigma_theta_oracle()
 # seen purchase is exactly the earliest future one, so one window pass
 # replaces a range self-join.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "asof_join_forward",
     oracle="""
     WITH u AS (
@@ -2007,7 +1949,7 @@ def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mean (floored micro), and exact DISCRETE median (no interpolation —
 # element at floor((n-1)/2) of the sorted gaps, engine-identical).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "funnel_time_to_convert",
     oracle="""
     WITH u AS (
@@ -2056,7 +1998,7 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     gaps = (
-        STAGED_QUERIES["asof_join_forward"](spark, sf_dir)
+        asof_join_forward(spark, sf_dir)
         .filter(F.col("gap_us").isNotNull())
         .select("gap_us")
     )
@@ -2093,7 +2035,7 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pass of exact integer sums (F.corr is float-accumulation-ordered and
 # engine-specific; this is the order-independent formulation).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "lineitem_corr_matrix",
     oracle="""
     WITH q AS (
@@ -2173,7 +2115,7 @@ def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2-D histogram (quantity x discount-percent): the joint-distribution
 # heatmap feed — exact integer bins, one agg.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "lineitem_hist2d",
     oracle="""
     SELECT CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty,
@@ -2238,7 +2180,7 @@ def _p_from_z_oracle() -> str:
     """
 
 
-@_register("gsw_pressure_from_depth", oracle="__LAZY__")
+@register("gsw_pressure_from_depth", oracle=_p_from_z_oracle())
 def gsw_pressure_from_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p(z, lat) by inverting Saunders' z(p) — the conversion GSW ships
     as p_from_z. Zero shuffle, pure codegen; the iteration count is
@@ -2259,9 +2201,6 @@ def gsw_pressure_from_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_pressure_from_depth"] = _p_from_z_oracle()
-
-
 # ===========================================================================
 # Wave I — product-quantization ADC top-k as a registered, oracle-paired
 # query. The live PQ operators (operators/similarity.py: pq_encode /
@@ -2270,7 +2209,7 @@ STAGED_ORACLES["gsw_pressure_from_depth"] = _p_from_z_oracle()
 # corpus vectors' subvectors per subspace — the KMeans-trained path
 # stays the operator default, tested in test_pq.py).
 # ===========================================================================
-@_register(
+@register(
     "similarity_pq_adc_topk",
     oracle="""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -2351,7 +2290,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # seen exactly once in it — the fast vocabulary-health signal (too low
 # = templated text; too high = OCR noise / id soup).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "text_hapax_ratio",
     oracle="""
     WITH tok AS (
@@ -2390,7 +2329,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of consecutive gaps — the feed-health pulse check (rising median =
 # producer slowdown; bimodal mean/median split = batching).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_interarrival_stats",
     oracle="""
     WITH gaps AS (
@@ -2452,7 +2391,7 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-decile min/max/mean — the corpus shape summary feeding length
 # filters and packing capacity choices.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "doc_length_deciles",
     oracle="""
     WITH t AS (
@@ -2502,7 +2441,7 @@ def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of cumulative revenue, B = next 15%, C = tail — with PURE INTEGER
 # boundary comparisons (cum*100 <= 80*total), no float thresholds.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "orders_abc_classification",
     oracle="""
     WITH rev AS (
@@ -2567,7 +2506,7 @@ def orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 # monitor's cheap cousin (compare probe vectors across snapshots
 # instead of full KS). Exact integer rationals at each probe.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_cdf_at_values",
     oracle="""
     WITH probes AS (
@@ -2617,7 +2556,7 @@ def events_cdf_at_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Association-rule metrics over co-purchase pairs: support, directed
 # confidence, and lift — the market_basket_pairs follow-through.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "basket_rule_metrics",
     oracle="""
     WITH baskets AS (
@@ -2705,7 +2644,7 @@ def basket_rule_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a rare shingle (document frequency <= 20 — the same reachability the
 # production inverted index has), vs the 4x2 LSH candidate set.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_lsh_recall_audit",
     oracle=f"""
     WITH {_SHINGLES_CTE},
@@ -2786,7 +2725,7 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket) — the TSDB continuous-aggregate shape, on integer buckets and
 # micro-unit values.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_ohlc_downsample",
     oracle="""
     WITH q AS (
@@ -2857,7 +2796,7 @@ def events_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # count and its DISTINCT-word count — the duplicate-boilerplate smell
 # at corpus level (templated corpora decorrelate).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "doc_diversity_length_corr",
     oracle="""
     WITH per_doc AS (
@@ -2915,7 +2854,7 @@ def doc_diversity_length_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nation: HHI = sum over suppliers of (share)^2, per-supplier terms
 # quantized to integer pico-units before the sum.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "supplier_nation_herfindahl",
     oracle="""
     WITH rev AS (
@@ -2981,7 +2920,7 @@ def supplier_nation_herfindahl(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Missing-hours completeness audit: which (type, hour) grid cells of
 # the observed time range have NO events — the feed-gap detector.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_missing_hours_audit",
     oracle="""
     WITH bounds AS (
@@ -3044,7 +2983,7 @@ def events_missing_hours_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # encoder-health red flag, and the variance ranking feeds PQ subspace
 # allocation. Exact micro-quantized sums per dim.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "embedding_dim_variance",
     oracle="""
     WITH x AS (
@@ -3099,7 +3038,7 @@ def embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # top-{10,100,1000} most frequent grams cover — the dedup-payoff
 # forecast (steep curve = heavy boilerplate, flat = diverse corpus).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "doc_ngram_coverage_curve",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -3163,10 +3102,9 @@ def doc_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # Wave L — final three: word-length profile, monthly returns rate,
-# source x lang chi-square independence. Slate lands at EXACTLY 50 —
-# one full driver sample, the same budget discipline as round 5.
+# source x lang chi-square independence.
 # ===========================================================================
-@_register(
+@register(
     "text_word_length_profile",
     oracle="""
     WITH tok AS (
@@ -3199,7 +3137,7 @@ def text_word_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_returns_rate_by_month",
     oracle="""
     SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS BIGINT) AS ship_month,
@@ -3233,7 +3171,7 @@ def lineitem_returns_rate_by_month(spark: SparkSession, sf_dir: str) -> DataFram
 # same across sources? Per-cell (observed - expected)^2 / expected
 # terms quantized to micro-units before the order-independent sum.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "doc_source_lang_chi2",
     oracle="""
     WITH cells AS (

@@ -1,12 +1,7 @@
-"""STAGED round-7 queries — NOT registered (round-7 runway).
+"""Round-7 query slate: 50 live queries, each registered at import
+with ``register``; strict-harness coverage in tests/test_staged_r7.py.
 
-Same contract as plans/staged_r5.py (activated round 5) and
-plans/staged_r6.py (the round-6 slate, exactly 50): a LOCAL registry,
-strict-harness pytest coverage in tests/test_staged_r7.py, and an
-idempotent ``activate()``. Round 6 activates staged_r6; round 7
-activates this module (already complete at exactly 50).
-
-Content so far:
+Content:
 - Wave A — GSW round-out tranche 3 (closing more of the judge-named
   ufunc-breadth gap with published-constant surfaces only): normal
   gravity g(lat, p) (IGF-1980 constants, free-air correction),
@@ -61,17 +56,9 @@ Content so far:
 - Wave Q — dup-rate by length decile, pairwise-cosine histogram over a
   bounded probe sample, Markov entropy rate (pico-nat quantized), user
   type-diversity histogram.
-
-The slate holds EXACTLY 50 queries — one full driver sample: round 7
-can promote the round-6-green names to _CHECKED, activate() this
-module, and the driver's sample covers the entire new surface (the
-same contract rounds 5 and 6 used).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
-from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -82,35 +69,8 @@ from cioos_siooc_data_transform_spark.plans.staged_r6 import (
     ols_slope_from_sums,
     pearson_r_from_sums,
 )
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def activate() -> int:
-    """Round-7 activation (idempotent) — same two-part change as the
-    staged_r5/staged_r6 activations: move the prior round's green names
-    to _CHECKED in __spark_entry__.py, then call this from
-    plans/__init__.py."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    return n
 
 
 # ===========================================================================
@@ -139,7 +99,7 @@ def grav_sql(lat: str, p: str) -> str:
     return f"({g0}*(1.0e0 + 2.26e-7*{z}))"
 
 
-@_register(
+@register(
     "gsw_gravity",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
@@ -233,7 +193,7 @@ def _rt_oracle() -> str:
     """
 
 
-@_register("gsw_rt_from_sp", oracle="__LAZY__")
+@register("gsw_rt_from_sp", oracle=_rt_oracle())
 def gsw_rt_from_sp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conductivity ratio from practical salinity — the inverse the
     lab-calibration direction needs (GSW: C_from_SP's core loop). Four
@@ -253,9 +213,6 @@ def gsw_rt_from_sp(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         (F.floor(F.col("rt_from_sp") * 1.0e9 + 0.5) / 1.0e9).alias("rt"),
     )
-
-
-STAGED_ORACLES["gsw_rt_from_sp"] = _rt_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -284,7 +241,7 @@ def _specvol_anom_oracle() -> str:
     """
 
 
-@_register("gsw_specvol_anom", oracle="__LAZY__")
+@register("gsw_specvol_anom", oracle=_specvol_anom_oracle())
 def gsw_specvol_anom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Specific volume anomaly vs the standard ocean, emitted in
     1e-6 m^3/kg units (values ~0.1-6) so the 1e-8 floor keeps ~7
@@ -314,14 +271,11 @@ def gsw_specvol_anom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_specvol_anom"] = _specvol_anom_oracle()
-
-
 # ===========================================================================
 # Wave B — embedding-label structure (the embeddings table carries a
 # label column; these are the clustering-quality diagnostics).
 # ===========================================================================
-@_register(
+@register(
     "embedding_cell_label_purity",
     oracle="""
     WITH cent AS (SELECT vec_id AS centroid_id, CAST(embedding AS DOUBLE[]) AS cv
@@ -397,7 +351,7 @@ def embedding_cell_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_fisher_score",
     oracle="""
     WITH x AS (
@@ -500,7 +454,7 @@ def embedding_fisher_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Wave C — event-stream anomaly surfaces.
 # ===========================================================================
-@_register(
+@register(
     "events_minute_burst_zscore",
     oracle="""
     WITH m AS (
@@ -561,7 +515,7 @@ def events_minute_burst_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_heavy_hitters",
     oracle="""
     WITH t AS (
@@ -616,7 +570,7 @@ def events_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave D — SQL-surface round-out: exact percentile bands, conditional
 # cumulative reset, null-aware anti join.
 # ===========================================================================
-@_register(
+@register(
     "orders_percentile_bands_exact",
     oracle="""
     WITH q AS (
@@ -678,7 +632,7 @@ def orders_percentile_bands_exact(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
+@register(
     "events_cumulative_reset",
     oracle="""
     WITH seg AS (
@@ -732,7 +686,7 @@ def events_cumulative_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_null_aware_anti",
     oracle="""
     WITH probe AS (
@@ -782,7 +736,7 @@ def orders_null_aware_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 # micro-units, so every term (v * 2^-k) and the <= 8-term sum are EXACT
 # doubles — no rounding ambiguity between engines.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_value_ewma",
     oracle="""
     WITH q AS (
@@ -840,7 +794,7 @@ def events_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 # elasticity" screen) — the per-group version of the quantized exact-sum
 # regression machinery.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "lineitem_discount_elasticity",
     oracle="""
     WITH q AS (
@@ -894,7 +848,7 @@ def lineitem_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # TUNES the inverted-index caps (max_doc_freq) the dedup operators use.
 # Pure integer CASE bands (no float log2 at bin edges).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "dedup_shingle_df_profile",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -948,7 +902,7 @@ def dedup_shingle_df_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # endpoint degrees over all directed edge instances (each undirected
 # edge counted both ways — the standard Newman formulation).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "graph_degree_assortativity",
     oracle="""
     WITH baskets AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -1028,7 +982,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave F — seasonal index, cross-type audience Jaccard, packing fill
 # audit, window-constrained funnel.
 # ===========================================================================
-@_register(
+@register(
     "orders_seasonal_index",
     oracle="""
     WITH m AS (
@@ -1068,7 +1022,7 @@ def orders_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_type_audience_jaccard",
     oracle="""
     WITH u AS (SELECT DISTINCT event_type, user_id FROM events),
@@ -1152,7 +1106,7 @@ def _pack_fill_oracle() -> str:
     """
 
 
-@_register("pack_fill_efficiency_audit", oracle="__LAZY__")
+@register("pack_fill_efficiency_audit", oracle=_pack_fill_oracle())
 def pack_fill_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Padding-waste audit of the greedy no-split packer: bins, docs,
     min/max fill, and the mean fill ratio (1 - ratio = padding burned
@@ -1183,16 +1137,13 @@ def pack_fill_efficiency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["pack_fill_efficiency_audit"] = _pack_fill_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Window-constrained funnel: signup -> first click within 1 h of the
 # signup -> first purchase within 24 h of that click, per user. The
 # multi-step temporal join done as TWO chained forward as-of scans
 # (never a range self-join).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "funnel_window_constrained",
     oracle="""
     WITH e AS (
@@ -1280,7 +1231,7 @@ _BENFORD_CASE = "CASE digit " + " ".join(
 ) + " END"
 
 
-@_register(
+@register(
     "lineitem_benford_audit",
     oracle=f"""
     WITH d AS (
@@ -1333,7 +1284,7 @@ def lineitem_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "part_type_price_anova",
     oracle="""
     WITH q AS (
@@ -1423,7 +1374,7 @@ def part_type_price_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
 # running max over STRICTLY cheaper parts (RANGE frame on integer
 # cents) and to the max at its own price point.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "part_price_size_skyline",
     oracle="""
     WITH q AS (
@@ -1486,7 +1437,7 @@ def part_price_size_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "supplier_part_bipartite_density",
     oracle="""
     WITH e AS (SELECT DISTINCT l_suppkey, l_partkey FROM lineitem)
@@ -1526,7 +1477,7 @@ def supplier_part_bipartite_density(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@_register(
+@register(
     "orders_lorenz_curve",
     oracle="""
     WITH rev AS (
@@ -1687,7 +1638,7 @@ def _markov_iter_sql() -> str:
     return ",\n    ".join(ctes)
 
 
-@_register(
+@register(
     "events_markov_stationary",
     oracle=f"""
     WITH {_markov_iter_sql()}
@@ -1741,7 +1692,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Wave J — PK uniqueness audit, winsorized mean, segment dissimilarity.
 # ===========================================================================
-@_register(
+@register(
     "table_pk_uniqueness_audit",
     oracle="""
     SELECT * FROM (
@@ -1809,7 +1760,7 @@ def table_pk_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@_register(
+@register(
     "events_winsorized_mean",
     oracle="""
     WITH q AS (
@@ -1885,7 +1836,7 @@ def events_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "segment_nation_dissimilarity",
     oracle="""
     WITH c AS (
@@ -1963,7 +1914,7 @@ def segment_nation_dissimilarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave K — trailing-12-month RANGE window, int8 quantization error
 # audit, order-to-ship lag histogram.
 # ===========================================================================
-@_register(
+@register(
     "orders_rolling_12m_revenue",
     oracle="""
     WITH m AS (
@@ -2012,7 +1963,7 @@ def orders_rolling_12m_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_int8_error_audit",
     oracle="""
     WITH per_vec AS (
@@ -2057,7 +2008,7 @@ def embedding_int8_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_ship_lag_histogram",
     oracle="""
     WITH lag_days AS (
@@ -2113,7 +2064,7 @@ def orders_ship_lag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave L — session co-occurrence, term burstiness, variance
 # decomposition.
 # ===========================================================================
-@_register(
+@register(
     "events_session_cooccurrence",
     oracle="""
     WITH ordered AS (
@@ -2199,7 +2150,7 @@ def events_session_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "text_term_burstiness",
     oracle="""
     WITH tok AS (
@@ -2265,7 +2216,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_price_variance_decomposition",
     oracle="""
     WITH q AS (
@@ -2341,7 +2292,7 @@ def lineitem_price_variance_decomposition(
 # Wave M — Mood's median test, customer type affinity, lagged
 # cross-correlation of minute series.
 # ===========================================================================
-@_register(
+@register(
     "events_mood_median_test",
     oracle="""
     WITH q AS (
@@ -2444,7 +2395,7 @@ def events_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "customer_type_affinity",
     oracle="""
     WITH ct AS (
@@ -2502,7 +2453,7 @@ def customer_type_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_lagged_crosscorr",
     oracle="""
     WITH m AS (
@@ -2581,7 +2532,7 @@ def events_lagged_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Wave N — Cramér's V effect size, PMI word co-occurrence.
 # ===========================================================================
-@_register(
+@register(
     "orders_status_priority_cramers_v",
     oracle="""
     WITH cells AS (
@@ -2671,7 +2622,7 @@ def orders_status_priority_cramers_v(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@_register(
+@register(
     "doc_word_pmi_pairs",
     oracle="""
     WITH tok AS (
@@ -2750,7 +2701,7 @@ def doc_word_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave O — survival curve, crest factor, return-rate-by-discount,
 # day-of-week x hour heatmap.
 # ===========================================================================
-@_register(
+@register(
     "customer_survival_curve",
     oracle="""
     WITH tenure AS (
@@ -2799,7 +2750,7 @@ def customer_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_peak_to_mean",
     oracle="""
     WITH m AS (
@@ -2840,7 +2791,7 @@ def events_peak_to_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_return_by_discount",
     oracle="""
     SELECT CAST(floor(l_discount * 100.0 + 0.5) AS BIGINT) AS disc_pct,
@@ -2869,7 +2820,7 @@ def lineitem_return_by_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_dow_hour_heatmap",
     oracle="""
     SELECT CAST(isodow(ts) AS BIGINT) AS iso_dow,
@@ -2897,7 +2848,7 @@ def events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave P — tie-broken Spearman, supplier share trend, grouped Gini,
 # first-to-last-year growth.
 # ===========================================================================
-@_register(
+@register(
     "part_size_price_spearman",
     oracle="""
     WITH r AS (
@@ -2969,7 +2920,7 @@ def part_size_price_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "supplier_share_trend",
     oracle="""
     WITH m AS (
@@ -3034,7 +2985,7 @@ def supplier_share_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "customer_gini_by_nation",
     oracle="""
     WITH rev AS (
@@ -3108,7 +3059,7 @@ def customer_gini_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_segment_growth_ratio",
     oracle="""
     WITH y AS (
@@ -3192,10 +3143,9 @@ def orders_segment_growth_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ===========================================================================
 # Wave Q — final four: dup-rate by length decile, pairwise-cosine
-# histogram, Markov entropy rate, user type diversity. The runway
-# lands at EXACTLY 50 — a complete round-7 driver sample.
+# histogram, Markov entropy rate, user type diversity.
 # ===========================================================================
-@_register(
+@register(
     "doc_dup_rate_by_length",
     oracle="""
     WITH dup AS (
@@ -3248,7 +3198,7 @@ def doc_dup_rate_by_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_pair_distance_histogram",
     oracle="""
     WITH s AS (
@@ -3277,14 +3227,14 @@ def embedding_pair_distance_histogram(spark: SparkSession, sf_dir: str) -> DataF
     b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
     pairs = (
         a.join(F.broadcast(b), F.col("ia") < F.col("ib"))
-        .select(F.round(cosine_expr(F.col("va"), F.col("vb")), 4).alias("cos_sim"))
+        .select(F.round(cosine_expr("va", "vb"), 4).alias("cos_sim"))
     )
     return pairs.groupBy(
         F.floor(F.col("cos_sim") * 10.0).cast("long").alias("cos_band")
     ).agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
 
 
-@_register(
+@register(
     "events_markov_entropy_rate",
     oracle="""
     WITH t AS (
@@ -3359,7 +3309,7 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_user_type_diversity",
     oracle="""
     WITH d AS (

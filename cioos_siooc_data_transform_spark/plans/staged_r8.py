@@ -1,12 +1,7 @@
-"""STAGED round-8 queries — NOT registered (round-8 runway seed).
+"""Round-8 query slate: 50 live queries, each registered at import
+with ``register``; strict-harness coverage in tests/test_staged_r8.py.
 
-Same contract as staged_r5/r6/r7: LOCAL registry, strict-harness pytest
-coverage in tests/test_staged_r8.py, idempotent ``activate()``. The
-activation order is staged_r6 (round 6) -> staged_r7 (round 7, already
-complete at 50) -> this module (round 8). Rounds 6 and 7 should keep
-filling it toward 50.
-
-Content so far:
+Content:
 - Wave A — multi-lag autocorrelation function (the full ACF profile,
   one window pass), pairwise language JS-divergence matrix, basket-size
   distribution with exact moments, per-brand price dispersion (CV).
@@ -43,9 +38,6 @@ Content so far:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -54,33 +46,8 @@ from cioos_siooc_data_transform_spark.plans.staged_r6 import (
     _cents,
     pearson_r_from_sums,
 )
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def activate() -> int:
-    """Round-8 activation (idempotent) — same two-part change as every
-    prior slate."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    return n
 
 
 # ---------------------------------------------------------------------------
@@ -130,7 +97,7 @@ def _acf_oracle() -> str:
     """
 
 
-@_register("events_acf_profile", oracle="__LAZY__")
+@register("events_acf_profile", oracle=_acf_oracle())
 def events_acf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACF at lags 1-5 per type: five lag columns from ONE sorted
     window pass (shared Exchange + sort), stacked long, then the shared
@@ -173,15 +140,12 @@ def events_acf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["events_acf_profile"] = _acf_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Pairwise JS divergence between LANGUAGE vocabulary distributions (all
 # 10 pairs) — the matrix generalization of the live two-cohort source
 # JS divergence; per-term contributions pico-quantized as there.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "lang_js_divergence_matrix",
     oracle="""
     WITH tok AS (
@@ -287,7 +251,7 @@ def lang_js_divergence_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Basket-size distribution: lines-per-order histogram plus exact mean.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "orders_basket_size_distribution",
     oracle="""
     WITH b AS (
@@ -314,7 +278,7 @@ def orders_basket_size_distribution(spark: SparkSession, sf_dir: str) -> DataFra
 # ---------------------------------------------------------------------------
 # Price dispersion per brand: coefficient of variation from exact sums.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "part_brand_price_dispersion",
     oracle="""
     WITH q AS (
@@ -365,7 +329,7 @@ def part_brand_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave B — inter-purchase percentiles, seasonality strength, Tukey
 # fences.
 # ===========================================================================
-@_register(
+@register(
     "orders_interpurchase_percentiles",
     oracle="""
     WITH g AS (
@@ -436,7 +400,7 @@ def orders_interpurchase_percentiles(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@_register(
+@register(
     "events_hourly_seasonality_strength",
     oracle="""
     WITH q AS (
@@ -512,7 +476,7 @@ def events_hourly_seasonality_strength(
     )
 
 
-@_register(
+@register(
     "supplier_acctbal_tukey_outliers",
     oracle="""
     WITH q AS (
@@ -586,7 +550,7 @@ def supplier_acctbal_tukey_outliers(spark: SparkSession, sf_dir: str) -> DataFra
 # ===========================================================================
 # Wave C — partial correlation, entropy-vs-volume, categorical drift.
 # ===========================================================================
-@_register(
+@register(
     "lineitem_partial_corr_price_qty",
     oracle="""
     WITH q AS (
@@ -679,7 +643,7 @@ def lineitem_partial_corr_price_qty(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@_register(
+@register(
     "events_user_entropy_vs_volume",
     oracle="""
     WITH tc AS (
@@ -760,7 +724,7 @@ def events_user_entropy_vs_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
+@register(
     "orders_priority_mix_drift",
     oracle="""
     WITH c AS (
@@ -831,7 +795,7 @@ def orders_priority_mix_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Wave D — weekend share, tax x discount interaction grid, repeat rate.
 # ===========================================================================
-@_register(
+@register(
     "orders_weekend_share",
     oracle="""
     WITH q AS (
@@ -870,7 +834,7 @@ def orders_weekend_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_tax_discount_grid",
     oracle="""
     SELECT CAST(floor(l_tax * 100.0 + 0.5) AS BIGINT) AS tax_pct,
@@ -899,7 +863,7 @@ def lineitem_tax_discount_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "customer_repeat_rate",
     oracle="""
     WITH pc AS (
@@ -951,7 +915,7 @@ from cioos_siooc_data_transform_spark.sources.partsupp import (  # noqa: E402
 )
 
 
-@_register(
+@register(
     "q2_partsupp_min_cost",
     oracle=f"""
     WITH {PARTSUPP_CTE},
@@ -1035,7 +999,7 @@ def q2_partsupp_min_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q9_partsupp_profit",
     oracle=f"""
     WITH {PARTSUPP_CTE}
@@ -1103,7 +1067,7 @@ def q9_partsupp_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q11_partsupp_important_stock",
     oracle=f"""
     WITH {PARTSUPP_CTE},
@@ -1153,7 +1117,7 @@ def q11_partsupp_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q16_partsupp_supplier_count",
     oracle=f"""
     WITH {PARTSUPP_CTE}
@@ -1203,7 +1167,7 @@ def q16_partsupp_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "q20_partsupp_promotion",
     oracle=f"""
     WITH {PARTSUPP_CTE},
@@ -1313,7 +1277,7 @@ def _entropy_oracle() -> str:
     """
 
 
-@_register("gsw_entropy_from_t", oracle="__WAVE_F__")
+@register("gsw_entropy_from_t", oracle=_entropy_oracle())
 def gsw_entropy_from_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Specific entropy η(SA, t, p) = −g_T of the TEOS-10 Gibbs
     function (Feistel 2008 coefficients; published check value
@@ -1338,9 +1302,6 @@ def gsw_entropy_from_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_entropy_from_t"] = _entropy_oracle()
-
-
 def _spiciness_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_from_t_sql,
@@ -1360,7 +1321,7 @@ def _spiciness_oracle() -> str:
     """
 
 
-@_register("gsw_spiciness0", oracle="__WAVE_F__")
+@register("gsw_spiciness0", oracle=_spiciness_oracle())
 def gsw_spiciness0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Surface spiciness τ₀(SA, CT) — McDougall & Krzysik (2015) 49-term
     fit (normalization τ₀(SSO, 0) = 0 and monotonicity pinned in
@@ -1388,9 +1349,6 @@ def gsw_spiciness0(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_spiciness0"] = _spiciness_oracle()
-
-
 def _internal_energy_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_from_t_sql,
@@ -1410,7 +1368,7 @@ def _internal_energy_oracle() -> str:
     """
 
 
-@_register("gsw_internal_energy", oracle="__WAVE_F__")
+@register("gsw_internal_energy", oracle=_internal_energy_oracle())
 def gsw_internal_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Specific internal energy u = h − (P₀ + 10⁴·p)·v (IOC et al.
     2010 eqn 3.25; P₀ = 101325 Pa): the definition composed from the
@@ -1439,9 +1397,6 @@ def gsw_internal_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         (F.floor(F.col("__u_out") * 1.0e4 + 0.5) / 1.0e4).alias("u"),
     )
-
-
-STAGED_ORACLES["gsw_internal_energy"] = _internal_energy_oracle()
 
 
 def _t_from_ct_stages() -> list:
@@ -1473,7 +1428,7 @@ def _t_from_ct_oracle() -> str:
     """
 
 
-@_register("gsw_t_from_ct", oracle="__WAVE_F__")
+@register("gsw_t_from_ct", oracle=_t_from_ct_oracle())
 def gsw_t_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-situ temperature from Conservative Temperature (GSW twin:
     gsw_t_from_CT): Newton-invert CT→pt on the committed potential-
@@ -1498,9 +1453,6 @@ def gsw_t_from_ct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         (F.floor(F.col("theta_rk4") * 1.0e6 + 0.5) / 1.0e6).alias("t_insitu"),
     )
-
-
-STAGED_ORACLES["gsw_t_from_ct"] = _t_from_ct_oracle()
 
 
 def _conversion_pairs_oracle() -> str:
@@ -1531,7 +1483,7 @@ def _conversion_pairs_oracle() -> str:
     """
 
 
-@_register("gsw_conversion_pairs", oracle="__WAVE_F__")
+@register("gsw_conversion_pairs", oracle=_conversion_pairs_oracle())
 def gsw_conversion_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The remaining high-traffic _from_ conversion pairs in one pass
     (GSW twins: gsw_SP_from_SA, gsw_pot_enthalpy_from_ct /
@@ -1577,9 +1529,6 @@ def gsw_conversion_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_conversion_pairs"] = _conversion_pairs_oracle()
-
-
 # ===========================================================================
 # Wave G — engine depth: deep spiciness pair, SA-from-density inversion,
 # and the composed IVF-PQ ANN (cell-restricted asymmetric-distance
@@ -1607,7 +1556,7 @@ def _spiciness_deep_oracle() -> str:
     """
 
 
-@_register("gsw_spiciness_deep", oracle="__WAVE_G__")
+@register("gsw_spiciness_deep", oracle=_spiciness_deep_oracle())
 def gsw_spiciness_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """τ₁ (1000 dbar) and τ₂ (2000 dbar) — the deep references of the
     McDougall & Krzysik (2015) spiciness family (GSW twins:
@@ -1639,9 +1588,6 @@ def gsw_spiciness_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_spiciness_deep"] = _spiciness_deep_oracle()
-
-
 def _sa_from_rho_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_from_t_sql,
@@ -1667,7 +1613,7 @@ def _sa_from_rho_oracle() -> str:
     """
 
 
-@_register("gsw_sa_from_rho", oracle="__WAVE_G__")
+@register("gsw_sa_from_rho", oracle=_sa_from_rho_oracle())
 def gsw_sa_from_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Absolute Salinity recovered from in-situ density (GSW twin:
     gsw_SA_from_rho): two Newton steps on the 75-term ρ(SA, CT, p)
@@ -1704,10 +1650,7 @@ def gsw_sa_from_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_sa_from_rho"] = _sa_from_rho_oracle()
-
-
-@_register(
+@register(
     "similarity_ivf_pq_topk",
     oracle="""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1805,7 +1748,6 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # ===========================================================================
 # Wave H — GSW ice tranche on the IAPWS-06 foundation (round-6 verdict
 # item 3): rho / entropy / cp / enthalpy of ice Ih as Gibbs derivatives
@@ -1884,8 +1826,7 @@ for _col, _scale, _doc in (
     _fn = _ice_query(_col, _scale)
     _fn.__name__ = f"gsw_{_col}"
     _fn.__doc__ = f"Ice Ih {_doc} from the IAPWS-06 Gibbs potential."
-    STAGED_QUERIES[f"gsw_{_col}"] = _fn
-    STAGED_ORACLES[f"gsw_{_col}"] = _ice_oracle(_col, _scale)
+    register(f"gsw_{_col}", oracle=_ice_oracle(_col, _scale))(_fn)
 
 
 # ===========================================================================
@@ -1921,7 +1862,7 @@ def _enthalpy_diff_oracle() -> str:
     """
 
 
-@_register("gsw_enthalpy_diff", oracle="__WAVE_I__")
+@register("gsw_enthalpy_diff", oracle=_enthalpy_diff_oracle())
 def gsw_enthalpy_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Specific-enthalpy difference between p and p+1000 dbar at fixed
     (SA, CT) — the isentropic lift energy (GSW twin: gsw_enthalpy_diff;
@@ -1950,9 +1891,6 @@ def gsw_enthalpy_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_enthalpy_diff"] = _enthalpy_diff_oracle()
-
-
 def _ct_from_enthalpy_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_from_enthalpy_stages,
@@ -1978,7 +1916,7 @@ def _ct_from_enthalpy_oracle() -> str:
     """
 
 
-@_register("gsw_ct_from_enthalpy", oracle="__WAVE_I__")
+@register("gsw_ct_from_enthalpy", oracle=_ct_from_enthalpy_oracle())
 def gsw_ct_from_enthalpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CT recovered from h(SA, CT, p) by two Newton steps (GSW twin:
     gsw_CT_from_enthalpy) — the sa_from_rho stage pattern on the
@@ -2012,9 +1950,6 @@ def gsw_ct_from_enthalpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_ct_from_enthalpy"] = _ct_from_enthalpy_oracle()
-
-
 def _ct_freezing_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import ct_freezing_sql
 
@@ -2025,7 +1960,7 @@ def _ct_freezing_oracle() -> str:
     """
 
 
-@_register("gsw_ct_freezing", oracle="__WAVE_I__")
+@register("gsw_ct_freezing", oracle=_ct_freezing_oracle())
 def gsw_ct_freezing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conservative Temperature at the freezing point (GSW twin:
     gsw_CT_freezing): Millero-1978 t_f composed with the committed
@@ -2041,9 +1976,6 @@ def gsw_ct_freezing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_ct_freezing"] = _ct_freezing_oracle()
-
-
 def _latentheat_melting_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         latentheat_melting_stages,
@@ -2057,7 +1989,7 @@ def _latentheat_melting_oracle() -> str:
     """
 
 
-@_register("gsw_latentheat_melting", oracle="__WAVE_I__")
+@register("gsw_latentheat_melting", oracle=_latentheat_melting_oracle())
 def gsw_latentheat_melting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thermodynamically exact latent heat of melting at (SP, p): the
     partial specific enthalpy of water in seawater minus the IAPWS-06
@@ -2081,9 +2013,6 @@ def gsw_latentheat_melting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_latentheat_melting"] = _latentheat_melting_oracle()
-
-
 def _latentheat_evap_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         latentheat_evap_hs84_sql,
@@ -2097,7 +2026,7 @@ def _latentheat_evap_oracle() -> str:
     """
 
 
-@_register("latentheat_evap_hs84", oracle="__WAVE_I__")
+@register("latentheat_evap_hs84", oracle=_latentheat_evap_oracle())
 def latentheat_evap_hs84(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latent heat of evaporation (pure-water Henderson-Sellers 1984
     fit; GSW surface twin: gsw_latentheat_evap_t — see COVERAGE.md for
@@ -2114,9 +2043,6 @@ def latentheat_evap_hs84(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.expr(latentheat_evap_hs84_sql("t")) * 1.0e6 + 0.5) / 1.0e6
         ).alias("lh_evap"),
     )
-
-
-STAGED_ORACLES["latentheat_evap_hs84"] = _latentheat_evap_oracle()
 
 
 # ===========================================================================
@@ -2151,7 +2077,7 @@ _PARETO_ORACLE = """
 """
 
 
-@_register("pareto_share_two_pass", oracle=_PARETO_ORACLE)
+@register("pareto_share_two_pass", oracle=_PARETO_ORACLE)
 def pareto_share_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pareto_revenue_share recomputed through the two-pass range-bucket
     operator: no window runs over more rows than one value-range bucket
@@ -2251,8 +2177,7 @@ for _out, _alias, _scale in (
         f"{_out} coefficient from analytic 75-term derivatives "
         "(McDougall 1987; FD cross-check pinned in tests)."
     )
-    STAGED_QUERIES[f"gsw_{_out}"] = _fn
-    STAGED_ORACLES[f"gsw_{_out}"] = _cbtb_oracle(_out, _alias, f"{_scale:.1e}")
+    register(f"gsw_{_out}", oracle=_cbtb_oracle(_out, _alias, f"{_scale:.1e}"))(_fn)
 
 
 # ===========================================================================
@@ -2261,7 +2186,7 @@ for _out, _alias, _scale in (
 # one final floored division/sqrt; windows key on user_id / event_type
 # (high-cardinality, balanced); zero driver-side work.
 # ===========================================================================
-@_register(
+@register(
     "events_poisson_rate_ci",
     oracle="""
     WITH s AS (
@@ -2327,7 +2252,7 @@ def events_poisson_rate_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_peak_hour_stability",
     oracle="""
     WITH h AS (
@@ -2419,7 +2344,7 @@ def events_peak_hour_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_runlength_profile",
     oracle="""
     WITH isl AS (
@@ -2509,7 +2434,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "graph_clustering_coefficient",
     oracle=f"""
     WITH e AS ({_EDGES_SQL}),
@@ -2599,7 +2524,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "graph_common_neighbors_linkpred",
     oracle=f"""
     WITH e AS ({_EDGES_SQL}),
@@ -2656,7 +2581,7 @@ def graph_common_neighbors_linkpred(
 # order-independence; the cosine fold is the committed zip_with ==
 # list_dot_product parity pair.
 # ===========================================================================
-@_register(
+@register(
     "text_yule_k",
     oracle="""
     WITH tok AS (
@@ -2711,7 +2636,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_covariance_top_pair",
     oracle="""
     WITH x AS (
@@ -2796,7 +2721,7 @@ def embedding_covariance_top_pair(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
+@register(
     "similarity_cosine_histogram",
     oracle="""
     WITH v AS (
@@ -2850,7 +2775,7 @@ def similarity_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LTV curves, nation trade balance, and a Count-Min heavy-hitter
 # audit (estimate vs exact, the sketch_* accuracy-audit pattern).
 # ===========================================================================
-@_register(
+@register(
     "stratified_oversample_balance",
     oracle="""
     WITH counts AS (
@@ -2924,7 +2849,7 @@ def stratified_oversample_balance(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
+@register(
     "orders_cohort_ltv_curve",
     oracle="""
     WITH o AS (
@@ -3007,7 +2932,7 @@ def orders_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "nation_trade_balance",
     oracle="""
     WITH flows AS (
@@ -3131,7 +3056,7 @@ def _cm_oracle() -> str:
     """
 
 
-@_register("sketch_countmin_heavy_hitters", oracle="__LAZY_CM__")
+@register("sketch_countmin_heavy_hitters", oracle=_cm_oracle())
 def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch heavy hitters with an accuracy audit: a 4×256
     CM sketch of per-user event counts (4 md5-seeded rows, hex-prefix
@@ -3180,4 +3105,3 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-STAGED_ORACLES["sketch_countmin_heavy_hitters"] = _cm_oracle()

@@ -1,21 +1,13 @@
-"""STAGED round-9 queries — NOT registered (round-9 runway seed).
+"""Round-9 query slate: 50 live queries, each registered at import
+with ``register``; strict-harness coverage in tests/test_staged_r9.py.
 
-Same contract as staged_r5..r8: LOCAL registry, strict-harness pytest
-coverage in tests/test_staged_r9.py, idempotent ``activate()``.
-Activation order: staged_r8 (round 8) -> this module (round 9).
+``gsw_dynamic_enthalpy`` and ``gsw_enthalpy`` are served from here in
+the staged-Horner form (wave B). Their flat-form predecessors stay in
+plans/staged_r5.py as unregistered reference code; the two forms are
+value-identical at the queries' quantization except ~1e-5-probability
+last-ulp boundary rows, pinned by tests/test_staged_r9.py.
 
-NEW in this module's contract: ``STAGED_REPLACEMENTS`` — queries that
-REPLACE a live registered query of the same name because their
-expression tree changed (the staged-Horner dynamic-enthalpy migration:
-value-identical at the query's quantization except ~1e-5-probability
-last-ulp boundary rows, but strictly a semantics change, so the names
-must leave ``__spark_entry__._CHECKED`` and re-earn driver rows at
-activation). ``activate()`` overwrites those registry entries; the
-activation commit must drop the replaced names from _CHECKED in the
-same change (budget math: len(STAGED_QUERIES) + len(STAGED_REPLACEMENTS)
-<= 50 fresh names).
-
-Content so far:
+Content:
 - Wave A — TEOS-10 native alpha/beta/ratio from the ANALYTIC derivative
   polynomials (GSW twins: gsw_alpha, gsw_beta, gsw_alpha_on_beta);
   Simpson's-paradox audit over discount->revenue correlations; IVF
@@ -62,9 +54,6 @@ Content so far:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from typing import Any
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -77,65 +66,8 @@ from cioos_siooc_data_transform_spark.plans.staged_r6 import (
     _stage_sql,
     pearson_r_from_sums,
 )
+from cioos_siooc_data_transform_spark.plans.registry import register
 from cioos_siooc_data_transform_spark.session import read_table as _t
-
-STAGED_QUERIES: dict[str, Callable[..., Any]] = {}
-STAGED_ORACLES: dict[str, str] = {}
-#: name -> (fn, oracle) for queries REPLACING a live registry entry.
-STAGED_REPLACEMENTS: dict[str, tuple[Callable[..., Any], str]] = {}
-
-
-def _register(name: str, oracle: str):
-    def deco(fn):
-        STAGED_QUERIES[name] = fn
-        STAGED_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-def _register_replacement(name: str, oracle: str):
-    def deco(fn):
-        STAGED_REPLACEMENTS[name] = (fn, oracle)
-        return fn
-
-    return deco
-
-
-def activate_replacements() -> int:
-    """Apply only the STAGED_REPLACEMENTS (idempotent). Pulled forward
-    to round 8 (round-7 verdict item 3): the flat 75-term forms sit on
-    janino's 64 KB codegen cliff (5.4 s vs ~0.5 s at sf0.1, SCALE.md),
-    and the staged-Horner twins are already pinned value-identical to
-    them at the smoke SF by tests/test_staged_r9.py. The names stay in
-    _CHECKED until the round-9 activation removes them for a fresh
-    driver re-check, per the REPLACEMENTS contract."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, (fn, oracle) in STAGED_REPLACEMENTS.items():
-        if QUERIES.get(name) is not fn:
-            QUERIES[name] = fn
-            ORACLES[name] = oracle
-            n += 1
-    return n
-
-
-def activate() -> int:
-    """Round-9 activation (idempotent): new names register once;
-    replacements overwrite unconditionally (their freshness is enforced
-    by the _CHECKED edit in the activation commit + the entry-contract
-    budget test). The replacements were already applied at round 8 via
-    activate_replacements(), so that leg is a no-op here."""
-    from cioos_siooc_data_transform_spark.plans.registry import ORACLES, QUERIES
-
-    n = 0
-    for name, fn in STAGED_QUERIES.items():
-        if name not in QUERIES:
-            QUERIES[name] = fn
-            ORACLES[name] = STAGED_ORACLES[name]
-            n += 1
-    return n + activate_replacements()
 
 
 # ---------------------------------------------------------------------------
@@ -175,7 +107,7 @@ def _alpha_beta_oracle() -> str:
     """
 
 
-@_register("gsw_alpha_beta_75term", oracle="__WAVE_A9__")
+@register("gsw_alpha_beta_75term", oracle=_alpha_beta_oracle())
 def gsw_alpha_beta_75term(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thermal expansion alpha = v_CT/v, haline contraction
     beta = −v_SA/v, and the density ratio alpha/beta — ANALYTIC
@@ -215,9 +147,6 @@ def gsw_alpha_beta_75term(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_alpha_beta_75term"] = _alpha_beta_oracle()
-
-
 # ---------------------------------------------------------------------------
 # Wave B — staged-Horner migrations of the two live flat-text
 # dynamic-enthalpy queries (REPLACEMENTS: same names, same inputs, same
@@ -246,7 +175,7 @@ def _dyn_enthalpy_staged_oracle() -> str:
     """
 
 
-@_register_replacement("gsw_dynamic_enthalpy", oracle="__WAVE_B9__")
+@register("gsw_dynamic_enthalpy", oracle=_dyn_enthalpy_staged_oracle())
 def gsw_dynamic_enthalpy_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic enthalpy (the pressure-dependent part of specific
     enthalpy) — staged per-z-power form of the same 75 published
@@ -273,12 +202,6 @@ def gsw_dynamic_enthalpy_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_REPLACEMENTS["gsw_dynamic_enthalpy"] = (
-    STAGED_REPLACEMENTS["gsw_dynamic_enthalpy"][0],
-    _dyn_enthalpy_staged_oracle(),
-)
-
-
 def _enthalpy_staged_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_from_t_sql,
@@ -298,7 +221,7 @@ def _enthalpy_staged_oracle() -> str:
     """
 
 
-@_register_replacement("gsw_enthalpy", oracle="__WAVE_B9__")
+@register("gsw_enthalpy", oracle=_enthalpy_staged_oracle())
 def gsw_enthalpy_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """h(SA, CT, p) = cp0·CT + h_dyn — staged per-z-power form (see
     gsw_dynamic_enthalpy replacement)."""
@@ -321,12 +244,6 @@ def gsw_enthalpy_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         F.round(F.col("__h_out"), 6).alias("enthalpy"),
     )
-
-
-STAGED_REPLACEMENTS["gsw_enthalpy"] = (
-    STAGED_REPLACEMENTS["gsw_enthalpy"][0],
-    _enthalpy_staged_oracle(),
-)
 
 
 # ---------------------------------------------------------------------------
@@ -385,8 +302,7 @@ for _col, _scale in (
         f"Ice Ih {_col} from the IAPWS-06 Gibbs second derivatives "
         "(Table-6 + FD pinned in tests)."
     )
-    STAGED_QUERIES[f"gsw_{_col}"] = _fn
-    STAGED_ORACLES[f"gsw_{_col}"] = _ice9_oracle(_col, _scale)
+    register(f"gsw_{_col}", oracle=_ice9_oracle(_col, _scale))(_fn)
 
 
 # ---------------------------------------------------------------------------
@@ -399,7 +315,7 @@ for _col, _scale in (
 # quantum with ~1e-4 probability, drifting the exact sum by ~1e-11 —
 # five decades below the 1e-6 output floor).
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "lineitem_simpson_paradox_audit",
     oracle="""
     WITH pts AS (
@@ -478,7 +394,7 @@ def lineitem_simpson_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@register(
     "interval_union_coverage",
     oracle="""
     WITH iv AS (
@@ -561,7 +477,7 @@ _DFT_TERMS_SQL = """
 """
 
 
-@_register(
+@register(
     "events_dft_power_daily_weekly",
     oracle=f"""
     WITH terms AS ({_DFT_TERMS_SQL}),
@@ -634,7 +550,7 @@ def events_dft_power_daily_weekly(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@_register(
+@register(
     "events_block_maxima_gumbel",
     oracle="""
     WITH blocks AS (
@@ -790,7 +706,7 @@ _NPROBE_CURVE_ORACLE = f"""
 """
 
 
-@_register("similarity_ivf_nprobe_curve", oracle=_NPROBE_CURVE_ORACLE)
+@register("similarity_ivf_nprobe_curve", oracle=_NPROBE_CURVE_ORACLE)
 def similarity_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ANN tuning curve: mean recall@5 of the IVF index at nprobe ∈
     {1, 2, 4} against exact brute-force truth — THE plot you read before
@@ -841,7 +757,7 @@ def similarity_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lm_trigram_backoff_logprob",
     oracle="""
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -1004,7 +920,7 @@ def lm_trigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_backlog_aging",
     oracle="""
     WITH ref AS (SELECT max(o_orderdate) AS ref_date FROM orders),
@@ -1055,7 +971,7 @@ def orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_price_index_laspeyres",
     oracle="""
     WITH m AS (
@@ -1134,7 +1050,7 @@ def lineitem_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@register(
     "quality_filter_funnel",
     oracle="""
     WITH feats AS (
@@ -1246,7 +1162,7 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stages
 
 
-@_register(
+@register(
     "events_record_breaks",
     oracle="""
     WITH seq AS (
@@ -1309,7 +1225,7 @@ def events_record_breaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave F — sketch/split/session audits: KMV distinct sketches, temporal
 # split leakage, sessionization-threshold sensitivity.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "sketch_kmv_distinct",
     oracle="""
     WITH du AS (
@@ -1377,7 +1293,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "temporal_split_leakage_audit",
     oracle="""
     WITH bounds AS (
@@ -1449,7 +1365,7 @@ def temporal_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "sessionize_gap_sensitivity",
     oracle="""
     WITH deltas AS (
@@ -1529,7 +1445,7 @@ def sessionize_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Wave G — imputation/quantization/distribution audits.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_mean_imputation_audit",
     oracle="""
     WITH marked AS (
@@ -1620,7 +1536,7 @@ def events_mean_imputation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "similarity_int8_recall_audit",
     oracle="""
     WITH base AS (
@@ -1708,7 +1624,7 @@ def similarity_int8_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_lognormal_fit_audit",
     oracle="""
     WITH lx AS (
@@ -1819,7 +1735,7 @@ def orders_lognormal_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Wave H — inventory/graph/two-way-variance round-out.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "part_abc_xyz_matrix",
     oracle="""
     WITH pm AS (
@@ -1931,7 +1847,7 @@ def part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "graph_degree_powerlaw_fit",
     oracle="""
     WITH e AS (
@@ -2044,7 +1960,7 @@ def _copurchase_edges_r9(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_weekday_hour_twoway_anova",
     oracle="""
     WITH q AS (
@@ -2174,7 +2090,7 @@ def events_weekday_hour_twoway_anova(
 # Wave I — pipeline plumbing/monitoring round-out: chunk manifests,
 # out-of-orderness, embedding drift, growth accounting, dedup impact.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "multimodal_chunk_manifest",
     oracle="""
     WITH chunks AS (
@@ -2229,7 +2145,7 @@ def multimodal_chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_out_of_order_profile",
     oracle="""
     WITH arr AS (
@@ -2287,7 +2203,7 @@ def events_out_of_order_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "embedding_label_centroid_drift",
     oracle="""
     WITH halves AS (
@@ -2379,7 +2295,7 @@ def embedding_label_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@_register(
+@register(
     "user_growth_accounting",
     oracle="""
     WITH um AS (
@@ -2451,7 +2367,7 @@ def user_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "dedup_vocab_impact",
     oracle="""
     WITH keep AS (
@@ -2516,7 +2432,7 @@ def dedup_vocab_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "part_name_token_topk",
     oracle="""
     WITH tok AS (
@@ -2547,9 +2463,9 @@ def part_name_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Wave J — mixed-layer pressure, density derivatives, Hill tail index,
 # circular hour-of-day statistics.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "gsw_mixed_layer_pressure",
-    oracle="__WAVE_J9__",
+    oracle='\n    WITH prof AS (\n      SELECT l_orderkey, l_linenumber, p,\n             (1.0e0/(0.0010769995862e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-0.00031038981976e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(0.00066928067038e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-0.00085047933937e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(0.00058086069943e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-0.00021092370507e0 + 3.1932457305e-05*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)))))) + ((ct)*0.025e0)*(-1.5649734675e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.5009599764e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-4.3592678561e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.4532461828e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-1.1959409788e-05 + 1.3864594581e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))))) + ((ct)*0.025e0)*(2.7762106484e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-3.7435842344e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.590782276e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-1.8698584187e-05 + 3.8595339244e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)))) + ((ct)*0.025e0)*(-1.6521159259e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(2.4141479483e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-1.4353633048e-05 + 2.2863324556e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))) + ((ct)*0.025e0)*(6.9111322702e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-8.7595873154e-06 + 4.3703680598e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)) + ((ct)*0.025e0)*(-8.053961554e-07 + -3.30527589e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + 2.0543094268e-07*((ct)*0.025e0)))))) + ((0.0e0)*1.0e-4)*(-6.0799143809e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(2.4262468747e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-3.4792460974e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.7470777305e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-1.7322218612e-05 + 3.0927427253e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))))) + ((ct)*0.025e0)*(1.8505765429e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-9.5677088156e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(1.1100834765e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-9.8447117844e-06 + 2.590922526e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)))) + ((ct)*0.025e0)*(-1.1716606853e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-2.3678308361e-07 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(2.9283346295e-06 + -4.88261392e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))) + ((ct)*0.025e0)*(7.9279656173e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-3.4558773655e-06 + 3.1655306078e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)) + ((ct)*0.025e0)*(-3.4102187482e-06 + 1.2956717783e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + 5.0736766814e-07*((ct)*0.025e0))))) + ((0.0e0)*1.0e-4)*(9.9856169219e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-5.8484432984e-07 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-4.8122251597e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(4.9263106998e-06 + -1.7811974727e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)))) + ((ct)*0.025e0)*(-1.1736386731e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-5.5699154557e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(5.4620748834e-06 + -1.3544185627e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))) + ((ct)*0.025e0)*(2.130502874e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.913738708e-07 + -6.5731104067e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)) + ((ct)*0.025e0)*(-4.6132540037e-07 + 7.7618888092e-09*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + -6.3352916514e-08*((ct)*0.025e0)))) + ((0.0e0)*1.0e-4)*(-1.1309361437e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.6310188515e-07 + 1.674630378e-08*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)) + ((ct)*0.025e0)*(-3.6527006553e-07 + -2.7295696237e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + 2.8695905159e-07*((ct)*0.025e0)) + ((0.0e0)*1.0e-4)*(1.053115308e-07 + -1.1147125423e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + 3.1454099902e-07*((ct)*0.025e0) + ((0.0e0)*1.0e-4)*(-1.2647261286e-08 + 1.961350393e-09*((0.0e0)*1.0e-4)))))))) - 1000.0e0 AS sigma0\n      FROM (\n        SELECT l_orderkey, l_linenumber, p, (s*(35.16504e0/35.0e0)) AS sa,\n               ((61.01362420681071e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(168776.46138048015e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-2735.2785605119625e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(2574.2164453821433e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-1536.6644434977543e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(545.7340497931629e0 + (-50.91091728474331e0 - 18.30489878927802e0*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)))))) + (0.0248826675584615e0*(((s)*(35.16504e0/35.0e0))))*(268.5520265845071e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-12019.028203559312e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(3734.858026725145e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-2046.7671145057618e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(465.28655623826234e0 + (-0.6370820302376359e0 - 10.650848542359153e0*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))))) + sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0)))))*(937.2099110620707e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(588.1802812170108e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(248.39476522971285e0 + (-3.871557904936333e0 - 2.6268019854268356e0*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))) + sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0)))))*(-1687.914374187449e0 + sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0)))))*(246.9598888781377e0 + sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0)))))*(123.59576582457964e0 - 48.5891069025409e0*sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0))))))) + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(936.3206544460336e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-942.7827304544439e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(369.4389437509002e0 + (-33.83664947895248e0 - 9.987880382780322e0*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))))))))/3991.86795711963e0) AS ct\n        FROM (\n    SELECT l_orderkey, l_linenumber,\n           CAST(l_quantity % 30 AS DOUBLE) AS t,\n           CAST(30.0 + l_discount * 50 AS DOUBLE) AS s,\n           CAST(l_linenumber * 100.0 AS DOUBLE) AS p\n    FROM lineitem\n)\n      )\n    ), surf AS (\n      SELECT p.l_orderkey, min(p.sigma0) AS sigma0_surf\n      FROM prof p\n      JOIN (SELECT l_orderkey, min(p) AS min_p FROM prof GROUP BY 1) m\n        ON p.l_orderkey = m.l_orderkey AND p.p = m.min_p\n      GROUP BY p.l_orderkey\n    )\n    SELECT p.l_orderkey, min(p.p) AS mlp_dbar,\n           CAST(count(*) AS BIGINT) AS n_below\n    FROM prof p JOIN surf s USING (l_orderkey)\n    WHERE p.sigma0 > s.sigma0_surf + 0.03e0\n    GROUP BY p.l_orderkey\n',
 )
 def gsw_mixed_layer_pressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixed-layer pressure per synthetic profile (l_orderkey): the
@@ -2594,9 +2510,6 @@ def gsw_mixed_layer_pressure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_mixed_layer_pressure"] = '\n    WITH prof AS (\n      SELECT l_orderkey, l_linenumber, p,\n             (1.0e0/(0.0010769995862e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-0.00031038981976e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(0.00066928067038e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-0.00085047933937e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(0.00058086069943e0 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-0.00021092370507e0 + 3.1932457305e-05*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)))))) + ((ct)*0.025e0)*(-1.5649734675e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.5009599764e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-4.3592678561e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.4532461828e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-1.1959409788e-05 + 1.3864594581e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))))) + ((ct)*0.025e0)*(2.7762106484e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-3.7435842344e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.590782276e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-1.8698584187e-05 + 3.8595339244e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)))) + ((ct)*0.025e0)*(-1.6521159259e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(2.4141479483e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-1.4353633048e-05 + 2.2863324556e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))) + ((ct)*0.025e0)*(6.9111322702e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-8.7595873154e-06 + 4.3703680598e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)) + ((ct)*0.025e0)*(-8.053961554e-07 + -3.30527589e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + 2.0543094268e-07*((ct)*0.025e0)))))) + ((0.0e0)*1.0e-4)*(-6.0799143809e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(2.4262468747e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-3.4792460974e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.7470777305e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-1.7322218612e-05 + 3.0927427253e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))))) + ((ct)*0.025e0)*(1.8505765429e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-9.5677088156e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(1.1100834765e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-9.8447117844e-06 + 2.590922526e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)))) + ((ct)*0.025e0)*(-1.1716606853e-05 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-2.3678308361e-07 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(2.9283346295e-06 + -4.88261392e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))) + ((ct)*0.025e0)*(7.9279656173e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-3.4558773655e-06 + 3.1655306078e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)) + ((ct)*0.025e0)*(-3.4102187482e-06 + 1.2956717783e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + 5.0736766814e-07*((ct)*0.025e0))))) + ((0.0e0)*1.0e-4)*(9.9856169219e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-5.8484432984e-07 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-4.8122251597e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(4.9263106998e-06 + -1.7811974727e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)))) + ((ct)*0.025e0)*(-1.1736386731e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(-5.5699154557e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(5.4620748834e-06 + -1.3544185627e-06*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0))) + ((ct)*0.025e0)*(2.130502874e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.913738708e-07 + -6.5731104067e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)) + ((ct)*0.025e0)*(-4.6132540037e-07 + 7.7618888092e-09*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + -6.3352916514e-08*((ct)*0.025e0)))) + ((0.0e0)*1.0e-4)*(-1.1309361437e-06 + sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)*(3.6310188515e-07 + 1.674630378e-08*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0)) + ((ct)*0.025e0)*(-3.6527006553e-07 + -2.7295696237e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + 2.8695905159e-07*((ct)*0.025e0)) + ((0.0e0)*1.0e-4)*(1.053115308e-07 + -1.1147125423e-07*sqrt(0.0248826675584615e0*(sa) + 0.5971840214030754e0) + 3.1454099902e-07*((ct)*0.025e0) + ((0.0e0)*1.0e-4)*(-1.2647261286e-08 + 1.961350393e-09*((0.0e0)*1.0e-4)))))))) - 1000.0e0 AS sigma0\n      FROM (\n        SELECT l_orderkey, l_linenumber, p, (s*(35.16504e0/35.0e0)) AS sa,\n               ((61.01362420681071e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(168776.46138048015e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-2735.2785605119625e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(2574.2164453821433e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-1536.6644434977543e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(545.7340497931629e0 + (-50.91091728474331e0 - 18.30489878927802e0*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)))))) + (0.0248826675584615e0*(((s)*(35.16504e0/35.0e0))))*(268.5520265845071e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-12019.028203559312e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(3734.858026725145e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-2046.7671145057618e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(465.28655623826234e0 + (-0.6370820302376359e0 - 10.650848542359153e0*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))))) + sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0)))))*(937.2099110620707e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(588.1802812170108e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(248.39476522971285e0 + (-3.871557904936333e0 - 2.6268019854268356e0*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))) + sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0)))))*(-1687.914374187449e0 + sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0)))))*(246.9598888781377e0 + sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0)))))*(123.59576582457964e0 - 48.5891069025409e0*sqrt((0.0248826675584615e0*(((s)*(35.16504e0/35.0e0))))))) + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(936.3206544460336e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(-942.7827304544439e0 + ((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0)*(369.4389437509002e0 + (-33.83664947895248e0 - 9.987880382780322e0*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))*((((t) - ((p)*0.1e0)*(3.6504e-4 + 8.3198e-5*(t) - 5.4065e-7*(t)*(t) + 4.0274e-9*(t)*(t)*(t)) - ((p)*0.1e0)*((s) - 35.0e0)*(1.7439e-5 - 2.9778e-7*(t)) - ((p)*0.1e0)*((p)*0.1e0)*(8.9309e-7 - 3.1628e-8*(t) + 2.1987e-10*(t)*(t)) + 4.1057e-9*((s) - 35.0e0)*((p)*0.1e0)*((p)*0.1e0) - ((p)*0.1e0)*((p)*0.1e0)*((p)*0.1e0)*(-1.6056e-10 + 5.0484e-12*(t))))*0.025e0))))))))/3991.86795711963e0) AS ct\n        FROM (\n    SELECT l_orderkey, l_linenumber,\n           CAST(l_quantity % 30 AS DOUBLE) AS t,\n           CAST(30.0 + l_discount * 50 AS DOUBLE) AS s,\n           CAST(l_linenumber * 100.0 AS DOUBLE) AS p\n    FROM lineitem\n)\n      )\n    ), surf AS (\n      SELECT p.l_orderkey, min(p.sigma0) AS sigma0_surf\n      FROM prof p\n      JOIN (SELECT l_orderkey, min(p) AS min_p FROM prof GROUP BY 1) m\n        ON p.l_orderkey = m.l_orderkey AND p.p = m.min_p\n      GROUP BY p.l_orderkey\n    )\n    SELECT p.l_orderkey, min(p.p) AS mlp_dbar,\n           CAST(count(*) AS BIGINT) AS n_below\n    FROM prof p JOIN surf s USING (l_orderkey)\n    WHERE p.sigma0 > s.sigma0_surf + 0.03e0\n    GROUP BY p.l_orderkey\n'
-
-
 def _rho_derivs_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         cabbeling_thermobaric_stages,
@@ -2630,7 +2543,7 @@ def _rho_derivs_oracle() -> str:
     """
 
 
-@_register("gsw_rho_first_derivatives", oracle="__WAVE_J9B__")
+@register("gsw_rho_first_derivatives", oracle=_rho_derivs_oracle())
 def gsw_rho_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """∂ρ/∂SA, ∂ρ/∂CT, ∂ρ/∂p from the analytic 75-term derivative
     polynomials via ρ_x = −v_x/v² (GSW twin:
@@ -2673,10 +2586,7 @@ def gsw_rho_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_rho_first_derivatives"] = _rho_derivs_oracle()
-
-
-@_register(
+@register(
     "events_pareto_tail_index",
     oracle="""
     WITH ranked AS (
@@ -2746,7 +2656,7 @@ def events_pareto_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "events_circular_mean_hour",
     oracle="""
     WITH terms AS (
@@ -2814,7 +2724,7 @@ def events_circular_mean_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Wave K — inequality decomposition, seasonal-trend split, 2-hop reach.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "part_brand_price_theil_index",
     oracle="""
     WITH x AS (
@@ -2919,7 +2829,7 @@ def part_brand_price_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "orders_seasonal_trend_decomposition",
     oracle="""
     WITH m AS (
@@ -3011,7 +2921,7 @@ def orders_seasonal_trend_decomposition(
     )
 
 
-@_register(
+@register(
     "graph_two_hop_reach_profile",
     oracle="""
     WITH e AS (
@@ -3081,7 +2991,7 @@ def graph_two_hop_reach_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Wave L — GSW derivative/inversion surfaces + a rank-based test.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "gsw_t_freezing_derivatives",
     oracle=f"""
     SELECT l_orderkey, l_linenumber,
@@ -3090,7 +3000,7 @@ def graph_two_hop_reach_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS dtf_dsp,
            -7.53e-4 AS dtf_dp
     FROM ({{in_sql}})
-    """.replace("{in_sql}", "__IN__"),
+    """.replace("{in_sql}", "__IN__").replace("__IN__", _IN_SQL),
 )
 def gsw_t_freezing_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analytic derivatives of the Millero freezing-point polynomial:
@@ -3118,11 +3028,6 @@ def gsw_t_freezing_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_t_freezing_derivatives"] = STAGED_ORACLES[
-    "gsw_t_freezing_derivatives"
-].replace("__IN__", _IN_SQL)
-
-
 def _h1d_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_from_t_sql,
@@ -3143,7 +3048,7 @@ def _h1d_oracle() -> str:
     """
 
 
-@_register("gsw_enthalpy_first_derivatives", oracle="__WAVE_L9__")
+@register("gsw_enthalpy_first_derivatives", oracle=_h1d_oracle())
 def gsw_enthalpy_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """∂h/∂SA and ∂h/∂CT at constant (CT, p)/(SA, p) from ANALYTIC
     derivative coefficient polynomials of the 75-term dynamic enthalpy
@@ -3173,9 +3078,6 @@ def gsw_enthalpy_first_derivatives(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-STAGED_ORACLES["gsw_enthalpy_first_derivatives"] = _h1d_oracle()
-
-
 def _ctmd_oracle() -> str:
     from cioos_siooc_data_transform_spark.functions.teos10 import (
         ct_maxdensity_stages,
@@ -3193,7 +3095,7 @@ def _ctmd_oracle() -> str:
     """
 
 
-@_register("gsw_ct_maxdensity", oracle="__WAVE_L9B__")
+@register("gsw_ct_maxdensity", oracle=_ctmd_oracle())
 def gsw_ct_maxdensity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conservative Temperature of maximum density (GSW twin:
     gsw_CT_maxdensity): four Newton steps on the analytic v_ys root —
@@ -3213,9 +3115,6 @@ def gsw_ct_maxdensity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         (F.floor(F.col("ct_maxdensity") * 1.0e6 + 0.5) / 1.0e6).alias("ct_md"),
     )
-
-
-STAGED_ORACLES["gsw_ct_maxdensity"] = _ctmd_oracle()
 
 
 def _poth_oracle() -> str:
@@ -3239,7 +3138,7 @@ def _poth_oracle() -> str:
     """
 
 
-@_register("gsw_pot_enthalpy_from_pt", oracle="__WAVE_L9C__")
+@register("gsw_pot_enthalpy_from_pt", oracle=_poth_oracle())
 def gsw_pot_enthalpy_from_pt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Potential enthalpy h⁰ = cp0·CT(SA, pt) (GSW twin:
     gsw_pot_enthalpy_from_pt) — the conserved heat-content variable
@@ -3271,10 +3170,7 @@ def gsw_pot_enthalpy_from_pt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_ORACLES["gsw_pot_enthalpy_from_pt"] = _poth_oracle()
-
-
-@_register(
+@register(
     "lineitem_mannwhitney_returnflag",
     oracle="""
     WITH x AS (
@@ -3394,7 +3290,7 @@ def lineitem_mannwhitney_returnflag(spark: SparkSession, sf_dir: str) -> DataFra
 # Wave M — changepoint location, Kendall tau-b, selection-bias audit,
 # quantile normalization.
 # ---------------------------------------------------------------------------
-@_register(
+@register(
     "events_changepoint_location",
     oracle="""
     WITH seq AS (
@@ -3487,7 +3383,7 @@ def events_changepoint_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "lineitem_kendall_tau_contingency",
     oracle="""
     WITH cells AS (
@@ -3601,7 +3497,7 @@ def lineitem_kendall_tau_contingency(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@_register(
+@register(
     "orders_first_vs_repeat_value",
     oracle="""
     WITH o AS (
@@ -3652,7 +3548,7 @@ def orders_first_vs_repeat_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register(
+@register(
     "supplier_balance_quantile_normalize",
     oracle="""
     WITH s AS (
@@ -3744,18 +3640,26 @@ def supplier_balance_quantile_normalize(
 
 
 # ===========================================================================
-# Wave N — slate completion to the 50-name budget: the chemical
-# potential of water in ice (the one IAPWS-06 Gibbs surface with no
-# query yet — GSW twin: gsw_chem_potential_water_ice in
+# Wave N — the chemical potential of water in ice (the one IAPWS-06
+# Gibbs surface with no query yet — GSW twin: gsw_chem_potential_water_ice in
 # GSW/_wrapped_ufuncs.py, re-exported via GSW/ice.py, which returns
 # the Gibbs energy g(t, p) itself), and a Cohen's-kappa inter-labeler
 # agreement audit over the documents table (the annotator-agreement
 # check a labeling pipeline runs before trusting a heuristic filter).
 # ===========================================================================
-@_register(
-    "gsw_chem_potential_water_ice",
-    oracle="__WAVE_N__",  # assembled below (needs the staged chain)
-)
+def _chem_pot_ice_oracle() -> str:
+    from cioos_siooc_data_transform_spark.functions.ice import gibbs_ice_stages
+    from cioos_siooc_data_transform_spark.plans.staged_r8 import _ICE_IN_SQL
+
+    staged = _stage_sql(_ICE_IN_SQL, gibbs_ice_stages("t", "p"))
+    return f"""
+    SELECT l_orderkey, l_linenumber,
+           floor(gibbs_ice * 1.0e4 + 0.5) / 1.0e4 AS chem_pot_water_ice
+    FROM {staged}
+    """
+
+
+@register("gsw_chem_potential_water_ice", oracle=_chem_pot_ice_oracle())
 def gsw_chem_potential_water_ice(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3784,31 +3688,55 @@ def gsw_chem_potential_water_ice(
     )
 
 
-def _chem_pot_ice_oracle() -> str:
-    from cioos_siooc_data_transform_spark.functions.ice import gibbs_ice_stages
-    from cioos_siooc_data_transform_spark.plans.staged_r8 import _ICE_IN_SQL
-
-    staged = _stage_sql(_ICE_IN_SQL, gibbs_ice_stages("t", "p"))
-    return f"""
-    SELECT l_orderkey, l_linenumber,
-           floor(gibbs_ice * 1.0e4 + 0.5) / 1.0e4 AS chem_pot_water_ice
-    FROM {staged}
-    """
-
-
-STAGED_ORACLES["gsw_chem_potential_water_ice"] = _chem_pot_ice_oracle()
-
-
 def _kappa_sw_list() -> str:
     from cioos_siooc_data_transform_spark.operators.text import LANG_STOPWORDS
 
     return "[" + ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"]) + "]"
 
 
-@_register(
-    "doc_quality_cohen_kappa",
-    oracle="__WAVE_N__",  # assembled below (needs the stopword list)
-)
+def _cohen_kappa_oracle() -> str:
+    sw = _kappa_sw_list()
+    return f"""
+    WITH w AS (
+      SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+             CAST(length(text) AS BIGINT) AS n_chars,
+             CAST(len(list_filter(string_split(text, ' '),
+                      x -> list_contains({sw}, x))) AS BIGINT) AS stop_hits
+      FROM documents
+    ), m AS (
+      SELECT stop_hits * 1000 // n_tokens AS swm,
+             (n_chars - n_tokens + 1) * 1000 // n_tokens AS mwl
+      FROM w WHERE n_tokens > 0
+    ), lab AS (
+      SELECT CASE WHEN swm < 46 THEN 0 WHEN swm < 71 THEN 1 ELSE 2 END
+               AS label_a,
+             CASE WHEN mwl < 4433 THEN 0 WHEN mwl < 4585 THEN 1 ELSE 2 END
+               AS label_b
+      FROM m
+    ), cont AS (
+      SELECT label_a, label_b, CAST(count(*) AS BIGINT) AS n
+      FROM lab GROUP BY 1, 2
+    ), tot AS (
+      SELECT CAST(sum(n) AS HUGEINT) AS n_total,
+             CAST(sum(CASE WHEN label_a = label_b THEN n ELSE 0 END)
+                  AS HUGEINT) AS agree_n
+      FROM cont
+    ), pe AS (
+      SELECT sum(CAST(r.row_n AS HUGEINT) * CAST(c.col_n AS HUGEINT))
+               AS pe_num
+      FROM (SELECT label_a, sum(n) AS row_n FROM cont GROUP BY 1) r
+      JOIN (SELECT label_b, sum(n) AS col_n FROM cont GROUP BY 1) c
+        ON c.label_b = r.label_a
+    )
+    SELECT cont.label_a, cont.label_b, cont.n,
+           floor(CAST(tot.n_total * tot.agree_n - pe.pe_num AS DOUBLE)
+                 / CAST(tot.n_total * tot.n_total - pe.pe_num AS DOUBLE)
+                 * 1.0e9 + 0.5) / 1.0e9 AS kappa
+    FROM cont CROSS JOIN tot CROSS JOIN pe
+    """
+
+
+@register("doc_quality_cohen_kappa", oracle=_cohen_kappa_oracle())
 def doc_quality_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between two independent heuristic quality labelers
     over documents — labeler A buckets by stopword density (per-mille
@@ -3909,46 +3837,3 @@ def doc_quality_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cohen_kappa_oracle() -> str:
-    sw = _kappa_sw_list()
-    return f"""
-    WITH w AS (
-      SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(length(text) AS BIGINT) AS n_chars,
-             CAST(len(list_filter(string_split(text, ' '),
-                      x -> list_contains({sw}, x))) AS BIGINT) AS stop_hits
-      FROM documents
-    ), m AS (
-      SELECT stop_hits * 1000 // n_tokens AS swm,
-             (n_chars - n_tokens + 1) * 1000 // n_tokens AS mwl
-      FROM w WHERE n_tokens > 0
-    ), lab AS (
-      SELECT CASE WHEN swm < 46 THEN 0 WHEN swm < 71 THEN 1 ELSE 2 END
-               AS label_a,
-             CASE WHEN mwl < 4433 THEN 0 WHEN mwl < 4585 THEN 1 ELSE 2 END
-               AS label_b
-      FROM m
-    ), cont AS (
-      SELECT label_a, label_b, CAST(count(*) AS BIGINT) AS n
-      FROM lab GROUP BY 1, 2
-    ), tot AS (
-      SELECT CAST(sum(n) AS HUGEINT) AS n_total,
-             CAST(sum(CASE WHEN label_a = label_b THEN n ELSE 0 END)
-                  AS HUGEINT) AS agree_n
-      FROM cont
-    ), pe AS (
-      SELECT sum(CAST(r.row_n AS HUGEINT) * CAST(c.col_n AS HUGEINT))
-               AS pe_num
-      FROM (SELECT label_a, sum(n) AS row_n FROM cont GROUP BY 1) r
-      JOIN (SELECT label_b, sum(n) AS col_n FROM cont GROUP BY 1) c
-        ON c.label_b = r.label_a
-    )
-    SELECT cont.label_a, cont.label_b, cont.n,
-           floor(CAST(tot.n_total * tot.agree_n - pe.pe_num AS DOUBLE)
-                 / CAST(tot.n_total * tot.n_total - pe.pe_num AS DOUBLE)
-                 * 1.0e9 + 0.5) / 1.0e9 AS kappa
-    FROM cont CROSS JOIN tot CROSS JOIN pe
-    """
-
-
-STAGED_ORACLES["doc_quality_cohen_kappa"] = _cohen_kappa_oracle()

@@ -121,6 +121,10 @@ _SCHEMA_CACHE: dict = {}
 #: fresh attribute ids per join side, exactly as for catalog tables.
 #: WeakKeyDictionary so a stopped session's views never leak into a new
 #: session (temp views are per-session).
+#: Hazard: the view freezes the file listing it was first resolved
+#: with, and later calls serve that frozen listing. An sf dir must not
+#: change (files added, removed or rewritten) during a session; a
+#: changed dir needs a new session or a new path.
 import weakref
 
 _VIEW_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()

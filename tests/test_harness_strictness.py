@@ -111,13 +111,13 @@ def test_registry_oracles_pass_type_lint():
 
 
 def test_staged_oracles_pass_type_lint():
-    """The SAME driver-canon type lint over every PARKED staged slate:
-    round 12's first full-suite run caught a just-activated query
+    """The SAME driver-canon type lint over every PARKED staged slate
+    (one that keeps a local STAGED_ORACLES registry): round 12's first
+    full-suite run caught a just-registered query
     (orders_quantile_treatment_effect) whose oracle typed a struct-
     literal column DECIMAL(3,2) — it hash-matched at tested scales but
     was latently canon-divergent, and the registry-wide lint only sees
-    a slate AFTER activation. Linting the runway keeps each future
-    activation round from inheriting the bug class."""
+    live names. Live slates register directly and are swept there."""
     import importlib
     from pathlib import Path
 
@@ -125,8 +125,8 @@ def test_staged_oracles_pass_type_lint():
     from cioos_siooc_data_transform_spark.plans import all_oracles
     from tests.oracle_harness import duckdb_connection, lint_oracle_types
 
-    # Derive the slate list from disk so a future staged_r19+ slate is
-    # linted automatically (a hardcoded list silently skips new files).
+    # Derive the slate list from disk so a new parked slate is linted
+    # automatically (a hardcoded list silently skips new files).
     mod_names = sorted(
         p.stem for p in Path(plans_pkg.__file__).parent.glob("staged_r*.py")
     )
@@ -138,12 +138,9 @@ def test_staged_oracles_pass_type_lint():
         mod = importlib.import_module(
             f"cioos_siooc_data_transform_spark.plans.{mod_name}"
         )
-        oracles = dict(mod.STAGED_ORACLES)
-        for name, (_fn, orc) in getattr(mod, "STAGED_REPLACEMENTS", {}).items():
-            oracles[f"{name} [repl]"] = orc
-        for name, sql in oracles.items():
+        for name, sql in getattr(mod, "STAGED_ORACLES", {}).items():
             if sql is None or name in live:
-                # activated names are swept by the registry-wide lint
+                # live names are swept by the registry-wide lint
                 continue
             hits = lint_oracle_types(con, sql)
             if hits:

@@ -19,33 +19,14 @@ from tests.oracle_harness import compare_query
 
 
 def _slate_covered() -> set[str]:
-    from cioos_siooc_data_transform_spark.plans import (
-        staged_r5,
-        staged_r6,
-        staged_r7,
-        staged_r8,
-        staged_r9,
-        staged_r10,
-        staged_r11,
-        staged_r12,
-        staged_r13,
-    )
+    """Names whose served builder is defined in a live slate module: the
+    slate's own test file runs that same builder against its oracle."""
+    from cioos_siooc_data_transform_spark.plans import all_queries
 
-    covered: set[str] = set()
-    for mod in (
-        staged_r5,
-        staged_r6,
-        staged_r7,
-        staged_r8,
-        staged_r9,
-        staged_r10,
-        staged_r11,
-        staged_r12,
-        staged_r13,
-    ):
-        covered |= set(mod.STAGED_QUERIES)
-        covered |= set(getattr(mod, "STAGED_REPLACEMENTS", {}))
-    return covered
+    slates = {
+        f"cioos_siooc_data_transform_spark.plans.staged_r{r}" for r in range(5, 14)
+    }
+    return {n for n, fn in all_queries().items() if fn.__module__ in slates}
 
 
 def _pairs():

@@ -674,6 +674,32 @@ def test_memoized_expression_columns_are_reused_and_equivalent(spark):
         assert b.exceptAll(a).count() == 0, name
 
 
+def test_dot_expr_memo_does_not_alias_join_sides(spark):
+    """``a["v"]``, ``b["v"]`` and ``F.col("v")`` all print
+    ``Column<'v'>``; a memo keyed on that text once handed the a-side
+    expression to a later b-side call and returned 2.0 instead of 200.0.
+    Column operands are built fresh; only column NAMES are memoized."""
+    from cioos_siooc_data_transform_spark.operators.similarity import (
+        cosine_expr,
+        dot_expr,
+    )
+
+    a = spark.createDataFrame([(1, [1.0, 1.0])], "id INT, v ARRAY<DOUBLE>")
+    b = spark.createDataFrame([(1, [10.0, 10.0])], "id INT, v ARRAY<DOUBLE>")
+    assert a.select(dot_expr(a["v"], a["v"]).alias("d")).first().d == 2.0
+    joined = a.join(b, "id")
+    row = joined.select(
+        dot_expr(b["v"], b["v"]).alias("bb"),
+        dot_expr(a["v"], b["v"]).alias("ab"),
+        cosine_expr(a["v"], b["v"]).alias("cos"),
+    ).first()
+    assert (row.bb, row.ab) == (200.0, 20.0)
+    assert abs(row.cos - 1.0) < 1e-12
+    # names still share one memoized expression
+    assert dot_expr("v", "v") is dot_expr("v", "v")
+    assert b.select(dot_expr("v", "v").alias("d")).first().d == 200.0
+
+
 def test_ivf_assign_packed_argmax_matches_struct_path(spark):
     """Round-13 optimization: with_vector=False plans the argmax as a
     packed-long HashAggregate (8-byte buffer, no vector in the agg)

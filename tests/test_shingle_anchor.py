@@ -12,6 +12,8 @@ Three facts the optimization rests on (plans/dedup_queries.py):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR_SMOKE
@@ -49,7 +51,10 @@ def test_signature_agg_plans_no_extra_exchange(spark):
     sh = _distinct_shingles(spark, SF_DIR_SMOKE)
     sig = minhash_signature(sh, "doc_id", "s", num_hashes=8)
     plan = _explain(sig)
-    n_exchange = plan.count("+- Exchange") + plan.count(":- Exchange")
+    # count the formatted plan's numbered operator list, not tree-art
+    # prefixes (a root-level or differently-drawn Exchange has neither
+    # "+- " nor ":- " in front of it)
+    n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchange == 1, (
         "expected exactly the repartition(doc_id) anchor Exchange; the "
         f"signature groupBy must reuse its partitioning:\n{plan}"

@@ -1,72 +1,55 @@
-"""The round-10 slate (plans/staged_r10.py) is LIVE as of round 10:
-activated from plans/__init__.py, same cycle the round-5..9 slates
-followed (parked one round to respect the driver's 50-fresh-sample
-budget, then activated). Pre-activation migration: graph_degree_gini
-moved onto ranked_cumsum_two_pass (the round-9 verdict's one parked
-key-scaled window); round-10 top-up doc_context_overflow_rate brings
-the slate to the exact 50-fresh budget."""
+"""The round-10 slate (plans/staged_r10.py): every query registers at
+import and must match its DuckDB oracle. graph_degree_gini runs on
+ranked_cumsum_two_pass (no key-scaled global window)."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r10 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-        STAGED_REPLACEMENTS,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES, STAGED_REPLACEMENTS
+    return slate("staged_r10")
 
 
 def test_staged_now_registered():
-    """Round 10 activated the slate: every staged name must be live in
-    the registry with its oracle (the reverse of round 9's parked
-    invariant)."""
+    """Every slate name is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_, reps = _staged()
-    assert set(qs) == set(os_)
-    live_q, live_o = all_queries(), all_oracles()
-    missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
-    missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
-    for name, (fn, _) in reps.items():
-        assert name in live_q, f"replacement {name} has no live twin"
-        assert live_q[name] is fn, f"replacement {name} not applied"
-
-
-def test_budget():
-    """Fresh-name budget: the driver samples 50 names per round, and
-    this slate activated at exactly 50 (49 round-9-parked + the
-    doc_context_overflow_rate top-up)."""
-    qs, _, reps = _staged()
-    assert len(qs) + len(reps) == 50
+    names = set(STAGED_NAMES)
+    missing = names - set(all_queries())
+    assert not missing, f"slate queries not registered: {missing}"
+    missing_o = names - set(all_oracles())
+    assert not missing_o, f"slate oracles not registered: {missing_o}"
 
 
 def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (0 newly-registered names)."""
-    from cioos_siooc_data_transform_spark.plans import staged_r10
+    """Registration happens once, at import: registering a served
+    builder again under its own name and oracle is a no-op."""
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        register,
+    )
 
-    assert staged_r10.activate() == 0
+    before = (all_queries(), all_oracles())
+    for name, fn in slate("staged_r10")[0].items():
+        register(name, before[1][name])(fn)
+    assert (all_queries(), all_oracles()) == before
 
 
 def test_registered_callables_are_the_staged_ones():
-    """Activation must not have been shadowed by an earlier slate's
-    same-name registration (the silent-no-op trap: activate() skips
-    names that already exist)."""
+    """Every pinned name is served by a builder defined in this slate,
+    not by a same-name builder elsewhere."""
     from cioos_siooc_data_transform_spark.plans import all_queries
 
-    qs, _, _ = _staged()
     live = all_queries()
-    shadowed = {n for n, fn in qs.items() if live.get(n) is not fn}
-    assert not shadowed, f"staged_r10 names shadowed by earlier slates: {shadowed}"
+    owner = "cioos_siooc_data_transform_spark.plans.staged_r10"
+    foreign = {
+        n: live[n].__module__ for n in STAGED_NAMES if live[n].__module__ != owner
+    }
+    assert not foreign, f"staged_r10 names served elsewhere: {foreign}"
 
 
 STAGED_NAMES = [
@@ -138,31 +121,16 @@ STAGED_NAMES = [
     "doc_context_overflow_rate",
 ]
 
-REPLACEMENT_NAMES: list[str] = []
-
 
 def test_staged_name_list_is_complete():
-    qs, _, reps = _staged()
+    qs, _ = _staged()
     assert sorted(qs) == sorted(STAGED_NAMES)
-    assert sorted(reps) == sorted(REPLACEMENT_NAMES)
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_query_matches_oracle(spark, name):
     from tests.oracle_harness import compare_query
 
-    qs, os_, _ = _staged()
+    qs, os_ = _staged()
     ok, msg = compare_query(spark, SF_DIR_SMOKE, qs[name], os_[name])
     assert ok, f"{name}: {msg}"
-
-
-@pytest.mark.parametrize("name", REPLACEMENT_NAMES)
-def test_replacement_matches_oracle(spark, name):
-    from tests.oracle_harness import compare_query
-
-    _, _, reps = _staged()
-    fn, oracle = reps[name]
-    ok, msg = compare_query(spark, SF_DIR_SMOKE, fn, oracle)
-    assert ok, f"{name}: {msg}"
-
-

@@ -1,63 +1,28 @@
-"""The round-12 slate (plans/staged_r12.py) is LIVE as of round 12 —
-at 45 of its 50 names: round 12 is the first EXECUTED rotation round
-(see __spark_entry__.py ROTATION), so 5 fresh-sample slots went to
-names rotated out of _CHECKED and staged_r12.DEFER_TO_R13 carries the
-remaining five staged names to the round-13 activation. The slate was
-pre-audited DETECTOR-CLEAN (zero allowlist entries needed)."""
+"""The round-12 slate (plans/staged_r12.py): every query registers at
+import and must match its DuckDB oracle. Round 12 was the first
+executed _CHECKED rotation round (see __spark_entry__.py ROTATION); the
+slate is DETECTOR-CLEAN (zero allowlist entries needed)."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r12 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-        STAGED_REPLACEMENTS,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES, STAGED_REPLACEMENTS
-
-
-def _deferred():
-    from cioos_siooc_data_transform_spark.plans.staged_r12 import DEFER_TO_R13
-
-    return DEFER_TO_R13
+    return slate("staged_r12")
 
 
 def test_staged_now_fully_registered():
-    """Round 12 activated the slate minus DEFER_TO_R13; round 13
-    activated the deferred carry-overs via
-    ``activate(include_deferred=True)`` — every staged name must now be
-    live in the registry with its oracle."""
+    """Every slate name is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_, reps = _staged()
-    deferred = _deferred()
-    assert set(qs) == set(os_)
-    assert deferred <= set(qs), "DEFER_TO_R13 names must be staged names"
-    live_q, live_o = all_queries(), all_oracles()
-    missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
-    missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
-    for name, (fn, _) in reps.items():
-        assert name in live_q, f"replacement {name} has no live twin"
-        assert live_q[name] is fn, f"replacement {name} not applied"
-
-
-def test_budget():
-    """Fresh-name budget: the driver samples 50 names per round.
-    Round 12 spends them as 45 activated staged names + 5 rotated
-    _CHECKED names (the executed rotation)."""
-    qs, _, reps = _staged()
-    deferred = _deferred()
-    assert len(qs) + len(reps) == 50
-    assert len(deferred) == 5
-    assert len(set(qs) - deferred) + len(reps) == 45
+    names = set(STAGED_NAMES)
+    missing = names - set(all_queries())
+    assert not missing, f"slate queries not registered: {missing}"
+    missing_o = names - set(all_oracles())
+    assert not missing_o, f"slate oracles not registered: {missing_o}"
 
 
 def test_rotation_names_rejoined_checked():
@@ -87,72 +52,68 @@ def test_rotation_names_rejoined_checked():
     assert rotated <= live, f"rotated names missing from registry: {rotated - live}"
 
 
+#: The five names whose first driver rows landed in round 13, not 12.
+CARRIED_TO_R13 = frozenset(
+    {
+        "sketch_cm_width_sweep",
+        "part_unit_price_dispersion",
+        "partsupp_stock_cover_audit",
+        "customer_discounted_ltv",
+        "similarity_srp_bit_independence",
+    }
+)
+
+
 def test_activated_names_are_checked():
     """Every round-12-green name (the 45 activated + the 5 rotation
     re-earns, per CORRECTNESS_r12.json) must sit in _CHECKED so the
     fresh sample is spent on never-checked names only. The
-    DEFER_TO_R13 carry-overs earned their green rows in round 13 and
-    must now be checked too."""
+    CARRIED_TO_R13 names earned their green rows in round 13 and must
+    now be checked too."""
     import __spark_entry__ as entrymod
 
-    qs, _, _ = _staged()
-    deferred = _deferred()
+    qs, _ = _staged()
     # dedup_bucket_cap_sweep and dedup_lsh_band_tradeoff rotated OUT
     # again MID-round-14: they consume the shared _distinct_shingles
     # helper, whose reuse anchor changed (moved-code-rotates-first).
     rerotated_r14 = {"dedup_bucket_cap_sweep", "dedup_lsh_band_tradeoff"}
-    missing = (set(qs) - deferred - rerotated_r14) - entrymod._CHECKED
+    missing = (set(qs) - CARRIED_TO_R13 - rerotated_r14) - entrymod._CHECKED
     assert not missing, f"r12-green staged names not in _CHECKED: {missing}"
     stale = rerotated_r14 & entrymod._CHECKED
     assert not stale, f"round-14 re-rotated names still in _CHECKED: {stale}"
-    unchecked_deferred = deferred - entrymod._CHECKED
-    assert not unchecked_deferred, (
-        f"DEFER_TO_R13 names earned green rows in round 13, must be "
-        f"checked now: {unchecked_deferred}"
+    unchecked = CARRIED_TO_R13 - entrymod._CHECKED
+    assert not unchecked, (
+        f"CARRIED_TO_R13 names earned green rows in round 13, must be "
+        f"checked now: {unchecked}"
     )
 
 
 def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (0 newly-registered names) — and it must NOT sneak the
-    deferred names in."""
-    from cioos_siooc_data_transform_spark.plans import all_queries, staged_r12
+    """Registration happens once, at import: registering a served
+    builder again under its own name and oracle is a no-op."""
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        register,
+    )
 
-    assert staged_r12.activate() == 0
-    assert staged_r12.activate(include_deferred=True) == 0
-    assert _deferred() <= set(all_queries())
+    before = (all_queries(), all_oracles())
+    for name, fn in slate("staged_r12")[0].items():
+        register(name, before[1][name])(fn)
+    assert (all_queries(), all_oracles()) == before
 
 
 def test_registered_callables_are_the_staged_ones():
-    """Activation must not have been shadowed by an earlier slate's
-    same-name registration (the silent-no-op trap: activate() skips
-    names that already exist)."""
+    """Every pinned name is served by a builder defined in this slate,
+    not by a same-name builder elsewhere."""
     from cioos_siooc_data_transform_spark.plans import all_queries
 
-    qs, _, _ = _staged()
     live = all_queries()
-    shadowed = {n for n, fn in qs.items() if live.get(n) is not fn}
-    assert not shadowed, f"staged_r12 names shadowed by earlier slates: {shadowed}"
-
-
-def test_no_collision_with_earlier_slates():
-    """A staged_r12 name colliding with the earlier slates would have
-    silently no-opped at round-12 activation — catch it at build time
-    instead (the lineitem_benford_audit lesson)."""
-    from cioos_siooc_data_transform_spark.plans import (
-        staged_r8,
-        staged_r9,
-        staged_r10,
-        staged_r11,
-    )
-
-    qs, _, reps = _staged()
-    earlier = set()
-    for mod in (staged_r8, staged_r9, staged_r10, staged_r11):
-        earlier |= set(mod.STAGED_QUERIES)
-        earlier |= set(getattr(mod, "STAGED_REPLACEMENTS", {}))
-    clash = (set(qs) | set(reps)) & earlier
-    assert not clash, f"staged_r12 names collide with r8..r11: {clash}"
+    owner = "cioos_siooc_data_transform_spark.plans.staged_r12"
+    foreign = {
+        n: live[n].__module__ for n in STAGED_NAMES if live[n].__module__ != owner
+    }
+    assert not foreign, f"staged_r12 names served elsewhere: {foreign}"
 
 
 STAGED_NAMES: list[str] = [
@@ -216,7 +177,7 @@ STAGED_NAMES: list[str] = [
     "dedup_bucket_cap_sweep",
     "events_dayk_retention_curve",
     "orders_priority_stochastic_dominance",
-    # wave N — slate close-out part 2 (== DEFER_TO_R13: carries to r13)
+    # wave N — slate close-out part 2 (== CARRIED_TO_R13)
     "sketch_cm_width_sweep",
     "part_unit_price_dispersion",
     "partsupp_stock_cover_audit",
@@ -225,44 +186,34 @@ STAGED_NAMES: list[str] = [
 ]
 
 
-REPLACEMENT_NAMES: list[str] = []
-
-
 def test_staged_name_list_is_complete():
-    qs, _, reps = _staged()
+    qs, _ = _staged()
     assert sorted(qs) == sorted(STAGED_NAMES)
-    assert sorted(reps) == sorted(REPLACEMENT_NAMES)
-    assert _deferred() <= set(STAGED_NAMES)
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_query_matches_oracle(spark, name):
     from tests.oracle_harness import compare_query
 
-    qs, os_, _ = _staged()
+    qs, os_ = _staged()
     ok, msg = compare_query(spark, SF_DIR_SMOKE, qs[name], os_[name])
     assert ok, f"{name}: {msg}"
 
 
-@pytest.mark.parametrize("name", REPLACEMENT_NAMES)
-def test_replacement_matches_oracle(spark, name):
-    from tests.oracle_harness import compare_query
-
-    _, _, reps = _staged()
-    fn, oracle = reps[name]
-    ok, msg = compare_query(spark, SF_DIR_SMOKE, fn, oracle)
-    assert ok, f"{name}: {msg}"
-
-
 def test_reload_does_not_mutate_registry():
-    """Re-importing the module must not mutate the live registry
-    (activation happens only from plans/__init__.py)."""
-    import importlib
+    """Executing the module a second time cannot swap the live
+    builders: its first registration is refused, so the registry is
+    unchanged."""
+    import importlib.util
 
-    from cioos_siooc_data_transform_spark.plans import all_queries
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        staged_r12,
+    )
 
-    before = set(all_queries())
-    import cioos_siooc_data_transform_spark.plans.staged_r12 as m
-
-    importlib.reload(m)
-    assert set(all_queries()) == before
+    before = (all_queries(), all_oracles())
+    spec = importlib.util.spec_from_file_location("r12_copy", staged_r12.__file__)
+    with pytest.raises(ValueError, match="already registered"):
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+    assert (all_queries(), all_oracles()) == before

@@ -1,66 +1,29 @@
-"""The round-13 slate (plans/staged_r13.py) is FULLY LIVE as of round
-14: round 13 activated 40 slate names (+ the 5 staged_r12
-DEFER_TO_R13 carry-overs + 5 rotated _CHECKED names = that round's
-50-fresh sample); round 14's ``activate(include_deferred=True)``
-brought in the GSW freezing-poly + Saunders + wave-M family
-(DEFER_TO_R14), registry 630 -> 640. The one calendar-bounded window
-in the slate (events_page_hinkley_drift) carries its justified
-allowlist entry in tests/test_plans.py."""
+"""The round-13 slate (plans/staged_r13.py): every query registers at
+import and must match its DuckDB oracle. Its GSW freezing-poly +
+Saunders + wave-M family earned its first driver rows in round 14. The
+one calendar-bounded window in the slate (events_page_hinkley_drift)
+carries its justified allowlist entry in tests/test_plans.py."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r13 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-        STAGED_REPLACEMENTS,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES, STAGED_REPLACEMENTS
-
-
-def _deferred():
-    from cioos_siooc_data_transform_spark.plans.staged_r13 import DEFER_TO_R14
-
-    return DEFER_TO_R14
+    return slate("staged_r13")
 
 
 def test_staged_now_registered_except_deferred():
-    """Round 14 activated the slate fully (round 13 brought the
-    non-deferred 40, round 14's activate(include_deferred=True) the
-    DEFER_TO_R14 GSW family): every staged name must be live in the
-    registry with its oracle."""
+    """Every slate name is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_, reps = _staged()
-    deferred = _deferred()
-    assert set(qs) == set(os_)
-    assert deferred <= set(qs), "DEFER_TO_R14 names must be staged names"
-    live_q, live_o = all_queries(), all_oracles()
-    missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
-    missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
-    for name, (fn, _) in reps.items():
-        assert name in live_q, f"replacement {name} has no live twin"
-        assert live_q[name] is fn, f"replacement {name} not applied"
-
-
-def test_budget():
-    """Fresh-name budget: the driver samples 50 names per round.
-    Round 13 spends them as 5 staged_r12.DEFER_TO_R13 carry-overs +
-    40 activated slate names + 5 rotated _CHECKED names (the second
-    executed rotation)."""
-    qs, _, reps = _staged()
-    deferred = _deferred()
-    assert len(qs) + len(reps) == 50
-    assert len(deferred) == 10
-    assert len(set(qs) - deferred) + len(reps) == 40
+    names = set(STAGED_NAMES)
+    missing = names - set(all_queries())
+    assert not missing, f"slate queries not registered: {missing}"
+    missing_o = names - set(all_oracles())
+    assert not missing_o, f"slate oracles not registered: {missing_o}"
 
 
 ROTATED_R13 = {
@@ -122,47 +85,42 @@ ROTATED_R14 = {
 }
 
 
+#: The slate's GSW freezing-poly + Saunders + wave-M family, registered
+#: fresh in round 14 (their first driver rows).
+ACTIVATED_R14 = frozenset(
+    {
+        "gsw_salinity_scale_roundtrips",
+        "gsw_ct_freezing_poly",
+        "gsw_t_freezing_poly",
+        "gsw_sa_freezing_from_ct_poly",
+        "gsw_ct_freezing_derivs_poly",
+        "gsw_z_from_p",
+        "gsw_p_from_z",
+        "gsw_ct_entropy_from_pt",
+        "gsw_melting_ice_equilibrium_ratio",
+        "gsw_adiabatic_lapse_rate_from_ct",
+    }
+)
+
+
 def test_fresh_sample_leads_round14():
     """The driver takes the FIRST 50 names in dict order; the fresh
-    (not-in-_CHECKED) prefix must be exactly the 10 activated
-    DEFER_TO_R14 names + the 37 round-14 rotated names (11 from the
+    (not-in-_CHECKED) prefix must be exactly the 10 ACTIVATED_R14
+    names + the 37 round-14 rotated names (11 from the
     committed queue + 2 copurchase moved-code rotations + 24
     shingle-anchor moved-code rotations), and must lead the dict order
     so the driver's 50-name sample covers them all (the remaining
     slots fall to _CHECKED names as regression coverage)."""
     import __spark_entry__ as entrymod
 
-    deferred = _deferred()
     names = list(entrymod.queries())
     fresh = [n for n in names if n not in entrymod._CHECKED]
-    expected = set(deferred) | ROTATED_R14
+    expected = ACTIVATED_R14 | ROTATED_R14
     assert set(fresh) == expected, (
         f"unexpected fresh set: +{set(fresh) - expected} -{expected - set(fresh)}"
     )
     assert len(fresh) <= 50, "fresh names must fit the driver's 50-name sample"
     assert names[: len(fresh)] == fresh, "fresh names must lead the dict order"
-
-
-def test_no_collision_with_earlier_slates():
-    """A staged_r13 name colliding with the (not-yet-activated)
-    r8..r12 slates would silently no-op at round-13 activation —
-    catch it at build time instead (the lineitem_benford_audit
-    lesson)."""
-    from cioos_siooc_data_transform_spark.plans import (
-        staged_r8,
-        staged_r9,
-        staged_r10,
-        staged_r11,
-        staged_r12,
-    )
-
-    qs, _, reps = _staged()
-    earlier = set()
-    for mod in (staged_r8, staged_r9, staged_r10, staged_r11, staged_r12):
-        earlier |= set(mod.STAGED_QUERIES)
-        earlier |= set(getattr(mod, "STAGED_REPLACEMENTS", {}))
-    clash = (set(qs) | set(reps)) & earlier
-    assert not clash, f"staged_r13 names collide with r8..r12: {clash}"
 
 
 STAGED_NAMES: list[str] = [
@@ -234,69 +192,62 @@ STAGED_NAMES: list[str] = [
 
 
 
-REPLACEMENT_NAMES: list[str] = []
-
-
 def test_staged_name_list_is_complete():
-    qs, _, reps = _staged()
+    qs, _ = _staged()
     assert sorted(qs) == sorted(STAGED_NAMES)
-    assert sorted(reps) == sorted(REPLACEMENT_NAMES)
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
 def test_staged_query_matches_oracle(spark, name):
     from tests.oracle_harness import compare_query
 
-    qs, os_, _ = _staged()
+    qs, os_ = _staged()
     ok, msg = compare_query(spark, SF_DIR_SMOKE, qs[name], os_[name])
     assert ok, f"{name}: {msg}"
 
 
-@pytest.mark.parametrize("name", REPLACEMENT_NAMES)
-def test_replacement_matches_oracle(spark, name):
-    from tests.oracle_harness import compare_query
-
-    _, _, reps = _staged()
-    fn, oracle = reps[name]
-    ok, msg = compare_query(spark, SF_DIR_SMOKE, fn, oracle)
-    assert ok, f"{name}: {msg}"
-
-
 def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(include_deferred=True)
-    in round 14; further calls must be no-ops (0 newly-registered
-    names) and the deferred family must be live."""
-    from cioos_siooc_data_transform_spark.plans import all_queries, staged_r13
+    """Registration happens once, at import: registering a served
+    builder again under its own name and oracle is a no-op."""
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        register,
+    )
 
-    assert staged_r13.activate() == 0
-    assert staged_r13.activate(include_deferred=True) == 0
-    assert _deferred() <= set(all_queries())
+    before = (all_queries(), all_oracles())
+    for name, fn in slate("staged_r13")[0].items():
+        register(name, before[1][name])(fn)
+    assert (all_queries(), all_oracles()) == before
 
 
 def test_registered_callables_are_the_staged_ones():
-    """Activation must not have been shadowed by an earlier slate's
-    same-name registration (the silent-no-op trap: activate() skips
-    names that already exist)."""
+    """Every pinned name is served by a builder defined in this slate,
+    not by a same-name builder elsewhere."""
     from cioos_siooc_data_transform_spark.plans import all_queries
 
-    qs, _, _ = _staged()
-    deferred = _deferred()
     live = all_queries()
-    shadowed = {
-        n for n, fn in qs.items() if n not in deferred and live.get(n) is not fn
+    owner = "cioos_siooc_data_transform_spark.plans.staged_r13"
+    foreign = {
+        n: live[n].__module__ for n in STAGED_NAMES if live[n].__module__ != owner
     }
-    assert not shadowed, f"staged_r13 names shadowed by earlier slates: {shadowed}"
+    assert not foreign, f"staged_r13 names served elsewhere: {foreign}"
 
 
 def test_reload_does_not_mutate_registry():
-    """Re-importing the module must not mutate the live registry
-    (activation happens only from plans/__init__.py)."""
-    import importlib
+    """Executing the module a second time cannot swap the live
+    builders: its first registration is refused, so the registry is
+    unchanged."""
+    import importlib.util
 
-    from cioos_siooc_data_transform_spark.plans import all_queries
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        staged_r13,
+    )
 
-    before = set(all_queries())
-    import cioos_siooc_data_transform_spark.plans.staged_r13 as m
-
-    importlib.reload(m)
-    assert set(all_queries()) == before
+    before = (all_queries(), all_oracles())
+    spec = importlib.util.spec_from_file_location("r13_copy", staged_r13.__file__)
+    with pytest.raises(ValueError, match="already registered"):
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
+    assert (all_queries(), all_oracles()) == before

@@ -1,43 +1,42 @@
-"""Keep the STAGED round-5 queries green while they wait for
-registration (plans/staged_r5.py — parked so round 4's fresh-query
-count stays at the driver's 50-sample budget).
+"""The round-5 slate (plans/staged_r5.py): every query must match its
+DuckDB oracle through the strict driver-faithful harness.
 
-Every staged query runs through the same strict driver-faithful harness
-the registry uses; the GSW additions also pin published UNESCO 1983
-check values so a typo'd constant cannot hide behind oracle symmetry
-(both sides sharing one SQL template means the oracle can't catch a
-wrong coefficient — the independent check value can).
+The GSW additions also pin published UNESCO 1983 check values so a
+typo'd constant cannot hide behind oracle symmetry (both sides sharing
+one SQL template means the oracle can't catch a wrong coefficient — the
+independent check value can).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r5 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-    )
+    """The slate's live entries plus the two flat-form GSW builders it
+    keeps as unregistered reference code (the live names are served by
+    staged_r9's staged-Horner twins)."""
+    from cioos_siooc_data_transform_spark.plans import staged_r5
 
-    return STAGED_QUERIES, STAGED_ORACLES
+    qs, os_ = slate("staged_r5")
+    qs["gsw_dynamic_enthalpy"] = staged_r5.gsw_dynamic_enthalpy
+    os_["gsw_dynamic_enthalpy"] = staged_r5._dyn_enthalpy_oracle()
+    qs["gsw_enthalpy"] = staged_r5.gsw_enthalpy
+    os_["gsw_enthalpy"] = staged_r5._enthalpy_oracle()
+    return qs, os_
 
 
 def test_staged_now_registered():
-    """Round 5 activated the slate: every staged name must be live in
-    the registry with its oracle (the reverse of round 4's parked
-    invariant)."""
+    """Every slate name is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_ = _staged()
-    assert set(qs) == set(os_)
-    live_q, live_o = all_queries(), all_oracles()
-    missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
-    missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
+    names = set(STAGED_NAMES)
+    missing = names - set(all_queries())
+    assert not missing, f"slate queries not registered: {missing}"
+    missing_o = names - set(all_oracles())
+    assert not missing_o, f"slate oracles not registered: {missing_o}"
 
 
 STAGED_NAMES = [
@@ -109,9 +108,14 @@ STAGED_NAMES = [
 ]
 
 
+#: Flat-form builders kept in staged_r5 unregistered; staged_r9 serves
+#: these names (tests/test_staged_r9.py compares the two forms).
+REFERENCE_NAMES = ["gsw_dynamic_enthalpy", "gsw_enthalpy"]
+
+
 def test_staged_name_list_is_complete():
-    qs, _ = _staged()
-    assert sorted(qs) == sorted(STAGED_NAMES)
+    served, _ = slate("staged_r5")
+    assert sorted(served) == sorted(set(STAGED_NAMES) - set(REFERENCE_NAMES))
 
 
 @pytest.mark.parametrize("name", STAGED_NAMES)
@@ -182,12 +186,18 @@ def test_funnel_rates_monotone(spark):
 
 
 def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (idempotence is what makes the import-time activation safe
-    under repeated imports / reload)."""
-    from cioos_siooc_data_transform_spark.plans import staged_r5
+    """Registration happens once, at import: registering a served
+    builder again under its own name and oracle is a no-op."""
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        register,
+    )
 
-    assert staged_r5.activate() == 0
+    before = (all_queries(), all_oracles())
+    for name, fn in slate("staged_r5")[0].items():
+        register(name, before[1][name])(fn)
+    assert (all_queries(), all_oracles()) == before
 
 
 def test_staged_plans_never_cartesian(spark):

@@ -1,7 +1,5 @@
-"""The round-7 slate (plans/staged_r7.py) is LIVE as of round 7:
-activated from plans/__init__.py, same cycle the round-5/6 slates
-followed (parked one round to respect the driver's 50-fresh-sample
-budget, then activated)."""
+"""The round-7 slate (plans/staged_r7.py): every query registers at
+import and must match its DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -9,39 +7,37 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r7 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES
+    return slate("staged_r7")
 
 
 def test_staged_now_registered():
-    """Round 7 activated the slate: every staged name must be live in
-    the registry with its oracle (the reverse of round 6's parked
-    invariant)."""
+    """Every slate name is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_ = _staged()
-    assert set(qs) == set(os_)
-    live_q, live_o = all_queries(), all_oracles()
-    missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
-    missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
+    names = set(STAGED_NAMES)
+    missing = names - set(all_queries())
+    assert not missing, f"slate queries not registered: {missing}"
+    missing_o = names - set(all_oracles())
+    assert not missing_o, f"slate oracles not registered: {missing_o}"
 
 
 def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (0 newly-registered names)."""
-    from cioos_siooc_data_transform_spark.plans import staged_r7
+    """Registration happens once, at import: registering a served
+    builder again under its own name and oracle is a no-op."""
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        register,
+    )
 
-    assert staged_r7.activate() == 0
+    before = (all_queries(), all_oracles())
+    for name, fn in slate("staged_r7")[0].items():
+        register(name, before[1][name])(fn)
+    assert (all_queries(), all_oracles()) == before
 
 
 STAGED_NAMES = [
@@ -107,7 +103,7 @@ STAGED_NAMES = [
     "supplier_share_trend",
     "customer_gini_by_nation",
     "orders_segment_growth_ratio",
-    # wave Q — final four (runway = exactly 50)
+    # wave Q — final four
     "doc_dup_rate_by_length",
     "embedding_pair_distance_histogram",
     "events_markov_entropy_rate",

@@ -1,45 +1,41 @@
-"""The round-8 slate (plans/staged_r8.py) is LIVE as of round 8:
-activated from plans/__init__.py, same cycle the round-5/6/7 slates
-followed (parked one round to respect the driver's 50-fresh-sample
-budget, then activated)."""
+"""The round-8 slate (plans/staged_r8.py): every query registers at
+import and must match its DuckDB oracle."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r8 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES
+    return slate("staged_r8")
 
 
 def test_staged_now_registered():
-    """Round 8 activated the slate: every staged name must be live in
-    the registry with its oracle (the reverse of round 7's parked
-    invariant)."""
+    """Every slate name is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_ = _staged()
-    assert set(qs) == set(os_)
-    live_q, live_o = all_queries(), all_oracles()
-    missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
-    missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
+    names = set(STAGED_NAMES)
+    missing = names - set(all_queries())
+    assert not missing, f"slate queries not registered: {missing}"
+    missing_o = names - set(all_oracles())
+    assert not missing_o, f"slate oracles not registered: {missing_o}"
 
 
 def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (0 newly-registered names)."""
-    from cioos_siooc_data_transform_spark.plans import staged_r8
+    """Registration happens once, at import: registering a served
+    builder again under its own name and oracle is a no-op."""
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        register,
+    )
 
-    assert staged_r8.activate() == 0
+    before = (all_queries(), all_oracles())
+    for name, fn in slate("staged_r8")[0].items():
+        register(name, before[1][name])(fn)
+    assert (all_queries(), all_oracles()) == before
 
 
 STAGED_NAMES = [

@@ -1,51 +1,38 @@
-"""The round-9 slate (plans/staged_r9.py) is LIVE as of round 9:
-activated from plans/__init__.py, same cycle the round-5..8 slates
-followed (parked one round to respect the driver's 50-fresh-sample
-budget, then activated). Includes the REPLACEMENT contract: the
-staged-Horner twins of gsw_dynamic_enthalpy / gsw_enthalpy went live in
-round 8 and left __spark_entry__._CHECKED at this activation so the
-driver re-earns their rows on the new expression trees."""
+"""The round-9 slate (plans/staged_r9.py): every query registers at
+import and must match its DuckDB oracle. It also serves the
+staged-Horner twins of gsw_dynamic_enthalpy / gsw_enthalpy, which
+replaced the flat forms kept unregistered in plans/staged_r5.py; the
+twins re-earned driver rows on their new expression trees."""
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR_SMOKE
+from tests.conftest import SF_DIR_SMOKE, slate
 
 
 def _staged():
-    from cioos_siooc_data_transform_spark.plans.staged_r9 import (
-        STAGED_ORACLES,
-        STAGED_QUERIES,
-        STAGED_REPLACEMENTS,
-    )
-
-    return STAGED_QUERIES, STAGED_ORACLES, STAGED_REPLACEMENTS
+    """(slate queries, their oracles, {replacement: (fn, oracle)})."""
+    qs, os_ = slate("staged_r9")
+    reps = {n: (qs.pop(n), os_.pop(n)) for n in REPLACEMENT_NAMES if n in qs}
+    return qs, os_, reps
 
 
 def test_staged_now_registered():
-    """Round 9 activated the slate: every staged name must be live in
-    the registry with its oracle (the reverse of round 8's parked
-    invariant), and the REPLACEMENT callables must BE the registered
-    ones."""
+    """Every slate name is live in the registry with its oracle."""
     from cioos_siooc_data_transform_spark.plans import all_oracles, all_queries
 
-    qs, os_, reps = _staged()
-    assert set(qs) == set(os_)
-    live_q, live_o = all_queries(), all_oracles()
-    missing = set(qs) - set(live_q)
-    assert not missing, f"staged queries not activated: {missing}"
-    missing_o = set(os_) - set(live_o)
-    assert not missing_o, f"staged oracles not activated: {missing_o}"
-    for name, (fn, _) in reps.items():
-        assert name in live_q, f"replacement {name} has no live twin"
-        assert live_q[name] is fn, f"replacement {name} not applied"
+    names = set(STAGED_NAMES) | set(REPLACEMENT_NAMES)
+    missing = names - set(all_queries())
+    assert not missing, f"slate queries not registered: {missing}"
+    missing_o = names - set(all_oracles())
+    assert not missing_o, f"slate oracles not registered: {missing_o}"
 
 
 def test_replacements_recheck_completed():
-    """The REPLACEMENTS contract, final state: the replaced names left
-    _CHECKED at the round-9 activation, re-earned green driver rows on
-    the new expression trees (CORRECTNESS_r09.json has both), and
+    """The replaced names left _CHECKED at the round-9 activation,
+    re-earned green driver rows on the new expression trees
+    (CORRECTNESS_r09.json has both), and
     returned to _CHECKED at the round-10 activation. If this fails
     because a replacement is missing from _CHECKED, its re-check never
     landed — do NOT just add it; find the green row first."""
@@ -59,11 +46,18 @@ def test_replacements_recheck_completed():
 
 
 def test_activate_idempotent_after_import():
-    """plans/__init__.py already ran activate(); a second call must be a
-    no-op (0 newly-registered names)."""
-    from cioos_siooc_data_transform_spark.plans import staged_r9
+    """Registration happens once, at import: registering a served
+    builder again under its own name and oracle is a no-op."""
+    from cioos_siooc_data_transform_spark.plans import (
+        all_oracles,
+        all_queries,
+        register,
+    )
 
-    assert staged_r9.activate() == 0
+    before = (all_queries(), all_oracles())
+    for name, fn in slate("staged_r9")[0].items():
+        register(name, before[1][name])(fn)
+    assert (all_queries(), all_oracles()) == before
 
 
 STAGED_NAMES = [
@@ -184,12 +178,17 @@ def test_replacement_value_identical_to_flat_form(spark, name):
 
 
 def test_registered_callables_are_the_staged_ones():
-    """Activation must not have been shadowed by an earlier slate's
-    same-name registration (the silent-no-op trap: activate() skips
-    names that already exist)."""
+    """Every pinned name is served by a builder defined in this slate,
+    not by a same-name builder elsewhere."""
     from cioos_siooc_data_transform_spark.plans import all_queries
 
-    qs, _, _ = _staged()
     live = all_queries()
-    shadowed = {n for n, fn in qs.items() if live.get(n) is not fn}
-    assert not shadowed, f"staged_r9 names shadowed by earlier slates: {shadowed}"
+    owner = "cioos_siooc_data_transform_spark.plans.staged_r9"
+    foreign = {
+        n: live[n].__module__
+        for n in STAGED_NAMES + REPLACEMENT_NAMES
+        if live[n].__module__ != owner
+    }
+    assert not foreign, f"staged_r9 names served elsewhere: {foreign}"
+
+

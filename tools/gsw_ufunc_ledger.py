@@ -204,22 +204,16 @@ LEDGER: dict[str, tuple] = {
 
 
 def all_known_query_names() -> set[str]:
-    """Live registry + every staged slate's local registry."""
-    import importlib
+    """Live registry + the parked slates' local registries."""
+    from cioos_siooc_data_transform_spark.plans import (
+        all_queries,
+        staged_r14,
+        staged_r15,
+    )
 
-    from cioos_siooc_data_transform_spark.plans import all_queries
-
-    names = set(all_queries())
-    for m in ("staged_r10", "staged_r11", "staged_r12", "staged_r13",
-              "staged_r14", "staged_r15"):
-        try:
-            mod = importlib.import_module(
-                f"cioos_siooc_data_transform_spark.plans.{m}"
-            )
-        except ImportError:
-            continue
-        names |= set(mod.STAGED_QUERIES)
-    return names
+    return set(all_queries()) | set(staged_r14.STAGED_QUERIES) | set(
+        staged_r15.STAGED_QUERIES
+    )
 
 
 def counts() -> dict[str, int]:

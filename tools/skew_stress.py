@@ -206,7 +206,7 @@ def case_lsh_topk(spark, guarded: bool):
         .select(
             "query_id",
             "neighbor_id",
-            cosine_expr(F.col("qv"), F.col("cv")).alias("cos"),
+            cosine_expr("qv", "cv").alias("cos"),
         )
     )
     w2 = Window.partitionBy("query_id").orderBy(

@@ -1,10 +1,10 @@
-"""Strict-harness sweep over a STAGED (not yet registered) module's
-local registry — the same compare the driver will run once the slate
-activates. Usage:
+"""Strict-harness sweep over a PARKED (not registered) slate module's
+local registry — the same compare the driver runs on live queries.
+Usage:
 
     python tools/staged_sim.py [module] [sf_dir] [name ...]
 
-module defaults to staged_r6; sf_dir to /root/testdata/sf0.01.
+module defaults to staged_r14; sf_dir to /root/testdata/sf0.01.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ import time
 
 
 def main() -> int:
-    mod_name = sys.argv[1] if len(sys.argv) > 1 else "staged_r6"
+    mod_name = sys.argv[1] if len(sys.argv) > 1 else "staged_r14"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     only = set(sys.argv[3:])
 
@@ -30,14 +30,8 @@ def main() -> int:
     spark = get_spark("staged-sim", shuffle_partitions=16)
     from tests.oracle_harness import compare_query
 
-    # Replacement queries (staged twins of live registry entries —
-    # staged_r9's STAGED_REPLACEMENTS contract) sweep alongside the new
-    # names with a [repl] marker.
-    entries = dict(mod.STAGED_QUERIES)
-    oracles = dict(mod.STAGED_ORACLES)
-    for name, (fn, oracle) in getattr(mod, "STAGED_REPLACEMENTS", {}).items():
-        entries[f"{name} [repl]"] = fn
-        oracles[f"{name} [repl]"] = oracle
+    entries = mod.STAGED_QUERIES
+    oracles = mod.STAGED_ORACLES
 
     n_fail = 0
     n_run = 0
