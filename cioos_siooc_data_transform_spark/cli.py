@@ -57,26 +57,29 @@ def convert(
         if opt == "new":
             files = filter_new_files(files, hours=24.0)
         parsed = parse_ios(files).cache()
-        n_files = parsed.count()
-        n_errors = parsed.filter(F.col("error").isNotNull()).count()
+        try:
+            # one action for both counts; it fills the cache before the
+            # writes read it (writes that meet an unfilled cache run extra
+            # jobs to fill it)
+            n_files, n_errors = parsed.agg(F.count(F.lit(1)), F.count("error")).first()
 
-        paths = write_cf_dataset(parsed, out_dir)
+            paths = write_cf_dataset(parsed, out_dir)
 
-        if geojson:
-            polys = read_geojson_polygons(spark, geojson)
-            geo = assign_geo_code(ios_catalog(parsed), polys)
-            geo.write.mode("overwrite").parquet(f"{out_dir}/geo_codes")
-            paths["geo_codes"] = f"{out_dir}/geo_codes"
+            if geojson:
+                polys = read_geojson_polygons(spark, geojson)
+                geo = assign_geo_code(ios_catalog(parsed), polys)
+                geo.write.mode("overwrite").parquet(f"{out_dir}/geo_codes")
+                paths["geo_codes"] = f"{out_dir}/geo_codes"
 
-        if netcdf:
-            from cioos_siooc_data_transform_spark.sinks.cf_netcdf import (
-                write_netcdf_dir,
-            )
+            if netcdf:
+                from cioos_siooc_data_transform_spark.sinks.cf_netcdf import (
+                    write_netcdf_dir,
+                )
 
-            write_netcdf_dir(parsed, f"{out_dir}/netcdf")
-            paths["netcdf"] = f"{out_dir}/netcdf"
-
-        parsed.unpersist()
+                write_netcdf_dir(parsed, f"{out_dir}/netcdf")
+                paths["netcdf"] = f"{out_dir}/netcdf"
+        finally:
+            parsed.unpersist()
         return {"files": n_files, "errors": n_errors, "paths": paths}
     finally:
         if own_session:

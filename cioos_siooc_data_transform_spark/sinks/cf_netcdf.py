@@ -154,8 +154,13 @@ def write_netcdf_dir(parsed: DataFrame, out_dir: str) -> int:
 
     Executor-side writes via foreachPartition (no driver collect — file
     bytes never funnel through one process); a task retry simply rewrites
-    the same paths, so the write is idempotent. Returns the file count.
+    the same paths, so the write is idempotent. Returns the file count,
+    summed by an accumulator in the same action (Spark applies an action's
+    accumulator updates once per successful task, so retries do not count
+    twice). ``parsed`` is neither cached nor unpersisted here — the caller
+    owns its cache.
     """
+    written = parsed.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows) -> None:
         for r in rows:
@@ -165,10 +170,7 @@ def write_netcdf_dir(parsed: DataFrame, out_dir: str) -> int:
             with open(tmp, "wb") as f:
                 f.write(bytes(r["nc_bytes"]))
             os.replace(tmp, os.path.join(d, f"{r['file_id']}.nc"))
+            written.add(1)
 
-    nc = to_netcdf_bytes(parsed).cache()
-    try:
-        nc.foreachPartition(write_partition)
-        return nc.count()
-    finally:
-        nc.unpersist()
+    to_netcdf_bytes(parsed).foreachPartition(write_partition)
+    return written.value

@@ -12,10 +12,11 @@ with a columnar layout:
 - headers sidecar: full header tree as JSON (the reference stores it as a
   global attr, IDT/write_ctd_ncfile.py:36).
 
-Idempotency: mode=overwrite with dynamic partitionOverwriteMode replaces
-exactly the partitions being rewritten — this subsumes the reference's
-orphan-delete (K3) and failed-write cleanup (K4) shell hacks; Spark's task
-commit protocol guarantees no partial files.
+Idempotency: the measurements writer's mode=overwrite with its own
+partitionOverwriteMode=dynamic option replaces exactly the year partitions
+being rewritten, and leaves the session conf alone — this subsumes the
+reference's orphan-delete (K3) and failed-write cleanup (K4) shell hacks;
+Spark's task commit protocol guarantees no partial files.
 
 Scale notes: partitionBy(year) keeps files clustered for time-range scans;
 within a partition, writers are sized by the upstream shuffle — repartition
@@ -36,7 +37,11 @@ def write_cf_dataset(
     mode: str = "overwrite",
 ) -> dict[str, str]:
     """Write the full CF dataset (measurements + variables + headers +
-    catalog). Returns the written paths."""
+    catalog). Returns the written paths.
+
+    ``parsed`` feeds four writes (and the CF plan reads it three more
+    times), so callers should pass a cached frame; this sink neither
+    caches nor unpersists its input — the caller owns that cache."""
     from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
     from cioos_siooc_data_transform_spark.sources.ios_source import (
         ios_catalog,
@@ -44,19 +49,6 @@ def write_cf_dataset(
         ios_header_json,
         ios_measurements_masked,
     )
-
-    spark = parsed.sparkSession
-    # save/restore: mutating the shared session conf would silently
-    # switch every LATER partitioned overwrite in this session from
-    # static (truncate-table) to dynamic semantics
-    prev_overwrite_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", None
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # the binaryFile scan + Python parse feeds FOUR write actions (and
-    # the cf plan references it three more times) — cache once like the
-    # sibling sinks, or every file re-parses ~6x
-    parsed = parsed.cache()
 
     catalog = ios_catalog(parsed)
     channels = ios_channels(parsed)
@@ -79,25 +71,20 @@ def write_cf_dataset(
         "headers": os.path.join(out_dir, "headers"),
         "catalog": os.path.join(out_dir, "catalog"),
     }
-    try:
-        cf.repartition("year").sortWithinPartitions(
-            "file_id", "record_idx"
-        ).write.mode(mode).option("compression", "zstd").partitionBy(
-            "year"
-        ).parquet(paths["measurements"])
-        codes.write.mode(mode).option("compression", "zstd").parquet(
-            paths["variables"]
-        )
-        ios_header_json(parsed).write.mode(mode).parquet(paths["headers"])
-        catalog.write.mode(mode).parquet(paths["catalog"])
-    finally:
-        parsed.unpersist()
-        if prev_overwrite_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode
-            )
+    (
+        cf.repartition("year")
+        .sortWithinPartitions("file_id", "record_idx")
+        .write.mode(mode)
+        .option("compression", "zstd")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("year")
+        .parquet(paths["measurements"])
+    )
+    codes.write.mode(mode).option("compression", "zstd").parquet(
+        paths["variables"]
+    )
+    ios_header_json(parsed).write.mode(mode).parquet(paths["headers"])
+    catalog.write.mode(mode).parquet(paths["catalog"])
     return paths
 
 

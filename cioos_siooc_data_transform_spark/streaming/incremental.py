@@ -8,74 +8,42 @@ file source + checkpoint gives exactly-once pickup instead: every file is
 processed once, regardless of batch cadence; Trigger.AvailableNow drains
 the backlog and stops, which is the cron-batch execution shape.
 
-IOS files are ASCII-with-garbage (the reference decodes with
-errors='ignore', IDT/ObsFile.py:47) and the streaming text source insists
-on valid UTF-8 — so the stream carries only PATHS (exactly-once file
-tracking lives in the checkpoint), and each micro-batch re-reads its files
-through the batch binaryFile source + the shared mapInPandas parser.
+The stream reads the binaryFile source, so each micro-batch carries the
+raw bytes of its new files (path, modificationTime, length, content) and
+feeds them straight to the shared mapInPandas parser: every file is read
+once, and the parser does its own lenient ASCII decode of garbage bytes
+(the reference decodes with errors='ignore', IDT/ObsFile.py:47). The
+stream keeps no operator state: exactly-once file tracking is the
+source's own file log in the checkpoint, and no batch's path list is
+collected to the driver.
 
-Scale notes: file-listing state lives in the checkpoint; maxFilesPerTrigger
-bounds per-batch work; the parse plane is identical to batch.
+Upgrade note: checkpoints written by the earlier path-only stream (a text
+scan feeding a stateful distinct) cannot be resumed — Spark refuses them
+with STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA rather than
+reprocess silently. Start the new stream with a new checkpoint directory
+and a new out_dir.
+
+Scale notes: maxFilesPerTrigger bounds per-batch work (and the bytes a
+batch holds); the parse plane is identical to batch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def stream_ios_paths(
-    spark: SparkSession,
-    root: str,
-    path_glob: str = "*",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """readStream over the file tree, yielding one row per newly-seen file
-    (path only — content is re-read batch-side; see module docstring)."""
-    # line-mode text source (NOT wholetext): only the path is consumed,
-    # and wholetext would hold each file as one giant in-memory string
-    # per row purely to throw it away. The content bytes are re-read
-    # once, batch-side, via binaryFile — the double read is inherent to
-    # path-streaming (the checkpoint tracks files, the parser wants raw
-    # bytes) and is the cheap half; line rows of this text pass are
-    # reduced to distinct paths before anything else happens.
-    reader = (
-        spark.readStream.format("text")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", path_glob)
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(root).select(F.input_file_name().alias("path")).distinct()
-
-
-#: Hard ceiling on the per-micro-batch driver-side path listing
-#: (~100 B/path → tens of MB at the cap). write_ios_batch limits its
-#: collect to this and fails fast beyond it; keep max_files_per_trigger
-#: well under it so the backstop never fires in normal operation.
-MAX_BATCH_PATHS = 100_000
 
 
 def write_ios_batch(
     spark: SparkSession, batch_df: DataFrame, out_dir: str, batch_id: int
 ) -> None:
-    """Parse one micro-batch's files and write them under a deterministic
-    ``batch_id=N`` partition directory with overwrite.
+    """Parse one micro-batch of binaryFile rows and write them under a
+    deterministic ``batch_id=N`` partition directory with overwrite.
 
     This is what makes the sink exactly-once rather than at-least-once:
     foreachBatch re-delivers the SAME batch_id on retry, so a crashed or
     partially-written batch is fully replaced instead of appended twice.
     Readers see batch_id as an ordinary partition column via standard
-    partition discovery.
-
-    The per-batch path list is collected to the driver — it is a file
-    LISTING (never row data) and the collect is EXPLICITLY bounded: at
-    most MAX_BATCH_PATHS paths are fetched (limit pushed into the
-    query, so the driver transfer itself is capped, ~100 B/path → tens
-    of MB worst case) and the batch fails fast if the cap is exceeded
-    instead of silently ballooning the driver. maxFilesPerTrigger keeps
-    real batches far below the cap; the cap is the backstop for a
-    misconfigured caller.
+    partition discovery. The parse feeds two writes, so this function
+    caches it and releases it when the batch ends.
     """
     from cioos_siooc_data_transform_spark.sources.ios_source import (
         ios_catalog,
@@ -83,23 +51,7 @@ def write_ios_batch(
         parse_ios,
     )
 
-    paths = [
-        r["path"]
-        for r in batch_df.select("path")
-        .distinct()
-        .limit(MAX_BATCH_PATHS + 1)
-        .collect()
-    ]
-    if len(paths) > MAX_BATCH_PATHS:
-        raise ValueError(
-            f"micro-batch {batch_id} lists more than MAX_BATCH_PATHS="
-            f"{MAX_BATCH_PATHS} files; set max_files_per_trigger so each "
-            "batch stays under the driver listing bound"
-        )
-    if not paths:
-        return
-    files = spark.read.format("binaryFile").load(paths)
-    parsed = parse_ios(files).cache()
+    parsed = parse_ios(batch_df).cache()
     try:
         ios_catalog(parsed).write.mode("overwrite").parquet(
             f"{out_dir}/catalog/batch_id={batch_id}"
@@ -124,20 +76,25 @@ def run_incremental_ingest(
     partitions (see write_ios_batch for the exactly-once contract). Blocks
     until the backlog is drained (the cron-batch shape).
 
-    ``max_files_per_trigger`` bounds each micro-batch — this is what the
-    write_ios_batch driver-side listing contract relies on: without it
-    the FIRST drain over a large tree would form one batch of the whole
-    backlog and collect every path to the driver. AvailableNow honors
-    the cap by draining in multiple batches."""
-    paths_stream = stream_ios_paths(
-        spark, root, path_glob, max_files_per_trigger=max_files_per_trigger
+    ``max_files_per_trigger`` bounds each micro-batch: without it the
+    FIRST drain over a large tree would form one batch of the whole
+    backlog. AvailableNow honors the cap by draining in multiple batches."""
+    reader = (
+        spark.readStream.format("binaryFile")
+        # a file stream source must be given its schema: binaryFile's fixed one
+        .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+        .option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", path_glob)
     )
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_ios_batch(spark, batch_df, out_dir, batch_id)
 
     query = (
-        paths_stream.writeStream.foreachBatch(write_batch)
+        reader.load(root)
+        .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

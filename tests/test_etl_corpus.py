@@ -1,0 +1,158 @@
+"""The IOS→CF job over a seeded corpus that the tests write themselves
+(perfbench/corpus.py), so they run on any host: convert with its geo-code
+and NetCDF steps, the CF Parquet sink's cache and overwrite contracts, and
+the incremental stream's exactly-once pickup."""
+
+from __future__ import annotations
+
+import os
+import shutil
+import sys
+
+import pytest
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+)
+import corpus  # noqa: E402
+
+SEED = 7
+N_FILES = 8
+RECORDS = (20, 400)
+CHANNELS = (5, 12)
+N_CORRUPT = 3
+
+
+@pytest.fixture(scope="module")
+def ios_corpus(tmp_path_factory):
+    """A seeded tree of IOS files, 3 of them damaged, plus polygons."""
+    root = tmp_path_factory.mktemp("ios_corpus")
+    in_dir = str(root / "ios")
+    manifest = corpus.write_corpus(in_dir, SEED, N_FILES, RECORDS, CHANNELS, N_CORRUPT)
+    geojson = str(root / "areas.geojson")
+    corpus.write_geojson(geojson, SEED)
+    return in_dir, geojson, manifest
+
+
+def _parse(spark, in_dir):
+    from cioos_siooc_data_transform_spark.cli import FTYPE_EXTENSIONS
+    from cioos_siooc_data_transform_spark.sources.ios_source import (
+        discover_files,
+        parse_ios,
+    )
+
+    return parse_ios(discover_files(spark, in_dir, FTYPE_EXTENSIONS["ctd"]))
+
+
+def _nc_files(root: str) -> int:
+    return sum(f.endswith(".nc") for _, _, files in os.walk(root) for f in files)
+
+
+def test_convert_counts_match_manifest(spark, ios_corpus, tmp_path):
+    from cioos_siooc_data_transform_spark.cli import convert
+
+    in_dir, geojson, manifest = ios_corpus
+    exp = corpus.expected_counts(manifest)
+    assert len(exp["errors"]) == N_CORRUPT
+    out = str(tmp_path / "out")
+    result = convert("all", "ctd", in_dir, out, geojson=geojson, netcdf=True, spark=spark)
+    assert result["files"] == exp["files"] == N_FILES
+    assert result["errors"] == N_CORRUPT
+    assert spark.read.parquet(result["paths"]["measurements"]).count() == exp["measurement_rows"]
+    assert spark.read.parquet(result["paths"]["geo_codes"]).count() == exp["files"]
+    assert _nc_files(result["paths"]["netcdf"]) == exp["netcdf_files"]
+
+
+def test_convert_without_matching_files_is_total(spark, ios_corpus, tmp_path):
+    """No file of the type: zero counts, nothing raised."""
+    from cioos_siooc_data_transform_spark.cli import convert
+
+    in_dir, _, manifest = ios_corpus
+    other = tmp_path / "bot_only"
+    other.mkdir()
+    shutil.copy(os.path.join(in_dir, manifest["files"][0]["relpath"]), other / "cast.bot")
+    result = convert("all", "ctd", str(other), str(tmp_path / "out"), spark=spark)
+    assert result["files"] == 0 and result["errors"] == 0
+
+
+def test_cf_sink_leaves_cached_input_cached(spark, ios_corpus, tmp_path):
+    """The caller owns the cache: the sink must not unpersist its input."""
+    from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
+
+    parsed = _parse(spark, ios_corpus[0]).cache()
+    try:
+        write_cf_dataset(parsed, str(tmp_path / "out"))
+        assert parsed.is_cached
+    finally:
+        parsed.unpersist()
+
+
+def test_cf_sink_overwrites_one_year_and_keeps_the_others(spark, ios_corpus, tmp_path):
+    from pyspark.sql import functions as F
+
+    from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
+
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(conf_key)
+    out = str(tmp_path / "out")
+    parsed = _parse(spark, ios_corpus[0]).cache()
+    try:
+        paths = write_cf_dataset(parsed, out)
+        per_year = dict(
+            spark.read.parquet(paths["measurements"]).groupBy("year").count().collect()
+        )
+        assert len(per_year) > 1
+        year = max(per_year)
+        write_cf_dataset(parsed.filter(F.year("start_ts") == year), out)
+    finally:
+        parsed.unpersist()
+    after = dict(spark.read.parquet(paths["measurements"]).groupBy("year").count().collect())
+    assert after == per_year  # the rewritten year replaced, not appended; others kept
+    assert spark.conf.get(conf_key) == conf_before
+
+
+def test_incremental_drains_pick_up_each_file_once(spark, tmp_path):
+    from cioos_siooc_data_transform_spark.streaming.incremental import (
+        run_incremental_ingest,
+    )
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    first = corpus.write_corpus(os.path.join(src, "a"), SEED, 5, RECORDS, CHANNELS)
+
+    def drain():
+        run_incremental_ingest(spark, src, out, ckpt, max_files_per_trigger=2)
+        return sorted(os.listdir(os.path.join(out, "catalog")))
+
+    def file_ids():
+        return sorted(r["file_id"] for r in spark.read.parquet(f"{out}/catalog").collect())
+
+    assert drain() == ["batch_id=0", "batch_id=1", "batch_id=2"]
+    ids = sorted(f["file_id"] for f in first["files"])
+    assert file_ids() == ids
+    rows = sum(f["n_records"] * f["n_channels"] for f in first["files"])
+    assert spark.read.parquet(f"{out}/measurements").count() == rows
+
+    assert drain() == ["batch_id=0", "batch_id=1", "batch_id=2"]  # nothing new
+
+    second = corpus.write_corpus(
+        os.path.join(src, "b"), SEED, 2, RECORDS, CHANNELS, first_index=5
+    )
+    assert drain() == ["batch_id=0", "batch_id=1", "batch_id=2", "batch_id=3"]
+    assert file_ids() == sorted(ids + [f["file_id"] for f in second["files"]])
+
+
+def test_write_ios_batch_retry_is_idempotent(spark, ios_corpus, tmp_path):
+    from cioos_siooc_data_transform_spark.streaming.incremental import write_ios_batch
+
+    in_dir, _, manifest = ios_corpus
+    paths = [os.path.join(in_dir, f["relpath"]) for f in manifest["files"][:3]]
+    batch = spark.read.format("binaryFile").load(paths)
+    out = str(tmp_path / "out")
+    write_ios_batch(spark, batch, out, batch_id=0)
+    first = spark.read.parquet(f"{out}/catalog").count()
+    meas = spark.read.parquet(f"{out}/measurements").count()
+    write_ios_batch(spark, batch, out, batch_id=0)  # simulated retry
+    cat = spark.read.parquet(f"{out}/catalog")
+    assert cat.count() == first == 3
+    assert cat.select("file_id").distinct().count() == 3
+    assert spark.read.parquet(f"{out}/measurements").count() == meas

@@ -59,7 +59,7 @@ def test_batch_write_retry_is_idempotent(spark):
     with tempfile.TemporaryDirectory() as tmp:
         out = os.path.join(tmp, "out")
         profiles = sorted(glob.glob(f"{IDT}/ctd_profile/*.ctd"))[:2]
-        batch = spark.createDataFrame([(p,) for p in profiles], "path string")
+        batch = spark.read.format("binaryFile").load(profiles)
         write_ios_batch(spark, batch, out, batch_id=0)
         first = spark.read.parquet(f"{out}/catalog").count()
         write_ios_batch(spark, batch, out, batch_id=0)  # simulated retry
