@@ -26,7 +26,6 @@ def wide_profile_view(
     from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
     from cioos_siooc_data_transform_spark.sources.ios_source import (
         ios_catalog,
-        ios_channels,
         ios_measurements_masked,
     )
 
@@ -35,9 +34,7 @@ def wide_profile_view(
             "PRESPR01", "depth", "TEMPS901", "TEMPS601", "TEMPST01", "PSALST01",
             "DOXYZZ01", "DOXMZZ01", "CNDCST01", "NTRZAAZ1", "PHOSAAZ1", "SLCAAAZ1",
         ]
-    codes = assign_bodc_codes(ios_channels(parsed)).select(
-        "file_id", "channel_idx", "var_code"
-    )
+    codes = assign_bodc_codes(parsed).select("file_id", "channel_idx", "var_code")
     meas = ios_measurements_masked(parsed)
     routed = meas.join(codes, ["file_id", "channel_idx"])
     wide = (

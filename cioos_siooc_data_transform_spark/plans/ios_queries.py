@@ -63,10 +63,11 @@ SAMPLE_IOS = """*2024/01/15 10:00:00.00
 
 
 # One parse per (session, sample): the mapInPandas parse crosses into
-# Python, and an uncached plan re-runs that crossing for EVERY self-join
-# branch of every query (ios_measurements_masked alone references the
-# parsed relation three times). Persisting the 1-row parsed frame turns
-# all downstream ios_* queries into pure-JVM reads of an InMemoryRelation.
+# Python, and an uncached plan re-runs that crossing for every query that
+# reads the sample (and for every branch of a query that reads it twice,
+# like the mooring view's measurements ⋈ observation times). Persisting
+# the 1-row parsed frame turns all downstream ios_* queries into pure-JVM
+# reads of an InMemoryRelation.
 _PARSED_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
@@ -170,9 +171,8 @@ def ios_parse_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ios_bodc_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3+W2: routing ladder → BODC mapping → occurrence numbering."""
     from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
-    from cioos_siooc_data_transform_spark.sources.ios_source import ios_channels
 
-    codes = assign_bodc_codes(ios_channels(_parsed_sample(spark)))
+    codes = assign_bodc_codes(_parsed_sample(spark))
     return codes.select(
         "file_id",
         F.col("channel_idx").cast("int").alias("channel_idx"),

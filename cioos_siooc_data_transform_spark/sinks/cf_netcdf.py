@@ -6,9 +6,10 @@ global attrs (featureType, title, institution, header JSON) + dimension z
 (= record count) + envelope vars (latitude, longitude, time, profile id)
 + the routed BODC-coded channel variables (pad → NaN, float32, CF names).
 
-BODC routing happens ONCE as the relational operator (assign_bodc_codes),
-joined back to the parsed rows as an array column; the per-file byte
-assembly is a mapInPandas over complete file rows. Output is
+Each file's variables come from its own parsed row: BODC coding
+(bodc_codes) and pad masking (pad_masked, the rule the Parquet sink's
+cells use) run in Catalyst over the row's channel and record arrays; the
+per-file byte assembly is a mapInPandas over those rows. Output is
 (file_id, year, nc_bytes) — a DataFrame, so callers can write to any
 store; write_netcdf_dir materializes to a local directory tree
 (out/yy/file.nc like the reference, IDT/ios_data_transform_script.py:73-75).
@@ -27,22 +28,25 @@ from pyspark.sql import functions as F
 
 def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
     """Parsed IOS rows → (file_id, year, nc_bytes)."""
-    from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
-    from cioos_siooc_data_transform_spark.sources.ios_source import ios_channels
+    from cioos_siooc_data_transform_spark.operators.bodc import bodc_codes
+    from cioos_siooc_data_transform_spark.sources.ios_source import pad_masked
 
-    codes = (
-        assign_bodc_codes(ios_channels(parsed))
-        .groupBy("file_id")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    "channel_idx", "var_code", "units", "standard_name",
-                    "long_name", "pad",
-                )
-            ).alias("cf_vars")
+    def with_values(c, i):
+        masked = F.transform(
+            "records",
+            lambda r: pad_masked(
+                F.get(r, i).try_cast("double"), c["pad"], F.col("pad_default")
+            ),
         )
+        return c.withField("values", masked)
+
+    cf_vars = F.filter(
+        F.transform(bodc_codes(F.col("channels")), with_values), lambda v: v.isNotNull()
     )
-    enriched = parsed.join(codes, "file_id", "left")
+    enriched = parsed.select(
+        "file_id", "agency", "mission", "header_sections", "latitude", "longitude",
+        "start_ts", F.size("records").alias("nrec"), cf_vars.alias("cf_vars"),
+    )
 
     def build(batches: Iterator) -> Iterator:
         import numpy as np
@@ -55,8 +59,7 @@ def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                records = [list(r) for r in row["records"]]
-                nrec = len(records)
+                nrec = int(row["nrec"])
                 if nrec == 0:
                     # classic NetCDF defines a dimension of length 0 as
                     # the UNLIMITED record dimension — writing z=0 would
@@ -64,11 +67,6 @@ def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
                     # variable; skip the file instead (same per-file
                     # isolation as a parse error)
                     continue
-                raw_vars = row["cf_vars"]
-                cf_vars = sorted(
-                    (list(raw_vars) if raw_vars is not None else []),
-                    key=lambda v: v["channel_idx"],
-                )
                 profile_id = str(row["file_id"])
                 dims = {"z": nrec, "profile_strlen": max(len(profile_id), 1)}
                 gattrs = {
@@ -111,21 +109,7 @@ def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
                         {"cf_role": "profile_id"}, profile_id,
                     ),
                 ]
-                for v in cf_vars:
-                    ci = v["channel_idx"] - 1
-                    pad = (v["pad"] or "").strip()
-                    try:
-                        pad_num = float(pad) if pad else None
-                    except ValueError:
-                        pad_num = None
-                    vals = np.full(nrec, np.nan, dtype="f4")
-                    for r in range(nrec):
-                        try:
-                            x = float(records[r][ci])
-                        except (ValueError, IndexError):
-                            continue
-                        if pad_num is None or x != pad_num:
-                            vals[r] = x
+                for v in row["cf_vars"]:
                     variables.append(
                         NcVariable(
                             v["var_code"], NC_FLOAT, ["z"],
@@ -138,7 +122,7 @@ def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
                                 # variable's exact type
                                 "_FillValue": np.float32("nan"),
                             },
-                            vals,
+                            np.asarray(v["values"], dtype="f4"),
                         )
                     )
                 nc = write_netcdf3(dims, gattrs, variables)

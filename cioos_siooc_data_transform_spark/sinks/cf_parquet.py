@@ -31,37 +31,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_cf_dataset(
-    parsed: DataFrame,
-    out_dir: str,
-    mode: str = "overwrite",
-) -> dict[str, str]:
+def write_cf_dataset(parsed: DataFrame, out_dir: str) -> dict[str, str]:
     """Write the full CF dataset (measurements + variables + headers +
     catalog). Returns the written paths.
 
-    ``parsed`` feeds four writes (and the CF plan reads it three more
-    times), so callers should pass a cached frame; this sink neither
-    caches nor unpersists its input — the caller owns that cache."""
-    from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
+    ``parsed`` feeds four writes, so callers should pass a cached frame;
+    this sink neither caches nor unpersists its input — the caller owns
+    that cache."""
+    from cioos_siooc_data_transform_spark.operators.bodc import (
+        assign_bodc_codes,
+        bodc_codes,
+    )
     from cioos_siooc_data_transform_spark.sources.ios_source import (
+        explode_masked,
         ios_catalog,
-        ios_channels,
         ios_header_json,
-        ios_measurements_masked,
     )
 
-    catalog = ios_catalog(parsed)
-    channels = ios_channels(parsed)
-    codes = assign_bodc_codes(channels)
-    meas = ios_measurements_masked(parsed)
-
-    # CF measurements: only routed channels, keyed by var_code, with the
-    # observation year for partitioning (profile files: start year).
+    # CF measurements: the masked cells of routed channels, keyed by
+    # var_code, with the observation year for partitioning (profile
+    # files: start year) — both taken from the cell's own file row.
+    files = parsed.select(
+        "file_id", "records", "channels", "pad_default",
+        F.year("start_ts").alias("year"),
+        F.transform(bodc_codes(F.col("channels")), lambda c: c["var_code"]).alias("_codes"),
+    )
     cf = (
-        meas.join(codes.select("file_id", "channel_idx", "var_code"),
-                  ["file_id", "channel_idx"])
-        .join(catalog.select("file_id", "start_ts"), "file_id")
-        .withColumn("year", F.year("start_ts"))
+        explode_masked(files)
+        .withColumn("var_code", F.get("_codes", F.col("channel_idx") - 1))
+        .filter(F.col("var_code").isNotNull())
         .select("year", "file_id", "record_idx", "var_code", "value_num")
     )
 
@@ -74,17 +72,17 @@ def write_cf_dataset(
     (
         cf.repartition("year")
         .sortWithinPartitions("file_id", "record_idx")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("compression", "zstd")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("year")
         .parquet(paths["measurements"])
     )
-    codes.write.mode(mode).option("compression", "zstd").parquet(
+    assign_bodc_codes(parsed).write.mode("overwrite").option("compression", "zstd").parquet(
         paths["variables"]
     )
-    ios_header_json(parsed).write.mode(mode).parquet(paths["headers"])
-    catalog.write.mode(mode).parquet(paths["catalog"])
+    ios_header_json(parsed).write.mode("overwrite").parquet(paths["headers"])
+    ios_catalog(parsed).write.mode("overwrite").parquet(paths["catalog"])
     return paths
 
 

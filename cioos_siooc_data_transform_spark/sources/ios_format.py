@@ -337,6 +337,11 @@ def _opt_float(value: str | None) -> float | None:
         return None
 
 
+def file_id_of(path: str) -> str:
+    """The file's basename without its extension, for '/' and '\\' paths."""
+    return re.sub(r"\.[^.]*$", "", re.split(r"[/\\]", path)[-1])
+
+
 def parse_ios_file(path: str, content: str) -> dict:
     """Parse one IOS observation file into a nested record (see
     ios_source.PARSED_SCHEMA for the Spark-side schema)."""
@@ -383,8 +388,6 @@ def parse_ios_file(path: str, content: str) -> dict:
     slot_widths = [c.get("slot_width", 0) for c in channels] if details else None
     records, strategy = read_data(lines, formatline, slot_widths)
 
-    file_id = re.sub(r"\.[^./\\]*$", "", path.split("/")[-1].split("\\")[-1])
-
     comments = {sec: get_comments_like(lines, sec) for sec in COMMENT_SECTIONS}
 
     def sec_kv(section: dict) -> dict:
@@ -394,7 +397,7 @@ def parse_ios_file(path: str, content: str) -> dict:
         }
 
     return {
-        "file_id": file_id,
+        "file_id": file_id_of(path),
         "path": path,
         "ios_header_version": header_version,
         "start_ts": start_ts,
@@ -448,7 +451,7 @@ def parse_ios_file_safe(path: str, content: str) -> dict:
         return parse_ios_file(path, content)
     except Exception as exc:  # noqa: BLE001 — deliberate per-file isolation
         return {
-            "file_id": re.sub(r"\.[^./\\]*$", "", path.split("/")[-1]),
+            "file_id": file_id_of(path),
             "path": path,
             "ios_header_version": "",
             "start_ts": None,

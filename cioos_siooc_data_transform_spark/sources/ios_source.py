@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -150,19 +150,19 @@ def ios_channels(parsed: DataFrame) -> DataFrame:
     ).select("file_id", "ch.*")
 
 
-def ios_measurements(parsed: DataFrame) -> DataFrame:
-    """Long-format measurements: (file_id, record_idx, channel_idx,
-    value_str, value_num). Two posexplodes — all JVM-side."""
-    recs = parsed.select(
-        "file_id", F.posexplode("records").alias("record_idx", "cells")
-    )
+def _explode_cells(files: DataFrame) -> DataFrame:
+    """One row per data cell of per-file rows that hold ``records``:
+    every other column of ``files``, record_idx, channel_idx, value_str,
+    value_num. Two posexplodes — all JVM-side. Per-file arrays belong in
+    ``files``: there they are computed once per file, below the explodes,
+    not beside a generator."""
+    keep = [c for c in files.columns if c != "records"]
+    recs = files.select(*keep, F.posexplode("records").alias("record_idx", "cells"))
     cells = recs.select(
-        "file_id",
-        "record_idx",
-        F.posexplode("cells").alias("channel_idx0", "value_str"),
+        *keep, "record_idx", F.posexplode("cells").alias("channel_idx0", "value_str")
     )
     return cells.select(
-        "file_id",
+        *keep,
         "record_idx",
         (F.col("channel_idx0") + 1).alias("channel_idx"),
         "value_str",
@@ -170,30 +170,42 @@ def ios_measurements(parsed: DataFrame) -> DataFrame:
     )
 
 
-def ios_measurements_masked(parsed: DataFrame) -> DataFrame:
-    """Measurements with pad → NULL (P4) using the per-channel pad with
-    file-level fallback (J5 coalesce chain: channel pad → file PAD)."""
-    meas = ios_measurements(parsed)
-    ch = ios_channels(parsed).select("file_id", "channel_idx", "pad")
-    files = parsed.select("file_id", "pad_default")
-    joined = meas.join(ch, ["file_id", "channel_idx"], "left").join(
-        files, "file_id", "left"
-    )
+def ios_measurements(parsed: DataFrame) -> DataFrame:
+    """Long-format measurements: (file_id, record_idx, channel_idx,
+    value_str, value_num)."""
+    return _explode_cells(parsed.select("file_id", "records"))
+
+
+def pad_masked(value_num: Column, channel_pad: Column, file_pad: Column) -> Column:
+    """P4: NULL where the value equals its pad — the channel's pad, else
+    the file's PAD (J5 coalesce chain, IDT/write_ctd_ncfile.py:93-101)."""
     pad = F.coalesce(
-        F.nullif(F.trim(F.col("pad")), F.lit("")),
-        F.nullif(F.trim(F.col("pad_default")), F.lit("")),
-    )
-    pad_num = pad.try_cast("double")
-    masked = F.when(
-        pad_num.isNotNull() & (F.col("value_num") == pad_num), F.lit(None)
-    ).otherwise(F.col("value_num"))
-    return joined.select(
-        "file_id",
-        "record_idx",
-        "channel_idx",
-        "value_str",
-        masked.alias("value_num"),
-    )
+        F.nullif(F.trim(channel_pad), F.lit("")),
+        F.nullif(F.trim(file_pad), F.lit("")),
+    ).try_cast("double")
+    return F.when(pad.isNotNull() & (value_num == pad), F.lit(None)).otherwise(value_num)
+
+
+def explode_masked(files: DataFrame) -> DataFrame:
+    """Per-file rows holding records, channels and pad_default (plus any
+    per-file columns to carry) → one row per cell with pads masked: the
+    carried columns, record_idx, channel_idx, value_str, value_num.
+
+    Each cell's pad is looked up by position in the file's own channel
+    array; cells past the last channel fall back to the file's PAD."""
+    pads = files.withColumn(
+        "_pads", F.transform("channels", lambda c: c["pad"])
+    ).drop("channels")
+    cells = _explode_cells(pads)
+    pad = F.get("_pads", F.col("channel_idx") - 1)
+    return cells.withColumn(
+        "value_num", pad_masked(F.col("value_num"), pad, F.col("pad_default"))
+    ).drop("_pads", "pad_default")
+
+
+def ios_measurements_masked(parsed: DataFrame) -> DataFrame:
+    """ios_measurements with pad → NULL (see explode_masked)."""
+    return explode_masked(parsed.select("file_id", "records", "channels", "pad_default"))
 
 
 def ios_observation_times(parsed: DataFrame) -> DataFrame:

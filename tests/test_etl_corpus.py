@@ -1,13 +1,17 @@
 """The IOS→CF job over a seeded corpus that the tests write themselves
 (perfbench/corpus.py), so they run on any host: convert with its geo-code
-and NetCDF steps, the CF Parquet sink's cache and overwrite contracts, and
-the incremental stream's exactly-once pickup."""
+and NetCDF steps, per-file coding of duplicate basenames, agreement of the
+two sinks' pad masking, join-free plans, the CF Parquet sink's cache and
+overwrite contracts, and the incremental stream's exactly-once pickup."""
 
 from __future__ import annotations
 
+import math
 import os
+import re
 import shutil
 import sys
+from collections import Counter
 
 import pytest
 
@@ -73,6 +77,88 @@ def test_convert_without_matching_files_is_total(spark, ios_corpus, tmp_path):
     shutil.copy(os.path.join(in_dir, manifest["files"][0]["relpath"]), other / "cast.bot")
     result = convert("all", "ctd", str(other), str(tmp_path / "out"), spark=spark)
     assert result["files"] == 0 and result["errors"] == 0
+
+
+def test_duplicate_basename_is_converted_per_copy(spark, ios_corpus, tmp_path):
+    """Two copies of one file in different directories share a file_id:
+    each copy is its own file — twice the rows, and each copy's codes are
+    numbered from 01 within that copy."""
+    from cioos_siooc_data_transform_spark.cli import convert
+
+    in_dir, _, manifest = ios_corpus
+    good = [f for f in manifest["files"] if not f["corrupt"]]
+    cast = min(good, key=lambda f: f["n_records"])
+    src = os.path.join(in_dir, cast["relpath"])
+    single, double = tmp_path / "single", tmp_path / "double"
+    for d in (single / "a", double / "a", double / "b"):
+        d.mkdir(parents=True)
+        shutil.copy(src, d / os.path.basename(src))
+
+    def run(root):
+        paths = convert("all", "ctd", str(root), str(tmp_path / f"out_{root.name}"), spark=spark)["paths"]
+        rows = spark.read.parquet(paths["measurements"]).count()
+        codes = Counter(r["var_code"] for r in spark.read.parquet(paths["variables"]).collect())
+        return rows, codes
+
+    rows1, codes1 = run(single)
+    rows2, codes2 = run(double)
+    assert rows1 == cast["n_records"] * cast["n_routed"]
+    assert rows2 == 2 * rows1
+    assert codes2 == Counter({code: 2 * n for code, n in codes1.items()})
+    assert codes1["TEMPS901"] == 1
+
+
+def test_parquet_and_netcdf_mask_the_same_cells(spark, tmp_path):
+    """Blank CHANNEL DETAIL pads fall back to the file's PAD in both sinks:
+    the NetCDF values are NaN exactly where Parquet value_num is NULL."""
+    from cioos_siooc_data_transform_spark.plans.ios_queries import SAMPLE_IOS
+    from cioos_siooc_data_transform_spark.sinks.cf_netcdf import to_netcdf_bytes
+    from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
+    from cioos_siooc_data_transform_spark.sinks.netcdf3 import read_netcdf3
+
+    text = SAMPLE_IOS.replace("-99   ' '", "      ' '")  # blank the channel pads
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "blank_pads.ctd").write_text(text)
+    parsed = _parse(spark, str(in_dir)).cache()
+    try:
+        assert [c["pad"] for c in parsed.first()["channels"]] == ["", "", ""]
+        assert parsed.first()["pad_default"] == "-99"
+        paths = write_cf_dataset(parsed, str(tmp_path / "out"))
+        (nc_row,) = to_netcdf_bytes(parsed).collect()
+    finally:
+        parsed.unpersist()
+    parquet_nulls = {
+        (r["var_code"], r["record_idx"])
+        for r in spark.read.parquet(paths["measurements"]).filter("value_num IS NULL").collect()
+    }
+    nc = read_netcdf3(bytes(nc_row["nc_bytes"]))["variables"]
+    netcdf_nans = {
+        (code, i)
+        for code in ("PRESPR01", "TEMPS901", "PSALST01")
+        for i, x in enumerate(nc[code]["data"].tolist())
+        if math.isnan(x)
+    }
+    assert parquet_nulls == netcdf_nans == {("TEMPS901", 2)}
+
+
+def _plan_operators(df) -> list[str]:
+    """Operator names of the formatted plan's numbered list ("(n) Name")."""
+    plan = df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    return re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
+
+
+def test_masking_and_coding_plans_have_no_join_window_or_exchange(spark, ios_corpus):
+    from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
+    from cioos_siooc_data_transform_spark.sources.ios_source import ios_measurements_masked
+
+    parsed = _parse(spark, ios_corpus[0])
+    for df in (ios_measurements_masked(parsed), assign_bodc_codes(parsed)):
+        ops = _plan_operators(df)
+        assert "Generate" in ops
+        assert [op for op in ops if re.search("Join|Window|Exchange", op)] == []
 
 
 def test_cf_sink_leaves_cached_input_cached(spark, ios_corpus, tmp_path):

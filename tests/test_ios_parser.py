@@ -15,6 +15,7 @@ from cioos_siooc_data_transform_spark.sources.fortran_spec import (
 )
 from cioos_siooc_data_transform_spark.sources.ios_format import (
     apply_col_mask,
+    file_id_of,
     parse_dms,
     parse_ios_datetime,
     parse_ios_file_safe,
@@ -99,6 +100,18 @@ def test_error_isolation_instead_of_exit():
     bad = "*A\n*IOS HEADER VERSION 2.0\n*FILE\n    START TIME : BAD 2017/09/10 01:00:42.000\n"
     r2 = parse_ios_file_safe("/tmp/bad.ctd", bad)
     assert r2["error"] is not None and "timezone" in r2["error"]
+
+
+def test_file_id_is_the_same_for_parsed_and_failed_files():
+    assert file_id_of("/data/2017/2017-020-0474.ctd") == "2017-020-0474"
+    assert file_id_of("C:\\data\\a1_0035m.CUR") == "a1_0035m"
+    assert file_id_of("s3://bucket/x.y/cast.v2.ctd") == "cast.v2"
+    assert file_id_of("cast") == "cast"
+    # a failed parse names the file like a good one, whatever the separator
+    bad = "*A\n*IOS HEADER VERSION 2.0\n*FILE\n    START TIME : BAD 2017/09/10 01:00:42.000\n"
+    for path in ("/data/cast.ctd", "D:\\data\\cast.ctd"):
+        r = parse_ios_file_safe(path, bad)
+        assert r["error"] is not None and r["file_id"] == "cast"
 
 
 def test_scalar_helpers():

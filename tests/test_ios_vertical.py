@@ -63,9 +63,8 @@ def test_measurements_long_format(parsed):
 
 def test_bodc_codes(parsed):
     from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
-    from cioos_siooc_data_transform_spark.sources.ios_source import ios_channels
 
-    codes = assign_bodc_codes(ios_channels(parsed))
+    codes = assign_bodc_codes(parsed)
     ctd = {
         r["channel_idx"]: r["var_code"]
         for r in codes.filter(F.col("file_id") == "2017-020-0474").collect()
