@@ -9,39 +9,52 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def validate_channel_bounds(parsed: DataFrame, rel_tol: float = 0.05) -> DataFrame:
-    """One row per (file, channel) with recomputed vs declared bounds and
-    an `out_of_bounds` flag (true when observed values escape the declared
-    envelope by more than rel_tol of its span)."""
-    from cioos_siooc_data_transform_spark.sources.ios_source import (
-        ios_channels,
-        ios_measurements_masked,
-    )
+# tolerated escape from the declared envelope, as a fraction of its span
+REL_TOL = 0.05
 
-    meas = ios_measurements_masked(parsed)
-    observed = meas.groupBy("file_id", "channel_idx").agg(
-        F.min("value_num").alias("obs_min"),
-        F.max("value_num").alias("obs_max"),
-        F.count("value_num").alias("n_values"),
-    )
-    ch = ios_channels(parsed).select(
-        "file_id",
-        "channel_idx",
-        "name",
-        F.col("minimum").try_cast("double").alias("decl_min"),
-        F.col("maximum").try_cast("double").alias("decl_max"),
-    )
-    joined = observed.join(ch, ["file_id", "channel_idx"])
+
+def validate_channel_bounds(parsed: DataFrame) -> DataFrame:
+    """One row per (file, channel) that has at least one data cell, with
+    recomputed vs declared bounds and an `out_of_bounds` flag (true when
+    observed values escape the declared envelope by more than REL_TOL of
+    its span). Each channel's statistics come from its own file's row."""
+    from cioos_siooc_data_transform_spark.sources.ios_source import pad_masked
+
+    def stats(vals: Column, c: Column, i: Column) -> Column:
+        return F.named_struct(
+            F.lit("channel_idx"), i + 1,
+            F.lit("obs_min"), F.array_min(vals),
+            F.lit("obs_max"), F.array_max(vals),
+            F.lit("n_values"), F.size(F.filter(vals, lambda v: v.isNotNull())).cast("long"),
+            F.lit("name"), c["name"],
+            F.lit("decl_min"), c["minimum"].try_cast("double"),
+            F.lit("decl_max"), c["maximum"].try_cast("double"),
+        )
+
+    def channel(c: Column, i: Column) -> Column:
+        vals = F.transform(
+            "records",
+            lambda r: pad_masked(F.get(r, i).try_cast("double"), c["pad"], F.col("pad_default")),
+        )
+        # the one-element array binds the masked values to a lambda
+        # variable, so min, max and count read them instead of recomputing
+        return F.when(
+            F.exists("records", lambda r: F.size(r) > i),
+            F.get(F.transform(F.array(vals), lambda v: stats(v, c, i)), 0),
+        )
+
+    per_channel = F.filter(F.transform("channels", channel), lambda s: s.isNotNull())
+    bounds = parsed.select("file_id", F.inline(per_channel))
     span = F.greatest(F.col("decl_max") - F.col("decl_min"), F.lit(1e-9))
     out = (
-        (F.col("obs_min") < F.col("decl_min") - span * rel_tol)
-        | (F.col("obs_max") > F.col("decl_max") + span * rel_tol)
+        (F.col("obs_min") < F.col("decl_min") - span * REL_TOL)
+        | (F.col("obs_max") > F.col("decl_max") + span * REL_TOL)
     )
-    return joined.withColumn(
+    return bounds.withColumn(
         "out_of_bounds",
         F.when(
             F.col("decl_min").isNotNull() & F.col("decl_max").isNotNull(), out

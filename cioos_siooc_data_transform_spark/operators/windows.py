@@ -53,10 +53,9 @@ def regular_timeseries(
     one of them BEFORE the series start (DuckDB's generate_series(0,-1)
     is empty — the engines genuinely differ here).
 
-    NB: sources/ios_source.py::ios_observation_times implements the same
-    W1 expansion inline with unix_micros arithmetic (its oracle needs
-    the exact integer-microsecond form); a semantic fix here must be
-    mirrored there.
+    NB: sources/ios_source.py::obs_ts is the IOS engine's W1 formula, in
+    integer-microsecond unix_micros arithmetic (its oracle needs that
+    exact form); a semantic fix here must be mirrored there.
     """
     idx = F.posexplode(
         F.when(

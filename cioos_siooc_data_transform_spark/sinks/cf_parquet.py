@@ -85,8 +85,3 @@ def write_cf_dataset(parsed: DataFrame, out_dir: str) -> dict[str, str]:
     ios_catalog(parsed).write.mode("overwrite").parquet(paths["catalog"])
     return paths
 
-
-def reconcile_outputs(catalog_out: DataFrame, source_files: DataFrame) -> DataFrame:
-    """K3: outputs whose source file vanished (LEFT ANTI on file_id) —
-    callers drop these partitions (IDT/ios_data_transform_script.py:114-121)."""
-    return catalog_out.join(source_files.select("file_id"), "file_id", "left_anti")

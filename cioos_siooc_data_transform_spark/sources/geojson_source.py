@@ -2,9 +2,10 @@
 §2.1 S12, §2.3 J1).
 
 The polygon set is tiny (51 named ocean areas) → broadcast dimension; the
-containment test is a vectorized numpy ray-casting pandas_udf (shapely is
-not available in this container; the even-odd rule is the same algorithm
-shapely uses for point-in-polygon).
+containment test is an even-odd ray cast over each ring's vertex arrays,
+evaluated in Catalyst as the join condition (shapely is not available in
+this container; the even-odd rule is the same algorithm shapely uses for
+point-in-polygon).
 
 Deliberate divergence (SURVEY.md §1.3.4): matching area names are sorted
 before concatenation (the reference concatenates in dict-insertion order,
@@ -17,70 +18,45 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 
 def read_geojson_polygons(spark: SparkSession, path: str) -> DataFrame:
-    """GeoJSON FeatureCollection → (feature_idx, name, ring_json) rows;
-    Polygon features only, exterior ring only (IDT/utils.py:53-67)."""
+    """GeoJSON FeatureCollection → (feature_idx, name, xs, ys, bbox) rows,
+    name dash-ified; Polygon features only, exterior ring only
+    (IDT/utils.py:53-67)."""
     with open(path) as f:
         data = json.load(f)
     rows = []
-    idx = 0
     for feature in data["features"]:
         if feature["geometry"]["type"] == "Polygon":
             ring = feature["geometry"]["coordinates"][0]
-            xs = [p[0] for p in ring]
-            ys = [p[1] for p in ring]
-            rows.append(
-                (
-                    idx,
-                    feature["properties"]["name"],
-                    json.dumps(ring),
-                    min(xs), max(xs), min(ys), max(ys),
-                )
-            )
-            idx += 1
+            xs = [float(p[0]) for p in ring]
+            ys = [float(p[1]) for p in ring]
+            name = feature["properties"]["name"].replace(" ", "-")
+            rows.append((len(rows), name, xs, ys, min(xs), max(xs), min(ys), max(ys)))
     return spark.createDataFrame(
         rows,
-        "feature_idx INT, name STRING, ring_json STRING, "
+        "feature_idx INT, name STRING, xs ARRAY<DOUBLE>, ys ARRAY<DOUBLE>, "
         "bbox_min_lon DOUBLE, bbox_max_lon DOUBLE, "
         "bbox_min_lat DOUBLE, bbox_max_lat DOUBLE",
     )
 
 
-@F.pandas_udf(BooleanType())
-def _contains_udf(lon: pd.Series, lat: pd.Series, ring_json: pd.Series) -> pd.Series:
-    """Vectorized even-odd ray casting; one compiled pass per Arrow batch."""
-    import numpy as np
+def _inside_ring(px: Column, py: Column) -> Column:
+    """Even-odd ray cast of (px, py) against the ring (xs, ys): toggle on
+    every edge the rightward ray crosses. The division only runs where
+    the edge straddles py, so its divisor is never zero."""
 
-    out = np.zeros(len(lon), dtype=bool)
-    # group by ring so each polygon's vertex array is built once per batch
-    cache: dict[str, tuple] = {}
-    for rj in ring_json.unique():
-        ring = np.asarray(json.loads(rj), dtype=np.float64)
-        cache[rj] = (ring[:, 0], ring[:, 1])
-    lon_v = lon.to_numpy(dtype=np.float64)
-    lat_v = lat.to_numpy(dtype=np.float64)
-    for rj, (xs, ys) in cache.items():
-        mask = (ring_json == rj).to_numpy()
-        if not mask.any():
-            continue
-        px, py = lon_v[mask], lat_v[mask]
-        inside = np.zeros(px.shape, dtype=bool)
-        n = len(xs)
-        for i in range(n - 1):
-            x1, y1, x2, y2 = xs[i], ys[i], xs[i + 1], ys[i + 1]
-            cond = (y1 > py) != (y2 > py)
-            if not cond.any():
-                continue
-            xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
-            inside ^= cond & (px < xint)
-        out[mask] = inside
-    return pd.Series(out)
+    def toggle(inside: Column, i: Column) -> Column:
+        x1, y1 = F.get("xs", i), F.get("ys", i)
+        x2, y2 = F.get("xs", i + 1), F.get("ys", i + 1)
+        crossing = (y1 > py) != (y2 > py)
+        xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
+        return inside != F.when(crossing, px < xint).otherwise(F.lit(False))
+
+    return F.aggregate(F.sequence(F.lit(0), F.size("xs") - 2), F.lit(False), toggle)
 
 
 GRID_POLYGON_THRESHOLD = 256  # above this, the bbox-BNLJ scan loses
@@ -89,27 +65,22 @@ GRID_POLYGON_THRESHOLD = 256  # above this, the bbox-BNLJ scan loses
 def assign_geo_code(
     points: DataFrame,
     polygons: DataFrame,
-    key_col: str = "file_id",
-    lon_col: str = "longitude",
-    lat_col: str = "latitude",
     num_polygons: int | None = None,
     grid_deg: float = 1.0,
 ) -> DataFrame:
-    """J1: containment join; ALL matching areas concatenated
-    (space-joined, names dash-ified, sorted), no match → 'None'.
+    """J1: one row per input row of ``points`` (file_id, longitude,
+    latitude): file_id and geo_code, ALL containing areas' names
+    (space-joined, sorted), no match → 'None'.
 
-    Python UDFs are not allowed in outer-join ON clauses, so the left join
-    is expressed as candidate-join + conditional collect_list with a final
-    left join back to the point set — identical semantics.
+    The containment test is the join condition of one left join, bbox
+    test first, so the ray cast only runs where the bbox test passes (a
+    point hits ~1-3 of 51 bboxes). Matches are collected per input row,
+    so two rows sharing a file_id each get their own areas. Two
+    candidate-generation strategies (SURVEY.md §4's R-tree ask):
 
-    Two candidate-generation strategies (SURVEY.md §4's R-tree ask):
-
-    - DEFAULT (small catalogs, e.g. the reference's 51 polygons):
-      crossJoin(broadcast) + JVM-side bounding-box filter. The exact
-      ray-casting UDF only evaluates where the bbox test passes (a
-      point hits ~1-3 of 51 bboxes), so the Python crossing shrinks by
-      an order of magnitude. Cost is O(points × polygons) bbox tests —
-      fine while the catalog is dimension-sized.
+    - DEFAULT (small catalogs, e.g. the reference's 51 polygons): a
+      broadcast nested-loop join. Cost is O(points × polygons) bbox
+      tests — fine while the catalog is dimension-sized.
     - GRID (num_polygons > GRID_POLYGON_THRESHOLD): polygons explode to
       every grid cell their bbox overlaps, points map to exactly one
       cell, and candidates come from an EQUI-join on (cell_x, cell_y) —
@@ -122,64 +93,43 @@ def assign_geo_code(
     num_polygons is caller-supplied (polygon catalogs are metadata whose
     size the driver knows) so plan construction stays lazy — no hidden
     count() job."""
+    lon, lat = F.col("longitude"), F.col("latitude")
     in_bbox = (
-        (F.col(lon_col) >= F.col("bbox_min_lon"))
-        & (F.col(lon_col) <= F.col("bbox_max_lon"))
-        & (F.col(lat_col) >= F.col("bbox_min_lat"))
-        & (F.col(lat_col) <= F.col("bbox_max_lat"))
+        (lon >= F.col("bbox_min_lon"))
+        & (lon <= F.col("bbox_max_lon"))
+        & (lat >= F.col("bbox_min_lat"))
+        & (lat <= F.col("bbox_max_lat"))
     )
-    pts = points.select(key_col, lon_col, lat_col)
+    contains = in_bbox & _inside_ring(lon, lat)
+    pts = points.select(
+        "file_id", "longitude", "latitude", F.monotonically_increasing_id().alias("_row")
+    )
     if num_polygons is not None and num_polygons > GRID_POLYGON_THRESHOLD:
-        gridded = (
-            polygons.withColumn(
-                "_cx",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col("bbox_min_lon") / grid_deg).cast("int"),
-                        F.floor(F.col("bbox_max_lon") / grid_deg).cast("int"),
-                    )
-                ),
-            ).withColumn(
-                "_cy",
-                F.explode(
-                    F.sequence(
-                        F.floor(F.col("bbox_min_lat") / grid_deg).cast("int"),
-                        F.floor(F.col("bbox_max_lat") / grid_deg).cast("int"),
-                    )
-                ),
+
+        def cells(lo: str, hi: str) -> Column:
+            return F.explode(
+                F.sequence(
+                    F.floor(F.col(lo) / grid_deg).cast("int"),
+                    F.floor(F.col(hi) / grid_deg).cast("int"),
+                )
             )
+
+        gridded = polygons.withColumn("_cx", cells("bbox_min_lon", "bbox_max_lon")).withColumn(
+            "_cy", cells("bbox_min_lat", "bbox_max_lat")
         )
-        candidates = (
-            pts.withColumn(
-                "_cx", F.floor(F.col(lon_col) / grid_deg).cast("int")
-            )
-            .withColumn("_cy", F.floor(F.col(lat_col) / grid_deg).cast("int"))
-            .join(gridded, ["_cx", "_cy"])
-            .filter(in_bbox)
-            .drop("_cx", "_cy")
-            # Batch locality for the ray-casting UDF: it vectorizes per
-            # DISTINCT ring within an Arrow batch, so clustering
-            # candidates by polygon cuts its per-ring masking passes.
-            # A/B at 40k polygons x 500k points (tools/skew_stress.py
-            # geo_grid corpus, min-of-2): 18.2 s unsorted vs 15.6 s
-            # sorted (~15%); the win grows with rings-per-batch, i.e.
-            # with catalog size. The 51-polygon broadcast path skips
-            # the sort (batches already see few rings).
-            .sortWithinPartitions("feature_idx")
+        cell = (
+            pts.withColumn("_cx", F.floor(lon / grid_deg).cast("int"))
+            .withColumn("_cy", F.floor(lat / grid_deg).cast("int"))
+            .alias("p")
+        )
+        matched = cell.join(
+            gridded.alias("g"),
+            (F.col("p._cx") == F.col("g._cx")) & (F.col("p._cy") == F.col("g._cy")) & contains,
+            "left",
         )
     else:
-        candidates = pts.crossJoin(F.broadcast(polygons)).filter(
-            in_bbox  # JVM-side prune BEFORE any Python crossing
-        )
-    matched = candidates.withColumn(
-        "_inside", _contains_udf(F.col(lon_col), F.col(lat_col), F.col("ring_json"))
-    ).filter(F.col("_inside"))
-    dashed = F.regexp_replace(F.col("name"), " ", "-")
-    agg = matched.groupBy(key_col).agg(
-        F.concat_ws(" ", F.sort_array(F.collect_list(dashed))).alias("geo_code")
-    )
-    return (
-        points.select(key_col)
-        .join(agg, key_col, "left")
-        .withColumn("geo_code", F.coalesce(F.col("geo_code"), F.lit("None")))
-    )
+        matched = pts.join(F.broadcast(polygons), contains, "left")
+    names = F.sort_array(F.collect_list("name"))
+    return matched.groupBy("_row", "file_id").agg(
+        F.when(F.size(names) > 0, F.concat_ws(" ", names)).otherwise(F.lit("None")).alias("geo_code")
+    ).drop("_row")

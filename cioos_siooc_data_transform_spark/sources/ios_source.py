@@ -208,10 +208,17 @@ def ios_measurements_masked(parsed: DataFrame) -> DataFrame:
     return explode_masked(parsed.select("file_id", "records", "channels", "pad_default"))
 
 
+def obs_ts(start_ts: Column, dt_s: Column, record_idx: Column) -> Column:
+    """W1: the regular time series' instant start + i·dt, in whole
+    microseconds (IDT/ObsFile.py:455-456, 507-508)."""
+    return F.timestamp_micros(
+        F.unix_micros(start_ts) + (record_idx * dt_s * 1_000_000).cast("long")
+    )
+
+
 def ios_observation_times(parsed: DataFrame) -> DataFrame:
-    """W1: regular time-series obs_ts = start + i·dt per file, generated
-    executor-side with sequence + posexplode (IDT/ObsFile.py:455-456,
-    507-508)."""
+    """W1: obs_ts for records 0 .. n_records-1 of each file, generated
+    executor-side with sequence + posexplode."""
     base = parsed.select("file_id", "start_ts", "n_records", "time_increment_s").filter(
         F.col("start_ts").isNotNull()
         & F.col("time_increment_s").isNotNull()
@@ -219,10 +226,7 @@ def ios_observation_times(parsed: DataFrame) -> DataFrame:
     )
     idx = F.posexplode(F.sequence(F.lit(0), F.col("n_records") - 1))
     exploded = base.select("*", idx.alias("_p", "record_idx"))
-    obs = F.timestamp_micros(
-        F.unix_micros(F.col("start_ts"))
-        + (F.col("record_idx") * F.col("time_increment_s") * 1_000_000).cast("long")
-    )
+    obs = obs_ts(F.col("start_ts"), F.col("time_increment_s"), F.col("record_idx"))
     return exploded.select("file_id", "record_idx", obs.alias("obs_ts"))
 
 

@@ -1,11 +1,13 @@
 """The IOS→CF job over a seeded corpus that the tests write themselves
 (perfbench/corpus.py), so they run on any host: convert with its geo-code
-and NetCDF steps, per-file coding of duplicate basenames, agreement of the
-two sinks' pad masking, join-free plans, the CF Parquet sink's cache and
-overwrite contracts, and the incremental stream's exactly-once pickup."""
+and NetCDF steps, per-file coding, validation, views and geo-codes of
+duplicate basenames, agreement of the two sinks' pad masking, join-free
+plans, the CF Parquet sink's cache and overwrite contracts, and the
+incremental stream's exactly-once pickup."""
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import re
@@ -151,14 +153,129 @@ def _plan_operators(df) -> list[str]:
 
 
 def test_masking_and_coding_plans_have_no_join_window_or_exchange(spark, ios_corpus):
+    """Per-file operators are projections of each file's own row; geo-coding
+    is one join whose containment test runs in the JVM."""
     from cioos_siooc_data_transform_spark.operators.bodc import assign_bodc_codes
-    from cioos_siooc_data_transform_spark.sources.ios_source import ios_measurements_masked
+    from cioos_siooc_data_transform_spark.operators.validation import validate_channel_bounds
+    from cioos_siooc_data_transform_spark.operators.views import (
+        mooring_timeseries_view,
+        wide_profile_view,
+    )
+    from cioos_siooc_data_transform_spark.sources.geojson_source import (
+        assign_geo_code,
+        read_geojson_polygons,
+    )
+    from cioos_siooc_data_transform_spark.sources.ios_source import (
+        ios_catalog,
+        ios_measurements_masked,
+    )
 
     parsed = _parse(spark, ios_corpus[0])
-    for df in (ios_measurements_masked(parsed), assign_bodc_codes(parsed)):
+    per_file = (
+        ios_measurements_masked(parsed),
+        assign_bodc_codes(parsed),
+        validate_channel_bounds(parsed),
+        wide_profile_view(parsed),
+        mooring_timeseries_view(parsed),
+    )
+    for df in per_file:
         ops = _plan_operators(df)
         assert "Generate" in ops
-        assert [op for op in ops if re.search("Join|Window|Exchange", op)] == []
+        assert [op for op in ops if re.search("Join|Aggregate|Window|Exchange", op)] == []
+    polys = read_geojson_polygons(spark, ios_corpus[1])
+    for num_polygons in (None, 100000):
+        ops = _plan_operators(assign_geo_code(ios_catalog(parsed), polys, num_polygons))
+        assert len([op for op in ops if op.endswith("Join")]) == 1
+        assert [op for op in ops if "EvalPython" in op] == []
+
+
+def test_geo_code_equals_a_python_ray_cast(spark, ios_corpus):
+    """Both candidate paths give each point exactly the areas that a plain
+    even-odd ray cast over the GeoJSON rings finds."""
+    import random
+
+    from cioos_siooc_data_transform_spark.sources.geojson_source import (
+        assign_geo_code,
+        read_geojson_polygons,
+    )
+
+    geojson = ios_corpus[1]
+    with open(geojson) as f:
+        areas = [
+            (feat["properties"]["name"].replace(" ", "-"), feat["geometry"]["coordinates"][0])
+            for feat in json.load(f)["features"]
+        ]
+
+    def inside(x, y, ring):
+        hit = False
+        for (x1, y1), (x2, y2) in zip(ring, ring[1:]):
+            if (y1 > y) != (y2 > y) and x < (x2 - x1) * (y - y1) / (y2 - y1) + x1:
+                hit = not hit
+        return hit
+
+    lons = [x for _, ring in areas for x, _ in ring]
+    lats = [y for _, ring in areas for _, y in ring]
+    rng = random.Random(SEED)
+    points = [
+        (str(i), rng.uniform(min(lons), max(lons)), rng.uniform(min(lats), max(lats)))
+        for i in range(2000)
+    ]
+    expected = {
+        pid: " ".join(sorted(name for name, ring in areas if inside(x, y, ring))) or "None"
+        for pid, x, y in points
+    }
+    assert "None" in expected.values() and any(" " in v for v in expected.values())
+    df = spark.createDataFrame(points, "file_id STRING, longitude DOUBLE, latitude DOUBLE")
+    polys = read_geojson_polygons(spark, geojson)
+    for num_polygons in (None, 100000):
+        assert dict(assign_geo_code(df, polys, num_polygons).collect()) == expected
+
+
+def test_per_file_operators_keep_duplicate_basenames_apart(spark, ios_corpus, tmp_path):
+    """Two different files saved under one basename in different
+    directories share a file_id: bounds, wide rows and geo codes of the
+    pair are those of each file run alone under that name."""
+    from cioos_siooc_data_transform_spark.operators.validation import validate_channel_bounds
+    from cioos_siooc_data_transform_spark.operators.views import wide_profile_view
+    from cioos_siooc_data_transform_spark.sources.geojson_source import (
+        assign_geo_code,
+        read_geojson_polygons,
+    )
+    from cioos_siooc_data_transform_spark.sources.ios_source import ios_catalog
+
+    in_dir, _, manifest = ios_corpus
+    good = sorted((f for f in manifest["files"] if not f["corrupt"]), key=lambda f: f["n_records"])
+    first, second = (os.path.join(in_dir, f["relpath"]) for f in good[:2])
+    name = os.path.basename(first)
+    for root, d, src in (("one", "a", first), ("two", "b", second), ("both", "a", first), ("both", "b", second)):
+        (tmp_path / root / d).mkdir(parents=True, exist_ok=True)
+        shutil.copy(src, tmp_path / root / d / name)
+    # two areas that cover the globe: every file lies in both
+    world = [[[-180.0, -90.0], [180.0, -90.0], [180.0, 90.0], [-180.0, 90.0], [-180.0, -90.0]]]
+    geojson = tmp_path / "world.geojson"
+    geojson.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"name": n}, "geometry": {"type": "Polygon", "coordinates": world}}
+        for n in ("World A", "World B")
+    ]}))
+    polys = read_geojson_polygons(spark, str(geojson))
+    operators = {
+        "bounds": validate_channel_bounds,
+        "wide": wide_profile_view,
+        "geo": lambda parsed: assign_geo_code(ios_catalog(parsed), polys),
+    }
+    parsed = {root: _parse(spark, str(tmp_path / root)).cache() for root in ("one", "two", "both")}
+    try:
+        assert parsed["both"].select("file_id").distinct().count() == 1
+        for label, op in operators.items():
+            both = op(parsed["both"])
+            alone = op(parsed["one"]).unionAll(op(parsed["two"]))
+            assert both.count() > 0, label
+            assert both.exceptAll(alone).count() == alone.exceptAll(both).count() == 0, label
+        geo = {r["geo_code"] for r in operators["geo"](parsed["both"]).collect()}
+        assert geo == {"World-A World-B"}
+    finally:
+        for df in parsed.values():
+            df.unpersist()
 
 
 def test_cf_sink_leaves_cached_input_cached(spark, ios_corpus, tmp_path):

@@ -848,10 +848,8 @@ def _gen_geo() -> None:
     """Synthetic polygon catalog + point set for the grid-path case
     (round-6 verdict item 6: the grid equi-join is threshold-gated but
     was benched only at 51 polygons). N_POLYGONS random rectangles (as
-    5-point rings, so the ray-casting UDF runs the real code path) over
+    5-point rings, so the ray cast runs the real code path) over
     a [-180,180]x[-60,60] world, 500k points."""
-    import json as _json
-
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -862,24 +860,16 @@ def _gen_geo() -> None:
     y0 = rng.uniform(-60.0, 58.0, N_POLYGONS)
     w = rng.uniform(0.2, 2.0, N_POLYGONS)
     h = rng.uniform(0.2, 2.0, N_POLYGONS)
-    rings = [
-        _json.dumps(
-            [
-                [float(a), float(b)],
-                [float(a + dw), float(b)],
-                [float(a + dw), float(b + dh)],
-                [float(a), float(b + dh)],
-                [float(a), float(b)],
-            ]
-        )
-        for a, b, dw, dh in zip(x0, y0, w, h)
-    ]
+    # 5-vertex rectangle rings, as read_geojson_polygons emits them
+    xs = [[a, a + dw, a + dw, a, a] for a, dw in zip(x0.tolist(), w.tolist())]
+    ys = [[b, b, b + dh, b + dh, b] for b, dh in zip(y0.tolist(), h.tolist())]
     pq.write_table(
         pa.table(
             {
                 "feature_idx": pa.array(range(N_POLYGONS), pa.int32()),
-                "name": [f"area {i}" for i in range(N_POLYGONS)],
-                "ring_json": rings,
+                "name": [f"area-{i}" for i in range(N_POLYGONS)],
+                "xs": pa.array(xs, pa.list_(pa.float64())),
+                "ys": pa.array(ys, pa.list_(pa.float64())),
                 "bbox_min_lon": x0,
                 "bbox_max_lon": x0 + w,
                 "bbox_min_lat": y0,
