@@ -1,8 +1,8 @@
 """BODC code assignment (SURVEY.md §2.3 J3 + §2.5 W2).
 
 Reimplements the contract of IDT/OceanNcVar.py:160-258 (__get_bodc_code)
-and IDT/write_ctd_ncfile.py:92-148 as a constant-folded CASE ladder
-applied to each file's own channel array:
+and IDT/write_ctd_ncfile.py:92-148 as a CASE ladder applied to each
+file's own channel array:
 
 - each routed channel maps (var_type × name keywords × units keywords) →
   (base code, numeric-suffix width, canonical units, CF names);
@@ -17,6 +17,11 @@ Reference bugs deliberately fixed (SURVEY.md §1.3.7): longitude's
 standard_name is 'longitude' (reference sets 'latitude',
 IDT/OceanNcVar.py:63); declared min/max are carried unswapped (reference
 swaps them, IDT/OceanNcVar.py:17-18).
+
+The ladders are SQL text built from BODC_RULES and the routing table
+(operators/routing.py) with plain string functions; the whole per-file
+expression reaches the JVM in one ``F.expr``, where a Column tree would
+cost a py4j round trip per node (1,705 per call).
 """
 
 from __future__ import annotations
@@ -24,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cioos_siooc_data_transform_spark.operators.routing import route_channels
+from cioos_siooc_data_transform_spark.operators.routing import (
+    _contains_any,
+    routing_sql,
+    sql_ident,
+    sql_literal,
+)
 
 # (var_type, name_includes, name_excludes, units_includes,
 #  base_code, suffix_width, canonical_units, standard_name, long_name)
@@ -73,107 +83,71 @@ BODC_RULES: list[tuple] = [
 ]
 
 
-# single definition shared with channel routing — a containment-matching
-# fix must apply to BOTH paths or routing and BODC coding diverge
-from cioos_siooc_data_transform_spark.operators.routing import _contains_any  # noqa: E402
+def _named_struct(fields: dict[str, str]) -> str:
+    """SQL named_struct of field name → SQL expression."""
+    return "named_struct(" + ", ".join(f"{sql_literal(k)}, {v}" for k, v in fields.items()) + ")"
 
 
-def bodc_base_struct(var_type: Column, name: Column, units: Column) -> Column:
-    """CASE ladder → struct(base, width, units, std_name, long_name);
-    NULL when no rule matches (reference raises; we drop + can audit).
-    Built with named_struct: inside higher-order-function lambdas,
-    F.struct of aliased fields loses the field names."""
-    expr = F.lit(None).cast(
-        "struct<base:string,width:int,units:string,std_name:string,long_name:string>"
-    )
-    for vt, ninc, nexc, uinc, base, width, cu, std, lng in reversed(BODC_RULES):
-        cond = var_type == vt
+def _base_sql(var_type: str, name: str, units: str) -> str:
+    """SQL CASE ladder over three string expressions → struct(base, width,
+    units, std_name, long_name); NULL when no rule matches (reference
+    raises; we drop + can audit)."""
+    whens = []
+    for vt, ninc, nexc, uinc, base, width, cu, std, lng in BODC_RULES:
+        cond = [f"{var_type} = {sql_literal(vt)}"]
         if ninc:
-            cond = cond & _contains_any(name, ninc)
+            cond.append(_contains_any(name, ninc))
         if nexc:
-            cond = cond & ~_contains_any(name, nexc)
+            cond.append(f"NOT {_contains_any(name, nexc)}")
         if uinc:
-            cond = cond & _contains_any(units, uinc)
-        expr = F.when(
-            cond,
-            F.named_struct(
-                F.lit("base"), F.lit(base),
-                F.lit("width"), F.lit(width),
-                F.lit("units"), F.lit(cu),
-                F.lit("std_name"), F.lit(std),
-                F.lit("long_name"), F.lit(lng),
-            ),
-        ).otherwise(expr)
-    return expr
+            cond.append(_contains_any(units, uinc))
+        struct = _named_struct({
+            "base": sql_literal(base), "width": str(width), "units": sql_literal(cu),
+            "std_name": sql_literal(std), "long_name": sql_literal(lng),
+        })
+        whens.append(f"WHEN {' AND '.join(cond)} THEN {struct}")
+    null = "CAST(NULL AS struct<base:string,width:int,units:string,std_name:string,long_name:string>)"
+    return f"CASE {' '.join(whens)} ELSE {null} END"
 
 
-def bodc_codes(channels: Column) -> Column:
-    """A file's channel array → an array of the same length holding, per
-    channel, struct(channel_idx, channel_name, raw_units, var_type,
-    var_code, units, standard_name, long_name, declared_min, declared_max,
-    pad) — or NULL where routing drops the channel or no rule maps it."""
+def bodc_codes(channels: str) -> Column:
+    """The array column ``channels`` of a file → an array of the same
+    length holding, per channel, struct(channel_idx, channel_name,
+    raw_units, var_type, var_code, units, standard_name, long_name,
+    declared_min, declared_max, pad) — or NULL where routing drops the
+    channel or no rule maps it."""
     # route first, in a transform of its own: the BODC ladder reads
     # var_type in every rule, and would otherwise repeat the routing ladder
-    mapped = F.transform(
-        channels,
-        lambda c: F.named_struct(
-            F.lit("c"), c,
-            F.lit("var_type"), route_channels(c["name"]),
-        ),
+    routed = _named_struct({"c": "c", "var_type": routing_sql("c.name")})
+    base = _base_sql("m.var_type", "m.c.name", "m.c.units")
+    mapped = _named_struct({"c": "m.c", "var_type": "m.var_type", "b": base})
+    mapped = f"transform(transform({sql_ident(channels)}, c -> {routed}), m -> {mapped})"
+    # suffix n: this channel's occurrence among the file's channels with
+    # the same base, counted up to and including it
+    n = "size(filter(slice(ms, 1, i + 1), x -> x.b.base = m.b.base))"
+    code = (
+        f"CASE WHEN m.b.width = 0 THEN m.b.base"
+        f" WHEN m.b.width = 1 THEN format_string('%s%01d', m.b.base, {n})"
+        f" ELSE format_string('%s%02d', m.b.base, {n}) END"
     )
-    mapped = F.transform(
-        mapped,
-        lambda m: F.named_struct(
-            F.lit("c"), m["c"],
-            F.lit("var_type"), m["var_type"],
-            F.lit("b"), bodc_base_struct(m["var_type"], m["c"]["name"], m["c"]["units"]),
-        ),
-    )
-
-    def coded(file_mapped: Column, m: Column, i: Column) -> Column:
-        b, c = m["b"], m["c"]
-        # suffix n: this channel's occurrence among the file's channels
-        # with the same base, counted up to and including it
-        earlier = F.slice(file_mapped, 1, i + 1)
-        n = F.size(F.filter(earlier, lambda x: x["b"]["base"] == b["base"]))
-        code = (
-            F.when(b["width"] == 0, b["base"])
-            .when(b["width"] == 1, F.format_string("%s%01d", b["base"], n))
-            .otherwise(F.format_string("%s%02d", b["base"], n))
-        )
-        return F.when(
-            b.isNotNull(),
-            F.named_struct(
-                F.lit("channel_idx"), c["channel_idx"],
-                F.lit("channel_name"), c["name"],
-                F.lit("raw_units"), c["units"],
-                F.lit("var_type"), m["var_type"],
-                F.lit("var_code"), code,
-                F.lit("units"), b["units"],
-                F.lit("standard_name"), b["std_name"],
-                F.lit("long_name"), b["long_name"],
-                F.lit("declared_min"), c["minimum"],
-                F.lit("declared_max"), c["maximum"],
-                F.lit("pad"), c["pad"],
-            ),
-        )
-
+    coded = _named_struct({
+        "channel_idx": "m.c.channel_idx", "channel_name": "m.c.name",
+        "raw_units": "m.c.units", "var_type": "m.var_type", "var_code": code,
+        "units": "m.b.units", "standard_name": "m.b.std_name",
+        "long_name": "m.b.long_name", "declared_min": "m.c.minimum",
+        "declared_max": "m.c.maximum", "pad": "m.c.pad",
+    })
+    coded = f"CASE WHEN m.b IS NOT NULL THEN {coded} END"
     # wrapping `mapped` in a one-element array binds it to a lambda
     # variable, so the numbering reads the evaluated array instead of
     # re-running both ladders for every channel (coding 21,000 files on
     # 2 cores: 5.2 s → 2.2 s)
-    return F.get(
-        F.transform(
-            F.array(mapped),
-            lambda ms: F.transform(ms, lambda m, i: coded(ms, m, i)),
-        ),
-        0,
-    )
+    return F.expr(f"get(transform(array({mapped}), ms -> transform(ms, (m, i) -> {coded})), 0)")
 
 
 def assign_bodc_codes(parsed: DataFrame) -> DataFrame:
     """Parsed files → one row per routed + BODC-coded channel: file_id
     and the fields of bodc_codes; unrouted/unmappable channels are
     dropped."""
-    coded = F.filter(bodc_codes(F.col("channels")), lambda v: v.isNotNull())
+    coded = F.filter(bodc_codes("channels"), lambda v: v.isNotNull())
     return parsed.select("file_id", F.inline(coded))

@@ -34,7 +34,7 @@ def wide_profile_view(parsed: DataFrame) -> DataFrame:
     scalars = ["latitude", "longitude", "start_ts", "station", "event_number"]
     coded = parsed.select(
         "file_id", "records", "pad_default", *scalars,
-        F.transform(bodc_codes(F.col("channels")), lambda c: c["var_code"]).alias("_codes"),
+        F.transform(bodc_codes("channels"), lambda c: c["var_code"]).alias("_codes"),
         F.transform("channels", lambda c: c["pad"]).alias("_pads"),
     )
     # per file, below the generator: each view code's channel position

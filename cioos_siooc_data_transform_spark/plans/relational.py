@@ -143,7 +143,7 @@ _ROUTING_RULES = [
 def case_when_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
     routed = part.select(
-        "p_partkey", route_channels(F.col("p_name"), _ROUTING_RULES).alias("var_type")
+        "p_partkey", route_channels("p_name", _ROUTING_RULES).alias("var_type")
     )
     return routed.filter(F.col("var_type").isNotNull())
 

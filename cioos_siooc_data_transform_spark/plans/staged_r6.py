@@ -2256,8 +2256,9 @@ def gsw_pressure_from_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-compressed ANN: 64-dim vectors -> 8 subspaces x 4-entry
-    codebooks (here the first 4 corpus vectors, collected once — a
-    4-row bounded driver fetch standing in for the KMeans training the
+    codebooks (here the first 4 corpus vectors, collected once with
+    their vec_id and put in vec_id order in Python — one 4-row bounded
+    driver fetch, one job, standing in for the KMeans training the
     operator default uses), corpus encoded to 8 codes/vector
     (row-local argmin codegen), each of 3 probe queries builds its
     8x4 LUT once and every corpus code row is scored with 8 lookups +
@@ -2270,11 +2271,12 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    seeds = (
+    # sorted here, not by an orderBy: a global sort adds a sampling job
+    seeds = sorted(
         emb.filter(F.col("vec_id") < 4)
-        .orderBy("vec_id")
-        .select(F.col("embedding").cast("array<double>").alias("v"))
-        .collect()
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .collect(),
+        key=lambda row: row.vec_id,
     )
     books = [
         [[float(x) for x in row.v[j * 8 : j * 8 + 8]] for row in seeds]

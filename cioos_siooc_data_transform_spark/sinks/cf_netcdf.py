@@ -41,7 +41,7 @@ def to_netcdf_bytes(parsed: DataFrame) -> DataFrame:
         return c.withField("values", masked)
 
     cf_vars = F.filter(
-        F.transform(bodc_codes(F.col("channels")), with_values), lambda v: v.isNotNull()
+        F.transform(bodc_codes("channels"), with_values), lambda v: v.isNotNull()
     )
     enriched = parsed.select(
         "file_id", "agency", "mission", "header_sections", "latitude", "longitude",

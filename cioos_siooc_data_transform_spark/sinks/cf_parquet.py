@@ -18,6 +18,13 @@ being rewritten, and leaves the session conf alone — this subsumes the
 reference's orphan-delete (K3) and failed-write cleanup (K4) shell hacks;
 Spark's task commit protocol guarantees no partial files.
 
+The four writes are submitted together from a thread pool, so their
+small jobs overlap instead of queueing behind each other. Each write
+runs under a copy of the caller's local properties and session tags
+(``pyspark.util.inheritable_thread_target``), so a caller's job group
+covers every write job. The sink waits for all four writes and then
+raises the first error.
+
 Scale notes: partitionBy(year) keeps files clustered for time-range scans;
 within a partition, writers are sized by the upstream shuffle — repartition
 by (year) with AQE coalescing avoids small-file explosions at 100 TB.
@@ -26,9 +33,11 @@ by (year) with AQE coalescing avoids small-file explosions at 100 TB.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 
 def write_cf_dataset(parsed: DataFrame, out_dir: str) -> dict[str, str]:
@@ -54,7 +63,7 @@ def write_cf_dataset(parsed: DataFrame, out_dir: str) -> dict[str, str]:
     files = parsed.select(
         "file_id", "records", "channels", "pad_default",
         F.year("start_ts").alias("year"),
-        F.transform(bodc_codes(F.col("channels")), lambda c: c["var_code"]).alias("_codes"),
+        F.transform(bodc_codes("channels"), lambda c: c["var_code"]).alias("_codes"),
     )
     cf = (
         explode_masked(files)
@@ -69,19 +78,28 @@ def write_cf_dataset(parsed: DataFrame, out_dir: str) -> dict[str, str]:
         "headers": os.path.join(out_dir, "headers"),
         "catalog": os.path.join(out_dir, "catalog"),
     }
-    (
-        cf.repartition("year")
+    writers = {
+        "measurements": cf.repartition("year")
         .sortWithinPartitions("file_id", "record_idx")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year")
-        .parquet(paths["measurements"])
-    )
-    assign_bodc_codes(parsed).write.mode("overwrite").option("compression", "zstd").parquet(
-        paths["variables"]
-    )
-    ios_header_json(parsed).write.mode("overwrite").parquet(paths["headers"])
-    ios_catalog(parsed).write.mode("overwrite").parquet(paths["catalog"])
+        .partitionBy("year"),
+        "variables": assign_bodc_codes(parsed).write.mode("overwrite").option("compression", "zstd"),
+        "headers": ios_header_json(parsed).write.mode("overwrite"),
+        "catalog": ios_catalog(parsed).write.mode("overwrite"),
+    }
+    # submitted together, measurements (the longest) first; wrapping each
+    # write on its own gives each thread its own copy of the caller's
+    # local properties (concurrent SQL executions each set theirs)
+    spark = parsed.sparkSession
+    with ThreadPoolExecutor(max_workers=len(writers)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(writer.parquet), paths[name])
+            for name, writer in writers.items()
+        ]
+    # leaving the pool waited for every write; raise the first error
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        raise errors[0]
     return paths
-

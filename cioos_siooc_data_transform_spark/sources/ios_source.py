@@ -178,11 +178,14 @@ def ios_measurements(parsed: DataFrame) -> DataFrame:
 
 def pad_masked(value_num: Column, channel_pad: Column, file_pad: Column) -> Column:
     """P4: NULL where the value equals its pad — the channel's pad, else
-    the file's PAD (J5 coalesce chain, IDT/write_ctd_ncfile.py:93-101)."""
-    pad = F.coalesce(
-        F.nullif(F.trim(channel_pad), F.lit("")),
-        F.nullif(F.trim(file_pad), F.lit("")),
-    ).try_cast("double")
+    the file's PAD (J5 coalesce chain, IDT/write_ctd_ncfile.py:93-101).
+    A blank pad, bare or quoted (the reference's ``' '`` no-pad
+    sentinel), is no pad."""
+
+    def given(p: Column) -> Column:
+        return F.when(~F.trim(p).rlike(r"^('\s*')?$"), F.trim(p))
+
+    pad = F.coalesce(given(channel_pad), given(file_pad)).try_cast("double")
     return F.when(pad.isNotNull() & (value_num == pad), F.lit(None)).otherwise(value_num)
 
 

@@ -144,6 +144,33 @@ def test_parquet_and_netcdf_mask_the_same_cells(spark, tmp_path):
     assert parquet_nulls == netcdf_nans == {("TEMPS901", 2)}
 
 
+def test_quoted_blank_channel_pad_falls_back_to_the_file_pad(spark, tmp_path):
+    """A CHANNEL DETAIL pad written ' ' (the reference's no-pad sentinel)
+    is no channel pad: the file's PAD masks that channel's cells."""
+    from cioos_siooc_data_transform_spark.operators.views import mooring_timeseries_view
+    from cioos_siooc_data_transform_spark.plans.ios_queries import SAMPLE_MOORING
+    from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
+
+    text = SAMPLE_MOORING.replace("01:00:00   6.5000", "01:00:00 -99.0000")
+    assert text != SAMPLE_MOORING
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "m1_2024.ctd").write_text(text)
+    parsed = _parse(spark, str(in_dir)).cache()
+    try:
+        assert [c["pad"] for c in parsed.first()["channels"]][2:] == ["' '", "' '"]
+        temps = {
+            r["record_idx"]: r["value_num"]
+            for r in mooring_timeseries_view(parsed).filter("channel_idx = 3").collect()
+        }
+        paths = write_cf_dataset(parsed, str(tmp_path / "out"))
+    finally:
+        parsed.unpersist()
+    assert temps == {0: 6.1, 1: None, 2: 7.2, 3: 7.9}
+    cells = spark.read.parquet(paths["measurements"]).filter("var_code = 'TEMPST01'")
+    assert {r["record_idx"]: r["value_num"] for r in cells.collect()} == temps
+
+
 def _plan_operators(df) -> list[str]:
     """Operator names of the formatted plan's numbered list ("(n) Name")."""
     plan = df._jdf.queryExecution().explainString(
@@ -312,6 +339,65 @@ def test_cf_sink_overwrites_one_year_and_keeps_the_others(spark, ios_corpus, tmp
     after = dict(spark.read.parquet(paths["measurements"]).groupBy("year").count().collect())
     assert after == per_year  # the rewritten year replaced, not appended; others kept
     assert spark.conf.get(conf_key) == conf_before
+
+
+def test_cf_sink_writes_run_in_the_callers_job_group(spark, ios_corpus, tmp_path):
+    """The four writes run on pool threads, and each inherits the
+    caller's job group: the group holds every write job (5, as many as
+    when the writes ran one after another on the caller's thread), and
+    no job of the sink runs outside it."""
+    import time
+
+    from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    parsed = _parse(spark, ios_corpus[0]).cache()
+    try:
+        parsed.count()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("cf-sink-writes", "write_cf_dataset")
+        try:
+            write_cf_dataset(parsed, str(tmp_path / "out"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    finally:
+        parsed.unpersist()
+    deadline = time.monotonic() + 10  # job events reach the tracker asynchronously
+    while len(tracker.getJobIdsForGroup("cf-sink-writes")) < 5 and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert len(tracker.getJobIdsForGroup("cf-sink-writes")) == 5
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_cf_sink_raises_a_failed_write_after_the_others_finish(
+    spark, ios_corpus, tmp_path, monkeypatch
+):
+    from pyspark.sql import functions as F
+
+    from cioos_siooc_data_transform_spark.sinks.cf_parquet import write_cf_dataset
+    from cioos_siooc_data_transform_spark.sources import ios_source
+
+    def failing_headers(parsed):
+        fail = F.raise_error(F.concat(F.lit("no header for "), F.col("file_id")))
+        return parsed.select("file_id", fail.cast("string").alias("header_json"))
+
+    monkeypatch.setattr(ios_source, "ios_header_json", failing_headers)
+    out = tmp_path / "out"
+    parsed = _parse(spark, ios_corpus[0]).cache()
+    try:
+        parsed.count()
+        with pytest.raises(Exception, match="no header for"):
+            write_cf_dataset(parsed, str(out))
+    finally:
+        parsed.unpersist()
+    # the other three writes had committed when the error was raised
+    for name in ("variables", "catalog"):
+        assert (out / name / "_SUCCESS").exists(), name
+    rows = spark.read.parquet(str(out / "measurements")).count()
+    assert rows == corpus.expected_counts(ios_corpus[2])["measurement_rows"]
+    assert not (out / "headers" / "_SUCCESS").exists()
 
 
 def test_incremental_drains_pick_up_each_file_once(spark, tmp_path):

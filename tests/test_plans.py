@@ -299,7 +299,8 @@ _EAGER_BY_DESIGN = {
     # whichever ios_* query warms it first, so the whole family is
     # covered by the prefix check below.
     # Bounded driver fetch pinned in the docstring: 4 seed vectors for
-    # the deterministic PQ codebook (a 4-row collect, not a scan).
+    # the deterministic PQ codebook (one 4-row collect, put in vec_id
+    # order in Python; no sort job, not a scan).
     "similarity_pq_adc_topk",
     "similarity_ivf_pq_topk",
     # Write-once derived partsupp parquet (sources/partsupp.py) —
