@@ -18,6 +18,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: spark.sql.sources.parallelPartitionDiscovery.threshold: Int.MaxValue, so
+#: every file listing stays on the driver (see get_spark).
+DRIVER_LISTING_THRESHOLD = 2**31 - 1
+
 
 def get_spark(app_name: str = "cioos-siooc-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -49,6 +53,22 @@ def get_spark(app_name: str = "cioos-siooc-spark", shuffle_partitions: int | Non
         .config(
             "spark.sql.files.openCostInBytes",
             os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(1024 * 1024)),
+        )
+        # File listing never becomes a Spark job. Past the threshold
+        # (default 32 paths) InMemoryFileIndex lists in a job with one
+        # task per path; on local[N] those tasks run on the driver JVM's
+        # own threads against the same filesystem, so the job adds one
+        # scheduled task per path and no parallel I/O. The stream source
+        # re-lists its last committed batch on every restart, so a
+        # nightly drain ran a 200-task listing job before its first
+        # batch. Measured on local[2], warm: that drain 3.6-4.4 ->
+        # 1.8-2.1 s and 3 jobs -> 2; binaryFile.load of 5,000 paths
+        # 36.9 -> 1.2 s; discover_files over 40 directories 679 -> 48 ms.
+        # On a cluster against an object store, restore 32 so large
+        # listings fan out to executors (SCALE.md).
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DRIVER_LISTING_THRESHOLD),
         )
         .config("spark.ui.enabled", "false")
         # Round-13 (guide §1/§7.3: plan-construction time is driver-side

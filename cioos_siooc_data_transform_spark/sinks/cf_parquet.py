@@ -16,7 +16,9 @@ Idempotency: the measurements writer's mode=overwrite with its own
 partitionOverwriteMode=dynamic option replaces exactly the year partitions
 being rewritten, and leaves the session conf alone — this subsumes the
 reference's orphan-delete (K3) and failed-write cleanup (K4) shell hacks;
-Spark's task commit protocol guarantees no partial files.
+Spark's task commit protocol guarantees no partial files. Like the other
+three outputs, measurements/ gets its _SUCCESS marker only once its
+write has committed.
 
 The four writes are submitted together from a thread pool, so their
 small jobs overlap instead of queueing behind each other. Each write
@@ -78,25 +80,40 @@ def write_cf_dataset(parsed: DataFrame, out_dir: str) -> dict[str, str]:
         "headers": os.path.join(out_dir, "headers"),
         "catalog": os.path.join(out_dir, "catalog"),
     }
-    writers = {
-        "measurements": cf.repartition("year")
+    spark = parsed.sparkSession
+    measurements = (
+        cf.repartition("year")
         .sortWithinPartitions("file_id", "record_idx")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year"),
-        "variables": assign_bodc_codes(parsed).write.mode("overwrite").option("compression", "zstd"),
-        "headers": ios_header_json(parsed).write.mode("overwrite"),
-        "catalog": ios_catalog(parsed).write.mode("overwrite"),
+        .partitionBy("year")
+    )
+
+    def write_measurements(path: str) -> None:
+        measurements.parquet(path)
+        # a dynamic overwrite commits through a staging directory and
+        # leaves no _SUCCESS; mark the finished write as the others are
+        marker = spark._jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
+        fs = marker.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        fs.create(marker, True).close()
+
+    writes = {
+        "measurements": write_measurements,
+        "variables": assign_bodc_codes(parsed)
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .parquet,
+        "headers": ios_header_json(parsed).write.mode("overwrite").parquet,
+        "catalog": ios_catalog(parsed).write.mode("overwrite").parquet,
     }
     # submitted together, measurements (the longest) first; wrapping each
     # write on its own gives each thread its own copy of the caller's
     # local properties (concurrent SQL executions each set theirs)
-    spark = parsed.sparkSession
-    with ThreadPoolExecutor(max_workers=len(writers)) as pool:
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
         futures = [
-            pool.submit(inheritable_thread_target(spark)(writer.parquet), paths[name])
-            for name, writer in writers.items()
+            pool.submit(inheritable_thread_target(spark)(write), paths[name])
+            for name, write in writes.items()
         ]
     # leaving the pool waited for every write; raise the first error
     errors = [e for e in (f.exception() for f in futures) if e is not None]

@@ -91,9 +91,10 @@ PARSED_SCHEMA = T.StructType(
 def discover_files(spark: SparkSession, root: str, extensions: list[str]) -> DataFrame:
     """S1: recursive, case-insensitive extension discovery.
 
-    binaryFile + recursiveFileLookup parallelizes the listing; the
-    case-insensitive match is a post-filter on the path (the reference
-    uses '*.[Cc][Tt][Dd]'-style globs, IDT/ios_data_transform_script.py:24-38).
+    binaryFile + recursiveFileLookup lists the tree (on the driver, see
+    session.get_spark); the case-insensitive match is a post-filter on
+    the path (the reference uses '*.[Cc][Tt][Dd]'-style globs,
+    IDT/ios_data_transform_script.py:24-38).
     """
     df = (
         spark.read.format("binaryFile")

@@ -2,8 +2,9 @@
 (perfbench/corpus.py), so they run on any host: convert with its geo-code
 and NetCDF steps, per-file coding, validation, views and geo-codes of
 duplicate basenames, agreement of the two sinks' pad masking, join-free
-plans, the CF Parquet sink's cache and overwrite contracts, and the
-incremental stream's exactly-once pickup."""
+plans, the CF Parquet sink's cache, overwrite and marker contracts, the
+incremental stream's exactly-once pickup and codec, and file listing that
+starts no Spark job."""
 
 from __future__ import annotations
 
@@ -67,6 +68,8 @@ def test_convert_counts_match_manifest(spark, ios_corpus, tmp_path):
     assert spark.read.parquet(result["paths"]["measurements"]).count() == exp["measurement_rows"]
     assert spark.read.parquet(result["paths"]["geo_codes"]).count() == exp["files"]
     assert _nc_files(result["paths"]["netcdf"]) == exp["netcdf_files"]
+    for name in ("measurements", "variables", "headers", "catalog"):
+        assert os.path.exists(os.path.join(result["paths"][name], "_SUCCESS")), name
 
 
 def test_convert_without_matching_files_is_total(spark, ios_corpus, tmp_path):
@@ -393,7 +396,7 @@ def test_cf_sink_raises_a_failed_write_after_the_others_finish(
     finally:
         parsed.unpersist()
     # the other three writes had committed when the error was raised
-    for name in ("variables", "catalog"):
+    for name in ("measurements", "variables", "catalog"):
         assert (out / name / "_SUCCESS").exists(), name
     rows = spark.read.parquet(str(out / "measurements")).count()
     assert rows == corpus.expected_counts(ios_corpus[2])["measurement_rows"]
@@ -428,6 +431,108 @@ def test_incremental_drains_pick_up_each_file_once(spark, tmp_path):
     )
     assert drain() == ["batch_id=0", "batch_id=1", "batch_id=2", "batch_id=3"]
     assert file_ids() == sorted(ids + [f["file_id"] for f in second["files"]])
+    written = [
+        os.path.join(d, f) for d, _, files in os.walk(out) for f in files if f.endswith(".parquet")
+    ]
+    assert written and {_codec(p) for p in written} == {"ZSTD"}
+
+
+def _codec(path: str) -> str:
+    """The one compression codec of every column chunk of a Parquet file."""
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(path).metadata
+    (codec,) = {
+        meta.row_group(g).column(c).compression
+        for g in range(meta.num_row_groups)
+        for c in range(meta.num_columns)
+    }
+    return codec
+
+
+def _group_jobs(spark, group: str) -> list:
+    """The jobs of one job group, once the status store has heard of them
+    all: the store hears events in order, so a marker job run after them
+    is seen finished only after their starts."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    marker = f"{group}-marker"
+    sc.setJobGroup(marker, "status store barrier")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 10
+    while time.monotonic() < deadline:
+        infos = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(marker)]
+        if infos and all(i is not None and i.status == "SUCCEEDED" for i in infos):
+            break
+        time.sleep(0.05)
+    return [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+
+
+def test_restarted_drain_lists_known_files_without_a_job(spark, tmp_path):
+    """A restart re-lists the last committed batch's files (40 here) only
+    to rebuild its relation; that listing stays on the driver. The drain
+    of one new file runs its two writes and nothing else."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from cioos_siooc_data_transform_spark.streaming.incremental import (
+        run_incremental_ingest,
+    )
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.run_ids = []
+
+        def onQueryStarted(self, event):
+            self.run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    corpus.write_corpus(os.path.join(src, "a"), SEED, 40, (20, 40), CHANNELS)
+    run_incremental_ingest(spark, src, out, ckpt)
+    corpus.write_corpus(os.path.join(src, "b"), SEED, 1, (20, 40), CHANNELS, first_index=40)
+    listener = RunIds()
+    spark.streams.addListener(listener)
+    try:
+        run_incremental_ingest(spark, src, out, ckpt)
+    finally:
+        spark.streams.removeListener(listener)
+    assert spark.read.parquet(f"{out}/catalog").count() == 41
+    (run_id,) = listener.run_ids
+    jobs = _group_jobs(spark, run_id)
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s) for job in jobs for s in job.stageIds]
+    assert len(jobs) == 2
+    assert stages and max(st.numTasks for st in stages if st is not None) < 40
+
+
+def test_discovery_lists_on_the_driver(spark, tmp_path):
+    """Discovering files in 40 directories, past Spark's default
+    parallel-listing threshold of 32, starts no Spark job."""
+    from cioos_siooc_data_transform_spark.sources.ios_source import discover_files
+
+    for i in range(40):
+        (tmp_path / f"d{i:02d}").mkdir()
+        (tmp_path / f"d{i:02d}" / f"cast{i:02d}.ctd").write_text("*END OF HEADER\n")
+    sc = spark.sparkContext
+    sc.setJobGroup("discover-40-dirs", "discover_files")
+    try:
+        found = discover_files(spark, str(tmp_path), ["ctd"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _group_jobs(spark, "discover-40-dirs") == []
+    assert found.count() == 40
 
 
 def test_write_ios_batch_retry_is_idempotent(spark, ios_corpus, tmp_path):
