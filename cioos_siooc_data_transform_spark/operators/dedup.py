@@ -21,12 +21,25 @@ Scale design (100 TB):
 The md5-based hash family is used where a DuckDB oracle must reproduce the
 result bit-for-bit; xxhash64 (JVM intrinsic, no string materialization) is
 the faster default for production use.
+
+The composed expressions (minhash aggs, LSH bands, hyperplane signs,
+simhash bit sums, SemDeDup pair pricing) are SQL text handed to the JVM in
+one ``F.expr`` each, and hyperplane banks go in as ``from_json`` literals
+(operators/similarity.py explains both); nothing is memoized.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from cioos_siooc_data_transform_spark.operators.routing import sql_ident, sql_literal
+from cioos_siooc_data_transform_spark.operators.similarity import (
+    dot_expr,
+    dot_sql,
+    double_matrix_sql,
+    ivf_assign,
+    train_ivf_centroids,
+)
 from cioos_siooc_data_transform_spark.session import checkpoint_df
 
 
@@ -93,14 +106,16 @@ def doc_shingle_sets(
     )
 
 
-def _minhash_fn(k: int, hash_family: str):
+def _minhash_sql(s: str, k: int, hash_family: str) -> str:
+    """SQL: the k-th hash of the string expression ``s``. With md5, 4
+    hash functions share a digest: the 128-bit md5 is sliced into four
+    independent 8-hex-char (32-bit) chunks, so k functions cost
+    ceil(k/4) digests instead of k."""
     if hash_family == "md5":
         digest_idx = (k - 1) // 4
         offset = ((k - 1) % 4) * 8 + 1
-        return lambda s: F.substring(
-            F.md5(F.concat(s, F.lit(f"#{digest_idx}"))), offset, 8
-        )
-    return lambda s: F.xxhash64(s, F.lit(k))
+        return f"substring(md5(concat({s}, {sql_literal(f'#{digest_idx}')})), {offset}, 8)"
+    return f"xxhash64({s}, {k})"
 
 
 def minhash_signature_sets(
@@ -123,19 +138,12 @@ def minhash_signature_sets(
     Use this form when a query consumes the signatures exactly once (no
     reuse to exploit) or when cluster shuffle capacity — not CPU — is the
     binding constraint; the registered queries use the exploded form."""
-    from cioos_siooc_data_transform_spark.operators.similarity import (
-        _memo_expr,
-    )
-
-    cols = _memo_expr(
-        ("minhash_sets", set_col, num_hashes, hash_family),
-        lambda: [
-            F.array_min(
-                F.transform(F.col(set_col), _minhash_fn(k, hash_family))
-            ).alias(f"h{k}")
-            for k in range(1, num_hashes + 1)
-        ],
-    )
+    sets = sql_ident(set_col)
+    cols = [
+        F.expr(f"array_min(transform({sets}, s -> {_minhash_sql('s', k, hash_family)}))")
+        .alias(f"h{k}")
+        for k in range(1, num_hashes + 1)
+    ]
     return doc_sets.select(F.col(id_col), *cols)
 
 
@@ -179,34 +187,11 @@ def minhash_signature(
     takes the lexicographic min of the hex digest — portable to any engine.
     hash_family='xxhash64' is the fast JVM-side default.
     """
-    from cioos_siooc_data_transform_spark.operators.similarity import (
-        _memo_expr,
-    )
-
-    def _build_aggs() -> list:
-        aggs = []
-        for k in range(1, num_hashes + 1):
-            if hash_family == "md5":
-                # 4 hash functions per digest: the 128-bit md5 is sliced
-                # into four independent 8-hex-char (32-bit) chunks, so k
-                # functions cost ceil(k/4) digests instead of k.
-                digest_idx = (k - 1) // 4
-                offset = ((k - 1) % 4) * 8 + 1
-                h = F.substring(
-                    F.md5(
-                        F.concat(F.col(shingle_col), F.lit(f"#{digest_idx}"))
-                    ),
-                    offset,
-                    8,
-                )
-            else:
-                h = F.xxhash64(F.col(shingle_col), F.lit(k))
-            aggs.append(F.min(h).alias(f"h{k}"))
-        return aggs
-
-    aggs = _memo_expr(
-        ("minhash_sig", shingle_col, num_hashes, hash_family), _build_aggs
-    )
+    s = sql_ident(shingle_col)
+    aggs = [
+        F.expr(f"min({_minhash_sql(s, k, hash_family)})").alias(f"h{k}")
+        for k in range(1, num_hashes + 1)
+    ]
     return exploded.groupBy(id_col).agg(*aggs)
 
 
@@ -215,23 +200,12 @@ def lsh_band_buckets(
 ) -> DataFrame:
     """Signature → (doc, bucket) rows; bucket embeds the band index so
     equal hashes from different bands never collide."""
-    from cioos_siooc_data_transform_spark.operators.similarity import (
-        _memo_expr,
-    )
-
     rows = num_hashes // bands
-
-    def _build() -> Column:
-        band_cols = []
-        for b in range(bands):
-            parts = [F.lit(str(b))] + [
-                F.col(f"h{b * rows + r + 1}").cast("string")
-                for r in range(rows)
-            ]
-            band_cols.append(F.md5(F.concat(*parts)))
-        return F.explode(F.array(*band_cols))
-
-    exploded = _memo_expr(("lsh_bands", num_hashes, bands), _build)
+    band_keys = []
+    for b in range(bands):
+        hashes = ", ".join(f"CAST(h{b * rows + r + 1} AS STRING)" for r in range(rows))
+        band_keys.append(f"md5(concat({sql_literal(str(b))}, {hashes}))")
+    exploded = F.expr(f"explode(array({', '.join(band_keys)}))")
     return signatures.select(F.col(id_col), exploded.alias("bucket"))
 
 
@@ -270,37 +244,6 @@ def random_hyperplanes(n: int, dim: int, seed: int = 42) -> list[list[float]]:
     return [[float(round(v, 4)) for v in row] for row in rng.standard_normal((n, dim))]
 
 
-#: Per-process memo of hyperplane banks as single array<array<double>>
-#: Literal columns. Building the bank column per query call costs ~1.2 s
-#: of py4j traffic for the production 32x64 bank (2,048 element-wise
-#: F.lit conversions) — pure driver-side plan-construction overhead,
-#: measured round 13. The banks are module-level constants, so one
-#: conversion per process serves every caller. This memoizes an
-#: EXPRESSION, never data or results.
-_HP_LIT_CACHE: dict[tuple, Column] = {}
-
-
-def _hyperplane_matrix_lit(hyperplanes: list[list[float]]) -> Column:
-    key = tuple(tuple(h) for h in hyperplanes)
-    col = _HP_LIT_CACHE.get(key)
-    if col is None:
-        col = F.lit([list(h) for h in hyperplanes])
-        _HP_LIT_CACHE[key] = col
-    return col
-
-
-#: Per-process memo of the COMPOSED signs/bucket Column expressions of
-#: hyperplane_lsh_buckets, keyed on (bank, bands, vec_col). Even with
-#: the bank as one literal, assembling the transform/zip_with/aggregate
-#: lambda chain plus the per-band concat(element_at..) expressions costs
-#: ~0.25 s of py4j round trips per query construction (round-13
-#: profile: 2,727 driver->JVM calls for one dedup_semantic_clusters
-#: build, ~0.85 s total socket wait). Columns are immutable expression
-#: trees, so reusing the SAME objects across constructions is
-#: side-effect-free; this memoizes EXPRESSIONS, never data or results.
-_HP_EXPR_CACHE: dict[tuple, tuple[Column, Column]] = {}
-
-
 def hyperplane_lsh_buckets(
     vectors: DataFrame,
     id_col: str,
@@ -328,49 +271,25 @@ def hyperplane_lsh_buckets(
     projection (CollapseProject keeps the non-cheap signs expression
     materialized rather than duplicating it into each band). vs the
     previous per-hyperplane aggregate(zip_with(...)) chain: sf0.1 bucket
-    subtree 2.2 -> 1.4 s (mostly plan construction, see
-    _hyperplane_matrix_lit) and 200k x 64 execution 3.98 -> 2.02 s —
-    one signs pass per row instead of 32 independent fold traversals.
+    subtree 2.2 -> 1.4 s (mostly plan construction) and 200k x 64
+    execution 3.98 -> 2.02 s — one signs pass per row instead of 32
+    independent fold traversals.
     An UNROLLED element-wise sum-of-products form was also measured and
     REFUTED: 15.4 s exec / 8 s planning (the ~2,500-node tree breaks
     whole-stage codegen and Catalyst walks it per rule).
     """
-    n_h = len(hyperplanes)
-    rows = n_h // bands
-    key = (
-        tuple(tuple(h) for h in hyperplanes),
-        bands,
-        vec_col,
+    rows = len(hyperplanes) // bands
+    v = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
+    dot = f"aggregate(zip_with({v}, hp, (x, y) -> x * y), 0D, (acc, t) -> acc + t)"
+    signs = F.expr(
+        f"transform({double_matrix_sql(hyperplanes)},"
+        f" hp -> CASE WHEN {dot} >= 0 THEN '1' ELSE '0' END)"
     )
-    cached = _HP_EXPR_CACHE.get(key)
-    if cached is None:
-        hmat = _hyperplane_matrix_lit(hyperplanes)
-        v = F.col(vec_col).cast("array<double>")
-        signs = F.transform(
-            hmat,
-            lambda h: F.when(
-                F.aggregate(
-                    F.zip_with(v, h, lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                >= 0,
-                F.lit("1"),
-            ).otherwise(F.lit("0")),
-        )
-        buckets = [
-            F.concat(
-                F.lit(f"{b}:"),
-                *[
-                    F.element_at(F.col("_sg"), b * rows + r + 1)
-                    for r in range(rows)
-                ],
-            )
-            for b in range(bands)
-        ]
-        cached = (signs, F.explode(F.array(*buckets)))
-        _HP_EXPR_CACHE[key] = cached
-    signs, exploded = cached
+    buckets = []
+    for b in range(bands):
+        band_signs = ", ".join(f"element_at(_sg, {b * rows + r + 1})" for r in range(rows))
+        buckets.append(f"concat({sql_literal(f'{b}:')}, {band_signs})")
+    exploded = F.expr(f"explode(array({', '.join(buckets)}))")
     tmp = vectors.select(F.col(id_col), signs.alias("_sg"))
     return tmp.select(F.col(id_col), exploded.alias("bucket"))
 
@@ -378,15 +297,14 @@ def hyperplane_lsh_buckets(
 # ---------------------------------------------------------------------------
 # SimHash (16-bit portable variant; bit width is a parameter)
 # ---------------------------------------------------------------------------
-def simhash_token_value(token: Column, hex_chars: int = 4) -> Column:
-    """Portable token hash: first `hex_chars` of md5 → integer
-    (4 bits per char via position in '0123456789abcdef')."""
-    h = F.md5(token)
-    v = F.lit(0)
+def simhash_token_sql(token: str, hex_chars: int = 4) -> str:
+    """SQL: portable token hash of the string expression ``token`` — the
+    first `hex_chars` of its md5 as an integer (4 bits per char via
+    position in '0123456789abcdef')."""
+    v = "0"
     for i in range(1, hex_chars + 1):
-        nibble = F.instr(F.lit("0123456789abcdef"), F.substring(h, i, 1)) - 1
-        v = v * 16 + nibble
-    return v.cast("long")
+        v = f"({v}) * 16 + (instr('0123456789abcdef', substring(md5({token}), {i}, 1)) - 1)"
+    return f"CAST({v} AS BIGINT)"
 
 
 def simhash(
@@ -394,29 +312,15 @@ def simhash(
 ) -> DataFrame:
     """Per-doc SimHash: majority vote of each hash bit over the doc's
     distinct tokens (+1 if set, −1 if not; bit set iff sum > 0)."""
-    from cioos_siooc_data_transform_spark.operators.similarity import (
-        _memo_expr,
-    )
-
-    def _build() -> tuple:
-        v = simhash_token_value(F.col(token_col), hex_chars=bits // 4)
-        bit_sums = [
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("_v"), i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"s{i}")
-            for i in range(bits)
-        ]
-        hash_expr = F.lit(0).cast("long")
-        for i in range(bits):
-            hash_expr = hash_expr + F.when(
-                F.col(f"s{i}") > 0, F.lit(1 << i)
-            ).otherwise(0)
-        return (v, bit_sums, hash_expr)
-
-    v, bit_sums, hash_expr = _memo_expr(
-        ("simhash", token_col, bits), _build
+    v = F.expr(simhash_token_sql(sql_ident(token_col), hex_chars=bits // 4))
+    bit_sums = [
+        F.expr(f"sum(CASE WHEN (shiftright(_v, {i}) & 1) = 1 THEN 1 ELSE -1 END)")
+        .alias(f"s{i}")
+        for i in range(bits)
+    ]
+    hash_expr = F.expr(
+        "CAST(0 AS BIGINT)"
+        + "".join(f" + CASE WHEN s{i} > 0 THEN {1 << i} ELSE 0 END" for i in range(bits))
     )
     with_v = exploded.withColumn("_v", v)
     summed = with_v.groupBy(id_col).agg(*bit_sums)
@@ -742,8 +646,6 @@ def semantic_bucket_counts(
     bench sidecars can check the over-cap invariant (e.g. "no sf0.1
     bucket exceeds bucket_cap, so star == drop") against the SAME
     assembly the operator prices, not a re-derived approximation."""
-    from cioos_siooc_data_transform_spark.operators.similarity import ivf_assign
-
     assigned = ivf_assign(
         vectors, centroids, id_col=id_col, vec_col=vec_col, with_vector=False
     )
@@ -830,8 +732,6 @@ def _mean_hub_pairs(
             ).alias("_mv")
         )
     )
-    from cioos_siooc_data_transform_spark.operators.similarity import dot_expr
-
     scored = mem.join(mean_arr, key_col, "left").select(
         key_col,
         id_col,
@@ -969,8 +869,6 @@ def semantic_dedup(
     the medoid/refine hub (1 = every member; 50 = ~2 % of an over-cap
     bucket, plenty for a >400-member mean direction).
     """
-    from cioos_siooc_data_transform_spark.operators.similarity import dot_expr
-
     if hyperplanes is None:
         # Plan composition must stay fully lazy (no hidden Spark jobs
         # while a caller is still assembling a pipeline), so the
@@ -1090,21 +988,9 @@ def semantic_dedup(
     # 150k mega-cluster) attributed its 28-44 s worst task to exactly
     # this pair-pricing stage. dot/(na*nb) is the same doubles in the
     # same order as cosine_expr, so the rounded scores are bit-identical.
-    from cioos_siooc_data_transform_spark.operators.similarity import (
-        _memo_expr,
-    )
-
-    def _build_pricing() -> tuple:
-        return (
-            F.sqrt(dot_expr(vec_col, vec_col)),
-            F.round(
-                dot_expr("va", "vb")
-                / (F.col("na") * F.col("nb")),
-                4,
-            ),
-        )
-
-    nrm, cos_sim = _memo_expr(("semdd_pricing", vec_col), _build_pricing)
+    v = sql_ident(vec_col)
+    nrm = F.expr(f"sqrt({dot_sql(v, v)})")
+    cos_sim = F.expr(f"round({dot_sql('va', 'vb')} / (na * nb), 4)")
     ea = vectors.select(
         F.col(id_col).alias("doc_a"),
         F.col(vec_col).alias("va"),
@@ -1148,10 +1034,6 @@ def semantic_dedup_trained(
     small sample_fraction: KMeans cost is per-point x per-center, and
     the centroid quality needed here is coarse cell structure, not
     convergence on the full corpus."""
-    from cioos_siooc_data_transform_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-
     sample = vectors
     if sample_fraction is not None:
         sample = vectors.sample(fraction=sample_fraction, seed=seed)

@@ -13,74 +13,66 @@ Two tiers:
 
 For very large query batches the Arrow/pandas fast path (pandas_topk)
 does blocked numpy matmul per partition via mapInPandas.
+
+The composed expressions (dot products, norms, PQ codes, LUTs and ADC
+sums) are SQL text, built with plain string functions and handed to the
+JVM in one ``F.expr``: a Column tree costs a py4j round trip per node,
+thousands per query. Literal arrays (codebooks, hyperplane banks) go in
+as ``from_json`` over their JSON text (double_matrix_sql), which the
+optimizer folds to one Literal. Nothing is memoized: at a few round trips
+per expression there is nothing left to save.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def dot_expr(a: str | Column, b: str | Column) -> Column:
-    """Σ a_i·b_i as a JVM-side array expression (double accumulation).
-
-    Column NAMES are memoized (§7.3): the zip_with + aggregate + two
-    lambdas cost ~15 py4j round trips to assemble, and ``F.col(name)``
-    trees built from equal names are interchangeable (resolution
-    happens per plan). Column operands are built fresh on every call:
-    their text is not a safe key — ``a["v"]``, ``b["v"]`` and
-    ``F.col("v")`` all print ``Column<'v'>`` but resolve to different
-    relations in a join."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _memo_expr(("dot", a, b), lambda: _dot(a, b))
-    return _dot(a, b)
+from cioos_siooc_data_transform_spark.operators.routing import sql_ident, sql_literal
 
 
-def _dot(a: str | Column, b: str | Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot_sql(a: str, b: str) -> str:
+    """SQL: Σ a_i·b_i of the array expressions ``a`` and ``b`` — each
+    element cast to double, summed left to right from 0.0."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0D, (acc, t) -> acc + t)"
     )
 
 
-#: Per-process memo of composed Column EXPRESSIONS keyed on the values
-#: that shape them (column names, codebooks, rounding). Each
-#: higher-order-function chain (zip_with + aggregate + lambdas) costs
-#: ~30-50 py4j round trips to assemble; a query like
-#: similarity_pq_adc_topk paid ~1.2 s of driver->JVM socket wait per
-#: construction (round-13 profile: 3,031 round trips), and the bench
-#: pays that on every run. Columns are immutable expression trees, so
-#: reusing the same objects across plan constructions is side-effect
-#: free. This memoizes EXPRESSIONS only — never data, schemas of live
-#: tables, or results.
-_EXPR_CACHE: dict[tuple, object] = {}
+def cosine_sql(a: str, b: str) -> str:
+    """SQL: the cosine of the array expressions ``a`` and ``b``
+    (PRECONDITION as for cosine_expr)."""
+    return f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
 
 
-def _memo_expr(key: tuple, build):
-    val = _EXPR_CACHE.get(key)
-    if val is None:
-        val = build()
-        _EXPR_CACHE[key] = val
-    return val
+def double_matrix_sql(rows: list[list[float]]) -> str:
+    """SQL: ``rows`` as one array<array<double>> value — from_json over
+    its JSON text, which the optimizer folds to a single Literal. Python's
+    float repr round-trips, so the doubles are the ones passed. For the
+    32×64 hyperplane bank, a select of the literal took 885 ms as an F.lit
+    of the nested list (py4j round trips per element), 217 ms as SQL
+    ``array(...)`` text and 38 ms as from_json (median of 4, 4 vCPUs)."""
+    return f"from_json({sql_literal(json.dumps(rows))}, 'array<array<double>>')"
 
 
-def cosine_expr(a: str | Column, b: str | Column) -> Column:
+def dot_expr(a: str, b: str) -> Column:
+    """Σ a_i·b_i of the array columns named ``a`` and ``b`` as a JVM-side
+    array expression (double accumulation), handed over as SQL text in
+    one call."""
+    return F.expr(dot_sql(sql_ident(a), sql_ident(b)))
+
+
+def cosine_expr(a: str, b: str) -> Column:
     """PRECONDITION: non-zero-norm vectors. A zero vector divides by
     zero, and the engines then disagree (Spark NULL vs DuckDB NaN, with
     different ordering AND comparison semantics) — callers on possibly-
     degenerate data must filter zero norms first (see
     embedding_normalize's nrm > 0 guard); tests pin that the synthetic
-    embeddings contain none at any SF. Memoized on column names like
-    dot_expr (~45 round trips per build); Column operands are built
-    fresh."""
-
-    def build() -> Column:
-        return dot_expr(a, b) / (F.sqrt(dot_expr(a, a)) * F.sqrt(dot_expr(b, b)))
-
-    if isinstance(a, str) and isinstance(b, str):
-        return _memo_expr(("cosine", a, b), build)
-    return build()
+    embeddings contain none at any SF."""
+    return F.expr(cosine_sql(sql_ident(a), sql_ident(b)))
 
 
 def brute_force_topk(
@@ -100,18 +92,10 @@ def brute_force_topk(
     # inlined cosine_expr would re-evaluate dot(c,c) per QUERY for every
     # corpus vector. dot/(nq*nc) is the same doubles in the same order
     # as cosine_expr, so the rounded ranking is bit-identical.
-    def _build_cols() -> tuple:
-        return (
-            F.sqrt(dot_expr(vec_col, vec_col)),
-            F.round(
-                dot_expr("q_vec", "c_vec")
-                / (F.col("q_nrm") * F.col("c_nrm")),
-                round_dp,
-            ),
-        )
-
-    nrm, cos_sim = _memo_expr(
-        ("brute_force", vec_col, round_dp), _build_cols
+    v = sql_ident(vec_col)
+    nrm = F.expr(f"sqrt({dot_sql(v, v)})")
+    cos_sim = F.expr(
+        f"round({dot_sql('q_vec', 'c_vec')} / (q_nrm * c_nrm), {round_dp})"
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -205,41 +189,24 @@ def ivf_assign(
     packed encoding; the packed path VALIDATES this at runtime on the
     broadcast-sized centroid relation (raise_error — cost is K rows)
     instead of silently overflowing the low 32-bit field."""
-    # The assignment's column expressions depend only on (id_col,
-    # vec_col, round_dp) — memoized as one tuple so repeated plan
-    # constructions (each dot_expr chain is ~40 py4j round trips)
-    # re-use the same immutable expression objects.
-    def _build_cols() -> tuple:
-        nrm = F.sqrt(dot_expr(vec_col, vec_col))
-        sim = F.round(
-            dot_expr(vec_col, "cent_vec")
-            / (F.col("vec_nrm") * F.col("cent_nrm")),
-            round_dp,
-        )
-        best_struct = F.max(
-            F.struct(
-                F.col("cent_sim"),
-                (-F.col("centroid_id")).alias("_ni"),
-                F.col(vec_col).alias("_v"),
-            )
-        )
-        scale = 10**round_dp
-        s_key = F.coalesce(
-            F.round(F.col("cent_sim") * scale).cast("long"),
-            F.lit(-(2 * scale + 1)).cast("long"),
-        )
-        packed = F.max(
-            (s_key + (2 * scale + 1)) * F.lit(4294967296)
-            + (F.lit(2147483648) - F.col("centroid_id").cast("long"))
-        )
-        unpack_cid = F.lit(2147483648) - F.col("_p").bitwiseAND(
-            F.lit(4294967295)
-        )
-        return (nrm, sim, best_struct, packed, unpack_cid)
-
-    nrm, sim, best_struct, packed, unpack_cid = _memo_expr(
-        ("ivf_assign", id_col, vec_col, round_dp), _build_cols
+    v_sql = sql_ident(vec_col)
+    nrm = F.expr(f"sqrt({dot_sql(v_sql, v_sql)})")
+    sim = F.expr(
+        f"round({dot_sql(v_sql, 'cent_vec')} / (vec_nrm * cent_nrm), {round_dp})"
     )
+    best_struct = F.expr(
+        f"max(struct(cent_sim, -centroid_id AS _ni, {v_sql} AS _v))"
+    )
+    scale = 10**round_dp
+    s_key = (
+        f"coalesce(CAST(round(cent_sim * {scale}) AS BIGINT),"
+        f" CAST({-(2 * scale + 1)} AS BIGINT))"
+    )
+    packed = F.expr(
+        f"max(({s_key} + {2 * scale + 1}) * 4294967296"
+        " + (2147483648 - CAST(centroid_id AS BIGINT)))"
+    )
+    unpack_cid = F.expr("2147483648 - (_p & 4294967295)")
     c = centroids.select(
         F.col(id_col).alias("centroid_id"),
         F.col(vec_col).alias("cent_vec"),
@@ -529,31 +496,17 @@ def train_pq_codebooks(
     return books
 
 
-#: Per-process memo of codebook literals (same rationale as
-#: operators/dedup._hyperplane_matrix_lit: element-wise F.lit chains pay
-#: one py4j round trip per float at every query construction; one nested
-#: F.lit is a single Literal node built once per process).
-_CB_LIT_CACHE: dict[tuple, Column] = {}
-
-
-def _codebook_lit(books: list[list[list[float]]]) -> Column:
-    """The m×k×sub codebook as a nested array literal (small by
-    construction: m·k·sub floats — broadcast into every task as part of
-    the plan, no join)."""
-    key = tuple(tuple(tuple(float(x) for x in center) for center in book) for book in books)
-    col = _CB_LIT_CACHE.get(key)
-    if col is None:
-        col = F.lit([[[float(x) for x in center] for center in book] for book in books])
-        _CB_LIT_CACHE[key] = col
-    return col
-
-
-def _sub_l2(sub_vec: Column, center: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(sub_vec, center, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
+def _subspace_dists_sql(books: list[list[list[float]]], vec_col: str) -> list[str]:
+    """SQL, one per subspace j: the squared L2 distances of the vector's
+    j-th subvector to each centroid of codebook j (a literal)."""
+    sub = len(books[0][0])
+    e = f"CAST({sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
+    return [
+        f"transform({double_matrix_sql(book)}, center -> aggregate(zip_with("
+        f"slice({e}, {j * sub + 1}, {sub}), center, (a, b) -> (a - b) * (a - b)),"
+        " 0D, (acc, t) -> acc + t))"
+        for j, book in enumerate(books)
+    ]
 
 
 def pq_encode(
@@ -566,29 +519,14 @@ def pq_encode(
     codebook entry. Entirely row-local codegen: for each of the m
     subspaces, compute the k distances with a transform and take
     array_position of the min (first win on ties → deterministic)."""
-    m = len(books)
-    sub = len(books[0][0])
-    books_key = tuple(
-        tuple(tuple(float(x) for x in center) for center in book)
-        for book in books
-    )
-
-    def _build() -> Column:
-        cb = _codebook_lit(books)
-        e = F.col(vec_col).cast("array<double>")
-
-        def code_for(j: int) -> Column:
-            sub_vec = F.slice(e, j * sub + 1, sub)
-            dists = F.transform(
-                F.element_at(cb, j + 1), lambda c: _sub_l2(sub_vec, c)
-            )
-            return (F.array_position(dists, F.array_min(dists)) - 1).cast(
-                "int"
-            )
-
-        return F.array(*[code_for(j) for j in range(m)])
-
-    codes = _memo_expr(("pq_codes", books_key, vec_col), _build)
+    # the one-element array binds each subspace's distances to a lambda
+    # variable, so the argmin reads them instead of computing them twice
+    argmins = [
+        f"get(transform(array({dists}),"
+        " d -> CAST(array_position(d, array_min(d)) - 1 AS INT)), 0)"
+        for dists in _subspace_dists_sql(books, vec_col)
+    ]
+    codes = F.expr(f"array({', '.join(argmins)})")
     return vectors.select(F.col(id_col), codes.alias("codes"))
 
 
@@ -614,28 +552,7 @@ def pq_adc_topk(
     drops from |corpus| to |cell| per query while the memory story
     (codes, not vectors) is unchanged."""
     m = len(books)
-    sub = len(books[0][0])
-    books_key = tuple(
-        tuple(tuple(float(x) for x in center) for center in book)
-        for book in books
-    )
-
-    def _build_lut() -> Column:
-        cb = _codebook_lit(books)
-        qe = F.col(vec_col).cast("array<double>")
-
-        def _lut_for(j: int) -> Column:
-            # NB: closure, not a default-arg lambda — PySpark reads a
-            # 2-arg lambda as the (element, index) form and would bind
-            # the extra parameter to the array index.
-            sub_vec = F.slice(qe, j * sub + 1, sub)
-            return F.transform(
-                F.element_at(cb, j + 1), lambda c: _sub_l2(sub_vec, c)
-            )
-
-        return F.array(*[_lut_for(j) for j in range(m)])
-
-    lut = _memo_expr(("pq_lut", books_key, vec_col), _build_lut)
+    lut = F.expr(f"array({', '.join(_subspace_dists_sql(books, vec_col))})")
     q_cols = [F.col(id_col).alias("query_id"), lut.alias("lut")]
     c_cols = [F.col(id_col).alias("neighbor_id"), F.col("codes")]
     if cell_col is not None:
@@ -643,21 +560,11 @@ def pq_adc_topk(
         c_cols.append(F.col(cell_col))
     q = queries.select(*q_cols)
     c = codes.select(*c_cols)
-    def _build_adist() -> Column:
-        idx = F.sequence(F.lit(0), F.lit(m - 1))
-        return F.aggregate(
-            F.transform(
-                idx,
-                lambda j: F.element_at(
-                    F.element_at(F.col("lut"), j + 1),
-                    F.element_at(F.col("codes"), j + 1) + 1,
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
-    adist = _memo_expr(("pq_adist", m), _build_adist)
+    adist = F.expr(
+        f"aggregate(transform(sequence(0, {m - 1}),"
+        " j -> element_at(element_at(lut, j + 1), element_at(codes, j + 1) + 1)),"
+        " 0D, (acc, t) -> acc + t)"
+    )
     joined = (
         c.join(F.broadcast(q), cell_col)
         if cell_col is not None

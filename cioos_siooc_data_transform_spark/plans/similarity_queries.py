@@ -153,7 +153,7 @@ def embedding_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     flattened to one row per element."""
     emb = _t(spark, sf_dir, "embeddings")
     e = F.col("embedding").cast("array<double>")
-    nrm = F.sqrt(dot_expr(e, e))
+    nrm = F.sqrt(dot_expr("embedding", "embedding"))
     unit = F.transform(e, lambda x: F.floor(x / nrm * 1000000.0 + 0.5) / 1000000.0)
     return (
         emb.filter(nrm > 0.0)
@@ -530,20 +530,22 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     1/sqrt(16), emitted flattened (vec_id, pos, proj_val) for the
     driver's scalar canonicalizer — the array form is one array() away
     for in-plan composition with the ANN operators."""
-    from cioos_siooc_data_transform_spark.operators.dedup import (
-        _hyperplane_matrix_lit,
+    from cioos_siooc_data_transform_spark.operators.similarity import (
+        double_matrix_sql,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     e = F.col("embedding").cast("array<double>")
     xi = F.transform(e, lambda x: F.floor(x * 1000000.0 + 0.5))
     # round-13 (same fix as hyperplane_lsh_buckets): the 16x64 bank is
-    # ONE memoized array<array<double>> literal and all 16 projections
-    # come from a single transform() — identical products/sums in the
-    # same order (integer-exact, see the block comment above), so the
-    # output is bit-identical; vs 1,024 element-wise F.lit calls + 16
-    # aggregate trees: isolated 1.27 -> 0.75 s at sf0.1.
-    hmat = _hyperplane_matrix_lit([[float(c) for c in row] for row in _JL_ROWS_INT])
+    # ONE array<array<double>> literal and all 16 projections come from
+    # a single transform() — identical products/sums in the same order
+    # (integer-exact, see the block comment above), so the output is
+    # bit-identical; vs 1,024 element-wise F.lit calls + 16 aggregate
+    # trees: isolated 1.27 -> 0.75 s at sf0.1.
+    hmat = F.expr(
+        double_matrix_sql([[float(c) for c in row] for row in _JL_ROWS_INT])
+    )
     projs = F.transform(
         hmat,
         lambda h: F.floor(

@@ -1572,7 +1572,7 @@ def embedding_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force arm; per-probe hit counts are integers, the mean is an
     exact sum."""
     from cioos_siooc_data_transform_spark.operators.similarity import (
-        cosine_expr,
+        cosine_sql,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -1588,12 +1588,12 @@ def embedding_prefix_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def topk(d: int) -> DataFrame:
         if d < 64:
-            qv = F.slice(F.col("qv"), 1, d)
-            cv = F.slice(F.col("cv"), 1, d)
+            qv, cv = f"slice(qv, 1, {d})", f"slice(cv, 1, {d})"
         else:
             qv, cv = "qv", "cv"
         w = Window.partitionBy("query_id").orderBy(
-            F.round(cosine_expr(qv, cv), 6).desc(), F.col("neighbor_id").asc()
+            F.expr(f"round({cosine_sql(qv, cv)}, 6)").desc(),
+            F.col("neighbor_id").asc(),
         )
         return (
             pairs.withColumn("rank", F.row_number().over(w))

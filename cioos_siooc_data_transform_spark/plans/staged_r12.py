@@ -4730,19 +4730,19 @@ def similarity_srp_bit_independence(spark: SparkSession, sf_dir: str) -> DataFra
     bands collide more than the S-curve predicts — this names the
     worst offenders. One 496-pair aggregate over map-side-combinable
     integer sums; deterministic tie-broken top-10."""
-    from cioos_siooc_data_transform_spark.operators.dedup import (
-        _hyperplane_matrix_lit,
+    from cioos_siooc_data_transform_spark.operators.similarity import (
+        double_matrix_sql,
     )
     from cioos_siooc_data_transform_spark.plans.dedup_queries import _EMB_HP
 
     emb = _t(spark, sf_dir, "embeddings")
     e = F.col("embedding").cast("array<double>")
 
-    # round-13 (same fix as hyperplane_lsh_buckets): one memoized bank
-    # literal + a single transform producing all 32 sign bits — same
-    # left-to-right double accumulation, bit-identical output.
+    # round-13 (same fix as hyperplane_lsh_buckets): one bank literal +
+    # a single transform producing all 32 sign bits — same left-to-right
+    # double accumulation, bit-identical output.
     n_bits = len(_EMB_HP)
-    hmat = _hyperplane_matrix_lit(_EMB_HP)
+    hmat = F.expr(double_matrix_sql(_EMB_HP))
     bits = emb.select(
         F.transform(
             hmat,

@@ -3170,12 +3170,6 @@ def _c_from_sp_stages():
     return c_from_sp_stages("s", "t", "p")
 
 
-def _cfs_in_sql() -> str:
-    from cioos_siooc_data_transform_spark.plans.staged_r5 import _IN_SQL
-
-    return _IN_SQL
-
-
 def _cfs_inputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cioos_siooc_data_transform_spark.plans.staged_r5 import _inputs
 

@@ -3271,39 +3271,22 @@ def embedding_binary_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly — full recall at <= 3 with no pairwise scan. The
     xor+bit_count confirm prices only bucket collisions. Storage story:
     8 bytes/vector — RAM-resident at billions of vectors."""
-    from cioos_siooc_data_transform_spark.operators.similarity import (
-        _memo_expr,
-    )
-
     emb = _t(spark, sf_dir, "embeddings")
 
-    # The 64-term literal powers array + fold + block structs cost ~130
-    # py4j round trips per construction (~0.13 s); memoized on the
-    # constants that shape them (round 14, §7.3 — expressions only,
-    # never data).
-    def _build() -> tuple:
-        e = F.col("embedding").cast("array<double>")
-        pows = F.array(*[F.lit(v).cast("long") for v in _BIN_POWS])
-        terms = F.zip_with(
-            e,
-            pows,
-            lambda x, pw: F.when(x >= 0, pw).otherwise(F.lit(0).cast("long")),
-        )
-        sig_ = F.aggregate(terms, F.lit(0).cast("long"), lambda acc, t: acc + t)
-        blocks_ = F.array(
-            *[
-                F.struct(
-                    F.lit(k).alias("blk"),
-                    F.shiftright(F.col("sig"), 16 * k)
-                    .bitwiseAND(F.lit(65535).cast("long"))
-                    .alias("blk_val"),
-                )
-                for k in range(4)
-            ]
-        )
-        return sig_, blocks_
-
-    sig, blocks = _memo_expr(("bin_signature", len(_BIN_POWS)), _build)
+    # The 64-term literal powers array, fold and block structs are SQL
+    # text, handed to the JVM in one F.expr each (a Column tree costs
+    # ~130 py4j round trips).
+    pows = ", ".join(f"{v}L" for v in _BIN_POWS)
+    sig = F.expr(
+        f"aggregate(zip_with(CAST(embedding AS ARRAY<DOUBLE>), array({pows}),"
+        " (x, pw) -> CASE WHEN x >= 0 THEN pw ELSE CAST(0 AS BIGINT) END),"
+        " CAST(0 AS BIGINT), (acc, t) -> acc + t)"
+    )
+    structs = ", ".join(
+        f"struct({k} AS blk, shiftright(sig, {16 * k}) & CAST(65535 AS BIGINT) AS blk_val)"
+        for k in range(4)
+    )
+    blocks = F.expr(f"array({structs})")
     packed = emb.select("vec_id", sig.alias("sig"))
     blocked = packed.select("vec_id", "sig", F.explode(blocks).alias("u")).select(
         "vec_id", "sig", F.col("u.blk").alias("blk"), F.col("u.blk_val").alias("blk_val")

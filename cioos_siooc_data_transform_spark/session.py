@@ -212,31 +212,3 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     df.createOrReplaceTempView(view)
     views[path] = view
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Read the synthetic parquet tables under ``sf_dir`` and return a dict.
-
-    Also registers each as a temp view so spark.sql can reference them.
-    """
-    if names is None:
-        names = (
-            "region",
-            "nation",
-            "customer",
-            "supplier",
-            "part",
-            "orders",
-            "lineitem",
-            "events",
-            "documents",
-            "embeddings",
-        )
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = read_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

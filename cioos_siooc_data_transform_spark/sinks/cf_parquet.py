@@ -98,14 +98,18 @@ def write_cf_dataset(parsed: DataFrame, out_dir: str) -> dict[str, str]:
         fs = marker.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
         fs.create(marker, True).close()
 
+    # the three per-file tables are a few rows per input file: one writer
+    # each, so they are not mostly Parquet footers (seed 1, 10 files: 27
+    # part files and 158 KB); SCALE.md has where one writer stops fitting
     writes = {
         "measurements": write_measurements,
         "variables": assign_bodc_codes(parsed)
+        .coalesce(1)
         .write.mode("overwrite")
         .option("compression", "zstd")
         .parquet,
-        "headers": ios_header_json(parsed).write.mode("overwrite").parquet,
-        "catalog": ios_catalog(parsed).write.mode("overwrite").parquet,
+        "headers": ios_header_json(parsed).coalesce(1).write.mode("overwrite").parquet,
+        "catalog": ios_catalog(parsed).coalesce(1).write.mode("overwrite").parquet,
     }
     # submitted together, measurements (the longest) first; wrapping each
     # write on its own gives each thread its own copy of the caller's

@@ -20,7 +20,6 @@ Deliberate divergences from the reference (SURVEY.md §1.3.7 — bugs fixed):
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
 from cioos_siooc_data_transform_spark.sources.fortran_spec import (
@@ -40,18 +39,6 @@ COMMENT_SECTIONS = ("COMMENTS", "REMARKS", "HISTORY")
 
 class IosParseError(ValueError):
     pass
-
-
-@dataclass
-class IosFile:
-    path: str
-    lines: list[str]
-    header_version: str = ""
-    sections: dict = field(default_factory=dict)       # section → {key: value} + subsections
-    comments: dict = field(default_factory=dict)       # section → {lineno: text}
-    channels: list[dict] = field(default_factory=list)  # per-channel catalog
-    records: list[list[str]] = field(default_factory=list)
-    parse_strategy: str = ""
 
 
 # ---------------------------------------------------------------------------

@@ -59,9 +59,10 @@ def write_ios_batch(
 
     parsed = parse_ios(batch_df).cache()
     try:
-        ios_catalog(parsed).write.mode("overwrite").option("compression", "zstd").parquet(
-            f"{out_dir}/catalog/batch_id={batch_id}"
-        )
+        # one row per file: one writer, like the CF sink's catalog
+        ios_catalog(parsed).coalesce(1).write.mode("overwrite").option(
+            "compression", "zstd"
+        ).parquet(f"{out_dir}/catalog/batch_id={batch_id}")
         ios_measurements_masked(parsed).write.mode("overwrite").option(
             "compression", "zstd"
         ).parquet(f"{out_dir}/measurements/batch_id={batch_id}")

@@ -31,25 +31,6 @@ def tumbling_counts(
     )
 
 
-def session_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Session windows (gap-based) per user with watermark."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def running_user_totals(events: DataFrame) -> DataFrame:
     """Custom stateful shape: running per-user totals via
     applyInPandasWithState — the escape hatch for operators Spark's

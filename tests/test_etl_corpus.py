@@ -72,6 +72,19 @@ def test_convert_counts_match_manifest(spark, ios_corpus, tmp_path):
         assert os.path.exists(os.path.join(result["paths"][name], "_SUCCESS")), name
 
 
+def test_convert_writes_each_per_file_table_as_one_file(spark, tmp_path):
+    """variables, headers and catalog hold a few rows per input file; one
+    Parquet file per cached partition made them mostly footers."""
+    from cioos_siooc_data_transform_spark.cli import convert
+
+    in_dir = str(tmp_path / "ios")
+    corpus.write_corpus(in_dir, 1, 10, (189, 9022), CHANNELS, N_CORRUPT)  # archive_convert, seed 1
+    result = convert("all", "ctd", in_dir, str(tmp_path / "out"), spark=spark)
+    for name in ("variables", "headers", "catalog"):
+        parts = [f for f in os.listdir(result["paths"][name]) if f.startswith("part-")]
+        assert len(parts) == 1, (name, parts)
+
+
 def test_convert_without_matching_files_is_total(spark, ios_corpus, tmp_path):
     """No file of the type: zero counts, nothing raised."""
     from cioos_siooc_data_transform_spark.cli import convert
@@ -435,6 +448,9 @@ def test_incremental_drains_pick_up_each_file_once(spark, tmp_path):
         os.path.join(d, f) for d, _, files in os.walk(out) for f in files if f.endswith(".parquet")
     ]
     assert written and {_codec(p) for p in written} == {"ZSTD"}
+    for batch in os.listdir(os.path.join(out, "catalog")):
+        parts = os.listdir(os.path.join(out, "catalog", batch))
+        assert sum(f.startswith("part-") for f in parts) == 1, batch
 
 
 def _codec(path: str) -> str:

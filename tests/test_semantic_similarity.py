@@ -162,7 +162,7 @@ def test_lsh_probe_finds_planted_duplicate_first(spark):
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_expr(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
+            F.round(cosine_expr("qv", "cv"), 4).alias("cos_sim"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 2)
@@ -613,13 +613,10 @@ def test_semantic_dedup_medoid_empty_sample_falls_back_to_star(spark):
 
 
 def test_memoized_expression_columns_are_reused_and_equivalent(spark):
-    """Round-13 construction batching: the composed Column expressions
-    of hyperplane_lsh_buckets / ivf_assign / pq_encode / pq_adc_topk /
-    brute_force_topk are memoized per process (plan-construction py4j
-    round trips, not data). Pin (a) the memo actually hits — a second
-    construction reuses the SAME Column objects — and (b) a
-    cache-cleared fresh build produces row-identical results, so the
-    memo can never change what a query computes."""
+    """The composed expressions of hyperplane_lsh_buckets / ivf_assign /
+    pq_encode / pq_adc_topk / brute_force_topk / minhash / LSH bands /
+    simhash are SQL text, rebuilt on every call (no per-process memo).
+    Two independent constructions must give identical rows."""
     from cioos_siooc_data_transform_spark.operators import dedup as dd
     from cioos_siooc_data_transform_spark.operators import (
         similarity as sim,
@@ -657,28 +654,62 @@ def test_memoized_expression_columns_are_reused_and_equivalent(spark):
             "simhash": dd.simhash(tok, "vec_id", "t"),
         }
 
-    # Fresh build (caches cleared) vs memoized rebuild.
-    dd._HP_EXPR_CACHE.clear()
-    sim._EXPR_CACHE.clear()
     fresh = build_all()
-    assert dd._HP_EXPR_CACHE and sim._EXPR_CACHE
-    hp_keys = set(dd._HP_EXPR_CACHE)
-    expr_keys = set(sim._EXPR_CACHE)
-    memo = build_all()
-    # Second construction added no new cache entries (pure hits).
-    assert set(dd._HP_EXPR_CACHE) == hp_keys
-    assert set(sim._EXPR_CACHE) == expr_keys
+    again = build_all()
     for name in fresh:
-        a, b = fresh[name], memo[name]
+        a, b = fresh[name], again[name]
         assert a.exceptAll(b).count() == 0, name
         assert b.exceptAll(a).count() == 0, name
 
 
+def test_similarity_operators_build_in_a_few_round_trips(spark, monkeypatch):
+    """The composed expressions reach the JVM as SQL text and the literal
+    banks as one from_json each; as Column trees they cost a py4j round
+    trip per node and per float (about 14,500 for this construction). The
+    bank and codebooks are this test's own, so no earlier construction
+    in the process can have built them."""
+    from py4j.clientserver import ClientServerConnection
+
+    from cioos_siooc_data_transform_spark.operators import dedup as dd
+    from cioos_siooc_data_transform_spark.operators import (
+        similarity as sim,
+    )
+
+    vecs = _planted_corpus(spark)
+    qs = vecs.filter(F.col("vec_id") < 3)
+
+    def build(seed: int) -> None:
+        hp = dd.random_hyperplanes(16, 64, seed=seed)
+        books = [
+            [[round(math.sin(seed + 8 * j + k + 0.1 * s), 4) for s in range(8)]
+             for k in range(16)]
+            for j in range(8)
+        ]
+        sim.pq_adc_topk(qs, sim.pq_encode(vecs, books), books)
+        dd.hyperplane_lsh_buckets(vecs, "vec_id", "embedding", hp, 4)
+        sim.brute_force_topk(qs, vecs, k=5)
+
+    build(9001)  # the first build looks up JVM functions
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    build(9002)
+    monkeypatch.undo()
+    # 292 when run alone and 611 in a run of this whole module; about
+    # 14,500 as Column trees
+    assert len(calls) <= 1000
+
+
 def test_dot_expr_memo_does_not_alias_join_sides(spark):
-    """``a["v"]``, ``b["v"]`` and ``F.col("v")`` all print
-    ``Column<'v'>``; a memo keyed on that text once handed the a-side
-    expression to a later b-side call and returned 2.0 instead of 200.0.
-    Column operands are built fresh; only column NAMES are memoized."""
+    """A memo keyed on a Column's text once handed one join side's
+    expression to the other and returned 2.0 instead of 200.0. The
+    expressions now take column names and are built on every call; the
+    two join sides carry distinct names."""
     from cioos_siooc_data_transform_spark.operators.similarity import (
         cosine_expr,
         dot_expr,
@@ -686,17 +717,17 @@ def test_dot_expr_memo_does_not_alias_join_sides(spark):
 
     a = spark.createDataFrame([(1, [1.0, 1.0])], "id INT, v ARRAY<DOUBLE>")
     b = spark.createDataFrame([(1, [10.0, 10.0])], "id INT, v ARRAY<DOUBLE>")
-    assert a.select(dot_expr(a["v"], a["v"]).alias("d")).first().d == 2.0
-    joined = a.join(b, "id")
+    assert a.select(dot_expr("v", "v").alias("d")).first().d == 2.0
+    joined = a.select("id", F.col("v").alias("va")).join(
+        b.select("id", F.col("v").alias("vb")), "id"
+    )
     row = joined.select(
-        dot_expr(b["v"], b["v"]).alias("bb"),
-        dot_expr(a["v"], b["v"]).alias("ab"),
-        cosine_expr(a["v"], b["v"]).alias("cos"),
+        dot_expr("vb", "vb").alias("bb"),
+        dot_expr("va", "vb").alias("ab"),
+        cosine_expr("va", "vb").alias("cos"),
     ).first()
     assert (row.bb, row.ab) == (200.0, 20.0)
     assert abs(row.cos - 1.0) < 1e-12
-    # names still share one memoized expression
-    assert dot_expr("v", "v") is dot_expr("v", "v")
     assert b.select(dot_expr("v", "v").alias("d")).first().d == 200.0
 
 

@@ -4,7 +4,8 @@
 The bench times `fn(spark, sf_dir)` + noop write per run, so py4j
 chatter and bounded seed collects during construction are part of every
 bench second. This tool isolates construction wall time (no action) per
-query, min-of-N, and can dump a cProfile for one query.
+query, min-of-N, with the py4j round trips of the first construction in
+the process and of each warm one, and can dump a cProfile for one query.
 
 Usage:
   python tools/profile_construction.py [name ...]          # min-of-3 walls
@@ -33,6 +34,8 @@ DEFAULT = [
 
 
 def main() -> None:
+    from py4j.clientserver import ClientServerConnection
+
     from cioos_siooc_data_transform_spark.plans import all_queries
     from cioos_siooc_data_transform_spark.session import get_spark
 
@@ -43,10 +46,26 @@ def main() -> None:
     spark = get_spark("construction-profile")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
-    # Warm the JVM + schema memo once so the numbers reflect the steady
-    # state the bench's 2nd..Nth constructions see.
-    for name in names:
+    # Every py4j call from any thread is one round trip to the JVM.
+    send = ClientServerConnection.send_command
+    trips = [0]
+
+    def counting(self, command, *args, **kwargs):
+        trips[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+
+    def construct(name: str) -> tuple[float, int]:
+        trips[0] = 0
+        t0 = time.time()
         queries[name](spark, SF_DIR)
+        return round(time.time() - t0, 3), trips[0]
+
+    # Warm the JVM + schema memo once so the numbers reflect the steady
+    # state the bench's 2nd..Nth constructions see. A name's "first"
+    # count follows the names before it in the same process.
+    first = {name: construct(name)[1] for name in names}
 
     if do_profile:
         import cProfile
@@ -61,12 +80,11 @@ def main() -> None:
         return
 
     for name in names:
-        walls = []
-        for _ in range(3):
-            t0 = time.time()
-            queries[name](spark, SF_DIR)
-            walls.append(round(time.time() - t0, 3))
-        print(f"{name}: min {min(walls):.3f}s  runs {walls}")
+        walls, warm = zip(*(construct(name) for _ in range(3)))
+        print(
+            f"{name}: min {min(walls):.3f}s  runs {list(walls)}"
+            f"  round trips first {first[name]} warm {list(warm)}"
+        )
 
 
 if __name__ == "__main__":
