@@ -21,6 +21,7 @@ sqrt(e), ln(e), exp(e), pow(e, const).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 
@@ -281,3 +282,40 @@ def diff_sql(expr: str, var: str) -> str:
     """
     ast = _Parser(_tokens(expr)).parse()
     return _emit(_d(ast, var))
+
+
+#: (surface, orders) -> derivative text over the placeholder names. A
+#: cold derivative costs 0.5-20 ms to parse, differentiate and emit, a
+#: memo hit 0.01-0.2 ms (4-vCPU VM); building all 640 registered
+#: queries asks 142 times for 60 distinct derivatives.
+_DERIVATIVES: dict[tuple[Callable[..., str], tuple[int, ...]], str] = {}
+
+
+def _placeholder(i: int) -> str:
+    return f"__symdiff_arg{i}__"
+
+
+def derivative_sql(
+    surface: Callable[..., str], args: tuple[str, ...], orders: tuple[int, ...]
+) -> str:
+    """∂^(Σ orders) surface / ∂arg_0^orders[0] ∂arg_1^orders[1] ... at
+    ``args``, as portable SQL.
+
+    ``surface`` builds the expression text from one name per argument.
+    It is differentiated once per ``orders`` against placeholder names,
+    in argument order, and each real argument is substituted into the
+    result wrapped in parentheses. The text does not depend on the
+    placeholder names.
+    """
+    key = (surface, orders)
+    template = _DERIVATIVES.get(key)
+    if template is None:
+        names = [_placeholder(i) for i in range(len(orders))]
+        template = surface(*names)
+        for name, order in zip(names, orders):
+            for _ in range(order):
+                template = diff_sql(template, name)
+        _DERIVATIVES[key] = template
+    for i, arg in enumerate(args):
+        template = template.replace(_placeholder(i), f"({arg})")
+    return template

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cioos_siooc_data_transform_spark.functions.symdiff import derivative_sql
+
 #: TEOS-10 defined constants (IOC-SCOR-IAPSO 2010).
 GSW_SFAC = 0.0248826675584615  # SA normalization: 1/(40*(SSO/35))
 GSW_OFFSET = 5.971840214030754e-1  # deltaS(=24) * sfac, specvol xs shift
@@ -1029,29 +1031,9 @@ def ct_maxdensity_stages(
 # = 4002.888003958537 J/(kg·K) reproduced bit-for-bit
 # (tests/test_oceanography_checkvalues.py), plus FD pins.
 # ---------------------------------------------------------------------------
-_CP_SENTINELS = ("__CPSA__", "__CPT__", "__CPP__")
-_ETA_T_TEMPLATE: str | None = None
-
-
-def _eta_t_template() -> str:
-    global _ETA_T_TEMPLATE
-    if _ETA_T_TEMPLATE is None:
-        from cioos_siooc_data_transform_spark.functions.symdiff import diff_sql
-
-        sa_, t_, p_ = _CP_SENTINELS
-        _ETA_T_TEMPLATE = diff_sql(entropy_from_t_sql(sa_, t_, p_), t_)
-    return _ETA_T_TEMPLATE
-
-
 def entropy_t_derivative_sql(sa: str, t: str, p: str) -> str:
     """∂η/∂t at constant (SA, p), J/(kg·K²), portable SQL."""
-    sa_, t_, p_ = _CP_SENTINELS
-    return (
-        _eta_t_template()
-        .replace(sa_, f"({sa})")
-        .replace(t_, f"({t})")
-        .replace(p_, f"({p})")
-    )
+    return derivative_sql(entropy_from_t_sql, (sa, t, p), (0, 1, 0))
 
 
 def cp_t_exact_sql(sa: str, t: str, p: str) -> str:
@@ -1059,41 +1041,16 @@ def cp_t_exact_sql(sa: str, t: str, p: str) -> str:
     return f"((273.15e0 + ({t})) * {entropy_t_derivative_sql(sa, t, p)})"
 
 
-_ETA_SA_TEMPLATE: str | None = None
-_ETA_P_TEMPLATE: str | None = None
-
-
-def _eta_templates() -> tuple[str, str]:
-    global _ETA_SA_TEMPLATE, _ETA_P_TEMPLATE
-    if _ETA_SA_TEMPLATE is None:
-        from cioos_siooc_data_transform_spark.functions.symdiff import diff_sql
-
-        sa_, t_, p_ = _CP_SENTINELS
-        eta = entropy_from_t_sql(sa_, t_, p_)
-        _ETA_SA_TEMPLATE = diff_sql(eta, sa_)
-        _ETA_P_TEMPLATE = diff_sql(eta, p_)
-    return _ETA_SA_TEMPLATE, _ETA_P_TEMPLATE
-
-
-def _subst(template: str, sa: str, t: str, p: str) -> str:
-    sa_, t_, p_ = _CP_SENTINELS
-    return (
-        template.replace(sa_, f"({sa})")
-        .replace(t_, f"({t})")
-        .replace(p_, f"({p})")
-    )
-
-
 def entropy_sa_derivative_sql(sa: str, t: str, p: str) -> str:
     """∂η/∂SA = −g_SA_T, J/(kg·K) per (g/kg), portable SQL (symbolic
     derivative of the entropy polynomial — chains through x=sqrt(SFAC·SA)
     and the x²·ln(x) saline term mechanically)."""
-    return _subst(_eta_templates()[0], sa, t, p)
+    return derivative_sql(entropy_from_t_sql, (sa, t, p), (1, 0, 0))
 
 
 def entropy_p_derivative_sql(sa: str, t: str, p: str) -> str:
     """∂η/∂p = −g_T_P, J/(kg·K) per dbar, portable SQL."""
-    return _subst(_eta_templates()[1], sa, t, p)
+    return derivative_sql(entropy_from_t_sql, (sa, t, p), (0, 0, 1))
 
 
 def t_deriv_chem_potential_water_sql(sa: str, t: str, p: str) -> str:
@@ -1124,55 +1081,20 @@ def adiabatic_lapse_rate_t_exact_sql(sa: str, t: str, p: str) -> str:
 # gsw_CT_second_derivatives, gsw_pt_first_derivatives and (chained with
 # the entropy derivatives) gsw_entropy_first_derivatives.
 # ---------------------------------------------------------------------------
-_CTPT_SENTINELS = ("__CDSA__", "__CDPT__")
-_CT_DERIV_TEMPLATES: dict[tuple[int, int], str] = {}
-
-
 def ct_derivative_sql(sa: str, pt: str, dsa: int, dpt: int) -> str:
     """∂^(dsa+dpt) CT / ∂SA^dsa ∂pt^dpt as portable SQL."""
-    key = (dsa, dpt)
-    if key not in _CT_DERIV_TEMPLATES:
-        from cioos_siooc_data_transform_spark.functions.symdiff import diff_sql
-
-        sa_, pt_ = _CTPT_SENTINELS
-        expr = ct_from_pt_sql(sa_, pt_)
-        for _ in range(dsa):
-            expr = diff_sql(expr, sa_)
-        for _ in range(dpt):
-            expr = diff_sql(expr, pt_)
-        _CT_DERIV_TEMPLATES[key] = expr
-    sa_, pt_ = _CTPT_SENTINELS
-    return (
-        _CT_DERIV_TEMPLATES[key]
-        .replace(sa_, f"({sa})")
-        .replace(pt_, f"({pt})")
-    )
+    return derivative_sql(ct_from_pt_sql, (sa, pt), (dsa, dpt))
 
 
-_ETA2_TEMPLATES: dict[str, str] = {}
+def _entropy_p0_sql(sa: str, t: str) -> str:
+    return entropy_from_t_sql(sa, t, "0.0e0")
 
 
 def entropy_p0_derivative_sql(sa: str, pt: str, dsa: int, dt: int) -> str:
     """∂^(dsa+dt) η(SA, pt, 0) / ∂SA^dsa ∂pt^dt — symbolic derivatives
     of the p = 0 entropy surface (the pieces of the (SA, CT) chain
     rule; FD-pinned)."""
-    key = f"{dsa}{dt}"
-    if key not in _ETA2_TEMPLATES:
-        from cioos_siooc_data_transform_spark.functions.symdiff import diff_sql
-
-        sa_, t_, _p = _CP_SENTINELS
-        expr = entropy_from_t_sql(sa_, t_, "0.0e0")
-        for _ in range(dsa):
-            expr = diff_sql(expr, sa_)
-        for _ in range(dt):
-            expr = diff_sql(expr, t_)
-        _ETA2_TEMPLATES[key] = expr
-    sa_, t_, _p = _CP_SENTINELS
-    return (
-        _ETA2_TEMPLATES[key]
-        .replace(sa_, f"({sa})")
-        .replace(t_, f"({pt})")
-    )
+    return derivative_sql(_entropy_p0_sql, (sa, pt), (dsa, dt))
 
 
 # ---------------------------------------------------------------------------
@@ -1313,10 +1235,6 @@ GIBBS_SW_G08: dict[str, float] = {
 GIBBS_SW_LN0 = 5812.81456626732
 GIBBS_SW_LN1 = 851.226734946706
 
-_GIBBS_SW_SENTINELS = ("__GWSA__", "__GWT__", "__GWP__")
-_GIBBS_SW_TEMPLATES: dict[str, str] = {}
-
-
 def _horner1(coefs: dict[int, float], var: str) -> str:
     """Σ c_k·var^k as Horner text (missing powers padded with 0)."""
     deg = max(coefs)
@@ -1339,16 +1257,15 @@ def _horner_yz(terms: dict[tuple[int, int], float], y: str, z: str) -> str:
     return out
 
 
-def _gibbs_sw_value_template() -> str:
-    """g(SA, t, p) over the physical sentinels: g03 + x²·(Horner core in
+def _gibbs_sw_value_sql(sa: str, t: str, p: str) -> str:
+    """g(SA, t, p) over plain argument names: g03 + x²·(Horner core in
     x of the g08 monomials, absolute powers ≥ 2) + x²·ln(x) terms.
     Nested Horner keeps the text ~6 KB — inside the janino comfort
     zone for single evaluations."""
-    sa_, t_, p_ = _GIBBS_SW_SENTINELS
-    x2 = f"({_lit(GSW_SFAC)}*{sa_})"
+    x2 = f"({_lit(GSW_SFAC)}*{sa})"
     x = f"sqrt({x2})"
-    y = f"({t_}*0.025e0)"
-    z = f"({p_}*1.0e-4)"
+    y = f"({t}*0.025e0)"
+    z = f"({p}*1.0e-4)"
     g03 = _horner_yz(
         {(int(jk[0]), int(jk[1])): c for jk, c in GIBBS_SW_G03.items()}, y, z
     )
@@ -1376,29 +1293,8 @@ def gibbs_sw_sql(
     specific volume is 1e-4·gibbs_sw_sql(dp=1) m³/kg (per-dbar →
     per-Pa; the Pa scalings cancel entirely in the sound-speed and
     alpha/beta ratios).
-    Templates are differentiated once per order and cached."""
-    key = f"{dsa}{dt}{dp}"
-    if key not in _GIBBS_SW_TEMPLATES:
-        from cioos_siooc_data_transform_spark.functions.symdiff import (
-            diff_sql,
-        )
-
-        sa_, t_, p_ = _GIBBS_SW_SENTINELS
-        expr = _gibbs_sw_value_template()
-        for _ in range(dsa):
-            expr = diff_sql(expr, sa_)
-        for _ in range(dt):
-            expr = diff_sql(expr, t_)
-        for _ in range(dp):
-            expr = diff_sql(expr, p_)
-        _GIBBS_SW_TEMPLATES[key] = expr
-    sa_, t_, p_ = _GIBBS_SW_SENTINELS
-    return (
-        _GIBBS_SW_TEMPLATES[key]
-        .replace(sa_, f"({sa})")
-        .replace(t_, f"({t})")
-        .replace(p_, f"({p})")
-    )
+    Each order is differentiated once (symdiff.derivative_sql)."""
+    return derivative_sql(_gibbs_sw_value_sql, (sa, t, p), (dsa, dt, dp))
 
 
 # ---------------------------------------------------------------------------
@@ -1606,12 +1502,6 @@ POT_H_FROM_PT_ICE_POLY_P = [
     -1.701786588412454e-10, -7.667191301635057e-13,
 ]
 
-_PIF_SENTINELS = ("__PIFSA__", "__PIFP__")
-_PIF_TEMPLATES: dict[int, str] = {}
-_PTQ_SENTINEL = "__PTQH__"
-_PTQ_DERIV_TEMPLATE: list[str] = []
-
-
 def _horner_lit(coeffs: list[float], var: str) -> str:
     expr = f"{coeffs[-1]:.16e}"
     for c in reversed(coeffs[:-1]):
@@ -1638,17 +1528,8 @@ def pot_enthalpy_ice_freezing_poly_sql(sa: str, p: str) -> str:
 
 def pot_enthalpy_ice_freezing_poly_deriv_sql(sa: str, p: str, var: int) -> str:
     """Symbolic d/dSA (var=0) or d/dp (var=1) of the freezing fit."""
-    if var not in _PIF_TEMPLATES:
-        from cioos_siooc_data_transform_spark.functions.symdiff import (
-            diff_sql,
-        )
-
-        sa_, p_ = _PIF_SENTINELS
-        _PIF_TEMPLATES[var] = diff_sql(
-            pot_enthalpy_ice_freezing_poly_sql(sa_, p_), _PIF_SENTINELS[var]
-        )
-    sa_, p_ = _PIF_SENTINELS
-    return _PIF_TEMPLATES[var].replace(sa_, f"({sa})").replace(p_, f"({p})")
+    orders = (1, 0) if var == 0 else (0, 1)
+    return derivative_sql(pot_enthalpy_ice_freezing_poly_sql, (sa, p), orders)
 
 
 def pt_from_pot_enthalpy_ice_poly_sql(h: str) -> str:
@@ -1656,15 +1537,7 @@ def pt_from_pot_enthalpy_ice_poly_sql(h: str) -> str:
 
 
 def pt_from_pot_enthalpy_ice_poly_deriv_sql(h: str) -> str:
-    if not _PTQ_DERIV_TEMPLATE:
-        from cioos_siooc_data_transform_spark.functions.symdiff import (
-            diff_sql,
-        )
-
-        _PTQ_DERIV_TEMPLATE.append(
-            diff_sql(pt_from_pot_enthalpy_ice_poly_sql(_PTQ_SENTINEL), _PTQ_SENTINEL)
-        )
-    return _PTQ_DERIV_TEMPLATE[0].replace(_PTQ_SENTINEL, f"({h})")
+    return derivative_sql(pt_from_pot_enthalpy_ice_poly_sql, (h,), (1,))
 
 
 def pot_enthalpy_from_pt_ice_poly_estimate_sql(pt: str) -> str:

@@ -10,6 +10,11 @@ key is hit repeatedly at 100 TB.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -37,10 +42,31 @@ def bucketed_join(
     return left.join(right, key)
 
 
-# One bucketed write per (application, sf_dir): the write is the
-# pre-shuffle-once investment; every digest-keyed consumer afterwards
-# reads it Exchange-free.
-_BUCKETED_DOCS: dict[tuple[str, str], str] = {}
+def _write_bucketed_once(
+    spark: SparkSession,
+    name: str,
+    source: Callable[[], DataFrame],
+    bucket_col: str,
+    num_buckets: int,
+) -> str:
+    """Write ``source()`` as bucketed table ``name`` unless this
+    application's catalog already holds it, and return ``name``.
+
+    The catalog is the memo: it is in-memory, so a table exists only if
+    this application wrote it. A previous PROCESS may have left the
+    managed-table location on disk without a row in this catalog —
+    saveAsTable then fails with LOCATION_ALREADY_EXISTS — so drop and
+    delete before the write; the name is deterministic, so this also
+    replaces any half-written copy from a crashed run."""
+    if spark.catalog.tableExists(name):
+        return name
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    warehouse = spark.conf.get(
+        "spark.sql.warehouse.dir", "spark-warehouse"
+    ).removeprefix("file:")
+    shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
+    write_bucketed(source(), name, bucket_col, num_buckets)
+    return name
 
 
 def ensure_bucketed_documents(
@@ -48,7 +74,7 @@ def ensure_bucketed_documents(
 ) -> str:
     """Write the documents table bucketed by a materialized md5 digest
     column (text_hash) and return the managed-table name. Idempotent per
-    (session, sf_dir). This is the write half of the shuffle-elision
+    (application, sf_dir). This is the write half of the shuffle-elision
     demo: groupBy/self-join on text_hash over this table plans with NO
     Exchange (the bucketed scan already reports
     hashpartitioning(text_hash, num_buckets))."""
@@ -56,46 +82,24 @@ def ensure_bucketed_documents(
 
     from cioos_siooc_data_transform_spark.session import read_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    name = _BUCKETED_DOCS.get(key)
-    if name is not None and spark.catalog.tableExists(name):
-        return name
-    stale = [k for k in _BUCKETED_DOCS if k[0] != key[0]]
-    for k in stale:
-        _BUCKETED_DOCS.pop(k, None)
     # md5, not built-in hash(): hash() is per-process randomized
     # (PYTHONHASHSEED), which would rewrite the full table under a new
     # name every driver restart and allow mod-1e8 collisions between
     # sf_dirs; 12 md5 hex chars are stable across processes and
     # collision-safe for any realistic number of sf_dirs.
-    import hashlib
-
     name = (
         "documents_bucketed_digest_"
         + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     )
-    # A previous PROCESS may have left the managed-table location on
-    # disk without a row in this session's catalog — saveAsTable then
-    # fails with LOCATION_ALREADY_EXISTS. Drop-and-delete before the
-    # (re)write; the name is deterministic, so this also replaces any
-    # half-written copy from a crashed run.
-    import os
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-    docs = read_table(spark, sf_dir, "documents").withColumn(
-        "text_hash", F.md5("text")
+    return _write_bucketed_once(
+        spark,
+        name,
+        lambda: read_table(spark, sf_dir, "documents").withColumn(
+            "text_hash", F.md5("text")
+        ),
+        "text_hash",
+        num_buckets,
     )
-    write_bucketed(docs, name, "text_hash", num_buckets=num_buckets)
-    _BUCKETED_DOCS[key] = name
-    return name
-
-
-_BUCKETED_TABLES: dict[tuple[str, str, str, str, int], str] = {}
 
 
 def ensure_bucketed_table(
@@ -106,38 +110,23 @@ def ensure_bucketed_table(
     num_buckets: int = 8,
 ) -> str:
     """Write one synthetic table bucketed by ``key_col`` and return the
-    managed-table name (idempotent per session/sf_dir/table — the same
-    drop-and-delete protocol as ensure_bucketed_documents). Two tables
-    bucketed by their join key with the SAME bucket count join with
-    zero Exchange on either side — the co-located fact⋈dim/fact⋈fact
-    layout that pays for itself the second time the key is joined."""
-    import hashlib
-    import os
-    import shutil
-
+    managed-table name (idempotent per application/sf_dir/table — the
+    same drop-and-delete protocol as ensure_bucketed_documents). Two
+    tables bucketed by their join key with the SAME bucket count join
+    with zero Exchange on either side — the co-located fact⋈dim/
+    fact⋈fact layout that pays for itself the second time the key is
+    joined."""
     from cioos_siooc_data_transform_spark.session import read_table
 
-    # key_col and num_buckets are part of BOTH the cache key and the
-    # hashed table name: the same table bucketed by a second join key
-    # (or bucket count) must get its own physical layout, or the caller
-    # silently joins on a mismatched bucketing and pays the Exchange
-    # this helper exists to eliminate.
-    ck = (spark.sparkContext.applicationId, sf_dir, table, key_col, num_buckets)
-    name = _BUCKETED_TABLES.get(ck)
-    if name is not None and spark.catalog.tableExists(name):
-        return name
-    stale = [k for k in _BUCKETED_TABLES if k[0] != ck[0]]
-    for k in stale:
-        _BUCKETED_TABLES.pop(k, None)
+    # key_col and num_buckets are part of the hashed table name: the
+    # same table bucketed by a second join key (or bucket count) must
+    # get its own physical layout, or the caller silently joins on a
+    # mismatched bucketing and pays the Exchange this helper exists to
+    # eliminate.
     name = (
         f"{table}_bucketed_"
         + hashlib.md5(f"{sf_dir}:{key_col}:{num_buckets}".encode()).hexdigest()[:12]
     )
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
-    write_bucketed(read_table(spark, sf_dir, table), name, key_col, num_buckets)
-    _BUCKETED_TABLES[ck] = name
-    return name
+    return _write_bucketed_once(
+        spark, name, lambda: read_table(spark, sf_dir, table), key_col, num_buckets
+    )

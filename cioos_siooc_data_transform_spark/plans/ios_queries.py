@@ -62,37 +62,28 @@ SAMPLE_IOS = """*2024/01/15 10:00:00.00
 """
 
 
-# One parse per (session, sample): the mapInPandas parse crosses into
-# Python, and an uncached plan re-runs that crossing for every query that
-# reads the sample (and for every branch of a query that reads it twice,
-# like the mooring view's measurements ⋈ observation times). Persisting
-# the 1-row parsed frame turns all downstream ios_* queries into pure-JVM
-# reads of an InMemoryRelation.
-_PARSED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# One parse per (session, sample), held as a cached temp view: the
+# mapInPandas parse crosses into Python, and an uncached plan re-runs that
+# crossing for every query that reads the sample (and for every branch of
+# a query that reads it twice, like the mooring view's measurements ⋈
+# observation times). Caching the 1-row parsed view turns all downstream
+# ios_* queries into pure-JVM reads of an InMemoryRelation; the view and
+# its cache die with the session.
 def _parse_cached(spark: SparkSession, key: str, path: str, text: str) -> DataFrame:
+    from cioos_siooc_data_transform_spark.session import lookup_view
     from cioos_siooc_data_transform_spark.sources.ios_source import parse_ios
 
-    # Keyed by applicationId, not id(spark): CPython can reuse an object id
-    # after a stopped session is garbage-collected, which would hand back a
-    # persisted frame bound to a dead SparkContext. applicationId is unique
-    # per context; entries from dead sessions are evicted on next access.
-    cache_key = (spark.sparkContext.applicationId, key)
-    df = _PARSED_CACHE.get(cache_key)
-    if df is not None and df.sparkSession.sparkContext._jsc is None:
-        df = None
+    view = f"__ios_parsed_{key}"
+    df = lookup_view(spark, view)
     if df is None:
-        stale = [k for k in _PARSED_CACHE if k[0] != cache_key[0]]
-        for k in stale:
-            _PARSED_CACHE.pop(k, None)
         files = spark.createDataFrame(
             [(path, bytearray(text.encode("ascii")))],
             "path STRING, content BINARY",
         )
-        df = parse_ios(files).persist()
+        parse_ios(files).createOrReplaceTempView(view)
+        spark.catalog.cacheTable(view)
+        df = spark.table(view)
         df.count()  # materialize so the Python crossing happens exactly once
-        _PARSED_CACHE[cache_key] = df
     return df
 
 

@@ -3378,33 +3378,20 @@ _freeze_query(
 )
 
 
-_CTF_SENTINELS = ("__CTFSA__", "__CTFP__")
-_CTF_DERIV_TEMPLATES: dict[str, str] = {}
-
-
 def _ctf_deriv_sql(sa: str, p: str, var: int) -> str:
     """∂CT_freezing_poly/∂SA (var=0, K per g/kg) or ∂/∂p (var=1, K per
     dbar) — symbolic derivative of the published polynomial
     (saturation_fraction = 0, like the reference's
     CT_freezing_first_derivatives_poly surface)."""
-    key = str(var)
-    if key not in _CTF_DERIV_TEMPLATES:
-        from cioos_siooc_data_transform_spark.functions.symdiff import (
-            diff_sql,
-        )
-        from cioos_siooc_data_transform_spark.functions.teos10 import (
-            ct_freezing_poly_sql,
-        )
-
-        sa_, p_ = _CTF_SENTINELS
-        expr = ct_freezing_poly_sql(sa_, p_, "0.0e0")
-        _CTF_DERIV_TEMPLATES[key] = diff_sql(expr, _CTF_SENTINELS[var])
-    sa_, p_ = _CTF_SENTINELS
-    return (
-        _CTF_DERIV_TEMPLATES[key]
-        .replace(sa_, f"({sa})")
-        .replace(p_, f"({p})")
+    from cioos_siooc_data_transform_spark.functions.symdiff import (
+        derivative_sql,
     )
+    from cioos_siooc_data_transform_spark.functions.teos10 import (
+        ct_freezing_poly_sql,
+    )
+
+    orders = (1, 0) if var == 0 else (0, 1)
+    return derivative_sql(ct_freezing_poly_sql, (sa, p), orders)
 
 
 def _ctf_deriv_stages():

@@ -231,31 +231,18 @@ _melt_query(
 # the 75-term enthalpy + analytic first derivatives, and the IAPWS-06
 # ice chain (cp, enthalpy, lapse −g_Tp/g_TT).
 # ---------------------------------------------------------------------------
-_TF_SENTINELS = ("__TFSA__", "__TFP__")
-_TF_DERIV_TEMPLATES: dict[str, str] = {}
-
-
 def _tf_deriv_sql(s: str, p: str, var: int) -> str:
     """∂t_freezing/∂SA (var=0; the Millero line is written in practical
     salinity, so the chain 1/uPS applies) or ∂/∂p (var=1, K/dbar)."""
-    key = str(var)
-    if key not in _TF_DERIV_TEMPLATES:
-        from cioos_siooc_data_transform_spark.functions.symdiff import (
-            diff_sql,
-        )
-        from cioos_siooc_data_transform_spark.functions.teos10 import (
-            t_freezing_sql,
-        )
-
-        s_, p_ = _TF_SENTINELS
-        expr = t_freezing_sql(s_, p_)
-        _TF_DERIV_TEMPLATES[key] = diff_sql(expr, _TF_SENTINELS[var])
-    s_, p_ = _TF_SENTINELS
-    return (
-        _TF_DERIV_TEMPLATES[key]
-        .replace(s_, f"({s})")
-        .replace(p_, f"({p})")
+    from cioos_siooc_data_transform_spark.functions.symdiff import (
+        derivative_sql,
     )
+    from cioos_siooc_data_transform_spark.functions.teos10 import (
+        t_freezing_sql,
+    )
+
+    orders = (1, 0) if var == 0 else (0, 1)
+    return derivative_sql(t_freezing_sql, (s, p), orders)
 
 
 def _frazil_stages():

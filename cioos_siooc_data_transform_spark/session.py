@@ -14,6 +14,7 @@ same logical plans scale to a multi-executor cluster at ~100 TB:
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import SparkSession
@@ -121,94 +122,87 @@ def checkpoint_df(df, eager: bool):
     return df.localCheckpoint(eager=eager)
 
 
-#: path -> (inferred Spark StructType, [TIMESTAMP(NANOS) column names]).
-#: Metadata-only memo (see the block comment inside read_table); the
-#: testdata fixtures are immutable per path, and a changed path is a
-#: different key.
-_SCHEMA_CACHE: dict = {}
+def file_signature(path: str) -> str:
+    """Hex digest of ``(path, st_size, st_mtime_ns)``: changes when the
+    file at ``path`` is rewritten, so it names state derived from it."""
+    st = os.stat(path)
+    key = f"{path}\0{st.st_size}\0{st.st_mtime_ns}"
+    return hashlib.md5(key.encode()).hexdigest()
 
-#: SparkSession -> {path: temp-view name}. Round 14 (§7.3 construction
-#: floor): even with the schema memo, every `spark.read.schema(...)
-#: .parquet(path)` re-resolves the data source and re-lists the path —
-#: ~30 ms of driver work per read_table call, ~2.4 s of a 60-query
-#: construction pass. Registering ONE temp view per (session, path) and
-#: serving later calls with spark.table(view) is the catalog idiom: the
-#: view stores the ANALYZED relation (schema + file index — metadata
-#: only, the same thing a catalog table or the session file-listing
-#: cache of guide §6 holds); every execution still scans the parquet
-#: files. Self-joins stay sound: each spark.table() reference is a
-#: fresh UnresolvedRelation and Spark's DeduplicateRelations assigns
-#: fresh attribute ids per join side, exactly as for catalog tables.
-#: WeakKeyDictionary so a stopped session's views never leak into a new
-#: session (temp views are per-session).
-#: Hazard: the view freezes the file listing it was first resolved
-#: with, and later calls serve that frozen listing. An sf dir must not
-#: change (files added, removed or rewritten) during a session; a
-#: changed dir needs a new session or a new path.
-import weakref
 
-_VIEW_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+def lookup_view(spark: SparkSession, view: str):
+    """``spark.table(view)``, or None when the session has no such view.
+
+    One py4j round trip on a hit; a miss costs the exception's ~40."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.table(view)
+    except AnalysisException as exc:
+        if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND":
+            raise
+    return None
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one synthetic parquet table, handling nanosecond timestamps.
+    """Read ``<sf_dir>/<name>.parquet`` as a DataFrame.
 
-    Spark's Parquet reader rejects INT64 TIMESTAMP(NANOS) columns (Spark
-    timestamps are microsecond precision). For files containing them we
-    enable spark.sql.legacy.parquet.nanosAsLong (the column arrives as a
-    LongType of epoch-nanos) and truncate to microseconds — the same
-    truncation DuckDB applies when it coerces TIMESTAMP_NS to TIMESTAMP,
-    so both engines see identical values.
+    What it keeps: one temp view per file version, in the session's own
+    catalog, named from ``file_signature(path)``. The first read of a
+    version takes the schema from the Parquet footer (pyarrow reads it;
+    Spark starts no schema-inference job) and registers the relation;
+    later reads are one ``spark.table`` lookup, where re-resolving the
+    source and re-listing the path would cost ~30 ms. The view holds
+    metadata only; every execution scans the file, and each
+    ``spark.table`` reference gets fresh attribute ids, so self-joins
+    stay sound. A rewritten file has a new signature, so it gets a new
+    view and its new schema. The views die with the session.
+
+    Confs it writes, and why:
+
+    - ``spark.sql.session.timeZone`` = UTC, on every call: timestamps
+      must collect as UTC wall-clock values to match the tz-naive values
+      DuckDB sees, whatever session the caller built.
+    - ``spark.sql.legacy.parquet.nanosAsLong`` = true, for files with
+      TIMESTAMP(NANOS) columns: Spark timestamps are microsecond
+      precision and its reader rejects NANOS unless this is on, at
+      execution as well as at planning. Such a column arrives as epoch
+      nanoseconds and is truncated to microseconds, as DuckDB truncates
+      TIMESTAMP_NS when it coerces to TIMESTAMP.
+
+    Tz-naive microsecond timestamps read as TimestampType (LTZ), not
+    TIMESTAMP_NTZ: the footer schema says so explicitly, and NTZ would
+    refuse the numeric casts several plans make.
     """
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    # Timestamps must collect as UTC to hash-match the (naive) DuckDB
-    # oracle values, regardless of how the caller's session was built.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-
     path = os.path.join(sf_dir, f"{name}.parquet")
-    views = _VIEW_CACHE.get(spark)
-    if views is None:
-        views = _VIEW_CACHE[spark] = {}
-    view = views.get(path)
-    if view is not None:
-        # Cached path: ONE py4j call. The view's analyzed plan embeds
-        # the schema and file index; execution scans parquet as always.
-        return spark.table(view)
+    view = f"__spark_graft_src_{name}_{file_signature(path)}"
+    df = lookup_view(spark, view)
+    if df is not None:
+        return df
 
-    # Tz-naive parquet timestamps must read as TIMESTAMP_LTZ (interpreted
-    # as UTC), not TIMESTAMP_NTZ: NTZ refuses numeric casts (epoch math in
-    # several plans) and the UTC-pinned LTZ collects the same wall-clock
-    # values DuckDB sees.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    cached = _SCHEMA_CACHE.get(path)
-    if cached is None:
-        schema = pq.read_schema(path)
-        ns_cols = [f.name for f in schema if str(f.type) == "timestamp[ns]"]
-        if ns_cols:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        # Memoize the INFERRED Spark schema (metadata only — the exact
-        # StructType Spark's own footer inference produced under the
-        # confs above, the same thing a catalog would serve). Every
-        # bare spark.read.parquet runs a driver-side footer-inference
-        # job at plan-construction time: ~120 ms per read_table call,
-        # and a bench run constructs hundreds of them (round-13
-        # measurement: 20 constructions 2.44 s inferred vs 0.48 s with
-        # an explicit schema). Data is never cached; the scan still
-        # reads the parquet files at execution.
-        _SCHEMA_CACHE[path] = (df.schema, ns_cols)
-    else:
-        spark_schema, ns_cols = cached
-        if ns_cols:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.schema(spark_schema).parquet(path)
+    arrow_schema = pq.read_schema(path)
+    ns_cols = [
+        f.name
+        for f in arrow_schema
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    schema = StructType(
+        [
+            StructField(f.name, LongType(), f.nullable) if f.name in ns_cols else f
+            for f in from_arrow_schema(arrow_schema)
+        ]
+    )
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    # Register the finished relation (ns-truncation included) as this
-    # session's temp view for the path; later calls become spark.table.
-    view = f"__spark_graft_src_{len(views)}_{name}"
     df.createOrReplaceTempView(view)
-    views[path] = view
     return df

@@ -23,9 +23,9 @@ Derivation (0-based keys, matching the testdata's key domains):
   repo-wide exact-sum invariant).
 
 Scale design: the derivation costs one lineitem DISTINCT shuffle and is
-written ONCE per (session, sf_dir) to a parquet dir under the Spark
-warehouse (the bucketing-cache idiom, operators/bucketing.py); every
-consumer afterwards scans the materialized file with normal pushdown.
+written ONCE per version of its source files to a parquet dir under the
+Spark warehouse (see ensure_partsupp); every consumer afterwards scans
+the materialized file with normal pushdown.
 At 100 TB the equivalent is a one-time CTAS into the lakehouse.
 """
 
@@ -117,32 +117,31 @@ def partsupp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Write-once cache, keyed like the bucketing caches (applicationId so a
-# new driver process rebuilds under its own warehouse).
-_PARTSUPP_DIRS: dict[tuple[str, str], str] = {}
-
-
 def ensure_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the derived partsupp once per (session, sf_dir) and
-    return a DataFrame scanning the parquet copy (full pushdown /
-    column pruning, no re-derivation per query)."""
+    """Materialize the derived partsupp once per version of its sources
+    and return a DataFrame scanning the parquet copy (full pushdown /
+    column pruning, no re-derivation per query).
+
+    The copy lives under the Spark warehouse in a directory named from
+    the ``file_signature`` of ``part``, ``supplier`` and ``lineitem``, so
+    rewriting any of them derives a new copy; a ``_SUCCESS`` marker says
+    that copy is complete, and any process may reuse it."""
     import hashlib
     import os
     import shutil
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _PARTSUPP_DIRS.get(key)
-    if path is not None and os.path.exists(os.path.join(path, "_SUCCESS")):
-        return spark.read.parquet(path)  # no timestamp cols: plain read OK
-    stale = [k for k in _PARTSUPP_DIRS if k[0] != key[0]]
-    for k in stale:
-        _PARTSUPP_DIRS.pop(k, None)
+    from cioos_siooc_data_transform_spark.session import file_signature
+
+    sources = "".join(
+        file_signature(os.path.join(sf_dir, f"{t}.parquet"))
+        for t in ("part", "supplier", "lineitem")
+    )
     warehouse = spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse"
     ).removeprefix("file:")
     path = os.path.join(
         warehouse,
-        "partsupp_derived_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
+        "partsupp_derived_" + hashlib.md5(sources.encode()).hexdigest()[:12],
     )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         shutil.rmtree(path, ignore_errors=True)  # clear any crashed write
@@ -152,5 +151,4 @@ def ensure_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
         partsupp_df(spark, sf_dir).coalesce(4).write.mode("overwrite").parquet(
             path
         )
-    _PARTSUPP_DIRS[key] = path
-    return spark.read.parquet(path)
+    return spark.read.parquet(path)  # no timestamp cols: plain read OK

@@ -107,3 +107,27 @@ def registry_plans(spark):
         )
         del df
     return out
+
+
+def group_jobs(spark, group: str) -> list:
+    """The jobs of one job group, once the status store has heard of them
+    all: the store hears events in order, so a marker job run after them
+    is seen finished only after their starts."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    marker = f"{group}-marker"
+    sc.setJobGroup(marker, "status store barrier")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 10
+    while time.monotonic() < deadline:
+        infos = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(marker)]
+        if infos and all(i is not None and i.status == "SUCCEEDED" for i in infos):
+            break
+        time.sleep(0.05)
+    return [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]

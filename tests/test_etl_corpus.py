@@ -23,6 +23,8 @@ sys.path.insert(
 )
 import corpus  # noqa: E402
 
+from tests.conftest import group_jobs  # noqa: E402
+
 SEED = 7
 N_FILES = 8
 RECORDS = (20, 400)
@@ -466,30 +468,6 @@ def _codec(path: str) -> str:
     return codec
 
 
-def _group_jobs(spark, group: str) -> list:
-    """The jobs of one job group, once the status store has heard of them
-    all: the store hears events in order, so a marker job run after them
-    is seen finished only after their starts."""
-    import time
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    marker = f"{group}-marker"
-    sc.setJobGroup(marker, "status store barrier")
-    try:
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = time.monotonic() + 10
-    while time.monotonic() < deadline:
-        infos = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(marker)]
-        if infos and all(i is not None and i.status == "SUCCEEDED" for i in infos):
-            break
-        time.sleep(0.05)
-    return [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
-
-
 def test_restarted_drain_lists_known_files_without_a_job(spark, tmp_path):
     """A restart re-lists the last committed batch's files (40 here) only
     to rebuild its relation; that listing stays on the driver. The drain
@@ -525,7 +503,7 @@ def test_restarted_drain_lists_known_files_without_a_job(spark, tmp_path):
         spark.streams.removeListener(listener)
     assert spark.read.parquet(f"{out}/catalog").count() == 41
     (run_id,) = listener.run_ids
-    jobs = _group_jobs(spark, run_id)
+    jobs = group_jobs(spark, run_id)
     tracker = spark.sparkContext.statusTracker()
     stages = [tracker.getStageInfo(s) for job in jobs for s in job.stageIds]
     assert len(jobs) == 2
@@ -547,7 +525,7 @@ def test_discovery_lists_on_the_driver(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert _group_jobs(spark, "discover-40-dirs") == []
+    assert group_jobs(spark, "discover-40-dirs") == []
     assert found.count() == 40
 
 
